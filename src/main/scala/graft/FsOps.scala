@@ -218,7 +218,9 @@ object FsOps {
     *
     * Returns true (after writing any missing `_merged_into` stamps) iff
     * every source is either already stamped into `dest`, or is a REAL
-    * drained husk: its table directories still exist (a typo'd or
+    * drained husk: its table directories (`tableDirs(store)` — the
+    * store's data tables, resolved through its frame pointer where it
+    * has one, [[graft.operators.Frames]]) still exist (a typo'd or
     * never-populated path must not read as "drained" — stamping it
     * would invent provenance and writeMarker would even create the
     * directory), none carries a visible data file, and the dest holds
@@ -236,20 +238,12 @@ object FsOps {
     * the husk discipline exists to preserve. False = not that crash
     * shape; callers fall through to their committed-dest refusal.
     * Callers must have verified the dest commit marker and
-    * moveFiles=true themselves. */
-  /** `sourceRoots`/`destRoot` (default: the store paths themselves) let
-    * a family whose data tables live under a version-pointer frame
-    * (IvfStore's `_frame`) point the drained-ness/`m<i>_` evidence
-    * probes at the frame dirs while the `_merged_into` stamps and the
-    * recorded dest stay at the STORE paths — the markers are
-    * store-level identity, the tables are frame-level data. */
+    * moveFiles=true themselves. The `_merged_into` stamps and the
+    * recorded dest stay at the STORE paths — markers are store-level
+    * identity, the tables are frame-level data. */
   def completeHuskStamps(spark: org.apache.spark.sql.SparkSession,
                          sources: Seq[String], dest: String,
-                         tables: Seq[String],
-                         sourceRoots: Seq[String] = Seq.empty,
-                         destRoot: String = ""): Boolean = {
-    val srcRoots = if (sourceRoots.isEmpty) sources else sourceRoots
-    val dRoot = if (destRoot.isEmpty) dest else destRoot
+                         tableDirs: String => Seq[String]): Boolean = {
     // source-derived evidence first (ADVICE r15): the merge recorded its
     // source list on the dest before any file moved; a resume whose list
     // differs (paths OR order — order is the ordinal assignment) is a
@@ -259,14 +253,14 @@ object FsOps {
     if (readMarker(spark, dest, MergeSourcesMarker)
         .exists(_.split("\n").toSeq != sources)) return false
     val fs = new Path(dest).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val destFiles = tables.flatMap(t => visibleDataFiles(spark, s"$dRoot/$t"))
+    val destFiles = tableDirs(dest).flatMap(visibleDataFiles(spark, _))
     val resumable = sources.zipWithIndex.forall { case (s, i) =>
-      val sr = srcRoots(i)
       mergedInto(spark, s) match {
         case Some(d) => d == dest // stamped elsewhere: never overwrite
         case None =>
-          tables.exists(t => fs.exists(new Path(s"$sr/$t"))) &&
-            tables.forall(t => visibleDataFiles(spark, s"$sr/$t").isEmpty) &&
+          val dirs = tableDirs(s)
+          dirs.exists(d => fs.exists(new Path(d))) &&
+            dirs.forall(visibleDataFiles(spark, _).isEmpty) &&
             destFiles.exists(_.startsWith(s"m${i}_"))
       }
     }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   runMain graft.Maintain <family> <op> <path> [keyCols...]
   *
   *   index  fsck | fsck-incr | mark-audited | repair | rollback | expunge | compact
-  *        | gc [retain]   (derived-pair manifest-frame sweep, twin of ivf gc)
+  *        | gc [retain]   (frame-retention sweep of the vocab/meta frame)
   *        | advise [maxFilesPerLeaf] [apply]  (fragmentation advisor:
   *                          nonzero exit when a leaf exceeds the file
   *                          budget; apply = run compact, re-advise)
@@ -32,7 +32,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                          superseded frames — default 1 — as the
   *                          concurrent readers' grace window; 0 = now)
   *   dedup  fsck | fsck-incr | mark-audited | repair | compact
-  *        | gc [retain]   (manifest-frame twin of ivf gc)
+  *        | gc [retain]   (frame-retention sweep of the sets/buckets frame)
   *        | advise [maxBucketDocs] [minJaccard] [apply]  (bucket-skew
   *                          advisor: nonzero exit on hot LSH buckets;
   *                          apply = self-dedup them, re-advise)
@@ -85,6 +85,13 @@ object Maintain {
   // vacuously)
   private def dedupGeometry(spark: SparkSession, path: String): (Int, Int) =
     dedup.DedupStore.storedGeometry(spark, path).getOrElse((128, 32))
+
+  /** Each frame-installing family's declared tables — the inventory the
+    * one `gc` verb sweeps ([[operators.Frames.gc]]). */
+  private val FrameTables: Map[String, Seq[String]] = Map(
+    "index" -> index.Indexer.DerivedTables,
+    "dedup" -> dedup.DedupStore.Tables,
+    "ivf" -> similarity.IvfStore.Tables)
 
   /** The index family's compact body — shared by the `compact` verb and
     * `advise ... apply` (the advisor's repair half must be EXACTLY the
@@ -153,12 +160,13 @@ object Maintain {
       // face's documented halt-loudly repair, StreamRuntime.runIndexIngest)
       case ("index", "rollback")     => index.Indexer.rollbackPartialAppend(spark, path); None
       case ("index", "expunge")      => index.Indexer.expungeDeletes(spark, path); None
-      // derived-pair frame retention sweep (vocab/meta commit as one
-      // manifest frame; installs keep one superseded frame as the
-      // readers' grace window — `gc 0` reclaims it now)
-      case ("index", "gc") =>
-        val usage = "index gc <path> [retain >= 0, default 1]"
-        operators.Frames.gc(spark, path, Seq("vocab", "meta"),
+      // frame-retention sweep over the family's
+      // declared frame tables: installs keep one superseded frame as the
+      // concurrent readers' grace window; `gc 0` reclaims it immediately
+      // (no external reader mid-scan)
+      case (fam, "gc") if FrameTables.contains(fam) =>
+        val usage = s"$fam gc <path> [retain >= 0, default 1]"
+        operators.Frames.gc(spark, path, FrameTables(fam),
           retain = extra.headOption
             .map(a => a.toIntOption.filter(_ >= 0).getOrElse(
               throw new IllegalArgumentException(s"$usage (got '$a')")))
@@ -212,23 +220,11 @@ object Maintain {
         if (applyIt &&
             advice.collect()(0).getAs[Long]("violations") > 0) {
           val k = explicitK.getOrElse(
-            spark.read.parquet(
-              s"${similarity.IvfStore.frameRoot(spark, path)}/centroids")
+            spark.read.parquet(operators.Frames.resolve(spark, path, "centroids"))
               .count().toInt)
           similarity.IvfStore.reclusterStore(spark, path, nCentroids = k)
           Some(similarity.IvfStore.adviseRecluster(spark, path, frac))
         } else Some(advice)
-      // frame-retention sweep (VERDICT r18 #2): installs keep one
-      // superseded frame as the concurrent readers' grace window;
-      // `gc 0` reclaims it immediately (no external reader mid-scan)
-      case ("ivf", "gc") =>
-        val usage = "ivf gc <path> [retain >= 0, default 1]"
-        similarity.IvfStore.gcStaleFrames(spark, path,
-          retain = extra.headOption
-            .map(a => a.toIntOption.filter(_ >= 0).getOrElse(
-              throw new IllegalArgumentException(s"$usage (got '$a')")))
-            .getOrElse(1))
-        None
       case ("ivf", "fsck-incr")    => Some(similarity.IvfStore.checkStoreIncremental(spark, path))
       case ("ivf", "mark-audited") => similarity.IvfStore.markAudited(spark, path); None
       case ("ivf", "repair")  => similarity.IvfStore.repairLists(spark, path); None
@@ -295,17 +291,6 @@ object Maintain {
               if (spark.read.parquet(dir).columns.contains("batch"))
                 Seq("batch") else Seq.empty)
         }
-        None
-      // retention sweep of superseded manifest frames — the operator
-      // verb behind Frames.gc (commit already sweeps with retain=1;
-      // retain=0 is the reclaim-now form)
-      case ("dedup", "gc") =>
-        val usage = "dedup gc <path> [retain >= 0, default 1]"
-        operators.Frames.gc(spark, path, Seq("sets", "buckets"),
-          retain = extra.headOption
-            .map(a => a.toIntOption.filter(_ >= 0).getOrElse(
-              throw new IllegalArgumentException(s"$usage (got '$a')")))
-            .getOrElse(1))
         None
       // replay-depth advisor (the vstore face of the advise/apply
       // loop): nonzero exit when reads at the newest version replay

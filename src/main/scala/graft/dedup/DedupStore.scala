@@ -43,7 +43,7 @@ object DedupStore {
 
   /** The store's complete table inventory (the manifest frame's
     * universe — see [[graft.operators.Frames]]). */
-  private val Tables = Seq("sets", "buckets")
+  private[graft] val Tables = Seq("sets", "buckets")
 
   /** Resolved directory of a store table in the CURRENT frame — the
     * entry every reader and appender goes through ([[graft.pipeline
@@ -127,21 +127,13 @@ object DedupStore {
   private val LastBatchMarker = "_lastbatch"
   private val LastAuditMarker = "_last_audit"
 
-  private def writeLongMarker(spark: SparkSession, path: String,
-                              marker: String, v: Long): Unit =
-    graft.FsOps.writeLongMarker(spark, path, marker, v)
-
-  private def readLongMarker(spark: SparkSession, path: String,
-                             marker: String): Option[Long] =
-    graft.FsOps.readLongMarker(spark, path, marker)
-
   /** Highest ingest-batch ordinal recorded (None = pre-tracking store). */
   def lastBatch(spark: SparkSession, path: String): Option[Long] =
-    readLongMarker(spark, path, LastBatchMarker)
+    graft.FsOps.readLongMarker(spark, path, LastBatchMarker)
 
   /** Highest batch an audit has vouched for (None = never audited). */
   def lastAudited(spark: SparkSession, path: String): Option[Long] =
-    readLongMarker(spark, path, LastAuditMarker)
+    graft.FsOps.readLongMarker(spark, path, LastAuditMarker)
 
   /** Record that every batch up to `upTo` (default: the current last)
     * has been audited. Not advanced by the checkers themselves — an
@@ -152,7 +144,7 @@ object DedupStore {
     val v = upTo.orElse(lastBatch(spark, path)).getOrElse(
       throw new IllegalStateException(s"markAudited: no batch marker at $path — " +
         "a pre-batch-tracking store has nothing to scope an incremental audit to"))
-    writeLongMarker(spark, path, LastAuditMarker, v)
+    graft.FsOps.writeLongMarker(spark, path, LastAuditMarker, v)
   }
 
   /** Build the signature store for an initial corpus. Shingle sets are
@@ -177,8 +169,8 @@ object DedupStore {
       .withColumn("batch", lit(0L))
       .write.mode("overwrite").parquet(s"$path/buckets")
     writeGeometry(corpus.sparkSession, path, numHashes, bands)
-    writeLongMarker(corpus.sparkSession, path, ShingleMarker, shingleN.toLong)
-    writeLongMarker(corpus.sparkSession, path, LastBatchMarker, 0L)
+    graft.FsOps.writeLongMarker(corpus.sparkSession, path, ShingleMarker, shingleN.toLong)
+    graft.FsOps.writeLongMarker(corpus.sparkSession, path, LastBatchMarker, 0L)
   }
 
   /** Dedup a new batch against the store, then grow the store.
@@ -200,7 +192,7 @@ object DedupStore {
              shingleN: Int = 3, numHashes: Int = 128, bands: Int = 32): DataFrame = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
     requireGeometry(spark, path, numHashes, bands, "ingest")
-    readLongMarker(spark, path, ShingleMarker).foreach { n =>
+    graft.FsOps.readLongMarker(spark, path, ShingleMarker).foreach { n =>
       require(n == shingleN.toLong,
         s"ingest shingleN=$shingleN does not match the store's recorded " +
           s"shingle size $n at $path — Jaccard over mismatched shingle " +
@@ -268,7 +260,7 @@ object DedupStore {
       .write.mode("append").parquet(setsDir)
     tag(newBuckets.join(dupIds, Seq("doc_id"), "left_anti"))
       .write.mode("append").parquet(bucketsDir)
-    batchId.foreach(b => writeLongMarker(spark, path, LastBatchMarker, b))
+    batchId.foreach(b => graft.FsOps.writeLongMarker(spark, path, LastBatchMarker, b))
     new Path(staged).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(new Path(staged), true)
     report
@@ -301,7 +293,7 @@ object DedupStore {
       // commit and the husk stamps (complete the stamps and return —
       // FsOps.completeHuskStamps), or a genuine re-merge to refuse
       if (moveFiles && graft.FsOps.completeHuskStamps(spark, sources, dest,
-          Seq("sets", "buckets"))) return
+          s => Tables.map(tablePath(spark, s, _)))) return
       throw new IllegalArgumentException(
         s"$dest already carries a committed signature store (geometry marker exists)")
     }
@@ -319,7 +311,7 @@ object DedupStore {
         s"$s predates batch tracking (no _lastbatch marker)"))
     }
     val shingleNs = sources.map { s =>
-      readLongMarker(spark, s, ShingleMarker).getOrElse(
+      graft.FsOps.readLongMarker(spark, s, ShingleMarker).getOrElse(
         throw new IllegalArgumentException(
           s"$s records no $ShingleMarker marker — shingle size is " +
             "invisible in the schema and a mixed-shingle merge silently " +
@@ -328,11 +320,9 @@ object DedupStore {
     require(shingleNs.distinct.size == 1,
       s"sources disagree on shingleN: ${sources.zip(shingleNs).mkString(", ")}")
     // frame-installed sources (a shard that underwent removeDocs /
-    // refreshBuckets maintenance) merge by COPY only: move-mode's
-    // drained-husk resume evidence probes `<root>/<table>` dirs, which a
-    // manifest-framed store does not have — and its retained previous
-    // frames may still be serving an external reader the drain would
-    // break. Fresh flat shards (the promotion path) move as before.
+    // refreshBuckets maintenance) merge by COPY only: their retained
+    // previous frames may still be serving an external reader the drain
+    // would break. Fresh flat shards (the promotion path) move as before.
     require(!moveFiles || sources.forall(s =>
         graft.operators.Frames.currentVersion(spark, s).isEmpty),
       "mergeStores(moveFiles = true): a source is frame-installed " +
@@ -356,8 +346,8 @@ object DedupStore {
     for (t <- Seq("sets", "buckets"); (src, i) <- sources.zipWithIndex)
       graft.FsOps.transferDataFiles(spark, tablePath(spark, src, t),
         s"$dest/$t", s"m${i}_", moveFiles)
-    writeLongMarker(spark, dest, ShingleMarker, shingleNs.head)
-    writeLongMarker(spark, dest, LastBatchMarker, batches.max)
+    graft.FsOps.writeLongMarker(spark, dest, ShingleMarker, shingleNs.head)
+    graft.FsOps.writeLongMarker(spark, dest, LastBatchMarker, batches.max)
     markAudited(spark, dest, Some(batches.max))
     writeGeometry(spark, dest, geoms.head._1, geoms.head._2)
     // stamp drained sources only after the geometry commit above (husk

@@ -151,7 +151,7 @@ object Indexer {
     // would put pre-audit docs inside the next incremental audit's
     // delta and fail its positional⟷postings join. A standalone
     // positional store starts its own sequence at 0.
-    val batch = readLongMarker(spark, path, LastBatchMarker).getOrElse(0L)
+    val batch = graft.FsOps.readLongMarker(spark, path, LastBatchMarker).getOrElse(0L)
     val pos = positionalPostings(corpus, idCol, textCol)
     val dsPath = new org.apache.hadoop.fs.Path(s"$path/doc_stats")
     val dsExists = dsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -201,8 +201,8 @@ object Indexer {
     // store would make the next appendIndex tag its rows and mix
     // schemas in the untagged tables (a co-located TRACKED store
     // already has the marker from writeIndex)
-    if (!dsExists && readLongMarker(spark, path, LastBatchMarker).isEmpty)
-      writeLongMarker(spark, path, LastBatchMarker, batch)
+    if (!dsExists && graft.FsOps.readLongMarker(spark, path, LastBatchMarker).isEmpty)
+      graft.FsOps.writeLongMarker(spark, path, LastBatchMarker, batch)
     // per-TABLE marker: a positional store co-located with a frequency
     // index at the same path must not overwrite the frequency store's
     // layout record (or vice versa) — that would silently mis-prune the
@@ -321,7 +321,7 @@ object Indexer {
       () => meta(spark.read.parquet(s"$path/doc_stats"))
         .write.mode("overwrite").parquet(s"$path/meta"))
     writeBucketsMarker(spark, path, nBuckets)
-    writeLongMarker(spark, path, LastBatchMarker, 0L)
+    graft.FsOps.writeLongMarker(spark, path, LastBatchMarker, 0L)
   }
 
   /** Incrementally add documents to a persisted index store: postings and
@@ -362,15 +362,18 @@ object Indexer {
         s"Example: ${overlapping.limit(3).collect().mkString(", ")}")
     // the batch ordinal this append writes under (None on a pre-marker
     // legacy store: tagging it would give the store a mixed schema)
-    val batchId = readLongMarker(spark, path, LastBatchMarker).map(_ + 1)
+    val batchId = graft.FsOps.readLongMarker(spark, path, LastBatchMarker).map(_ + 1)
     def tag(df: DataFrame): DataFrame =
       batchId.map(b => df.withColumn("batch", lit(b))).getOrElse(df)
     val delta = buildIndex(newCorpus, idCol, textCol, titleCol)
-    // the three table appends (doc_stats, postings, co-located
-    // positional) land at disjoint paths from independent lineages —
-    // overlap them (guide §2.6). Crash ordering is unchanged: the batch
-    // marker still advances only after ALL of them committed.
-    val appendTables: Seq[() => Unit] = (docBucketsOf(spark, path) match {
+    // doc_stats lands FIRST: it is the table the duplicate guard probes,
+    // so a failure before it commits leaves nothing behind, and a failure
+    // after it makes a retry refuse loudly (rollbackPartialAppend
+    // repairs) instead of double-counting postings that already landed.
+    // Postings and the co-located positional table then land at disjoint
+    // paths from independent lineages — overlap them (guide §2.6). The
+    // batch marker advances only after ALL of them committed.
+    val (docStatsStep, postingsStep) = docBucketsOf(spark, path) match {
       case Some(db) =>
         // doc-bucketed store: the delta appends THROUGH the catalog with
         // the store's own bucket spec (by-name column resolution; a
@@ -383,8 +386,7 @@ object Indexer {
           partitioned = false)
         val poName = registerBucketedTable(spark, path, "postings", db,
           partitioned = true)
-        Seq(
-          () => tag(delta.docStats).repartition(db, col("doc_id"))
+        (() => tag(delta.docStats).repartition(db, col("doc_id"))
             .write.format("parquet")
             .bucketBy(db, "doc_id").sortBy("doc_id")
             .mode("append").saveAsTable(dsName),
@@ -396,15 +398,14 @@ object Indexer {
             .bucketBy(db, "doc_id").sortBy("doc_id")
             .mode("append").saveAsTable(poName))
       case None =>
-        Seq(
-          () => tag(delta.docStats).write.mode("append").parquet(s"$path/doc_stats"),
+        (() => tag(delta.docStats).write.mode("append").parquet(s"$path/doc_stats"),
           () => tag(delta.postings)
             .withColumn("term_bucket", termBucket(col("term"), nb))
             .repartition(nb, col("term_bucket"))
             .write.mode("append")
             .partitionBy("term_bucket")
             .parquet(s"$path/postings"))
-    })
+    }
     // a CO-LOCATED positional table must grow with the same batch —
     // otherwise the phrase/proximity faces would silently miss the
     // appended docs (the append-side twin of the delete-consistency
@@ -416,12 +417,13 @@ object Indexer {
         Seq(() => appendPositional(spark, path, newCorpus, idCol, textCol,
           nBuckets, checkDuplicates = false, batchId = batchId))
       else Seq.empty
-    graft.operators.Par.run(appendTables ++ positionalStep: _*)
+    docStatsStep()
+    graft.operators.Par.run(postingsStep +: positionalStep: _*)
     // the marker advances LAST: a crash mid-append leaves the marker at
     // the old value, so the next incremental audit still covers every
     // row the interrupted append managed to land (they carry the
     // not-yet-vouched-for batch ordinal)
-    batchId.foreach(b => writeLongMarker(spark, path, LastBatchMarker, b))
+    batchId.foreach(b => graft.FsOps.writeLongMarker(spark, path, LastBatchMarker, b))
     // derived tables: merged INCREMENTALLY from the delta — work ∝
     // |batch| + |vocab|, never ∝ the stored postings (the r6 full
     // recompute re-aggregated the whole store on every append). Sound
@@ -479,7 +481,7 @@ object Indexer {
     // marker does not advance. appendIndex's co-located path passes the
     // batch explicitly; a true standalone store starts its own sequence.
     val coTrackedBackfill = standalone && dsExists && dsTracked
-    val b = batchId.orElse(readLongMarker(spark, path, LastBatchMarker).map(_ + 1))
+    val b = batchId.orElse(graft.FsOps.readLongMarker(spark, path, LastBatchMarker).map(_ + 1))
     val tagged =
       if (coTrackedBackfill)
         inheritDocBatch(spark, path, pos, newCorpus.select(col(idCol).as("doc_id")))
@@ -508,7 +510,7 @@ object Indexer {
           .parquet(s"$path/positional")
     }
     if (standalone && !coTrackedBackfill)
-      b.foreach(x => writeLongMarker(spark, path, LastBatchMarker, x))
+      b.foreach(x => graft.FsOps.writeLongMarker(spark, path, LastBatchMarker, x))
   }
 
   /** Drop the rows a CRASHED [[appendIndex]] managed to land — the repair
@@ -709,7 +711,7 @@ object Indexer {
     * orders tombstone drops last, so every intermediate state serves the
     * correct live view (spec-proven), and the doc-bucketed faces' catalog
     * registration binds to stable root URIs. */
-  private val DerivedTables = Seq("vocab", "meta")
+  private[graft] val DerivedTables = Seq("vocab", "meta")
 
   /** Resolved directory of a derived table (`vocab`/`meta`) in the
     * store's CURRENT frame — the entry every reader goes through (a raw
@@ -863,22 +865,14 @@ object Indexer {
   private[graft] val LastBatchMarker = "_lastbatch"
   private[graft] val LastAuditMarker = "_last_audit"
 
-  private def writeLongMarker(spark: org.apache.spark.sql.SparkSession,
-                              path: String, marker: String, v: Long): Unit =
-    graft.FsOps.writeLongMarker(spark, path, marker, v)
-
-  private def readLongMarker(spark: org.apache.spark.sql.SparkSession,
-                             path: String, marker: String): Option[Long] =
-    graft.FsOps.readLongMarker(spark, path, marker)
-
   /** Highest ingest-batch ordinal the store has recorded (None on a
     * store written before batch tracking existed). */
   def lastBatch(spark: org.apache.spark.sql.SparkSession, path: String): Option[Long] =
-    readLongMarker(spark, path, LastBatchMarker)
+    graft.FsOps.readLongMarker(spark, path, LastBatchMarker)
 
   /** Highest batch ordinal an audit has vouched for (None = never audited). */
   def lastAudited(spark: org.apache.spark.sql.SparkSession, path: String): Option[Long] =
-    readLongMarker(spark, path, LastAuditMarker)
+    graft.FsOps.readLongMarker(spark, path, LastAuditMarker)
 
   /** Record that every batch up to `upTo` (default: the store's current
     * last batch) has been audited — call it after a clean [[checkStore]]
@@ -891,7 +885,7 @@ object Indexer {
     val v = upTo.orElse(lastBatch(spark, path)).getOrElse(
       throw new IllegalStateException(s"markAudited: no batch marker at $path — " +
         "a pre-batch-tracking store has nothing to scope an incremental audit to"))
-    writeLongMarker(spark, path, LastAuditMarker, v)
+    graft.FsOps.writeLongMarker(spark, path, LastAuditMarker, v)
   }
 
   /** The bucket count a store was written with, if recorded. */
@@ -1125,7 +1119,7 @@ object Indexer {
     // up to, so the next incremental audit can report its forced-full
     // degradation instead of silently paying it (see CompactedThroughMarker)
     lastBatch(spark, path).foreach(b =>
-      writeLongMarker(spark, path, CompactedThroughMarker, b))
+      graft.FsOps.writeLongMarker(spark, path, CompactedThroughMarker, b))
   }
 
   /** Maintenance rewrite of one doc-bucketed store table, layout
@@ -1579,7 +1573,7 @@ object Indexer {
     // instead of letting the operator believe the delta priced the run;
     // `mark-audited` after compacting retires the row.
     val forcedFull = {
-      val through = readLongMarker(spark, path, CompactedThroughMarker)
+      val through = graft.FsOps.readLongMarker(spark, path, CompactedThroughMarker)
       if (through.exists(_ > since))
         row("delta_full_audit_forced_doc_compaction",
           spark.range(1).select(lit(1L).as("checked"), lit(0L).as("violations")))

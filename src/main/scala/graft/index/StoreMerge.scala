@@ -79,7 +79,7 @@ object StoreMerge {
       // commit and the husk stamps (complete the stamps and return —
       // FsOps.completeHuskStamps), or a genuine re-merge to refuse
       if (moveFiles && graft.FsOps.completeHuskStamps(spark, sources, dest,
-          DataTables)) return
+          s => DataTables.map(t => s"$s/$t"))) return
       throw new IllegalArgumentException(
         s"$dest already carries a committed store (its _nbuckets marker " +
           "exists) — merging INTO a live store is appendIndex's job")

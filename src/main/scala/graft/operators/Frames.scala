@@ -3,43 +3,48 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Manifest-frame installs for MULTI-TABLE stores (VERDICT r18 #1) —
-  * the generalization of the IVF store's single-dir frame pointer
-  * ([[graft.similarity.IvfStore]] `_frame`) to stores whose maintenance
-  * verbs rewrite SOME tables and must carry the rest BY REFERENCE
-  * (copying an unchanged `sets` or `postings` per repair would be an
-  * O(store) tax the IVF design never pays because its frame is small
-  * enough to file-copy).
+/** Manifest-frame installs — the one version-pointer mechanism of every
+  * multi-table store ([[graft.index.Indexer]]'s `vocab`/`meta`,
+  * [[graft.dedup.DedupStore]]'s `sets`/`buckets`,
+  * [[graft.similarity.IvfStore]]'s `centroids`/`lists`/`deletes`).
+  * A maintenance verb rewrites SOME tables and carries the rest BY
+  * REFERENCE: copying an unchanged `sets`, `postings` or centroid table
+  * per repair would be an O(store) tax for nothing.
   *
   * Layout:
   *   - no `_frame` marker → the LEGACY layout: every table lives at
   *     `<store>/<table>` (every fresh build starts here — zero
   *     indirection until the first frame install);
   *   - `_frame` = N → the manifest FILE `<store>/frames/v=N` lists one
-  *     `<table>:<token>` line per table, where the token is either a
-  *     generation number (data at `<store>/tables/<table>/g=<gen>`) or
-  *     the literal `root` (data still at the legacy `<store>/<table>` —
+  *     `<table>:<token>` line per declared table, where the token is
+  *     either a generation number (data at `<store>/tables/<table>/g=<gen>`)
+  *     or the literal `root` (data still at the legacy `<store>/<table>` —
   *     carried by reference from before the store was frame-tracked).
+  *
+  * A declared table with no data (one the legacy store never had, or
+  * one a verb [[Stage.drop]]ped) is a generation no writer has created
+  * yet: it resolves to a directory that does not exist, so readers see
+  * the table as absent, and an append-only writer (IVF `deleteVectors`
+  * after an expunge) creates it in place. Undeclared tables fail
+  * loudly.
   *
   * Install protocol (one writer, many readers — the repo-wide store
   * discipline): stage each REWRITTEN table into a fresh generation dir,
   * write the complete next manifest (tmp-first marker install), then
   * flip the `_frame` pointer with ONE rename. Readers resolve pointer →
   * manifest → table dirs; they see the old frame or the new frame,
-  * never a mix — the two sequential per-table swaps this replaces
-  * ([[graft.dedup.DedupStore.removeDocs]]'s r18 shape) had a crash
-  * window between them that left the tables describing DIFFERENT
-  * document populations. A crash any time before the flip costs nothing
+  * never a mix, so two tables rewritten by one verb can never describe
+  * different populations. A crash any time before the flip costs nothing
   * (readers serve the old frame; the re-run restages); after the flip,
   * superseded generations are dead bytes [[gc]] sweeps.
   *
-  * Retention (VERDICT r18 #2): [[gc]] keeps the current frame AND the
-  * `retain` most recent superseded frames (default 1) — an external
-  * reader that resolved its table dirs just before a flip completes its
-  * scan against the retained previous frame; only a SECOND install
-  * while that scan still runs can sweep the files under it (the same
-  * bounded grace contract as [[graft.streaming.VersionedStore]]'s
-  * `vacuum(retain)`). `retain = 0` is the reclaim-now maintenance verb.
+  * Retention: [[gc]] keeps the current frame AND the `retain` most
+  * recent superseded frames (default 1) — an external reader that
+  * resolved its table dirs just before a flip completes its scan against
+  * the retained previous frame; only a SECOND install while that scan
+  * still runs can sweep the files under it (the same bounded grace
+  * contract as [[graft.streaming.VersionedStore]]'s `vacuum(retain)`).
+  * `retain = 0` is the reclaim-now maintenance verb.
   */
 object Frames {
 
@@ -69,27 +74,36 @@ object Frames {
     }.toMap
   }
 
-  /** Directory of `table` in the store's CURRENT frame. Legacy stores
-    * resolve to `<path>/<table>` (existence is the caller's concern,
-    * exactly as before frames existed); frame-tracked stores resolve
-    * through the manifest and FAIL LOUDLY on a table the manifest does
-    * not list (the manifest is the complete inventory of its frame). */
-  def resolve(spark: SparkSession, path: String, table: String): String =
+  private def dirOf(path: String, table: String, token: String): String =
+    if (token == RootToken) s"$path/$table" else s"$path/tables/$table/g=$token"
+
+  /** Directories of `tables` in the store's CURRENT frame, from ONE
+    * pointer read and ONE manifest read. Legacy stores resolve to
+    * `<path>/<table>` (existence is the caller's concern, exactly as
+    * before frames existed); frame-tracked stores resolve through the
+    * manifest and FAIL LOUDLY on a table the manifest does not list
+    * (the manifest is the complete inventory of its frame). */
+  def resolveAll(spark: SparkSession, path: String,
+                 tables: Seq[String]): Map[String, String] =
     currentVersion(spark, path) match {
-      case None => s"$path/$table"
+      case None => tables.map(t => t -> s"$path/$t").toMap
       case Some(v) =>
-        manifest(spark, path, v).get(table) match {
-          case Some(RootToken) => s"$path/$table"
-          case Some(gen) => s"$path/tables/$table/g=$gen"
-          case None => throw new IllegalStateException(
-            s"frame v=$v of $path lists no '$table' table — the manifest " +
-              "is the frame's complete inventory; fsck the store")
-        }
+        val m = manifest(spark, path, v)
+        tables.map { t =>
+          t -> dirOf(path, t, m.getOrElse(t, throw new IllegalStateException(
+            s"frame v=$v of $path lists no '$t' table — the manifest " +
+              "is the frame's complete inventory; fsck the store")))
+        }.toMap
     }
 
+  /** Directory of one table in the store's CURRENT frame ([[resolveAll]]). */
+  def resolve(spark: SparkSession, path: String, table: String): String =
+    resolveAll(spark, path, Seq(table))(table)
+
   /** One staged multi-table install. Obtain via [[begin]]; write each
-    * rewritten table into [[stageDir]]'s directory; [[commit]] installs
-    * everything with one pointer flip. Tables never staged carry by
+    * rewritten table into [[stageDir]]'s directory, [[drop]] the tables
+    * the new frame must not carry; [[commit]] installs everything with
+    * one pointer flip. Tables neither staged nor dropped carry by
     * reference (their current manifest entry — or `root` on a legacy
     * store — is copied into the next manifest verbatim). */
   final class Stage private[Frames] (spark: SparkSession, path: String,
@@ -98,28 +112,40 @@ object Frames {
                                      carried: Map[String, String]) {
     private val entries = scala.collection.mutable.Map[String, String](
       carried.toSeq: _*)
+    // a declared table the current frame lacks is carried as absent
+    tables.filterNot(carried.contains).foreach(drop)
 
-    /** Fresh generation directory for `table` (cleared first: unflipped
-      * debris there is a DIFFERENT crashed install's staging by
-      * definition — unreachable by readers, and stale files with other
-      * names would survive an overwrite-mode parquet write of this
-      * verb's and mix two rewrites into one table). Records the new
-      * generation in the next manifest. */
+    /** Fresh generation directory for `table` — past every generation on
+      * disk AND the one the current frame references (which may not
+      * exist yet, and must never be shared with the staged frame). The
+      * dir is cleared first: unflipped debris there is a DIFFERENT
+      * crashed install's staging by definition — unreachable by
+      * readers, and stale files with other names would survive an
+      * overwrite-mode parquet write of this verb's and mix two rewrites
+      * into one table. Records the new generation in the next manifest. */
     def stageDir(table: String): String = {
       require(tables.contains(table),
         s"'$table' is not one of this store's declared tables: $tables")
       val base = new Path(s"$path/tables/$table")
       val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val next =
-        if (!fs.exists(base)) 0L
+      val onDisk =
+        if (!fs.exists(base)) Iterator.empty
         else fs.listStatus(base).iterator.map(_.getPath.getName)
-          .filter(_.startsWith("g="))
-          .flatMap(_.stripPrefix("g=").toLongOption).foldLeft(-1L)(math.max) + 1L
-      val dir = new Path(s"$path/tables/$table/g=$next")
-      fs.delete(dir, true)
+          .filter(_.startsWith("g=")).flatMap(_.stripPrefix("g=").toLongOption)
+      val next = (onDisk ++ carried.get(table).flatMap(_.toLongOption))
+        .foldLeft(-1L)(math.max) + 1L
+      fs.delete(new Path(dirOf(path, table, next.toString)), true)
       entries(table) = next.toString
-      s"$path/tables/$table/g=$next"
+      dir(table)
     }
+
+    /** Install the next frame WITHOUT `table`'s current data: the table
+      * resolves to a fresh, never-written generation (absent to readers
+      * until a writer creates it). */
+    def drop(table: String): Unit = stageDir(table)
+
+    /** Directory `table` resolves to in the staged frame. */
+    def dir(table: String): String = dirOf(path, table, entries(table))
 
     /** Install the staged frame: write the complete next manifest
       * (tmp-first), flip the `_frame` pointer with ONE rename, sweep
@@ -127,8 +153,6 @@ object Frames {
       * commit point — a crash anywhere before it leaves the old frame
       * serving and the re-run restaging over dead bytes. */
     def commit(retain: Int = 1): Unit = {
-      require(entries.nonEmpty, "commit of an empty frame: nothing staged " +
-        "and nothing carried — refusing to install a store with no tables")
       val content = entries.toSeq.sortBy(_._1)
         .map { case (t, tok) => s"$t:$tok" }.mkString("\n")
       graft.FsOps.writeMarker(spark, s"$path/frames", s"v=$nextVersion", content)
@@ -140,7 +164,7 @@ object Frames {
   /** Open a staged install against the store's current frame. `tables`
     * is the store's complete declared table inventory — carried entries
     * come from it (legacy stores carry every declared table that exists
-    * at the root as `root`). */
+    * at the root as `root`, and the rest as absent). */
   def begin(spark: SparkSession, path: String, tables: Seq[String]): Stage =
     currentVersion(spark, path) match {
       case Some(v) =>

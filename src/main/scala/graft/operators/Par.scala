@@ -35,32 +35,14 @@ object Par {
     sys.env.get("SPARK_GRAFT_DRIVER_PAR").flatMap(_.toIntOption)
       .filter(_ >= 1).getOrElse(8)
 
-  /** Run the actions, overlapping up to [[width]] at a time. Serial when
-    * given 0 or 1 actions (no pool spun up). */
-  def run(actions: (() => Unit)*): Unit = {
-    if (actions.size <= 1) { actions.foreach(_()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(actions.size, width))
-    try {
-      val futures = actions.map(a =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = a()
-        }))
-      var firstFailure: Option[Throwable] = None
-      futures.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (firstFailure.isEmpty) firstFailure = Some(e.getCause)
-        }
-      }
-      firstFailure.foreach(throw _)
-    } finally pool.shutdown()
-  }
+  /** Run the actions, overlapping up to [[width]] at a time (serial for
+    * 0 or 1 actions) — [[map]] with the same failure contract. */
+  def run(actions: (() => Unit)*): Unit = map(actions)(_())
 
   /** Map `items` through `f` concurrently (bounded by [[width]]),
-    * preserving input order in the result. Same failure contract as
-    * [[run]]. */
+    * preserving input order in the result. Serial when given 0 or 1
+    * items (no pool spun up). Every item finishes before the first
+    * failure is rethrown. */
   def map[A, B](items: Seq[A])(f: A => B): Seq[B] = {
     if (items.size <= 1) return items.map(f)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(

@@ -103,10 +103,9 @@ object Forget {
         case "dedup" => graft.dedup.DedupStore.storedGeometry(spark, p).nonEmpty
         case "ivf"   =>
           // resolve the frame pointer: a reclustered/expunged store's
-          // tables live under frames/v=N, not at the store root
-          val r = graft.similarity.IvfStore.frameRoot(spark, p)
-          fs.exists(new Path(s"$r/centroids")) &&
-            fs.exists(new Path(s"$r/lists"))
+          // tables live under generation dirs, not at the store root
+          graft.operators.Frames.resolveAll(spark, p, Seq("centroids", "lists"))
+            .values.forall(d => fs.exists(new Path(d)))
         case "vstore" => graft.streaming.VersionedStore.hasCommits(spark, p)
       })
     }

@@ -72,7 +72,7 @@ object Promote {
           roots.map(r => s"$r/dedup"), s"$dest/dedup", moveFiles)),
       (fams.contains("ivf") &&
         // commit probe resolves the frame pointer (a reclustered dest's
-        // centroids live under frames/v=N, not at the store root)
+        // centroids live under a generation dir, not at the store root)
         !graft.similarity.IvfStore.isCommitted(spark, s"$dest/ivf"),
         () => graft.similarity.IvfStore.mergeStores(spark,
           roots.map(r => s"$r/ivf"), s"$dest/ivf", moveFiles)))

@@ -16,13 +16,14 @@ import org.apache.spark.sql.functions._
   *     index's inverted lists);
   *   - `deletes`   — soft-delete tombstones (anti-joined at probe time).
   *
-  * The three data tables form the store's FRAME, resolved through the
-  * `_frame` version pointer ([[FrameMarker]]): fresh builds live flat at
-  * the store root, and every maintenance rewrite (recluster, expunge,
-  * flatten, repair) installs a complete new frame under `frames/v=N`
-  * with one atomic pointer flip — readers serve THROUGH maintenance and
-  * a crash anywhere costs only dead staged bytes. Markers stay at the
-  * store root.
+  * The three tables are the store's declared [[graft.operators.Frames]]
+  * inventory ([[Tables]]): fresh builds live flat at the store root, and
+  * every maintenance rewrite (recluster, expunge, flatten, repair)
+  * stages the tables it rewrites as new generations, carries the rest by
+  * reference and installs them with one manifest-pointer flip — readers
+  * serve THROUGH maintenance and a crash anywhere costs only dead staged
+  * bytes. Every entry resolves the three directories with one pointer +
+  * manifest read; markers stay at the store root.
   *
   * Query-time pruning mirrors the BM25 store's term buckets: the probed
   * cids for a bounded query set are collected driver-side (≤ nCentroids
@@ -31,25 +32,40 @@ import org.apache.spark.sql.functions._
   */
 object IvfStore {
 
+  /** The store's complete table inventory (the manifest frame's universe). */
+  private[graft] val Tables = Seq("centroids", "lists", "deletes")
+
+  /** Directories of the store's tables in its CURRENT frame — one
+    * pointer + manifest read ([[graft.operators.Frames.resolveAll]]);
+    * `deletes` (and `lists` before a bootstrapped store's first batch)
+    * may not exist. */
+  private def tableDirs(spark: SparkSession, path: String): Map[String, String] =
+    graft.operators.Frames.resolveAll(spark, path, Tables)
+
+  private def dirExists(spark: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   def writeIndex(corpus: DataFrame, path: String,
                  nCentroids: Int = 16, kmeansIters: Int = 2,
                  idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = corpus.sparkSession
     // a rebuild over a frame-installed store overwrites the CURRENT
-    // frame in place (the pointer stays) — same non-atomic rebuild
-    // contract as overwriting a legacy store's tables
-    val root = frameRoot(spark, path)
+    // frame's tables in place (the pointer stays) — same non-atomic
+    // rebuild contract as overwriting a legacy store's tables
+    val dirs = tableDirs(spark, path)
     Similarity.kmeansCentroids(corpus, nCentroids, kmeansIters, idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$root/centroids")
+      .write.mode("overwrite").parquet(dirs("centroids"))
     // assign against the JUST-PERSISTED centroids (derive-from-persisted
     // rule — and the exact same centroid values the query path will read)
-    val cents = broadcast(spark.read.parquet(s"$root/centroids"))
+    val cents = broadcast(spark.read.parquet(dirs("centroids")))
     Similarity.assignToCentroids(
         corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
         cents, "vec_id", "v", keep = 1)
       .withColumn("nv", Similarity.norm(col("v")))
       .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$root/lists")
+      .write.mode("overwrite").partitionBy("cid").parquet(dirs("lists"))
   }
 
   /** IVF store with int8-QUANTIZED inverted lists — the memory-bound
@@ -70,10 +86,10 @@ object IvfStore {
                           nCentroids: Int = 16, kmeansIters: Int = 2,
                           idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = corpus.sparkSession
-    val root = frameRoot(spark, path)
+    val dirs = tableDirs(spark, path)
     Similarity.kmeansCentroids(corpus, nCentroids, kmeansIters, idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$root/centroids")
-    val cents = broadcast(spark.read.parquet(s"$root/centroids"))
+      .write.mode("overwrite").parquet(dirs("centroids"))
+    val cents = broadcast(spark.read.parquet(dirs("centroids")))
     val assigned = Similarity.assignToCentroids(
       corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
       cents, "vec_id", "v", keep = 1)
@@ -87,7 +103,7 @@ object IvfStore {
         sqrt(Similarity.dot(col("rv"), col("rv"))).as("nv"))
     assigned.select("vec_id", "cid").join(codes, "vec_id")
       .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$root/lists")
+      .write.mode("overwrite").partitionBy("cid").parquet(dirs("lists"))
   }
 
   /** Probe a quantized store: same pruning/probe shape as
@@ -97,8 +113,8 @@ object IvfStore {
                            k: Int, nProbe: Int = 4,
                            idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
-    val root = frameRoot(spark, path)
-    val cents = broadcast(spark.read.parquet(s"$root/centroids"))
+    val dirs = tableDirs(spark, path)
+    val cents = broadcast(spark.read.parquet(dirs("centroids")))
     val q = Similarity.assignToCentroids(
         queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
         cents, "query_id", "qv", keep = nProbe)
@@ -108,14 +124,14 @@ object IvfStore {
     // only per-pair arithmetic. Scoring uses the declarative fold (same
     // left-to-right double accumulation as the codegen dotF, which is
     // float-array-only).
-    val lists = spark.read.parquet(s"$root/lists")
+    val lists = spark.read.parquet(dirs("lists"))
       .filter(col("cid").isin(probed: _*))
       .withColumn("v", transform(col("qvec"),
         x => round(x.cast("double") * col("scale"), 6)))
       .select("cid", "vec_id", "v", "nv")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)
-    liveLists(spark, root, lists).join(broadcast(q), "cid")
+    liveLists(spark, dirs("deletes"), lists).join(broadcast(q), "cid")
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos",
         // zero-norm guard (same contract as Similarity.cosinePrenormed):
@@ -139,7 +155,7 @@ object IvfStore {
                      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
     Similarity.kmeansCentroids(corpus, nCentroids, kmeansIters, idCol, vecCol)
       .write.mode("overwrite")
-      .parquet(s"${frameRoot(corpus.sparkSession, path)}/centroids")
+      .parquet(graft.operators.Frames.resolve(corpus.sparkSession, path, "centroids"))
 
   /** Assign one ingest batch against the persisted centroids and add its
     * vectors to the inverted lists. Replay-safe: every batch writes under
@@ -178,20 +194,20 @@ object IvfStore {
                   idCol: String = "vec_id", vecCol: String = "embedding",
                   quantize: Boolean = false): Unit = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
-    val root = frameRoot(spark, path)
-    val listsP = new org.apache.hadoop.fs.Path(s"$root/lists")
+    val dirs = tableDirs(spark, path)
+    val listsP = new org.apache.hadoop.fs.Path(dirs("lists"))
     val lfs = listsP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (lfs.exists(listsP)) {
       val kids = lfs.listStatus(listsP).filter(_.isDirectory).map(_.getPath.getName)
       require(kids.isEmpty || kids.exists(_.startsWith("batch=")),
-        s"appendBatch: $root/lists carries a fresh (cid-only) layout — " +
+        s"appendBatch: ${dirs("lists")} carries a fresh (cid-only) layout — " +
           "appending a batch= layer would leave a half-present batch column " +
           "that serves neither audit; streaming ingest targets stores " +
           "bootstrapped by writeCentroids (rebuild, or merge shards instead)")
       if (kids.nonEmpty) {
         // one footer read (metadata): the store's layers must stay
         // uniformly raw or uniformly quantized
-        val hasQ = spark.read.parquet(s"$root/lists").columns.contains("qvec")
+        val hasQ = spark.read.parquet(dirs("lists")).columns.contains("qvec")
         require(hasQ == quantize,
           s"appendBatch: store at $path holds " +
             s"${if (hasQ) "QUANTIZED" else "RAW"} lists but the batch would " +
@@ -208,7 +224,7 @@ object IvfStore {
           "never re-inspect; ingest with fresh ordinals from " +
           "listBatches(path).last + 1")
     }
-    val cents = broadcast(spark.read.parquet(s"$root/centroids"))
+    val cents = broadcast(spark.read.parquet(dirs("centroids")))
     val assignedRaw = Similarity.assignToCentroids(
       batch.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
       cents, "vec_id", "v", keep = 1)
@@ -227,14 +243,10 @@ object IvfStore {
       })
       .withColumn("batch", lit(batchId))
       .repartition(col("cid"))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try assigned.write.mode("overwrite")
-      .partitionBy("batch", "cid").parquet(s"$root/lists")
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // per-write dynamic overwrite: session conf stays untouched (other
+    // writes may be running concurrently under Par)
+    assigned.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch", "cid").parquet(dirs("lists"))
   }
 
   /** Attach a streaming vector source to the store: each micro-batch is
@@ -265,15 +277,15 @@ object IvfStore {
       : Map[String, graft.operators.Compaction.CompactionStats] = {
     graft.FsOps.requireNotHusk(spark, path)
     graft.operators.Compaction.compactPartitionsRecursive(
-      spark, s"${frameRoot(spark, path)}/lists", targetBytes)
+      spark, graft.operators.Frames.resolve(spark, path, "lists"), targetBytes)
   }
 
   /** Flatten a streaming-ingested store's `batch=` layers into the fresh
     * `cid=`-only layout — the "stream-compact" step the mixed-layout
     * merge refusal prescribes: [[mergeStores]] requires uniformly fresh
     * or uniformly layered sources, so a layered shard flattens first to
-    * merge with fresh ones. One layout rewrite under the crash-safe
-    * swap (layout metadata only — no score, assignment or tombstone
+    * merge with fresh ones. One layout rewrite installed as a new
+    * frame (layout metadata only — no score, assignment or tombstone
     * changes: deletes carry as-is, expunge stays its own verb). Batch
     * provenance is gone afterwards, so the `_last_audit` watermark
     * drops with it ([[checkStoreIncremental]] refuses cid-only stores;
@@ -281,41 +293,35 @@ object IvfStore {
     * refuses the flattened store like any fresh build — flattening is
     * the END of a shard's ingest life, the step before promotion.
     * Idempotent: a store already in fresh layout is a no-op (the
-    * crash-resume contract — a death between the swap and the marker
+    * crash-resume contract — a death between the flip and the marker
     * drop re-runs to completion). */
   def flattenBatches(spark: SparkSession, path: String): Unit = {
     graft.FsOps.requireNotHusk(spark, path)
-    val root = frameRoot(spark, path)
-    val listsP = new org.apache.hadoop.fs.Path(s"$root/lists")
+    val dirs = tableDirs(spark, path)
+    val listsP = new org.apache.hadoop.fs.Path(dirs("lists"))
     val fs = listsP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a bootstrapped shard that never ingested has no lists yet — it is
     // trivially fresh; the no-op contract covers it (not a parquet error)
     if (!fs.exists(listsP)) return
-    val snap = snapshotFrame(spark, root)
-    val lists = pinToSnapshot(spark.read.parquet(s"$root/lists"), snap)
+    val snap = snapshotFrame(spark, dirs)
+    val lists = pinToSnapshot(spark.read.parquet(dirs("lists")), snap)
     if (lists.columns.contains("batch")) {
-      // frame-bump install (contract note at [[FrameMarker]]): the
-      // flattened lists stage in the next frame, the unchanged
-      // centroids file-copy in (≤ nCentroids rows — metadata cost) and
-      // tombstones carry AS-IS (flatten must never expunge — masking
-      // stays masking); one pointer flip installs the layout rewrite,
-      // so a crash never leaves the store without a readable lists dir
-      val (next, nroot) = nextFrame(spark, path)
+      // frame install: the flattened lists stage as a new generation,
+      // centroids and tombstones carry by reference (flatten must never
+      // expunge — masking stays masking); one pointer flip installs the
+      // layout rewrite, so a crash never leaves the store without a
+      // readable lists dir
+      val stage = graft.operators.Frames.begin(spark, path, Tables)
       lists.drop("batch")
         .repartition(col("cid"))
         .write.mode("overwrite").partitionBy("cid")
-        .parquet(s"$nroot/lists")
-      graft.FsOps.transferDataFiles(spark, s"$root/centroids",
-        s"$nroot/centroids", "", move = false)
-      graft.FsOps.transferDataFiles(spark, s"$root/deletes",
-        s"$nroot/deletes", "", move = false)
+        .parquet(stage.stageDir("lists"))
       midMaintenanceHook(spark)
-      // batches/tombstones that landed while the rewrite staged fold
-      // into the flattened layout too (same centroids — cids keep)
-      carryFrameDelta(spark, root, nroot, snap, reassign = false,
+      // batches that landed while the rewrite staged fold into the
+      // flattened layout too (same centroids — cids keep)
+      carryFrameDelta(spark, dirs, stage, snap, reassign = false,
         stripBatch = true)
-      graft.FsOps.writeLongMarker(spark, path, FrameMarker, next) // the flip
-      gcFrames(spark, fs, path)
+      stage.commit()
     }
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/$LastAuditMarker"), true)
     fs.delete(new org.apache.hadoop.fs.Path(
@@ -344,7 +350,7 @@ object IvfStore {
                     idCol: String = "vec_id"): Unit = {
     graft.FsOps.requireNotHusk(spark, path)
     ids.select(col(idCol).as("vec_id")).distinct()
-      .write.mode("append").parquet(s"${frameRoot(spark, path)}/deletes")
+      .write.mode("append").parquet(graft.operators.Frames.resolve(spark, path, "deletes"))
   }
 
   /** Physically apply accumulated tombstones ([[deleteVectors]]) — the
@@ -359,40 +365,34 @@ object IvfStore {
     * [[compactLists]], never an ingest-path cost. No-op without
     * tombstones.
     *
-    * Install is a FRAME BUMP (contract note at [[FrameMarker]]): the
-    * live rows rewrite into the next frame's lists, the (unchanged)
-    * centroid table copies in at file level (≤ nCentroids rows —
-    * metadata cost), the new frame simply carries NO tombstone table,
-    * and one pointer flip installs all three together — the lists
-    * rewrite and the tombstone drop can no longer tear apart. A crash
-    * before the flip costs nothing (the old frame serves, tombstones
-    * still applied by the anti-join; the re-run restages); after the
-    * flip only dead bytes remain for the cleanup below or the next
-    * bump. */
+    * Install is a frame flip ([[graft.operators.Frames]]): the live rows
+    * stage as a new `lists` generation, the unchanged centroids carry by
+    * reference, the new frame DROPS the tombstone table, and one pointer
+    * flip installs the lists rewrite and the tombstone drop together —
+    * they can no longer tear apart. A crash before the flip costs
+    * nothing (the old frame serves, tombstones still applied by the
+    * anti-join; the re-run restages); after the flip only dead bytes
+    * remain for the retention sweep. */
   def expungeDeletes(spark: SparkSession, path: String): Unit = {
     graft.FsOps.requireNotHusk(spark, path)
-    val root = frameRoot(spark, path)
-    val del = new org.apache.hadoop.fs.Path(s"$root/deletes")
-    val fs = del.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(del)) return
-    val snap = snapshotFrame(spark, root)
-    val lists = pinToSnapshot(spark.read.parquet(s"$root/lists"), snap)
+    val dirs = tableDirs(spark, path)
+    if (!dirExists(spark, dirs("deletes"))) return
+    val snap = snapshotFrame(spark, dirs)
+    val lists = pinToSnapshot(spark.read.parquet(dirs("lists")), snap)
     val partCols = if (lists.columns.contains("batch")) Seq("batch", "cid") else Seq("cid")
-    val (next, nroot) = nextFrame(spark, path)
-    liveLists(spark, root, lists)
+    val stage = graft.operators.Frames.begin(spark, path, Tables)
+    liveLists(spark, dirs("deletes"), lists)
       .repartition(partCols.map(col): _*)
       .write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(s"$nroot/lists")
-    graft.FsOps.transferDataFiles(spark, s"$root/centroids",
-      s"$nroot/centroids", "", move = false)
+      .parquet(stage.stageDir("lists"))
+    stage.drop("deletes")
     midMaintenanceHook(spark)
     // concurrent ingest landed while the rewrite staged: carry it (the
     // new frame keeps ONLY the delta tombstones — snapshot ones were
     // materialized out of the rewrite)
-    carryFrameDelta(spark, root, nroot, snap, reassign = false,
+    carryFrameDelta(spark, dirs, stage, snap, reassign = false,
       stripBatch = false)
-    graft.FsOps.writeLongMarker(spark, path, FrameMarker, next) // the flip
-    gcFrames(spark, fs, path)
+    stage.commit()
   }
 
   /** Repair the inverted lists — the REPAIR step beside [[checkStore]]'s
@@ -417,16 +417,17 @@ object IvfStore {
     *     (raw) or its `round(code·scale, 6)` reconstruction (quantized),
     *     bit-identical to the write paths.
     *
-    * Installed via the crash-safe rename-aside swap, `batch=`/`cid=`
-    * layout preserved. Scale: one pass over lists + one vec_id exchange
+    * Installed as a new frame (the repaired `lists` generation; centroids
+    * and tombstones carry by reference), `batch=`/`cid=` layout
+    * preserved. Scale: one pass over lists + one vec_id exchange
     * (dedup window) + the broadcast assignment — a compaction-class
     * maintenance job beside [[compactLists]]/[[expungeDeletes]], never a
     * probe-path cost. */
   def repairLists(spark: SparkSession, path: String): Unit = {
     graft.FsOps.requireNotHusk(spark, path)
-    val root = frameRoot(spark, path)
-    val snap = snapshotFrame(spark, root)
-    val lists = pinToSnapshot(spark.read.parquet(s"$root/lists"), snap)
+    val dirs = tableDirs(spark, path)
+    val snap = snapshotFrame(spark, dirs)
+    val lists = pinToSnapshot(spark.read.parquet(dirs("lists")), snap)
     val quantized = lists.columns.contains("qvec")
     val partCols = if (lists.columns.contains("batch")) Seq("batch", "cid") else Seq("cid")
     // total order: cid, batch (if present), payload hash — same-cid
@@ -447,7 +448,7 @@ object IvfStore {
           .withColumn("nv", sqrt(Similarity.dot(col("__rv"), col("__rv"))))
           .drop("__rv")
       else {
-        val cents = broadcast(spark.read.parquet(s"$root/centroids"))
+        val cents = broadcast(spark.read.parquet(dirs("centroids")))
         // merged stores reassign WITHIN each row's cid group (the merge
         // contract — see mergeStores): a union-wide reassign here would
         // "repair" every healthy shard-local assignment into a full
@@ -514,27 +515,20 @@ object IvfStore {
         deduped.drop("cid").join(reassigned, "vec_id")
           .withColumn("nv", Similarity.norm(col("v")))
       }
-    // frame-bump install (contract note at [[FrameMarker]]): repaired
-    // lists stage in the next frame, centroids file-copy in, tombstones
-    // carry as-is (repair never expunges); one pointer flip installs —
-    // a crash costs dead staged bytes, never an unreadable store
-    val (next, nroot) = nextFrame(spark, path)
+    // frame install: the repaired lists stage as a new generation,
+    // centroids and tombstones carry by reference (repair never
+    // expunges); one pointer flip installs — a crash costs dead staged
+    // bytes, never an unreadable store
+    val stage = graft.operators.Frames.begin(spark, path, Tables)
     repaired.repartition(partCols.map(col): _*)
       .write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(s"$nroot/lists")
-    graft.FsOps.transferDataFiles(spark, s"$root/centroids",
-      s"$nroot/centroids", "", move = false)
-    graft.FsOps.transferDataFiles(spark, s"$root/deletes",
-      s"$nroot/deletes", "", move = false)
+      .parquet(stage.stageDir("lists"))
     midMaintenanceHook(spark)
     // concurrent ingest carried as written (fresh appends, not the
     // corruption the rewrite repaired; same centroids — cids keep)
-    carryFrameDelta(spark, root, nroot, snap, reassign = false,
+    carryFrameDelta(spark, dirs, stage, snap, reassign = false,
       stripBatch = false)
-    graft.FsOps.writeLongMarker(spark, path, FrameMarker, next) // the flip
-    gcFrames(spark,
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration), path)
+    stage.commit()
   }
 
   // ---- merged-store assignment contract ------------------------------
@@ -640,146 +634,44 @@ object IvfStore {
     segs.tail.foldLeft(lit(f(segs.head))) { (acc, sg) =>
       when(b > lit(sg.batchLo), lit(f(sg))).otherwise(acc) }
 
-  // ---- frame-pointer install (serve-through-maintenance) -------------
-  // A maintenance verb that replaces BOTH tables (recluster) — or lists
-  // plus the tombstone drop (expunge) — cannot install atomically with
-  // per-directory swaps: a crash between the renames leaves the tables
-  // cid-inconsistent, and the r14–r17 answer (stamp `_recluster_
-  // inprogress`, REFUSE all reads until an operator re-runs the verb)
-  // traded silent wrongness for unavailability — at 100 TB an
-  // operational cost the repo's own version-pointer pattern
-  // ([[graft.streaming.VersionedStore]]'s `v=` commit dirs) removes for
-  // free (VERDICT r17 #1). The store's data FRAME (`lists` +
-  // `centroids` + `deletes`) now resolves through ONE pointer:
-  //
-  //   - no `_frame` marker → the legacy layout, tables at the store
-  //     root (every fresh build starts here — no indirection cost);
-  //   - `_frame` = N → tables under `frames/v=N/`.
-  //
-  // Recluster/expunge stage the complete new frame under `frames/
-  // v=N+1`, then flip the pointer with one [[graft.FsOps.writeMarker]]
-  // (a single rename install — readers see the old frame or the new
-  // frame, never a mix), then garbage-collect the old frame. A crash
-  // ANY time before the flip costs nothing (readers serve the old
-  // frame; the re-run restages over the debris); a crash after the
-  // flip leaves dead bytes the re-run or the next frame bump collects.
-  // The `_recluster_inprogress` refuse path this replaces is gone —
-  // there is no window in which a reader must be turned away.
-
-  private[graft] val FrameMarker = "_frame"
-
-  /** Root directory of the store's CURRENT data frame — the store path
-    * itself (legacy layout: every fresh build) or `frames/v=N` after a
-    * frame-bump install ([[reclusterStore]]/[[expungeDeletes]]). All
-    * store markers stay at the store root; only the three data tables
-    * live inside the frame. One driver-side marker read. */
-  def frameRoot(spark: SparkSession, path: String): String =
-    graft.FsOps.readLongMarker(spark, path, FrameMarker)
-      .map(n => s"$path/frames/v=$n").getOrElse(path)
-
   /** True iff a committed IVF store lives at `path`: the current
     * frame's centroid table — the store's commit surface — exists. The
-    * family-detection probe ([[graft.pipeline.Forget.familiesAt]],
-    * [[graft.pipeline.Promote]]) that a bare `exists(path/centroids)`
-    * check would get wrong on any frame-installed store. */
-  def isCommitted(spark: SparkSession, path: String): Boolean = {
-    val c = new org.apache.hadoop.fs.Path(
-      s"${frameRoot(spark, path)}/centroids")
-    c.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(c)
-  }
-
-  /** Stage-root of the NEXT frame (`frames/v=<current+1>`), with the
-    * version to commit via the pointer flip. Deterministic across a
-    * crashed install's re-run (the pointer only moves at the flip), and
-    * the staging dir starts CLEAN: unflipped debris there may be from a
-    * DIFFERENT verb's crashed install — a stale staged centroid table
-    * whose file names differ from this verb's would survive the copy
-    * primitive's per-file skip-if-exists and mix two tables into one
-    * frame — so any existing unflipped `v=` dir is deleted outright
-    * (it is unreachable by readers by definition). */
-  private def nextFrame(spark: SparkSession, path: String): (Long, String) = {
-    val next = graft.FsOps.readLongMarker(spark, path, FrameMarker)
-      .getOrElse(-1L) + 1L
-    val nroot = s"$path/frames/v=$next"
-    val p = new org.apache.hadoop.fs.Path(nroot)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    (next, nroot)
-  }
-
-  /** Garbage-collect superseded frames after the pointer flip, with a
-    * RETENTION window for concurrent readers (VERDICT r18 #2): frames
-    * `[cur−retain, cur]` are kept (the legacy root layout counts as the
-    * frame before v=0), everything older — and any unflipped future
-    * staging debris — is swept. Spark plans lazily: a reader that
-    * resolved [[frameRoot]] just before a flip still lists and scans its
-    * files afterwards, so an immediate sweep (the r18 behavior) could
-    * kill that scan with a FileNotFoundException mid-flight; with the
-    * default `retain = 1` it completes against the retained predecessor,
-    * and only a SECOND install during the same scan can sweep it (the
-    * bounded grace contract [[graft.streaming.VersionedStore]]'s
-    * `vacuum(retain)` set). `retain = 0` is the reclaim-now maintenance
-    * verb (`Maintain ivf gc 0`). A SWEEP, not a single-predecessor drop,
-    * so a crash between a flip and its cleanup leaks dead bytes only
-    * until the next bump collects them. Post-commit cleanup only: never
-    * an unreadable store. */
-  private def gcFrames(spark: SparkSession,
-                       fs: org.apache.hadoop.fs.FileSystem,
-                       path: String, retain: Int = 1): Unit = {
-    require(retain >= 0, s"retain must be >= 0 (got $retain)")
-    graft.FsOps.readLongMarker(spark, path, FrameMarker).foreach { cur =>
-      if (cur - retain >= 0) // the legacy frame left the window
-        Seq("lists", "centroids", "deletes").foreach(t =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/$t"), true))
-      val fr = new org.apache.hadoop.fs.Path(s"$path/frames")
-      if (fs.exists(fr))
-        fs.listStatus(fr).foreach { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("v=") && n.stripPrefix("v=").toLongOption
-              .exists(v => v < cur - retain || v > cur))
-            fs.delete(st.getPath, true)
-        }
-    }
-  }
-
-  /** Operator-facing frame sweep (`Maintain ivf gc [retain]`) — the
-    * cron-surface twin of the sweep every install already runs with
-    * `retain = 1`; call with `retain = 0` to reclaim the grace-window
-    * frame immediately (only when no external reader can still be
-    * scanning it). */
-  def gcStaleFrames(spark: SparkSession, path: String, retain: Int = 1): Unit =
-    gcFrames(spark,
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration), path, retain)
+    * family-detection probe ([[graft.pipeline.Promote]]) that a bare
+    * `exists(path/centroids)` check would get wrong on any
+    * frame-installed store. */
+  def isCommitted(spark: SparkSession, path: String): Boolean =
+    dirExists(spark, graft.operators.Frames.resolve(spark, path, "centroids"))
 
   // ---- concurrent-ingest delta carry (ADVICE r18) --------------------
-  // With the refuse-until-heal marker gone, a deleteVectors/appendBatch
-  // that lands WHILE a frame rewrite is staging writes into the OLD
-  // frame — and a flip that ignored it would silently discard the write
-  // (for a tombstone riding Forget's takedown cascade, a silent
-  // RETENTION failure, not just stale data). Every frame-bumping verb
-  // therefore snapshots the old frame's ingest surface (batch= dirs,
-  // tombstone file names) BEFORE staging, scopes its rewrite to the
-  // snapshot, and at flip time carries the delta — tombstone files by
-  // name-diff file copy, appended batches by re-shaping into the new
-  // frame's layout (re-assigned against the new centroids when the verb
-  // changed them) — into the staged frame before the pointer moves.
-  // The lost-write window shrinks from the WHOLE rewrite (hours at
-  // scale) to the carry→flip metadata gap; writes landing inside that
-  // residual gap still require the store's single-maintenance-writer
-  // discipline, which is now a bound on a metadata pass, not on the
-  // rewrite.
+  // A deleteVectors/appendBatch that lands WHILE a frame rewrite is
+  // staging writes into the OLD frame's table dirs — and a flip that
+  // ignored it would silently discard the write (for a tombstone riding
+  // Forget's takedown cascade, a silent RETENTION failure, not just
+  // stale data). Every frame-installing verb therefore snapshots the old
+  // frame's ingest surface (batch= dirs, tombstone file names) BEFORE
+  // staging, scopes its rewrite to the snapshot, and at flip time
+  // carries the delta into the staged frame: appended batches re-shaped
+  // into the staged lists layout (re-assigned against the new centroids
+  // when the verb changed them), and — only when the staged frame drops
+  // `deletes` — tombstone files by name-diff file copy (a frame that
+  // carries `deletes` by reference already shares the dir the
+  // concurrent tombstones landed in). The lost-write window shrinks from
+  // the WHOLE rewrite (hours at scale) to the carry→flip metadata gap;
+  // writes landing inside that residual gap still require the store's
+  // single-maintenance-writer discipline, which is now a bound on a
+  // metadata pass, not on the rewrite.
 
   private[graft] final case class FrameSnapshot(batches: Set[Long],
                                                 deleteFiles: Set[String])
 
-  /** Test seam: invoked by every frame-bumping verb after its staging
+  /** Test seam: invoked by every frame-installing verb after its staging
     * writes complete and before the delta carry — the spec injects
     * concurrent ingest verbs here to prove the carry. */
   private[graft] var midMaintenanceHook: SparkSession => Unit = _ => ()
 
   private def batchDirsOf(fs: org.apache.hadoop.fs.FileSystem,
-                          root: String): Set[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/lists")
+                          listsDir: String): Set[Long] = {
+    val p = new org.apache.hadoop.fs.Path(listsDir)
     if (!fs.exists(p)) Set.empty
     else fs.listStatus(p).iterator.filter(_.isDirectory)
       .map(_.getPath.getName).filter(_.startsWith("batch="))
@@ -787,18 +679,20 @@ object IvfStore {
   }
 
   private def deleteFilesOf(fs: org.apache.hadoop.fs.FileSystem,
-                            root: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/deletes")
+                            deletesDir: String): Set[String] = {
+    val p = new org.apache.hadoop.fs.Path(deletesDir)
     if (!fs.exists(p)) Set.empty
     else fs.listStatus(p).iterator.filterNot(_.isDirectory)
       .map(_.getPath.getName)
       .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
   }
 
-  private def snapshotFrame(spark: SparkSession, root: String): FrameSnapshot = {
-    val fs = new org.apache.hadoop.fs.Path(root)
+  /** Ingest surface of the frame whose table dirs are `dirs`. */
+  private def snapshotFrame(spark: SparkSession,
+                            dirs: Map[String, String]): FrameSnapshot = {
+    val fs = new org.apache.hadoop.fs.Path(dirs("lists"))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    FrameSnapshot(batchDirsOf(fs, root), deleteFilesOf(fs, root))
+    FrameSnapshot(batchDirsOf(fs, dirs("lists")), deleteFilesOf(fs, dirs("deletes")))
   }
 
   /** Pin a lists frame to the snapshot's batch layers — the staged
@@ -811,37 +705,37 @@ object IvfStore {
       lists.filter(col("batch").isin(snap.batches.toSeq: _*))
     else lists
 
-  /** Carry post-snapshot ingest into the staged frame, just before the
-    * flip. Tombstone files copy by name-diff (a consumed-set overshoot —
-    * the rewrite's lazy deletes read may have seen MORE than the
-    * snapshot — only carries tombstones of already-removed rows: the
-    * anti-join no-ops). Delta batch layers re-shape into the staged
-    * layout: `reassign` re-homes them against the NEW frame's centroids
-    * (recluster changed them); `stripBatch` folds them into a cid-only
-    * layout (flatten). */
-  private def carryFrameDelta(spark: SparkSession, root: String, nroot: String,
+  /** Carry post-snapshot ingest from the old frame's table dirs (`cur`)
+    * into the staged frame, just before the flip. Tombstone files copy
+    * by name-diff when the staged frame dropped `deletes` (a
+    * consumed-set overshoot — the rewrite's lazy deletes read may have
+    * seen MORE than the snapshot — only carries tombstones of
+    * already-removed rows: the anti-join no-ops). Delta batch layers
+    * re-shape into the staged layout: `reassign` re-homes them against
+    * the STAGED centroids (recluster changed them); `stripBatch` folds
+    * them into a cid-only layout (flatten). */
+  private def carryFrameDelta(spark: SparkSession, cur: Map[String, String],
+                              stage: graft.operators.Frames.Stage,
                               snap: FrameSnapshot, reassign: Boolean,
                               stripBatch: Boolean): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-    val delTo = new org.apache.hadoop.fs.Path(s"$nroot/deletes")
-    for (f <- deleteFilesOf(fs, root) -- snap.deleteFiles) {
-      val to = new org.apache.hadoop.fs.Path(delTo, f)
-      if (!fs.exists(to)) {
-        fs.mkdirs(delTo)
-        org.apache.hadoop.fs.FileUtil.copy(fs,
-          new org.apache.hadoop.fs.Path(s"$root/deletes/$f"), fs, to,
-          false, conf)
+    val fs = new org.apache.hadoop.fs.Path(cur("lists")).getFileSystem(conf)
+    val (delFrom, delTo) = (cur("deletes"), stage.dir("deletes"))
+    if (delTo != delFrom)
+      for (f <- deleteFilesOf(fs, delFrom) -- snap.deleteFiles) {
+        val to = new org.apache.hadoop.fs.Path(s"$delTo/$f")
+        if (!fs.exists(to))
+          org.apache.hadoop.fs.FileUtil.copy(fs,
+            new org.apache.hadoop.fs.Path(s"$delFrom/$f"), fs, to, false, conf)
       }
-    }
-    val delta = (batchDirsOf(fs, root) -- snap.batches).toSeq.sorted
+    val delta = (batchDirsOf(fs, cur("lists")) -- snap.batches).toSeq.sorted
     if (delta.nonEmpty) {
-      val rows = spark.read.parquet(s"$root/lists")
+      val rows = spark.read.parquet(cur("lists"))
         .filter(col("batch").isin(delta: _*))
       val homed =
         if (!reassign) rows
         else {
-          val cents = broadcast(spark.read.parquet(s"$nroot/centroids"))
+          val cents = broadcast(spark.read.parquet(stage.dir("centroids")))
           val keyed = rows.withColumn("__v",
             if (rows.columns.contains("qvec"))
               transform(col("qvec"),
@@ -858,7 +752,7 @@ object IvfStore {
       val partCols = if (stripBatch) Seq("cid") else Seq("batch", "cid")
       shaped.repartition(partCols.map(col): _*)
         .write.mode("append").partitionBy(partCols: _*)
-        .parquet(s"$nroot/lists")
+        .parquet(stage.dir("lists"))
     }
   }
 
@@ -1055,10 +949,10 @@ object IvfStore {
     * [[deleteVectors]]'s anti-join semantics. */
   def checkStore(spark: SparkSession, path: String): DataFrame = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
-    val root = frameRoot(spark, path)
-    val lists = spark.read.parquet(s"$root/lists")
+    val dirs = tableDirs(spark, path)
+    val lists = spark.read.parquet(dirs("lists"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = broadcast(spark.read.parquet(s"$root/centroids"))
+    val cents = broadcast(spark.read.parquet(dirs("centroids")))
     val quantized = lists.columns.contains("qvec")
     import graft.operators.StoreCheck.{row, emptyRow => emptyRowIn}
     def emptyRow(name: String): DataFrame = emptyRowIn(spark, name)
@@ -1268,7 +1162,8 @@ object IvfStore {
     * directory listing (bounded metadata), the IVF store's batch record
     * (the `batch=` layout IS the marker; no side file needed). */
   def listBatches(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"${frameRoot(spark, path)}/lists")
+    val p = new org.apache.hadoop.fs.Path(
+      graft.operators.Frames.resolve(spark, path, "lists"))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
@@ -1308,14 +1203,14 @@ object IvfStore {
     graft.FsOps.requireNotHusk(spark, path)
     import graft.operators.StoreCheck.{row, emptyRow => emptyRowIn}
     def emptyRow(name: String): DataFrame = emptyRowIn(spark, name)
-    val root = frameRoot(spark, path)
-    val lists = spark.read.parquet(s"$root/lists")
+    val dirs = tableDirs(spark, path)
+    val lists = spark.read.parquet(dirs("lists"))
     require(lists.columns.contains("batch"),
       s"checkStoreIncremental: store at $path has no batch= layout " +
         "(batch build) — run the full checkStore instead")
     val since = sinceBatch.orElse(lastAudited(spark, path)).getOrElse(-1L)
     val delta = lists.filter(col("batch") > since)
-    val cents = broadcast(spark.read.parquet(s"$root/centroids"))
+    val cents = broadcast(spark.read.parquet(dirs("centroids")))
     val quantized = lists.columns.contains("qvec")
 
     val unique = {
@@ -1427,24 +1322,24 @@ object IvfStore {
     graft.FsOps.requireNotHusk(spark, dest)
     val fs = new Path(dest).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // data tables resolve through each store's frame pointer (a
-    // reclustered/expunged shard's tables live under frames/v=N);
+    // reclustered/expunged shard's tables live under generation dirs);
     // markers — husk stamps, merge sources, bounds — stay at the
     // STORE paths throughout
-    val droot = frameRoot(spark, dest)
-    val sroots = sources.map(frameRoot(spark, _))
-    if (fs.exists(new Path(s"$droot/centroids"))) {
+    val dst = tableDirs(spark, dest)
+    val srcs = sources.map(tableDirs(spark, _))
+    if (fs.exists(new Path(dst("centroids")))) {
       // committed dest: either the move-mode crash window between the
       // commit and the husk stamps (complete the stamps and return —
       // FsOps.completeHuskStamps), or a genuine re-merge to refuse
       if (moveFiles && graft.FsOps.completeHuskStamps(spark, sources, dest,
-          Seq("lists", "deletes"), sourceRoots = sroots, destRoot = droot))
+          s => Seq("lists", "deletes").map(tableDirs(spark, s))))
         return
       throw new IllegalArgumentException(
         s"$dest already carries a committed IVF store (centroids exist)")
     }
     sources.foreach(graft.FsOps.requireNotHusk(spark, _))
-    sources.zip(sroots).foreach { case (s, sr) =>
-      require(fs.exists(new Path(s"$sr/centroids")) && fs.exists(new Path(s"$sr/lists")),
+    sources.zip(srcs).foreach { case (s, sd) =>
+      require(fs.exists(new Path(sd("centroids"))) && fs.exists(new Path(sd("lists"))),
         s"$s is not a persisted IVF store (centroids/lists missing)")
     }
     // the batch=/cid= layout is visible from the partition DIRS alone —
@@ -1453,7 +1348,7 @@ object IvfStore {
     // the same cid remap, batch ordinals offset per source so replay
     // overwrite and audit deltas stay collision-free) — but never MIXED:
     // the merged lists would carry a half-present batch column
-    val layered = sroots.map(sr => fs.listStatus(new Path(s"$sr/lists"))
+    val layered = srcs.map(sd => fs.listStatus(new Path(sd("lists")))
       .exists(_.getPath.getName.startsWith("batch=")))
     require(layered.distinct.size == 1,
       s"sources mix fresh and batch-layered (streaming-ingested) lists " +
@@ -1471,10 +1366,11 @@ object IvfStore {
     // a dest already holding transferred lists is a crashed merge being
     // RESUMED: the data-reading guards passed before the first file
     // moved, and a move-drained source's lists no longer read — skip
-    if (!fs.exists(new Path(s"$droot/lists"))) {
-      graft.operators.MergeGuards.requireSchemaParity(spark, sroots, "lists")
+    if (!fs.exists(new Path(dst("lists")))) {
+      graft.operators.MergeGuards.requireSchemaParityDirs(spark,
+        srcs.map(_("lists")), "lists")
       graft.operators.MergeGuards.requireDisjointIds(spark,
-        sroots.map(sr => s"$sr/lists"), "vec_id")
+        srcs.map(_("lists")), "vec_id")
     }
 
     // record the source list on the dest BEFORE any file moves — the
@@ -1482,31 +1378,31 @@ object IvfStore {
     graft.FsOps.recordMergeSources(spark, dest, sources)
 
     // cid offsets: shard i's cids shift past the cumulative max
-    val centFrames = sroots.map(sr => spark.read.parquet(s"$sr/centroids"))
+    val centFrames = srcs.map(sd => spark.read.parquet(sd("centroids")))
     val maxCids = centFrames.map(_.agg(max(col("cid"))).collect()(0).getInt(0))
     val offsets = maxCids.scanLeft(0)(_ + _).init
 
-    for ((srcRoot, i) <- sroots.zipWithIndex) {
+    for ((sd, i) <- srcs.zipWithIndex) {
       if (isLayered)
-        for (bst <- fs.listStatus(new Path(s"$srcRoot/lists")).toSeq
+        for (bst <- fs.listStatus(new Path(sd("lists"))).toSeq
              if bst.isDirectory && bst.getPath.getName.startsWith("batch=");
              st <- fs.listStatus(bst.getPath).toSeq
              if st.isDirectory && st.getPath.getName.startsWith("cid=")) {
           val b = bst.getPath.getName.stripPrefix("batch=").toLong
           val k = st.getPath.getName.stripPrefix("cid=").toInt
           graft.FsOps.transferDataFiles(spark, st.getPath.toString,
-            s"$droot/lists/batch=${b + batchOffsets(i)}/cid=${k + offsets(i)}",
+            s"${dst("lists")}/batch=${b + batchOffsets(i)}/cid=${k + offsets(i)}",
             s"m${i}_", moveFiles)
         }
       else
-        for (st <- fs.listStatus(new Path(s"$srcRoot/lists")).toSeq
+        for (st <- fs.listStatus(new Path(sd("lists"))).toSeq
              if st.isDirectory && st.getPath.getName.startsWith("cid=")) {
           val k = st.getPath.getName.stripPrefix("cid=").toInt
           graft.FsOps.transferDataFiles(spark, st.getPath.toString,
-            s"$droot/lists/cid=${k + offsets(i)}", s"m${i}_", moveFiles)
+            s"${dst("lists")}/cid=${k + offsets(i)}", s"m${i}_", moveFiles)
         }
-      graft.FsOps.transferDataFiles(spark, s"$srcRoot/deletes",
-        s"$droot/deletes", s"m${i}_", moveFiles)
+      graft.FsOps.transferDataFiles(spark, sd("deletes"),
+        dst("deletes"), s"m${i}_", moveFiles)
     }
     // shard-local-assignment groups: each source's own bounds (Seq(0)
     // for a fresh shard) shifted by its cid offset — persisted BEFORE
@@ -1573,7 +1469,7 @@ object IvfStore {
     centFrames.zip(offsets).map { case (c, off) =>
         c.select((col("cid") + lit(off)).cast("int").as("cid"), col("cvec")) }
       .reduce(_ unionByName _)
-      .coalesce(1).write.mode("overwrite").parquet(s"$droot/centroids")
+      .coalesce(1).write.mode("overwrite").parquet(dst("centroids"))
     // stamp drained sources only after the commit above (husk contract —
     // see FsOps.MergedIntoMarker)
     if (moveFiles)
@@ -1596,8 +1492,8 @@ object IvfStore {
     * [[Similarity.kmeansCentroids]] (optionally on a deterministic
     * 1-in-`trainSampleMod` hash sample of the vectors — the 100 TB
     * path: centroid quality needs a sample, not the corpus), the new
-    * centroid table persists as `centroids_tmp`, every live vector
-    * re-assigns against the JUST-PERSISTED frame (derive-from-persisted
+    * centroid table persists as a staged generation, every live vector
+    * re-assigns against the JUST-PERSISTED table (derive-from-persisted
     * rule, broadcast ≤ nCentroids rows), and the lists rewrite under
     * the `batch=`/`cid=` layout the store already had. Quantized
     * stores recluster over their `round(code·scale, 6)` reconstructions
@@ -1605,18 +1501,15 @@ object IvfStore {
     * self-consistent with search. Tombstones are materialized OUT by
     * the rewrite (an expunge-class job) and the tombstone table drops.
     *
-    * Crash model — the frame-pointer install (contract note at
-    * [[FrameMarker]], VERDICT r17 #1): BOTH new tables stage under the
-    * next `frames/v=` dir, and ONE pointer flip ([[graft.FsOps
-    * .writeMarker]], a single rename) installs them together with the
-    * tombstone drop (the new frame carries no `deletes` table — its
-    * rewrite materialized the tombstones out). Readers always see a
-    * complete, self-consistent frame: the old one until the flip, the
-    * new one after — a crash anywhere costs NOTHING but dead staged
-    * bytes (the re-run restages the same `v=` dir; the post-flip sweep
-    * collects stale frames). The r14–r17 `_recluster_inprogress`
-    * refuse-until-heal window this replaces is gone: the store serves
-    * THROUGH its heaviest maintenance verb. Scale: one training pass
+    * Crash model — the frame install ([[graft.operators.Frames]]):
+    * BOTH new tables stage as new generations, and ONE
+    * pointer flip installs them together with the tombstone drop (the
+    * new frame drops `deletes` — its rewrite materialized the tombstones
+    * out). Readers always see a complete, self-consistent frame: the old
+    * one until the flip, the new one after — a crash anywhere costs
+    * NOTHING but dead staged bytes (the re-run restages; the post-flip
+    * sweep collects stale generations). The store serves THROUGH its
+    * heaviest maintenance verb. Scale: one training pass
     * (∝ sample), one assignment+rewrite pass (∝ live store) — the
     * priced cost of changing every vector's list home, scheduled like
     * [[repairLists]], never a probe-path cost. */
@@ -1625,14 +1518,12 @@ object IvfStore {
                      trainSampleMod: Int = 1): Unit = {
     require(trainSampleMod >= 1, s"trainSampleMod must be >= 1 (got $trainSampleMod)")
     graft.FsOps.requireNotHusk(spark, path)
-    val root = frameRoot(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = snapshotFrame(spark, root)
-    val listsRaw = pinToSnapshot(spark.read.parquet(s"$root/lists"), snap)
+    val dirs = tableDirs(spark, path)
+    val snap = snapshotFrame(spark, dirs)
+    val listsRaw = pinToSnapshot(spark.read.parquet(dirs("lists")), snap)
     val quantized = listsRaw.columns.contains("qvec")
     val partCols = if (listsRaw.columns.contains("batch")) Seq("batch", "cid") else Seq("cid")
-    val live = liveLists(spark, root, listsRaw).withColumn("__v",
+    val live = liveLists(spark, dirs("deletes"), listsRaw).withColumn("__v",
       if (quantized)
         // float-cast for the codegen FloatVectorDot assignment path —
         // affects only which list a vector homes in; probe SCORING still
@@ -1643,33 +1534,36 @@ object IvfStore {
     val train =
       if (trainSampleMod == 1) live
       else live.filter(pmod(xxhash64(col("vec_id")), lit(trainSampleMod.toLong)) === 0)
-    val (next, nroot) = nextFrame(spark, path)
+    val stage = graft.operators.Frames.begin(spark, path, Tables)
     Similarity.kmeansCentroids(
         train.select(col("vec_id"), col("__v")), nCentroids, kmeansIters,
         "vec_id", "__v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$nroot/centroids")
-    // assign against the JUST-PERSISTED new frame's centroids
+      .coalesce(1).write.mode("overwrite").parquet(stage.stageDir("centroids"))
+    // assign against the JUST-PERSISTED staged centroids
     // (derive-from-persisted rule)
-    val cents = broadcast(spark.read.parquet(s"$nroot/centroids"))
+    val cents = broadcast(spark.read.parquet(stage.dir("centroids")))
     val reassigned = Similarity.assignToCentroids(
         live.select(col("vec_id"), col("__v")), cents, "vec_id", "__v", keep = 1)
       .select(col("vec_id"), col("cid"))
     live.drop("cid", "__v").join(reassigned, "vec_id")
       .repartition(partCols.map(col): _*)
       .write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(s"$nroot/lists")
+      .parquet(stage.stageDir("lists"))
+    stage.drop("deletes")
     midMaintenanceHook(spark)
     // concurrent ingest carried RE-ASSIGNED against the new centroids
     // (the verb that exists to change them); delta tombstones by file
     // copy — a takedown riding Forget must survive the recluster
-    carryFrameDelta(spark, root, nroot, snap, reassign = true,
+    carryFrameDelta(spark, dirs, stage, snap, reassign = true,
       stripBatch = false)
     // the flip: one rename installs lists + centroids + tombstone drop
-    graft.FsOps.writeLongMarker(spark, path, FrameMarker, next)
+    stage.commit()
     // the store is union-nearest again: drop the merged-assignment
     // markers (and their swap asides — readMarker recovers from asides).
     // A crash before these deletes leaves the grouped (weaker-but-green)
     // audit in force until the next recluster; never a false red.
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/$MergedBoundsMarker"), true)
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$path/_$MergedBoundsMarker.swap_old"), true)
@@ -1677,8 +1571,6 @@ object IvfStore {
       s"$path/$MergedBatchBoundsMarker"), true)
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$path/_$MergedBatchBoundsMarker.swap_old"), true)
-    // superseded-frame sweep (post-commit cleanup; crash = dead bytes)
-    gcFrames(spark, fs, path)
   }
 
   /** LIVE vec_id surface of a store — the ids a probe could still
@@ -1687,26 +1579,25 @@ object IvfStore {
     * pipeline audit ([[graft.pipeline.Forget.checkPipeline]]) joins
     * against — never the vectors themselves. */
   def liveVectorIds(spark: SparkSession, path: String): DataFrame = {
-    val root = frameRoot(spark, path)
-    liveLists(spark, root,
-      spark.read.parquet(s"$root/lists").select("vec_id")).distinct()
+    val dirs = tableDirs(spark, path)
+    liveLists(spark, dirs("deletes"),
+      spark.read.parquet(dirs("lists")).select("vec_id")).distinct()
   }
 
-  /** `root` is the store's resolved FRAME root ([[frameRoot]]) — every
-    * caller resolves once per entry and passes it down. */
-  private def liveLists(spark: SparkSession, root: String, lists: DataFrame): DataFrame = {
-    val del = new org.apache.hadoop.fs.Path(s"$root/deletes")
-    val fs = del.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(del)) lists
-    else lists.join(spark.read.parquet(s"$root/deletes"), Seq("vec_id"), "left_anti")
-  }
+  /** `lists` minus the tombstones in `deletesDir` — the current frame's
+    * resolved `deletes` dir ([[tableDirs]]; every caller resolves once
+    * per entry and passes it down). */
+  private def liveLists(spark: SparkSession, deletesDir: String,
+                        lists: DataFrame): DataFrame =
+    if (!dirExists(spark, deletesDir)) lists
+    else lists.join(spark.read.parquet(deletesDir), Seq("vec_id"), "left_anti")
 
   def searchStore(spark: SparkSession, path: String, queries: DataFrame, k: Int,
                   nProbe: Int = 4,
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
-    val root = frameRoot(spark, path)
-    val cents = broadcast(spark.read.parquet(s"$root/centroids"))
+    val dirs = tableDirs(spark, path)
+    val cents = broadcast(spark.read.parquet(dirs("centroids")))
     val q = Similarity.assignToCentroids(
         queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
         cents, "query_id", "qv", keep = nProbe)
@@ -1714,10 +1605,10 @@ object IvfStore {
     // probed cids: bounded by nCentroids — a driver-side IN-list literal
     // is what turns into a static PartitionFilter on the lists scan
     val probed = q.select("cid").distinct().collect().map(_.getInt(0)).toSeq
-    val lists = spark.read.parquet(s"$root/lists")
+    val lists = spark.read.parquet(dirs("lists"))
       .filter(col("cid").isin(probed: _*))
     // tombstone anti-join applies AFTER the pruned scan (deletes table
     // broadcastable; partition pruning unaffected)
-    Similarity.probeRank(liveLists(spark, root, lists), q, k)
+    Similarity.probeRank(liveLists(spark, dirs("deletes"), lists), q, k)
   }
 }

@@ -115,17 +115,13 @@ object UpsertSink {
           .join(withPart.select(keys.map(col): _*).distinct(), keys, "left_anti")
           .unionByName(withPart)
       }
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // localCheckpoint materializes the merged rows BEFORE the overwrite:
-    // the plan would otherwise still reference the files it is replacing
-    try
-      merged.localCheckpoint(true).repartition(col("part_bucket"))
-        .write.mode("overwrite").partitionBy("part_bucket").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // the plan would otherwise still reference the files it is replacing.
+    // Dynamic overwrite is a per-write option: session conf stays
+    // untouched (other writes may be running concurrently under Par)
+    merged.localCheckpoint(true).repartition(col("part_bucket"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("part_bucket").parquet(path)
     if (!fs.exists(marker)) {
       val out = fs.create(marker, true)
       try out.write(nParts.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.DedupStore
 import graft.index.Indexer
+import graft.operators.Frames
 import graft.pipeline.Forget
 import graft.similarity.IvfStore
 
@@ -82,23 +83,28 @@ class ForgetSpec extends SparkSpec {
   }
 
   test("forget cascades through a frame-installed ivf store (recluster/expunge bumps)") {
-    // the r18 frame-pointer install relocates the ivf tables under
-    // frames/v=N — family detection, the cascade's delete verb, purge's
-    // expunge and the audit's id surface must all resolve the pointer
+    // the frame install relocates the ivf tables to generation dirs
+    // under tables/ — family detection, the cascade's delete verb,
+    // purge's expunge and the audit's id surface must all resolve the
+    // pointer
     val root = buildRoot()
     IvfStore.reclusterStore(spark, s"$root/ivf", nCentroids = 2, kmeansIters = 0)
-    assert(IvfStore.frameRoot(spark, s"$root/ivf") === s"$root/ivf/frames/v=0")
+    assert(Frames.currentVersion(spark, s"$root/ivf") === Some(0L))
+    val v0Lists = Frames.resolve(spark, s"$root/ivf", "lists")
+    assert(v0Lists.startsWith(s"$root/ivf/tables/lists/g="))
     assert(Forget.familiesAt(spark, root).contains("ivf"),
       "family detection must resolve the frame pointer")
     val n = Forget.forget(spark, root, Seq(2L).toDF("doc_id"), purge = true)
     assert(n === 0L)
     // purge ran expungeDeletes -> a SECOND frame bump; v=0 stays as the
     // readers' grace window (retain=1) until the next install or gc 0
-    assert(IvfStore.frameRoot(spark, s"$root/ivf") === s"$root/ivf/frames/v=1")
-    assert(fsAt(root).exists(new Path(s"$root/ivf/frames/v=0")),
+    assert(Frames.currentVersion(spark, s"$root/ivf") === Some(1L))
+    assert(fsAt(root).exists(new Path(s"$root/ivf/frames/v=0")) &&
+      fsAt(root).exists(new Path(v0Lists)),
       "the superseded frame is retained for one install")
-    IvfStore.gcStaleFrames(spark, s"$root/ivf", retain = 0)
-    assert(!fsAt(root).exists(new Path(s"$root/ivf/frames/v=0")))
+    Frames.gc(spark, s"$root/ivf", IvfStore.Tables, retain = 0)
+    assert(!fsAt(root).exists(new Path(s"$root/ivf/frames/v=0")) &&
+      !fsAt(root).exists(new Path(v0Lists)))
     assert(liveIvfIds(root) === Set(0L, 1L, 3L, 4L, 5L, 6L, 7L))
     val rep = reportMap(Forget.checkPipeline(spark, root))
     assert(rep("forgotten_absent_ivf") === (1L, 0L))
@@ -211,8 +217,7 @@ class ForgetSpec extends SparkSpec {
     // the ivf expunge installs a frame: the CURRENT frame carries no
     // tombstone table (the retained legacy frame's copy is the readers'
     // grace window, swept by the next install or `Maintain ivf gc 0`)
-    assert(!fs.exists(new Path(
-        s"${IvfStore.frameRoot(spark, s"$root/ivf")}/deletes")),
+    assert(!fs.exists(new Path(Frames.resolve(spark, s"$root/ivf", "deletes"))),
       "ivf tombstones must be physically expunged")
     val survivors = docsFx.map(_._1).toSet - 6L
     assert(liveIndexIds(root) === survivors)

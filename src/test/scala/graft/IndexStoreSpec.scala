@@ -833,6 +833,35 @@ class IndexStoreSpec extends SparkSpec {
     assert(derivedDf(path, "vocab").count() > 0)
   }
 
+  test("appendIndex that dies in its doc_stats write leaves no postings: the retry neither double-counts nor refuses") {
+    // the duplicate guard probes doc_stats only, so doc_stats must land
+    // before postings/positional: an append whose postings committed
+    // while its doc_stats write failed would let the retry pass the
+    // guard and append the same postings a second time
+    val docs = Tables.load(spark, sf0001, "documents").limit(40)
+    val path = Files.createTempDirectory("ixappfail").toString
+    val base = docs.filter(col("doc_id") % 2 === 0).withColumn("title", lit("t"))
+    Indexer.writeIndex(Indexer.buildIndex(base, titleCol = Some("title")), path,
+      nBuckets = 16)
+    Indexer.writePositional(base, path, nBuckets = 8)
+    val more = docs.filter(col("doc_id") % 2 === 1)
+    // the title column feeds only the doc_stats lineage: poisoning it
+    // fails that one table write
+    val poisoned = more.withColumn("title",
+      when(col("doc_id") % 4 === 1, raise_error(lit("poisoned title")))
+        .otherwise(lit("t")))
+    intercept[Exception](Indexer.appendIndex(spark, path, poisoned,
+      titleCol = Some("title"), nBuckets = 16))
+    Indexer.appendIndex(spark, path, more.withColumn("title", lit("t")),
+      titleCol = Some("title"), nBuckets = 16)
+    val doubled = spark.read.parquet(s"$path/postings")
+      .groupBy("term", "doc_id").count().filter(col("count") > 1).count()
+    assert(doubled === 0L, "the retry double-counted postings")
+    val rep = Indexer.checkStore(spark, path, nBuckets = 16)
+      .as[(String, Long, Long)].collect()
+    assert(rep.forall(_._3 == 0L), rep.mkString(", "))
+  }
+
   test("driver-side bucket function matches the executor-side column") {
     val terms = Seq("fast", "hash", "join", "scan", "zebra")
     val fromSpark = terms.toDF("t")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.Frames
 import graft.similarity.Similarity
 
 class IvfSpec extends SparkSpec {
@@ -129,35 +130,36 @@ class IvfSpec extends SparkSpec {
 
     // expunge: dead rows physically gone, tombstones dropped, answers
     // unchanged, cid partition layout (and its pruning) preserved.
-    // Install is a frame bump: the rewritten tables live under the
-    // pointed frames/v= dir and the legacy root tables are swept.
-    // Cross-verb staging debris (a DIFFERENT verb's crashed install
-    // left under the same unflipped v= dir — file names the copy's
-    // skip-if-exists would keep) must NOT leak into this install:
-    // nextFrame starts clean
+    // Install is a frame flip: the rewritten lists live in a new
+    // generation, the new frame drops the tombstone table, and the
+    // legacy root tables are swept. Cross-verb staging debris (a
+    // DIFFERENT verb's crashed install left at the next unflipped
+    // centroid generation) must NOT leak into this install
     Seq((99, Array(9f, 9f))).toDF("cid", "cvec")
-      .write.mode("overwrite").parquet(s"$path/frames/v=0/centroids")
+      .write.mode("overwrite").parquet(s"$path/tables/centroids/g=0")
     val centsBefore = spark.read.parquet(s"$path/centroids")
       .as[(Int, Array[Float])].collect()
       .map { case (c, v) => (c, v.toSeq) }.toMap
     IvfStore.expungeDeletes(spark, path)
-    val fr = IvfStore.frameRoot(spark, path)
-    assert(fr != path, "expunge must install via a frame-pointer bump")
-    assert(!new java.io.File(s"$fr/deletes").exists,
+    assert(Frames.currentVersion(spark, path) === Some(0L),
+      "expunge must install via a frame-pointer bump")
+    assert(!new java.io.File(Frames.resolve(spark, path, "deletes")).exists,
       "the new frame must carry no tombstone table")
+    assert(!new java.io.File(s"$path/tables/centroids/g=0").exists,
+      "unreferenced staging debris is swept by the install")
     // retention (VERDICT r18 #2): the superseded legacy frame survives
     // ONE install as the concurrent readers' grace window; the reclaim-
     // now sweep (Maintain ivf gc 0) collects it on demand
     assert(new java.io.File(s"$path/lists").exists,
       "the superseded legacy frame is retained for one install")
-    IvfStore.gcStaleFrames(spark, path, retain = 0)
+    Frames.gc(spark, path, IvfStore.Tables, retain = 0)
     assert(!new java.io.File(s"$path/lists").exists &&
       !new java.io.File(s"$path/deletes").exists,
       "gc 0 reclaims the grace-window frame immediately")
-    assert(spark.read.parquet(s"$fr/lists")
+    assert(spark.read.parquet(Frames.resolve(spark, path, "lists"))
       .filter($"vec_id".isin(dead.toSeq: _*)).count() == 0,
       "expunge must rewrite the lists without the dead vectors")
-    val centsAfter = spark.read.parquet(s"$fr/centroids")
+    val centsAfter = spark.read.parquet(Frames.resolve(spark, path, "centroids"))
       .as[(Int, Array[Float])].collect()
       .map { case (c, v) => (c, v.toSeq) }.toMap
     assert(centsAfter === centsBefore,
@@ -166,7 +168,8 @@ class IvfSpec extends SparkSpec {
     val expunged = IvfStore.searchStore(spark, path, q, 10)
       .as[(Long, Long, Double, Long)].collect()
     assert(expunged.toSet === after.toSet, "expunge must not change answers")
-    assert(spark.read.parquet(s"$fr/lists").columns.contains("cid"))
+    assert(spark.read.parquet(Frames.resolve(spark, path, "lists"))
+      .columns.contains("cid"))
     // no-op on a store without tombstones
     IvfStore.expungeDeletes(spark, path)
     assert(IvfStore.searchStore(spark, path, q, 10)
@@ -367,14 +370,14 @@ class IvfSpec extends SparkSpec {
     // scale, 6) reconstruction (cid kept: assignment ran on raw vectors
     // the store no longer holds) and the re-check is clean. The store is
     // frame-installed after the recluster above, so the corruption
-    // injection targets the pointed frame's lists
-    val qroot = IvfStore.frameRoot(spark, qpath)
+    // injection targets the current frame's lists
+    val qdir = Frames.resolve(spark, qpath, "lists")
     val qfs = new org.apache.hadoop.fs.Path(qpath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(s"$qroot/lists").withColumn("nv", col("nv") + lit(1.0))
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$qroot/lists_bad")
-    graft.FsOps.atomicSwap(qfs, new org.apache.hadoop.fs.Path(s"$qroot/lists"),
-      new org.apache.hadoop.fs.Path(s"$qroot/lists_bad"))
+    spark.read.parquet(qdir).withColumn("nv", col("nv") + lit(1.0))
+      .write.mode("overwrite").partitionBy("cid").parquet(s"${qdir}_bad")
+    graft.FsOps.atomicSwap(qfs, new org.apache.hadoop.fs.Path(qdir),
+      new org.apache.hadoop.fs.Path(s"${qdir}_bad"))
     val qbad = report(qpath)
     assert(qbad("norms_consistent")._2 === qbad("norms_consistent")._1)
     IvfStore.repairLists(spark, qpath)
@@ -407,25 +410,26 @@ class IvfSpec extends SparkSpec {
     // a tombstone before recluster: the rewrite must materialize it out
     IvfStore.deleteVectors(spark, s"$root/m", Seq(9L).toDF("vec_id"))
     IvfStore.reclusterStore(spark, s"$root/m", nCentroids = 16, kmeansIters = 0)
-    // frame-pointer install: the new tables live under frames/v=, the
+    // frame install: the new tables live in fresh generations, the
     // superseded legacy tables are swept, tombstones dropped WITH the flip
-    val mroot = IvfStore.frameRoot(spark, s"$root/m")
-    assert(mroot != s"$root/m", "recluster must install via a frame bump")
-    assert(spark.read.parquet(s"$mroot/centroids").count() === 16,
+    assert(Frames.currentVersion(spark, s"$root/m") === Some(0L),
+      "recluster must install via a frame bump")
+    val mdirs = Frames.resolveAll(spark, s"$root/m", IvfStore.Tables)
+    assert(spark.read.parquet(mdirs("centroids")).count() === 16,
       "recluster must return the centroid set to k")
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$mroot/deletes")),
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(mdirs("deletes"))),
       "tombstones are materialized out (expunge-class rewrite)")
     // retention: the superseded legacy frame is the readers' grace
     // window for one install; gc 0 is the reclaim-now verb
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/m/lists")),
       "the superseded legacy frame is retained for one install")
-    IvfStore.gcStaleFrames(spark, s"$root/m", retain = 0)
+    Frames.gc(spark, s"$root/m", IvfStore.Tables, retain = 0)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/m/lists")) &&
       !fs.exists(new org.apache.hadoop.fs.Path(s"$root/m/centroids")),
       "gc 0 reclaims the grace-window frame immediately")
-    assert(spark.read.parquet(s"$mroot/lists")
+    assert(spark.read.parquet(mdirs("lists"))
       .filter($"vec_id" === 9L).isEmpty)
     // same deterministic seeding as a fresh build over the live corpus →
     // identical answers, and the probed-cid pruning still plans
@@ -456,7 +460,7 @@ class IvfSpec extends SparkSpec {
     // pre-recluster store — same corpus, same scoring, new list homes
     IvfStore.reclusterStore(spark, path, nCentroids = 8, kmeansIters = 1)
     assert(spark.read.parquet(
-      s"${IvfStore.frameRoot(spark, path)}/centroids").count() === 8)
+      Frames.resolve(spark, path, "centroids")).count() === 8)
     val after = IvfStore.searchStoreQuantized(spark, path, q, 10)
       .as[(Long, Long, Double, Long)].collect().toSeq
     assert(after.nonEmpty && after.map(_._1).distinct.size === before.map(_._1).distinct.size)
@@ -487,9 +491,9 @@ class IvfSpec extends SparkSpec {
     IvfStore.flattenBatches(spark, s"$root/a")
     // layout is cid=-only, the batch watermark dropped with the layers;
     // the rewrite installed via a frame bump (r18), tombstones carried
-    val aRoot = IvfStore.frameRoot(spark, s"$root/a")
-    assert(aRoot != s"$root/a", "flatten must install via a frame bump")
-    val lists = spark.read.parquet(s"$aRoot/lists")
+    assert(Frames.currentVersion(spark, s"$root/a").isDefined,
+      "flatten must install via a frame bump")
+    val lists = spark.read.parquet(Frames.resolve(spark, s"$root/a", "lists"))
     assert(!lists.columns.contains("batch"))
     assert(IvfStore.listBatches(spark, s"$root/a") === Seq.empty)
     assert(IvfStore.lastAudited(spark, s"$root/a") === None)
@@ -606,13 +610,16 @@ class IvfSpec extends SparkSpec {
     val preCrash = IvfStore.searchStore(spark, fresh, q, 3)
       .as[(Long, Long, Double, Long)].collect().toSeq
     // forge the crash: stage a POISONED next frame (wrong centroids AND
-    // wrong lists — a reader that resolved the unflipped frame would
-    // return different answers or die on the alien schema)
+    // wrong lists in the next generations, plus the manifest naming them
+    // — a reader that resolved the unflipped frame would return
+    // different answers or die on the alien schema)
     Seq((0, Array(9f, 9f))).toDF("cid", "cvec")
-      .write.mode("overwrite").parquet(s"$fresh/frames/v=0/centroids")
+      .write.mode("overwrite").parquet(s"$fresh/tables/centroids/g=0")
     Seq((999L, Array(9f, 9f), 1.0, 0)).toDF("vec_id", "v", "nv", "cid")
       .write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$fresh/frames/v=0/lists")
+      .parquet(s"$fresh/tables/lists/g=0")
+    FsOps.writeMarker(spark, s"$fresh/frames", "v=0",
+      "centroids:0\ndeletes:0\nlists:0")
     assert(IvfStore.searchStore(spark, fresh, q, 3)
       .as[(Long, Long, Double, Long)].collect().toSeq === preCrash,
       "an unflipped staged frame must be invisible to every reader")
@@ -620,11 +627,14 @@ class IvfSpec extends SparkSpec {
       .agg(sum($"violations")).as[Long].collect().head === 0L,
       "fsck audits the OLD frame through the crash window")
     IvfStore.deleteVectors(spark, fresh, Seq(-1L).toDF("vec_id")) // ingest verbs too
-    // the re-run restages the SAME v= dir over the debris and completes:
-    // ONE pointer flip installs lists + centroids + tombstone drop
+    // the re-run restages past the debris and completes: ONE pointer
+    // flip installs frame v=0 — lists + centroids + tombstone drop
     IvfStore.reclusterStore(spark, fresh, nCentroids = 16, kmeansIters = 0)
     assert(FsOps.readLongMarker(spark, fresh, "_frame") === Some(0L))
-    assert(IvfStore.frameRoot(spark, fresh) === s"$fresh/frames/v=0")
+    assert(Frames.currentVersion(spark, fresh) === Some(0L))
+    assert(spark.read.parquet(Frames.resolve(spark, fresh, "lists"))
+      .filter($"vec_id" === 999L).isEmpty,
+      "the install never serves the poisoned staging debris")
     assert(IvfStore.searchStore(spark, fresh, q, 3).count() === 3)
     // retention (VERDICT r18 #2): the superseded legacy frame is kept
     // for ONE install — a reader that resolved its dirs just before the
@@ -634,19 +644,55 @@ class IvfSpec extends SparkSpec {
     // a SECOND bump (expunge after a delete) supersedes v=0, keeps it as
     // the new grace window, and sweeps the legacy frame out of the window
     IvfStore.deleteVectors(spark, fresh, Seq(0L).toDF("vec_id"))
-    val preFlip = s"${IvfStore.frameRoot(spark, fresh)}/lists" // a reader's resolved dir
+    val preFlip = Frames.resolve(spark, fresh, "lists") // a reader's resolved dir
     IvfStore.expungeDeletes(spark, fresh)
-    assert(IvfStore.frameRoot(spark, fresh) === s"$fresh/frames/v=1")
+    assert(Frames.currentVersion(spark, fresh) === Some(1L))
     assert(!new java.io.File(s"$fresh/lists").exists,
       "two installs later the legacy frame has left the window")
     assert(spark.read.parquet(preFlip).count() > 0,
       "retain=1: the pre-flip frame still reads after one install")
     assert(IvfStore.searchStore(spark, fresh, q, 3).count() === 3)
     // reclaim-now (Maintain ivf gc 0) sweeps the grace-window frame
-    IvfStore.gcStaleFrames(spark, fresh, retain = 0)
-    assert(!new java.io.File(s"$fresh/frames/v=0").exists,
-      "gc 0 collects every superseded v= dir")
+    Frames.gc(spark, fresh, IvfStore.Tables, retain = 0)
+    assert(!new java.io.File(s"$fresh/frames/v=0").exists &&
+      !new java.io.File(preFlip).exists,
+      "gc 0 collects every superseded frame and its generations")
     assert(IvfStore.searchStore(spark, fresh, q, 3).count() === 3)
+  }
+
+  test("a dropped frame table reads as absent, is recreated by the next append, never shares a generation") {
+    import graft.similarity.IvfStore
+    val e = Tables.load(spark, sf0001, "embeddings")
+    val path = java.nio.file.Files.createTempDirectory("ivfdrop").toString
+    IvfStore.writeIndex(e, path, kmeansIters = 0)
+    IvfStore.deleteVectors(spark, path, Seq(0L).toDF("vec_id"))
+    IvfStore.expungeDeletes(spark, path)
+    // the manifest still lists the dropped table — at a generation no
+    // writer has created yet, so readers see no tombstones at all
+    val dropped = Frames.resolve(spark, path, "deletes")
+    assert(dropped.startsWith(s"$path/tables/deletes/g="))
+    assert(!new java.io.File(dropped).exists)
+    assert(IvfStore.liveVectorIds(spark, path).count() === e.count() - 1)
+    // the next soft delete creates it in place
+    IvfStore.deleteVectors(spark, path, Seq(1L).toDF("vec_id"))
+    assert(new java.io.File(dropped).exists)
+    assert(!IvfStore.liveVectorIds(spark, path).as[Long].collect().contains(1L))
+    // a second drop allocates past the live generation: the retained
+    // grace frame's tombstones are never cleared by the new install
+    IvfStore.reclusterStore(spark, path, nCentroids = 8, kmeansIters = 0)
+    assert(Frames.resolve(spark, path, "deletes") != dropped)
+    assert(new java.io.File(dropped).exists, "retained for one install")
+    assert(IvfStore.liveVectorIds(spark, path).count() === e.count() - 2)
+    // an undeclared table still fails loudly
+    val eU = intercept[IllegalStateException](Frames.resolve(spark, path, "bogus"))
+    assert(eU.getMessage.contains("lists no 'bogus' table"), eU.getMessage)
+    // a rebuild over the frame-installed store overwrites the current
+    // frame's tables in place: it serves and audits like a fresh build
+    IvfStore.writeIndex(e, path, kmeansIters = 0)
+    assert(Frames.currentVersion(spark, path) === Some(1L))
+    assert(IvfStore.liveVectorIds(spark, path).count() === e.count())
+    assert(IvfStore.checkStore(spark, path)
+      .agg(sum($"violations")).as[Long].collect().head === 0L)
   }
 
   test("concurrent ingest during a frame rewrite is carried through the flip (ADVICE r18)") {
@@ -692,8 +738,7 @@ class IvfSpec extends SparkSpec {
     assert(!live2.contains(6L) && !live2.contains(7L),
       "both the consumed and the mid-staging tombstones hold after expunge")
     assert((110L until 120L).forall(live2.contains))
-    assert(spark.read.parquet(
-        s"${IvfStore.frameRoot(spark, root)}/lists")
+    assert(spark.read.parquet(Frames.resolve(spark, root, "lists"))
       .filter($"vec_id" === 6L).isEmpty,
       "the consumed tombstone was materialized out of the rewrite")
     assert(IvfStore.checkStore(spark, root)
@@ -715,7 +760,7 @@ class IvfSpec extends SparkSpec {
     IvfStore.flattenBatches(spark, s"$root/streamed")
     IvfStore.writeIndexQuantized(e, s"$root/oneshot", kmeansIters = 0)
     def rows(p: String): Set[(Long, Int, Double, Seq[Byte], Double)] =
-      spark.read.parquet(s"${IvfStore.frameRoot(spark, p)}/lists")
+      spark.read.parquet(Frames.resolve(spark, p, "lists"))
         .select($"vec_id", $"cid", $"scale", $"qvec", $"nv")
         .as[(Long, Int, Double, Seq[Byte], Double)].collect().toSet
     assert(rows(s"$root/streamed") === rows(s"$root/oneshot"))

@@ -100,10 +100,10 @@ class MaintainSpec extends SparkSpec {
     // and a malformed threshold fails with the usage message
     assert(violations(Maintain.run(spark, "ivf", "advise", path)) === 0L)
     // apply mode on a green store is a no-op: no recluster, frame intact
-    val frameBefore = similarity.IvfStore.frameRoot(spark, path)
+    val frameBefore = operators.Frames.currentVersion(spark, path)
     assert(violations(Maintain.run(spark, "ivf", "advise", path,
       Seq("apply"))) === 0L)
-    assert(similarity.IvfStore.frameRoot(spark, path) === frameBefore,
+    assert(operators.Frames.currentVersion(spark, path) === frameBefore,
       "a not-due apply must not recluster")
     val eAdv = intercept[IllegalArgumentException](
       Maintain.run(spark, "ivf", "advise", path, Seq("x")))
@@ -111,11 +111,27 @@ class MaintainSpec extends SparkSpec {
     // recluster takes optional [nCentroids] [iters] [sampleMod] args
     assert(Maintain.run(spark, "ivf", "recluster", path, Seq("2", "0")).isEmpty)
     assert(spark.read.parquet(
-      s"${similarity.IvfStore.frameRoot(spark, path)}/centroids").count() === 2L)
+      operators.Frames.resolve(spark, path, "centroids")).count() === 2L)
     assert(violations(Maintain.run(spark, "ivf", "fsck", path)) === 0L)
     val e1 = intercept[IllegalArgumentException](
       Maintain.run(spark, "ivf", "recluster", path, Seq("x")))
     assert(e1.getMessage.contains("recluster"), e1.getMessage)
+    // the one frame-retention verb: `gc 0` reclaims the superseded
+    // grace-window frame immediately; a malformed retain fails with the
+    // family's usage, and a family without frames has no gc verb
+    val cur = operators.Frames.currentVersion(spark, path).get
+    val grace = new java.io.File(s"$path/frames/v=${cur - 1}")
+    assert(grace.exists, "installs keep one superseded frame")
+    assert(Maintain.run(spark, "ivf", "gc", path, Seq("0")).isEmpty)
+    assert(!grace.exists, "gc 0 reclaims it")
+    assert(violations(Maintain.run(spark, "ivf", "fsck", path)) === 0L)
+    val eGc = intercept[IllegalArgumentException](
+      Maintain.run(spark, "ivf", "gc", path, Seq("-1")))
+    assert(eGc.getMessage.contains("ivf gc <path> [retain >= 0, default 1]"),
+      eGc.getMessage)
+    val eNoGc = intercept[IllegalArgumentException](
+      Maintain.run(spark, "vstore", "gc", path))
+    assert(eNoGc.getMessage.contains("unknown maintenance op"), eNoGc.getMessage)
   }
 
   test("dedup family: fsck / repair / compact dispatch") {

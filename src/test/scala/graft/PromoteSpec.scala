@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.DedupStore
 import graft.index.Indexer
+import graft.operators.Frames
 import graft.pipeline.{Forget, Promote}
 import graft.similarity.{IvfStore, Similarity}
 
@@ -223,7 +224,7 @@ class PromoteSpec extends SparkSpec {
     // via a frame bump (r18), so subsequent direct reads and corruption
     // injections resolve the pointed frame
     IvfStore.repairLists(spark, dest)
-    def dLists = s"${IvfStore.frameRoot(spark, dest)}/lists"
+    def dLists = Frames.resolve(spark, dest, "lists")
     assert(rep().values.sum === 0L)
     assert(spark.read.parquet(dLists).filter($"vec_id" === 0L)
       .select("cid").as[Int].collect().head === c0)
@@ -332,7 +333,7 @@ class PromoteSpec extends SparkSpec {
     IvfStore.repairLists(spark, dest)
     val fixed = rep()
     assert(fixed.values.map(_._2).sum === 0L, fixed.toString)
-    assert(spark.read.parquet(s"${IvfStore.frameRoot(spark, dest)}/lists")
+    assert(spark.read.parquet(Frames.resolve(spark, dest, "lists"))
       .filter($"vec_id" === 0L)
       .select("cid").as[Int].collect().head <= 2,
       "vec 0 must be back under shard A's cid group")
@@ -402,7 +403,7 @@ class PromoteSpec extends SparkSpec {
     def rewriteCid(vecId: Long, newCid: Int): Unit = {
       // resolve per call: repairLists installs via a frame bump (r18),
       // so the injection must always target the CURRENT frame's lists
-      val oLists = s"${IvfStore.frameRoot(spark, outer)}/lists"
+      val oLists = Frames.resolve(spark, outer, "lists")
       val ls = spark.read.parquet(oLists)
       ls.withColumn("cid",
           when($"vec_id" === vecId, lit(newCid)).otherwise($"cid"))
@@ -432,7 +433,7 @@ class PromoteSpec extends SparkSpec {
     IvfStore.repairLists(spark, outer)
     val rfixed = rep(outer)
     assert(rfixed.values.map(_._2).sum === 0L, rfixed.toString)
-    val homed = spark.read.parquet(s"${IvfStore.frameRoot(spark, outer)}/lists")
+    val homed = spark.read.parquet(Frames.resolve(spark, outer, "lists"))
       .filter($"vec_id" === 100L).select("cid").as[Int].collect().head
     assert(homed >= 1 && homed <= 4,
       s"vec 100 must re-home inside dest's group span, got cid $homed")
@@ -486,6 +487,34 @@ class PromoteSpec extends SparkSpec {
     assert(eS.getMessage.contains("committed IVF store"), eS.getMessage)
     assert(FsOps.mergedInto(spark, a) === None,
       "a mismatched-source resume must not stamp invented provenance")
+  }
+
+  test("move-merge of frame-installed ivf shards: the resume probes their resolved table dirs") {
+    // both shards frame-installed before promotion: a's expunge drops its
+    // tombstone table, b's repair carries its tombstones by reference
+    val (a, b, dest) = (tmp("fiIvfA"), tmp("fiIvfB"), tmp("fiIvfDest") + "/store")
+    ivfShard(_ % 2 == 0, a)
+    ivfShard(_ % 2 == 1, b)
+    IvfStore.deleteVectors(spark, a, Seq(0L).toDF("vec_id"))
+    IvfStore.expungeDeletes(spark, a)
+    IvfStore.deleteVectors(spark, b, Seq(1L).toDF("vec_id"))
+    IvfStore.repairLists(spark, b)
+    assert(Frames.currentVersion(spark, a) === Some(0L))
+    assert(Frames.currentVersion(spark, b) === Some(0L))
+    IvfStore.mergeStores(spark, Seq(a, b), dest, moveFiles = true)
+    assert(FsOps.visibleDataFiles(spark, Frames.resolve(spark, b, "lists")).isEmpty,
+      "the move drains the source's CURRENT frame tables")
+    // forge the commit-to-stamps crash: the resume recognizes the drained
+    // frame-installed husks and completes the stamps
+    fsAt(a).delete(new Path(s"$a/${FsOps.MergedIntoMarker}"), false)
+    fsAt(b).delete(new Path(s"$b/${FsOps.MergedIntoMarker}"), false)
+    IvfStore.mergeStores(spark, Seq(a, b), dest, moveFiles = true)
+    assert(FsOps.mergedInto(spark, a) === Some(dest))
+    assert(FsOps.mergedInto(spark, b) === Some(dest))
+    assert(IvfStore.liveVectorIds(spark, dest).as[Long].collect().toSet ===
+      (2L to 7L).toSet, "expunged and carried tombstones both hold")
+    assert(IvfStore.checkStore(spark, dest)
+      .agg(sum($"violations")).as[Long].collect().head === 0L)
   }
 
   test("half-transferred move-resume with a different source list refuses: ivf and dedup families") {
