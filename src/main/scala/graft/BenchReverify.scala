@@ -233,7 +233,7 @@ object BenchReverify {
         // spins a minimal local one (the merge CLI path)
         val spark = org.apache.spark.sql.SparkSession.builder()
           .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
-        val n = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
+        val n = FsOps.readParquet(spark, s"$sfDir/embeddings.parquet").count()
         val minCos = graft.queries.PipelineQueries.CosineThreshold
         val (bits, bands) = graft.dedup.Dedup.autoGeometry(n, minCos)
         val rec = graft.dedup.Dedup.recallAtMinCos(minCos, bits, bands)

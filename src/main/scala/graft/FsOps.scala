@@ -4,9 +4,35 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Shared filesystem lifecycle primitives for the stores (index store,
   * dedup store, compaction, upsert sinks). One implementation of the
-  * crash-safe swap so error handling cannot diverge between call sites.
+  * crash-safe swap so error handling cannot diverge between call sites,
+  * and one read entry for every store table ([[readParquet]]).
   */
 object FsOps {
+
+  /** Read parquet table directories with the schema resolved on the
+    * driver from ONE footer — the single read entry for every store
+    * table. A plain `spark.read.parquet(dir)` infers the schema with a
+    * one-task Spark job per read (even with `mergeSchema` off), which
+    * made schema inference up to half the jobs of a store query. The
+    * footer is the one Spark's inference reads, converted by Spark's own
+    * rule ([[org.apache.spark.sql.graft.ParquetFooterSchema]]), and
+    * partition columns (`term_bucket`, `v`) are left to Spark's
+    * partition discovery, so the schema equals the inferred one. With no
+    * file under `dirs` (a missing directory, a drained husk) the read is
+    * Spark's own and raises its usual error. `basePath` is Spark's
+    * partition-discovery root option. */
+  def readParquet(spark: org.apache.spark.sql.SparkSession,
+                  dirs: String*): org.apache.spark.sql.DataFrame =
+    readParquet(spark, dirs, basePath = None)
+
+  def readParquet(spark: org.apache.spark.sql.SparkSession, dirs: Seq[String],
+                  basePath: Option[String]): org.apache.spark.sql.DataFrame = {
+    val reader = basePath.foldLeft(spark.read)(_.option("basePath", _))
+    org.apache.spark.sql.graft.ParquetFooterSchema.of(spark, dirs) match {
+      case Some(schema) => reader.schema(schema).parquet(dirs: _*)
+      case None => reader.parquet(dirs: _*)
+    }
+  }
 
   /** Install `tmp` at `live` via rename-aside: readers observe the old or
     * the new directory, never half of either, and no failure mode deletes

@@ -98,7 +98,7 @@ object Maintain {
     * verb an operator would run by hand). */
   private def compactIndexStore(spark: SparkSession, path: String): Unit = {
     def batchRange(table: String): Seq[String] =
-      if (spark.read.parquet(s"$path/$table").columns.contains("batch"))
+      if (FsOps.readParquet(spark, s"$path/$table").columns.contains("batch"))
         Seq("batch") else Seq.empty
     val docBucketed = index.Indexer.docBucketsOf(spark, path).isDefined
     val posDocBucketed = index.Indexer.positionalDocBucketsOf(spark, path).isDefined
@@ -143,7 +143,7 @@ object Maintain {
     // batch-tracked tables compact range-partitioned by their ingest
     // ordinal so the incremental audits keep file-level min/max skipping
     def batchRange(table: String): Seq[String] =
-      if (spark.read.parquet(s"$path/$table").columns.contains("batch"))
+      if (FsOps.readParquet(spark, s"$path/$table").columns.contains("batch"))
         Seq("batch") else Seq.empty
     (family, op) match {
       // family-agnostic: stale-aside cleanup is a property of the marker
@@ -220,7 +220,7 @@ object Maintain {
         if (applyIt &&
             advice.collect()(0).getAs[Long]("violations") > 0) {
           val k = explicitK.getOrElse(
-            spark.read.parquet(operators.Frames.resolve(spark, path, "centroids"))
+            FsOps.readParquet(spark, operators.Frames.resolve(spark, path, "centroids"))
               .count().toInt)
           similarity.IvfStore.reclusterStore(spark, path, nCentroids = k)
           Some(similarity.IvfStore.adviseRecluster(spark, path, frac))
@@ -288,7 +288,7 @@ object Maintain {
           val dir = dedup.DedupStore.tablePath(spark, path, t)
           operators.Compaction.compact(spark, dir,
             rangeBy =
-              if (spark.read.parquet(dir).columns.contains("batch"))
+              if (FsOps.readParquet(spark, dir).columns.contains("batch"))
                 Seq("batch") else Seq.empty)
         }
         None
@@ -346,7 +346,7 @@ object Maintain {
         require(extra.length >= 2,
           "vstore purge needs <idsParquet> then the store's key column(s)")
         val st = streaming.VersionedStore.purgeKeys(spark, path, extra.tail,
-          spark.read.parquet(extra.head))
+          FsOps.readParquet(spark, extra.head))
         println(s"[maintain] purged: logs ${st.logsRewritten.mkString(",")} " +
           s"checkpoints ${st.checkpointsRewritten.mkString(",")}")
         None
@@ -365,7 +365,7 @@ object Maintain {
             "(a doc_id column; add 'purge' as a second arg for immediate " +
             "physical expunge)")
         val n = pipeline.Forget.forget(spark, path,
-          spark.read.parquet(extra.head),
+          FsOps.readParquet(spark, extra.head),
           purge = extra.lift(1).contains("purge"))
         println(s"[maintain] forget manifest m=$n complete")
         None

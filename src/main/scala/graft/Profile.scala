@@ -77,7 +77,7 @@ object Profile {
     // warmup as in Bench
     try spark.range(1000000).selectExpr("sum(id)").collect()
     catch { case scala.util.control.NonFatal(_) => () }
-    try spark.read.parquet(s"$sfDir/lineitem.parquet")
+    try FsOps.readParquet(spark, s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()
     catch { case scala.util.control.NonFatal(_) => () }
 

@@ -63,7 +63,7 @@ object SearchCli {
 
     val docs =
       if (corpus.endsWith(".parquet"))
-        spark.read.parquet(corpus)
+        FsOps.readParquet(spark, corpus)
           .select(col("doc_id"), coalesce(col("source"), lit("")).as("title"), col("text"))
       else WikiCorpus.read(spark, corpus)
 

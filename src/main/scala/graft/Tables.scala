@@ -9,7 +9,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    FsOps.readParquet(spark, s"$sfDir/$name.parquet")
 
   /** `events.ts` has shipped as either parquet TIMESTAMP(NANOS) —
     * which Spark 4 refuses to read as a timestamp — or plain

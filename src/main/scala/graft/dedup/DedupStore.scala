@@ -164,7 +164,7 @@ object DedupStore {
     val sets = Dedup.shingleSets(Dedup.shingles(corpus, idCol, textCol, shingleN))
     sets.withColumn("batch", lit(0L))
       .write.mode("overwrite").parquet(s"$path/sets")
-    val stored = corpus.sparkSession.read.parquet(s"$path/sets")
+    val stored = graft.FsOps.readParquet(corpus.sparkSession, s"$path/sets")
     deriveBuckets(stored, numHashes, bands)
       .withColumn("batch", lit(0L))
       .write.mode("overwrite").parquet(s"$path/buckets")
@@ -215,13 +215,13 @@ object DedupStore {
       () => deriveBuckets(setsDf, numHashes, bands)
         .write.mode("overwrite").parquet(s"$staged/buckets"))
     setsDf.unpersist()
-    val newSets = spark.read.parquet(s"$staged/sets")
-    val newBuckets = spark.read.parquet(s"$staged/buckets")
+    val newSets = graft.FsOps.readParquet(spark, s"$staged/sets")
+    val newBuckets = graft.FsOps.readParquet(spark, s"$staged/buckets")
 
     val setsDir = tablePath(spark, path, "sets")
     val bucketsDir = tablePath(spark, path, "buckets")
-    val storedBuckets = spark.read.parquet(bucketsDir)
-    val storedSets = spark.read.parquet(setsDir)
+    val storedBuckets = graft.FsOps.readParquet(spark, bucketsDir)
+    val storedSets = graft.FsOps.readParquet(spark, setsDir)
 
     // candidates: any band-bucket collision between the batch and the store
     val cand = newBuckets.select(col("doc_id").as("new_id"), col("band"), col("bucket"))
@@ -241,7 +241,7 @@ object DedupStore {
       .select(col("new_id"), col("dup_of"), col("jaccard"))
 
     dups.write.mode("overwrite").parquet(s"$path/_last_ingest")
-    val report = spark.read.parquet(s"$path/_last_ingest")
+    val report = graft.FsOps.readParquet(spark, s"$path/_last_ingest")
 
     val dupIds = report.select(col("new_id").as("doc_id")).distinct()
     // survivors land under the next ingest-batch ordinal (legacy stores
@@ -390,7 +390,7 @@ object DedupStore {
     // the two table rewrites stage at disjoint dirs — overlap them
     // (guide §2.6); the frame still flips only after both landed
     graft.operators.Par.run(Tables.map(t => () =>
-      spark.read.parquet(tablePath(spark, path, t))
+      graft.FsOps.readParquet(spark, tablePath(spark, path, t))
         .join(rm, Seq("doc_id"), "left_anti")
         .write.mode("overwrite").parquet(stage.stageDir(t))): _*)
     stage.commit() // the flip: both rewrites install together
@@ -414,7 +414,7 @@ object DedupStore {
                        maxBucketDocs: Int = 32): DataFrame = {
     require(maxBucketDocs >= 1, s"maxBucketDocs must be >= 1 (got $maxBucketDocs)")
     graft.FsOps.requireNotHusk(spark, path)
-    val g = spark.read.parquet(tablePath(spark, path, "buckets"))
+    val g = graft.FsOps.readParquet(spark, tablePath(spark, path, "buckets"))
       .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("checked"),
         coalesce(sum(when(col("n") > maxBucketDocs, 1L).otherwise(0L)), lit(0L))
@@ -453,7 +453,7 @@ object DedupStore {
   def dedupHotBuckets(spark: SparkSession, path: String, minJaccard: Double,
                       maxBucketDocs: Int = 32): Long = {
     graft.FsOps.requireNotHusk(spark, path)
-    val buckets = spark.read.parquet(tablePath(spark, path, "buckets"))
+    val buckets = graft.FsOps.readParquet(spark, tablePath(spark, path, "buckets"))
     val hot = buckets.groupBy("band", "bucket")
       .agg(count(lit(1)).as("n")).filter(col("n") > maxBucketDocs)
       .select("band", "bucket")
@@ -464,7 +464,7 @@ object DedupStore {
         Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    val sets = spark.read.parquet(tablePath(spark, path, "sets"))
+    val sets = graft.FsOps.readParquet(spark, tablePath(spark, path, "sets"))
       .select(col("doc_id"), col("sh_set"))
     val verified = cand
       .join(sets.toDF("id_a", "set_a"), "id_a")
@@ -525,8 +525,9 @@ object DedupStore {
     // deep audit is priced per pass over the store, so each table
     // materializes once and the eager ≤ 4-row report releases the cache
     val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sets = spark.read.parquet(tablePath(spark, path, "sets")).persist(storage)
-    val buckets = spark.read.parquet(tablePath(spark, path, "buckets")).persist(storage)
+    val sets = graft.FsOps.readParquet(spark, tablePath(spark, path, "sets")).persist(storage)
+    val buckets = graft.FsOps.readParquet(spark, tablePath(spark, path, "buckets"))
+      .persist(storage)
 
     val unique = row("ids_unique",
       sets.agg(count(lit(1)).as("checked"),
@@ -586,7 +587,7 @@ object DedupStore {
   def refreshBuckets(spark: SparkSession, path: String,
                      numHashes: Int = 128, bands: Int = 32): Unit = {
     requireGeometry(spark, path, numHashes, bands, "refreshBuckets")
-    val sets = spark.read.parquet(tablePath(spark, path, "sets"))
+    val sets = graft.FsOps.readParquet(spark, tablePath(spark, path, "sets"))
     val derived = deriveBuckets(sets, numHashes, bands)
     // a batch-tracked store's repaired buckets re-inherit each doc's
     // ingest ordinal from its (authoritative) sets row, so incremental
@@ -624,8 +625,8 @@ object DedupStore {
                             sinceBatch: Option[Long] = None): DataFrame = {
     requireGeometry(spark, path, numHashes, bands, "checkStoreIncremental")
     import graft.operators.StoreCheck.row
-    val sets = spark.read.parquet(tablePath(spark, path, "sets"))
-    val buckets = spark.read.parquet(tablePath(spark, path, "buckets"))
+    val sets = graft.FsOps.readParquet(spark, tablePath(spark, path, "sets"))
+    val buckets = graft.FsOps.readParquet(spark, tablePath(spark, path, "buckets"))
     require(sets.columns.contains("batch") && buckets.columns.contains("batch"),
       s"checkStoreIncremental: store at $path carries no batch ordinals " +
         "(written before batch tracking) — run the full checkStore instead")
@@ -720,7 +721,7 @@ object DedupStore {
             // replay guard: drop docs already in the store BY ID (only a
             // retried attempt or an upstream id re-send produces them)
             val fresh = batch.join(
-              spark.read.parquet(tablePath(spark, path, "sets"))
+              graft.FsOps.readParquet(spark, tablePath(spark, path, "sets"))
                 .select(col("doc_id").as(idCol)),
               Seq(idCol), "left_anti")
             ingest(spark, path, fresh, minJaccard, idCol, textCol,

@@ -103,7 +103,7 @@ object Indexer {
   private def inheritDocBatch(spark: org.apache.spark.sql.SparkSession,
                               path: String, pos: DataFrame,
                               corpusIds: DataFrame): DataFrame = {
-    val ds = spark.read.parquet(s"$path/doc_stats")
+    val ds = graft.FsOps.readParquet(spark, s"$path/doc_stats")
     val orphans = corpusIds.distinct()
       .join(ds.select("doc_id"), Seq("doc_id"), "left_anti")
     require(orphans.isEmpty,
@@ -156,7 +156,7 @@ object Indexer {
     val dsPath = new org.apache.hadoop.fs.Path(s"$path/doc_stats")
     val dsExists = dsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(dsPath)
-    lazy val ds = spark.read.parquet(s"$path/doc_stats")
+    lazy val ds = graft.FsOps.readParquet(spark, s"$path/doc_stats")
     val coTracked = dsExists && ds.columns.contains("batch")
     val tagged =
       if (coTracked)
@@ -316,9 +316,10 @@ object Indexer {
     // vocab and meta read DIFFERENT just-persisted tables: independent,
     // overlap them (guide §2.6)
     graft.operators.Par.run(
-      () => vocab(spark.read.parquet(s"$path/postings").select("term", "doc_id", "tf"))
+      () => vocab(graft.FsOps.readParquet(spark, s"$path/postings")
+        .select("term", "doc_id", "tf"))
         .write.mode("overwrite").parquet(s"$path/vocab"),
-      () => meta(spark.read.parquet(s"$path/doc_stats"))
+      () => meta(graft.FsOps.readParquet(spark, s"$path/doc_stats"))
         .write.mode("overwrite").parquet(s"$path/meta"))
     writeBucketsMarker(spark, path, nBuckets)
     graft.FsOps.writeLongMarker(spark, path, LastBatchMarker, 0L)
@@ -354,7 +355,7 @@ object Indexer {
     // before the first byte is appended so a violation leaves the store
     // untouched
     val overlapping = newCorpus.select(col(idCol).as("doc_id"))
-      .join(spark.read.parquet(s"$path/doc_stats").select("doc_id"),
+      .join(graft.FsOps.readParquet(spark, s"$path/doc_stats").select("doc_id"),
         Seq("doc_id"), "left_semi")
     require(overlapping.isEmpty,
       s"appendIndex: some doc_ids in the new corpus already exist in the " +
@@ -459,7 +460,7 @@ object Indexer {
     val nb = storedPositionalBuckets(spark, path).getOrElse(nBuckets)
     if (checkDuplicates) {
       val overlapping = newCorpus.select(col(idCol).as("doc_id")).distinct()
-        .join(spark.read.parquet(s"$path/positional").select("doc_id"),
+        .join(graft.FsOps.readParquet(spark, s"$path/positional").select("doc_id"),
           Seq("doc_id"), "left_semi")
       require(overlapping.isEmpty,
         s"appendPositional: some doc_ids in the new corpus already exist in " +
@@ -472,7 +473,7 @@ object Indexer {
     val dsExists = dsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(dsPath)
     lazy val dsTracked =
-      spark.read.parquet(s"$path/doc_stats").columns.contains("batch")
+      graft.FsOps.readParquet(spark, s"$path/doc_stats").columns.contains("batch")
     // a standalone append beside a TRACKED frequency store is a
     // positional BACKFILL of already-indexed docs: rows inherit each
     // doc's own ordinal (a flat lastBatch+1 tag would put batches the
@@ -535,13 +536,13 @@ object Indexer {
     val marker = lastBatch(spark, path).getOrElse(throw new IllegalStateException(
       s"rollbackPartialAppend: no batch marker at $path — a legacy store's " +
         "partial append cannot be identified by ordinal; rebuild instead"))
-    val ds = spark.read.parquet(s"$path/doc_stats")
+    val ds = graft.FsOps.readParquet(spark, s"$path/doc_stats")
     require(ds.columns.contains("batch"),
       s"rollbackPartialAppend: store at $path carries no batch ordinals")
     val posPath = new org.apache.hadoop.fs.Path(s"$path/positional")
     val hasPos = posPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(posPath)
-    lazy val posDf = spark.read.parquet(s"$path/positional")
+    lazy val posDf = graft.FsOps.readParquet(spark, s"$path/positional")
     // the no-op probe must cover EVERY table this rollback repairs: a
     // rollback that itself crashed between the doc_stats/postings swaps
     // and the positional rewrite would otherwise report "nothing
@@ -550,7 +551,7 @@ object Indexer {
     lazy val posOrphaned = hasPos && posDf.columns.contains("batch") &&
       !posDf.filter(col("batch") > marker).isEmpty
     if (ds.filter(col("batch") > marker).isEmpty &&
-        spark.read.parquet(s"$path/postings").filter(col("batch") > marker).isEmpty &&
+        graft.FsOps.readParquet(spark, s"$path/postings").filter(col("batch") > marker).isEmpty &&
         !posOrphaned)
       return // nothing orphaned — the append either completed or never started
     docBucketsOf(spark, path) match {
@@ -558,13 +559,13 @@ object Indexer {
         rewriteBucketedStoreTable(spark, path, "doc_stats",
           ds.filter(col("batch") <= marker), db, partitioned = false)
         rewriteBucketedStoreTable(spark, path, "postings",
-          spark.read.parquet(s"$path/postings").filter(col("batch") <= marker),
+          graft.FsOps.readParquet(spark, s"$path/postings").filter(col("batch") <= marker),
           db, partitioned = true)
       case None =>
         ds.filter(col("batch") <= marker)
           .write.mode("overwrite").parquet(s"$path/doc_stats_tmp")
         val nb = storedBuckets(spark, path).getOrElse(64)
-        spark.read.parquet(s"$path/postings").filter(col("batch") <= marker)
+        graft.FsOps.readParquet(spark, s"$path/postings").filter(col("batch") <= marker)
           .repartition(nb, col("term_bucket"))
           .write.mode("overwrite").partitionBy("term_bucket")
           .parquet(s"$path/postings_tmp")
@@ -603,7 +604,7 @@ object Indexer {
     * store whose meta predates the mergeable `length_sum` layout). */
   private def mergeDerived(spark: org.apache.spark.sql.SparkSession, path: String,
                            delta: InvertedIndex): Unit = {
-    val storedMeta = spark.read.parquet(derivedTablePath(spark, path, "meta"))
+    val storedMeta = graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "meta"))
     if (!storedMeta.columns.contains("length_sum")) {
       refreshDerived(spark, path); return
     }
@@ -615,7 +616,7 @@ object Indexer {
     // the two staged tables derive from independent inputs — overlap
     // them (guide §2.6); the frame still commits only after both landed
     graft.operators.Par.run(
-      () => spark.read.parquet(derivedTablePath(spark, path, "vocab"))
+      () => graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "vocab"))
         .select("term", "df")
         .unionByName(vocab(delta.postings))
         .groupBy("term").agg(sum(col("df")).as("df"))
@@ -684,7 +685,7 @@ object Indexer {
     * (consistent) or "never flipped" (rebuild). */
   private def healDerivedIfStale(spark: org.apache.spark.sql.SparkSession,
                                  path: String): Unit = {
-    val stored = spark.read.parquet(derivedTablePath(spark, path, "meta"))
+    val stored = graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "meta"))
       .select(col("total_docs")).as[Long](
         org.apache.spark.sql.Encoders.scalaLong).head()
     if (stored != readIndexLive(spark, path).docStats.count())
@@ -766,7 +767,7 @@ object Indexer {
     // already have; delete batches are small by contract)
     val newDead = minusDeletes(spark, path,
       ids.select(col(idCol).as("doc_id")).distinct()
-        .join(spark.read.parquet(s"$path/doc_stats").select("doc_id"),
+        .join(graft.FsOps.readParquet(spark, s"$path/doc_stats").select("doc_id"),
           Seq("doc_id"), "left_semi")).persist()
     if (newDead.isEmpty) {
       newDead.unpersist()
@@ -783,7 +784,7 @@ object Indexer {
       healDerivedIfStale(spark, path)
       return
     }
-    val storedMeta = spark.read.parquet(derivedTablePath(spark, path, "meta"))
+    val storedMeta = graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "meta"))
     if (!storedMeta.columns.contains("length_sum")) {
       // store predates the mergeable meta layout: tombstone + full recompute
       newDead.write.mode("append").parquet(s"$path/deletes")
@@ -802,17 +803,17 @@ object Indexer {
     // the staged vocab decrement (postings pass) and meta decrement
     // (doc_stats pass) read different tables — overlap them (guide §2.6)
     graft.operators.Par.run(
-      () => spark.read.parquet(s"$path/postings").select("term", "doc_id")
+      () => graft.FsOps.readParquet(spark, s"$path/postings").select("term", "doc_id")
         .join(newDead, Seq("doc_id"), "left_semi")
         .groupBy("term").agg(count(lit(1)).as("dead_df"))
-        .join(spark.read.parquet(derivedTablePath(spark, path, "vocab"))
+        .join(graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "vocab"))
           .select("term", "df"), Seq("term"), "right_outer")
         .select(col("term"),
           (col("df") - coalesce(col("dead_df"), lit(0L))).as("df"))
         .filter(col("df") > 0) // a term with no live doc left drops, like a fresh build
         .write.mode("overwrite").parquet(stage.stageDir("vocab")),
       () => {
-        val deadStats = spark.read.parquet(s"$path/doc_stats")
+        val deadStats = graft.FsOps.readParquet(spark, s"$path/doc_stats")
           .join(newDead, Seq("doc_id"), "left_semi")
           .agg(count(lit(1)).as("d_n"),
             coalesce(sum(col("length")).cast("long"), lit(0L)).as("d_sum"))
@@ -926,8 +927,9 @@ object Indexer {
   // through the catalog, so the store records its layout in the
   // `_docbuckets` marker and readers (re-)register the catalog entries
   // idempotently — a fresh session reads the same files with the same
-  // zero-shuffle join, and a plain `spark.read.parquet` of the files
-  // stays valid for every path-based maintenance read (fsck, audits).
+  // zero-shuffle join, and a plain parquet read of the files
+  // (`FsOps.readParquet`) stays valid for every path-based maintenance
+  // read (fsck, audits).
 
   /** Marker recording the doc-bucket count of a doc-bucketed store. */
   val DocBucketsMarker = "_docbuckets"
@@ -1035,7 +1037,7 @@ object Indexer {
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
       // data-column DDL inferred from the files themselves (title is
       // optional; future columns survive re-registration unchanged)
-      val fileSchema = spark.read.parquet(s"$path/$table").schema
+      val fileSchema = graft.FsOps.readParquet(spark, s"$path/$table").schema
       val dataCols = fileSchema.filterNot(_.name == "term_bucket")
         .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
       val cols = if (partitioned) s"$dataCols, `term_bucket` BIGINT" else dataCols
@@ -1075,7 +1077,7 @@ object Indexer {
         System.err.println(s"[graft] $path/$table: doc-bucketed catalog " +
           s"registration failed (${e.getMessage}) — reading unbucketed " +
           "(correct, but the doc_id join pays its exchange again)")
-        spark.read.parquet(s"$path/$table")
+        graft.FsOps.readParquet(spark, s"$path/$table")
     }
 
   /** Small-file compaction for a DOC-BUCKETED store — the layout-aware
@@ -1194,7 +1196,7 @@ object Indexer {
     val del = new org.apache.hadoop.fs.Path(s"$path/deletes")
     val fs = del.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(del)) table
-    else table.join(spark.read.parquet(s"$path/deletes"), Seq("doc_id"), "left_anti")
+    else table.join(graft.FsOps.readParquet(spark, s"$path/deletes"), Seq("doc_id"), "left_anti")
   }
 
   /** Driver-side twin of [[termBucket]] for building pruning literals. */
@@ -1346,9 +1348,9 @@ object Indexer {
     // disk past executor memory — at audit scale the win is scans
     // saved, not residency)
     val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = graft.FsOps.readParquet(spark, s"$path/postings")
       .select("term", "doc_id", "tf", "term_bucket").persist(storage)
-    val docIds = spark.read.parquet(s"$path/doc_stats")
+    val docIds = graft.FsOps.readParquet(spark, s"$path/doc_stats")
       .select("doc_id", "length").persist(storage)
     val nb = storedBuckets(spark, path).getOrElse(nBuckets)
 
@@ -1368,7 +1370,7 @@ object Indexer {
 
     val deletes =
       if (!exists("deletes")) None
-      else Some(spark.read.parquet(s"$path/deletes").select("doc_id")
+      else Some(graft.FsOps.readParquet(spark, s"$path/deletes").select("doc_id")
         .persist(storage))
     // live-view filter over the CACHED tables (readIndexLive would
     // re-scan the store a second time per consumer)
@@ -1390,7 +1392,7 @@ object Indexer {
     val livePostings = minusDel(postings)
 
     val vocabCheck = {
-      val stored = spark.read.parquet(derivedTablePath(spark, path, "vocab"))
+      val stored = graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "vocab"))
         .select(col("term"), col("df").cast("long").as("stored_df"))
       val fresh = vocab(livePostings.select("term", "doc_id", "tf"))
         .select(col("term"), col("df").cast("long").as("live_df"))
@@ -1402,7 +1404,7 @@ object Indexer {
     }
 
     val metaCheck = {
-      val stored = spark.read.parquet(derivedTablePath(spark, path, "meta"))
+      val stored = graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "meta"))
       val fresh = meta(minusDel(docIds))
       val drift =
         if (stored.columns.contains("length_sum"))
@@ -1420,7 +1422,7 @@ object Indexer {
 
     val posCached =
       if (!exists("positional")) None
-      else Some(spark.read.parquet(s"$path/positional")
+      else Some(graft.FsOps.readParquet(spark, s"$path/positional")
         // the malformed flag is computed IN the caching pass so the
         // heavy positions arrays never enter the cache — both positional
         // invariants read this slim projection
@@ -1508,12 +1510,12 @@ object Indexer {
                             sinceBatch: Option[Long] = None): DataFrame = {
     import graft.operators.StoreCheck.{row, emptyRow}
     val since = sinceBatch.orElse(lastAudited(spark, path)).getOrElse(-1L)
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = graft.FsOps.readParquet(spark, s"$path/postings")
     require(postings.columns.contains("batch"),
       s"checkStoreIncremental: store at $path carries no batch ordinals " +
         "(written before batch tracking) — run the full checkStore instead")
     val deltaPost = postings.filter(col("batch") > since)
-    val docStats = spark.read.parquet(s"$path/doc_stats")
+    val docStats = graft.FsOps.readParquet(spark, s"$path/doc_stats")
     val deltaDocs = docStats.filter(col("batch") > since)
     val nb = storedBuckets(spark, path).getOrElse(nBuckets)
 
@@ -1545,7 +1547,7 @@ object Indexer {
       val posPath = new org.apache.hadoop.fs.Path(s"$path/positional")
       val present = posPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .exists(posPath)
-      lazy val pos = spark.read.parquet(s"$path/positional")
+      lazy val pos = graft.FsOps.readParquet(spark, s"$path/positional")
       if (!present || !pos.columns.contains("batch"))
         emptyRow(spark, "delta_positional_matches_postings")
       else {
@@ -1587,7 +1589,10 @@ object Indexer {
   /** Load a persisted index store back as an [[InvertedIndex]]. A
     * doc-bucketed store ([[writeIndex]] with `docBuckets`) serves its big
     * tables through the catalog so the postings ⋈ doc_stats scoring join
-    * plans exchange-free; everything else is identical. */
+    * plans exchange-free; everything else is identical. Every table is
+    * opened through [[graft.FsOps.readParquet]] (schema from one footer,
+    * no Spark job), so loading a store starts no job; the query that
+    * uses it does. */
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): InvertedIndex = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
     val (ds, po) = docBucketsOf(spark, path) match {
@@ -1595,14 +1600,14 @@ object Indexer {
         (bucketedStoreTable(spark, path, "doc_stats", db, partitioned = false),
          bucketedStoreTable(spark, path, "postings", db, partitioned = true))
       case None =>
-        (spark.read.parquet(s"$path/doc_stats"),
-         spark.read.parquet(s"$path/postings"))
+        (graft.FsOps.readParquet(spark, s"$path/doc_stats"),
+         graft.FsOps.readParquet(spark, s"$path/postings"))
     }
     InvertedIndex(
       docStats = ds,
       postings = po,
-      vocab = spark.read.parquet(derivedTablePath(spark, path, "vocab")),
-      meta = spark.read.parquet(derivedTablePath(spark, path, "meta")))
+      vocab = graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "vocab")),
+      meta = graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "meta")))
   }
 
   /** The positional table of a store, routed like [[readIndex]]'s big
@@ -1617,7 +1622,7 @@ object Indexer {
     positionalDocBucketsOf(spark, path) match {
       case Some(db) => bucketedStoreTable(spark, path, "positional", db,
         partitioned = true)
-      case None => spark.read.parquet(s"$path/positional")
+      case None => graft.FsOps.readParquet(spark, s"$path/positional")
     }
 
   /** LIVE view of a store: [[readIndex]] minus tombstoned documents

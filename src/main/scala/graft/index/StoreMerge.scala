@@ -120,7 +120,7 @@ object StoreMerge {
           "store's incremental audits need per-file batch provenance"))
     }
     sources.foreach { s =>
-      require(spark.read.parquet(Indexer.derivedTablePath(spark, s, "meta"))
+      require(graft.FsOps.readParquet(spark, Indexer.derivedTablePath(spark, s, "meta"))
           .columns.contains("length_sum"),
         s"$s predates the mergeable meta layout (no length_sum partial)")
     } // meta is never transferred, so this read survives a resume
@@ -153,11 +153,11 @@ object StoreMerge {
     // the two derived merges read different source tables and write
     // disjoint dest dirs — overlap them (guide §2.6)
     graft.operators.Par.run(
-      () => sources.map(s => spark.read.parquet(
+      () => sources.map(s => graft.FsOps.readParquet(spark, 
           Indexer.derivedTablePath(spark, s, "vocab"))).reduce(_ unionByName _)
         .groupBy("term").agg(sum(col("df")).as("df"))
         .write.mode("overwrite").parquet(s"$dest/vocab"),
-      () => sources.map(s => spark.read.parquet(
+      () => sources.map(s => graft.FsOps.readParquet(spark, 
           Indexer.derivedTablePath(spark, s, "meta"))).reduce(_ unionByName _)
         .agg(coalesce(sum(col("total_docs")), lit(0L)).as("total_docs"),
           coalesce(sum(col("length_sum")), lit(0L)).as("length_sum"))

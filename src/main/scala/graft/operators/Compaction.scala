@@ -86,7 +86,7 @@ object Compaction {
           .contains(listingFingerprint(dataFiles.toSeq, rangeBy, target)))
       return CompactionStats(dataFiles.length, dataFiles.length, totalBytes, target)
 
-    val df = spark.read.parquet(path)
+    val df = graft.FsOps.readParquet(spark, path)
     val sized =
       if (rangeBy.nonEmpty) {
         val cols = rangeBy.map(org.apache.spark.sql.functions.col)

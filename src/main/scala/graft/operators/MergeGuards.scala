@@ -25,7 +25,7 @@ object MergeGuards {
     * ≤ 3-id driver sample in the error). */
   def requireDisjointIds(spark: SparkSession, dirs: Seq[String],
                          idCol: String): Unit = {
-    val overlap = dirs.map(d => spark.read.parquet(d).select(idCol))
+    val overlap = dirs.map(d => graft.FsOps.readParquet(spark, d).select(idCol))
       .reduce(_ union _)
       .groupBy(idCol).agg(count(lit(1)).as("n")).filter(col("n") > 1)
       .limit(3).collect()
@@ -46,7 +46,7 @@ object MergeGuards {
     * `<store>/<table>` children). */
   def requireSchemaParityDirs(spark: SparkSession, dirs: Seq[String],
                               table: String): Unit = {
-    val schemas = dirs.map(d => spark.read.parquet(d).schema)
+    val schemas = dirs.map(d => graft.FsOps.readParquet(spark, d).schema)
     require(schemas.distinct.size == 1,
       s"sources disagree on the $table schema: " +
         s"${schemas.distinct.mkString(" vs ")}")

@@ -26,8 +26,10 @@ package graft.operators
   *
   * Only for actions with NO data or ordering dependence (different
   * store tables/paths, disjoint outputs). Failures propagate: the first
-  * failure is rethrown after every action has finished (no half-running
-  * action is left behind to race a caller's recovery logic).
+  * failure is rethrown after every action has finished, and an
+  * interrupted caller returns only after every action has exited (no
+  * half-running action is left behind to race a caller's recovery
+  * logic).
   */
 object Par {
 
@@ -42,7 +44,9 @@ object Par {
   /** Map `items` through `f` concurrently (bounded by [[width]]),
     * preserving input order in the result. Serial when given 0 or 1
     * items (no pool spun up). Every item finishes before the first
-    * failure is rethrown. */
+    * failure is rethrown. A caller interrupted while waiting cancels the
+    * pending items, interrupts the running ones and waits for them to
+    * exit before the InterruptedException is rethrown. */
   def map[A, B](items: Seq[A])(f: A => B): Seq[B] = {
     if (items.size <= 1) return items.map(f)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -59,6 +63,13 @@ object Par {
           case e: java.util.concurrent.ExecutionException =>
             if (firstFailure.isEmpty) firstFailure = Some(e.getCause)
             None
+          case e: InterruptedException =>
+            futures.foreach(_.cancel(true))
+            pool.shutdownNow()
+            while (!pool.isTerminated)
+              try pool.awaitTermination(1, java.util.concurrent.TimeUnit.SECONDS)
+              catch { case _: InterruptedException => }
+            throw e
         }
       }
       firstFailure.foreach(throw _)

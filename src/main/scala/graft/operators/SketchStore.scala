@@ -51,7 +51,7 @@ object SketchStore {
   def mergedEstimate(spark: SparkSession, path: String, k: Int,
                      bucketPred: Column = lit(true)): DataFrame = {
     val kmv = udaf(new KMinValues(k), Encoders.scalaLong)
-    spark.read.parquet(path)
+    graft.FsOps.readParquet(spark, path)
       .filter(bucketPred)
       .select(col("grp"), col("bucket"), explode(col("sketch")).as("h"))
       .groupBy("grp")

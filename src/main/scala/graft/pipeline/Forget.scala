@@ -166,7 +166,7 @@ object Forget {
                                fams: Seq[String]): Unit = {
     val dir = s"${manifestRoot(root)}/m=$n"
     val fs = fsOf(spark, root)
-    val ids = spark.read.parquet(s"$dir/ids")
+    val ids = graft.FsOps.readParquet(spark, s"$dir/ids")
     // the families are independent stores at disjoint paths — overlap
     // their cascades (guide §2.6). Crash semantics are unchanged: each
     // family's done marker still lands only after ITS apply, and the
@@ -280,7 +280,7 @@ object Forget {
     case "dedup" =>
       // frame-resolved: a removeDocs-installed store's sets live under a
       // generation dir, not the legacy root (tablePath handles both)
-      spark.read.parquet(graft.dedup.DedupStore.tablePath(
+      graft.FsOps.readParquet(spark, graft.dedup.DedupStore.tablePath(
         spark, familyPath(root, "dedup"), "sets")).select("doc_id")
     case "ivf" =>
       graft.similarity.IvfStore.liveVectorIds(spark, familyPath(root, "ivf"))
@@ -372,7 +372,7 @@ object Forget {
       val dirs = ms.collect { case (n, fs, true) if fs.contains(family) =>
         s"${manifestRoot(root)}/m=$n/ids" }
       if (dirs.isEmpty) None
-      else Some(spark.read.parquet(dirs: _*).select("doc_id").distinct())
+      else Some(graft.FsOps.readParquet(spark, dirs: _*).select("doc_id").distinct())
     }
     // the index family's forgotten frame is consumed twice (its own
     // absent row + the positional row below): same compute-once

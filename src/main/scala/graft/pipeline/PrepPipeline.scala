@@ -185,6 +185,6 @@ object PrepPipeline {
       df.select("doc_id").write.mode("overwrite").parquet(p)
       graft.FsOps.writeMarker(spark, p, "_fingerprint", fingerprint)
     }
-    corpus.join(spark.read.parquet(p), Seq("doc_id"))
+    corpus.join(graft.FsOps.readParquet(spark, p), Seq("doc_id"))
   }
 }

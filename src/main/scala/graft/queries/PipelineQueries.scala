@@ -124,7 +124,7 @@ object PipelineQueries extends QueryGroup {
       // this is the legacy root dir) so the fixture keeps forging the
       // same drift on any layout
       val setsDir = DedupStore.tablePath(s, path, "sets")
-      s.read.parquet(setsDir).filter(col("doc_id") % 4 =!= 0)
+      graft.FsOps.readParquet(s, setsDir).filter(col("doc_id") % 4 =!= 0)
         .write.mode("overwrite").parquet(s"$path/sets_tmp")
       graft.FsOps.atomicSwap(fs,
         new org.apache.hadoop.fs.Path(setsDir),
@@ -134,7 +134,7 @@ object PipelineQueries extends QueryGroup {
           col("checked"), col("violations"))
         .write.mode("overwrite").parquet(s"$path/detect_report")
       DedupStore.refreshBuckets(s, path)
-      s.read.parquet(s"$path/detect_report").unionByName(
+      graft.FsOps.readParquet(s, s"$path/detect_report").unionByName(
         DedupStore.checkStore(s, path)
           .select(lit("1_repaired").as("phase"), col("invariant"),
             col("checked"), col("violations")))
@@ -179,13 +179,13 @@ object PipelineQueries extends QueryGroup {
           .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text")))
       val path = QueryGroup.scratchDir("graft-dedupadvise")
       DedupStore.writeSignatures(planted, path)
-      val before = s.read.parquet(DedupStore.tablePath(s, path, "sets"))
+      val before = graft.FsOps.readParquet(s, DedupStore.tablePath(s, path, "sets"))
         .select("doc_id")
       require(DedupStore.adviseBucketSkew(s, path, maxBucketDocs = 1)
         .collect()(0).getAs[Long]("violations") > 0L,
         "planted duplicate mass must trip the bucket-skew advisor")
       DedupStore.dedupHotBuckets(s, path, minJaccard = 1.0, maxBucketDocs = 1)
-      val after = s.read.parquet(DedupStore.tablePath(s, path, "sets"))
+      val after = graft.FsOps.readParquet(s, DedupStore.tablePath(s, path, "sets"))
         .select(col("doc_id").as("kept_id"))
       before.join(after, col("doc_id") === col("kept_id"), "left")
         .select(col("doc_id"),
@@ -784,7 +784,7 @@ object PipelineQueries extends QueryGroup {
       val e = emb(s, dir)
       val path = QueryGroup.scratchDir("graft-ivfrepair")
       IvfStore.writeIndex(e, path, kmeansIters = 0)
-      val lists = s.read.parquet(s"$path/lists")
+      val lists = graft.FsOps.readParquet(s, s"$path/lists")
       lists.filter(col("vec_id") % 10 === 0)
         .withColumn("cid", (col("cid") % 16) + 1)
         .select(lists.columns.map(col).toSeq: _*)
@@ -794,7 +794,7 @@ object PipelineQueries extends QueryGroup {
           col("checked"), col("violations"))
         .write.mode("overwrite").parquet(s"$path/detect_report")
       IvfStore.repairLists(s, path)
-      s.read.parquet(s"$path/detect_report").unionByName(
+      graft.FsOps.readParquet(s, s"$path/detect_report").unionByName(
         IvfStore.checkStore(s, path)
           .select(lit("1_repaired").as("phase"), col("invariant"),
             col("checked"), col("violations")))
@@ -862,7 +862,7 @@ object PipelineQueries extends QueryGroup {
       graft.similarity.IvfStore.writeCentroids(e, path, kmeansIters = 0)
       val src = graft.streaming.StreamRuntime.tableStreamSource(s, dir, "embeddings")
       val q = graft.similarity.IvfStore.writeIngesting(
-        s.readStream.schema(s.read.parquet(src).schema).parquet(src),
+        s.readStream.schema(graft.FsOps.readParquet(s, src).schema).parquet(src),
         path, s"$path/_ckpt")
       q.awaitTermination()
       graft.similarity.IvfStore.searchStore(s, path,
@@ -969,7 +969,7 @@ object PipelineQueries extends QueryGroup {
         .write.mode("overwrite").parquet(path)
       val delta = graft.pipeline.IncrementalAgg.partial(
         d.filter(col("doc_id") % 3 === 0), Seq("lang", "source"), "n_chars")
-      graft.pipeline.IncrementalAgg.merge(s.read.parquet(path), delta,
+      graft.pipeline.IncrementalAgg.merge(graft.FsOps.readParquet(s, path), delta,
         Seq("lang", "source"))
     }),
 
@@ -987,7 +987,7 @@ object PipelineQueries extends QueryGroup {
           concat(lit("updated:"), col("lang")).as("source"), col("n_chars"),
           when(col("doc_id") % 11 === 0, "d").otherwise("u").as("_op"))
       graft.streaming.UpsertSink.applyChangelog(s, path, changelog, Seq("doc_id"))
-      s.read.parquet(path)
+      graft.FsOps.readParquet(s, path)
     }),
 
     // array / higher-order function surface over the token arrays
@@ -1435,7 +1435,7 @@ object PipelineQueries extends QueryGroup {
       val ck = new org.apache.hadoop.fs.Path(s"$path/checkpoint/v=3")
       val fs = ck.getFileSystem(s.sparkContext.hadoopConfiguration)
       val bad = new org.apache.hadoop.fs.Path(s"$path/checkpoint/_v=3.bad_tmp")
-      s.read.parquet(ck.toString).filter(col("doc_id") % 9 =!= 4)
+      graft.FsOps.readParquet(s, ck.toString).filter(col("doc_id") % 9 =!= 4)
         .write.mode("overwrite").parquet(bad.toString)
       graft.FsOps.atomicSwap(fs, ck, bad)
       VersionedStore.checkStore(s, path, Seq("doc_id"))
@@ -1443,7 +1443,7 @@ object PipelineQueries extends QueryGroup {
           col("checked"), col("violations"))
         .write.mode("overwrite").parquet(s"$path/detect_report")
       VersionedStore.repairCheckpoint(s, path, Seq("doc_id"))
-      s.read.parquet(s"$path/detect_report").unionByName(
+      graft.FsOps.readParquet(s, s"$path/detect_report").unionByName(
         VersionedStore.checkStore(s, path, Seq("doc_id"))
           .select(lit("1_repaired").as("phase"), col("invariant"),
             col("checked"), col("violations")))

@@ -621,7 +621,7 @@ object RelationalQueries extends QueryGroup {
       val path = QueryGroup.scratchDir("graft-zscan")
       graft.operators.ZOrder.writeZOrdered(t(s, dir, "lineitem"), path,
         "l_orderkey", "l_partkey", nFiles = 16)
-      s.read.parquet(path)
+      graft.FsOps.readParquet(s, path)
         .filter(col("l_orderkey").between(ZBox._1, ZBox._2) &&
                 col("l_partkey").between(ZBox._3, ZBox._4))
         .select("l_orderkey", "l_partkey", "l_linenumber", "l_quantity")

@@ -157,7 +157,7 @@ object SearchQueries extends QueryGroup {
       val stats = graft.operators.Compaction.compact(s, path)
       require(stats.filesAfter < stats.filesBefore,
         s"compaction did not reduce file count: $stats")
-      s.read.parquet(path)
+      graft.FsOps.readParquet(s, path)
     }),
 
     // S-series: the DataSource V2 connector (format("graft-tsv")) on the
@@ -488,7 +488,7 @@ object SearchQueries extends QueryGroup {
           col("checked"), col("violations"))
         .write.mode("overwrite").parquet(s"$path/detect_report")
       Indexer.refreshDerived(s, path)
-      s.read.parquet(s"$path/detect_report").unionByName(
+      graft.FsOps.readParquet(s, s"$path/detect_report").unionByName(
         Indexer.checkStore(s, path)
           .select(lit("1_repaired").as("phase"), col("invariant"),
             col("checked"), col("violations")))

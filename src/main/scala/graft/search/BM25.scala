@@ -28,6 +28,12 @@ import graft.index.Indexer.InvertedIndex
   * top-k plans as `TakeOrderedAndProject` (per-partition heaps, driver
   * merges k rows — the same algorithm as the reference's `takeOrdered`,
   * `query.py:92`, but on codegen'd rows).
+  *
+  * A store query ([[searchStore]]) is bound by orchestration, not data:
+  * its cost is the number of Spark jobs it starts. Opening the store
+  * starts none — every table's schema comes from one parquet footer read
+  * on the driver ([[graft.FsOps.readParquet]]), tombstones included — so
+  * each job belongs to the query's own execution.
   */
 object BM25 {
 

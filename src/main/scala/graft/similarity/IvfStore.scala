@@ -59,7 +59,7 @@ object IvfStore {
       .write.mode("overwrite").parquet(dirs("centroids"))
     // assign against the JUST-PERSISTED centroids (derive-from-persisted
     // rule — and the exact same centroid values the query path will read)
-    val cents = broadcast(spark.read.parquet(dirs("centroids")))
+    val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
     Similarity.assignToCentroids(
         corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
         cents, "vec_id", "v", keep = 1)
@@ -89,7 +89,7 @@ object IvfStore {
     val dirs = tableDirs(spark, path)
     Similarity.kmeansCentroids(corpus, nCentroids, kmeansIters, idCol, vecCol)
       .write.mode("overwrite").parquet(dirs("centroids"))
-    val cents = broadcast(spark.read.parquet(dirs("centroids")))
+    val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
     val assigned = Similarity.assignToCentroids(
       corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
       cents, "vec_id", "v", keep = 1)
@@ -114,7 +114,7 @@ object IvfStore {
                            idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
     val dirs = tableDirs(spark, path)
-    val cents = broadcast(spark.read.parquet(dirs("centroids")))
+    val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
     val q = Similarity.assignToCentroids(
         queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
         cents, "query_id", "qv", keep = nProbe)
@@ -124,7 +124,7 @@ object IvfStore {
     // only per-pair arithmetic. Scoring uses the declarative fold (same
     // left-to-right double accumulation as the codegen dotF, which is
     // float-array-only).
-    val lists = spark.read.parquet(dirs("lists"))
+    val lists = graft.FsOps.readParquet(spark, dirs("lists"))
       .filter(col("cid").isin(probed: _*))
       .withColumn("v", transform(col("qvec"),
         x => round(x.cast("double") * col("scale"), 6)))
@@ -207,7 +207,7 @@ object IvfStore {
       if (kids.nonEmpty) {
         // one footer read (metadata): the store's layers must stay
         // uniformly raw or uniformly quantized
-        val hasQ = spark.read.parquet(dirs("lists")).columns.contains("qvec")
+        val hasQ = graft.FsOps.readParquet(spark, dirs("lists")).columns.contains("qvec")
         require(hasQ == quantize,
           s"appendBatch: store at $path holds " +
             s"${if (hasQ) "QUANTIZED" else "RAW"} lists but the batch would " +
@@ -224,7 +224,7 @@ object IvfStore {
           "never re-inspect; ingest with fresh ordinals from " +
           "listBatches(path).last + 1")
     }
-    val cents = broadcast(spark.read.parquet(dirs("centroids")))
+    val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
     val assignedRaw = Similarity.assignToCentroids(
       batch.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
       cents, "vec_id", "v", keep = 1)
@@ -304,7 +304,7 @@ object IvfStore {
     // trivially fresh; the no-op contract covers it (not a parquet error)
     if (!fs.exists(listsP)) return
     val snap = snapshotFrame(spark, dirs)
-    val lists = pinToSnapshot(spark.read.parquet(dirs("lists")), snap)
+    val lists = pinToSnapshot(graft.FsOps.readParquet(spark, dirs("lists")), snap)
     if (lists.columns.contains("batch")) {
       // frame install: the flattened lists stage as a new generation,
       // centroids and tombstones carry by reference (flatten must never
@@ -378,7 +378,7 @@ object IvfStore {
     val dirs = tableDirs(spark, path)
     if (!dirExists(spark, dirs("deletes"))) return
     val snap = snapshotFrame(spark, dirs)
-    val lists = pinToSnapshot(spark.read.parquet(dirs("lists")), snap)
+    val lists = pinToSnapshot(graft.FsOps.readParquet(spark, dirs("lists")), snap)
     val partCols = if (lists.columns.contains("batch")) Seq("batch", "cid") else Seq("cid")
     val stage = graft.operators.Frames.begin(spark, path, Tables)
     liveLists(spark, dirs("deletes"), lists)
@@ -427,7 +427,7 @@ object IvfStore {
     graft.FsOps.requireNotHusk(spark, path)
     val dirs = tableDirs(spark, path)
     val snap = snapshotFrame(spark, dirs)
-    val lists = pinToSnapshot(spark.read.parquet(dirs("lists")), snap)
+    val lists = pinToSnapshot(graft.FsOps.readParquet(spark, dirs("lists")), snap)
     val quantized = lists.columns.contains("qvec")
     val partCols = if (lists.columns.contains("batch")) Seq("batch", "cid") else Seq("cid")
     // total order: cid, batch (if present), payload hash — same-cid
@@ -448,7 +448,7 @@ object IvfStore {
           .withColumn("nv", sqrt(Similarity.dot(col("__rv"), col("__rv"))))
           .drop("__rv")
       else {
-        val cents = broadcast(spark.read.parquet(dirs("centroids")))
+        val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
         // merged stores reassign WITHIN each row's cid group (the merge
         // contract — see mergeStores): a union-wide reassign here would
         // "repair" every healthy shard-local assignment into a full
@@ -730,12 +730,12 @@ object IvfStore {
       }
     val delta = (batchDirsOf(fs, cur("lists")) -- snap.batches).toSeq.sorted
     if (delta.nonEmpty) {
-      val rows = spark.read.parquet(cur("lists"))
+      val rows = graft.FsOps.readParquet(spark, cur("lists"))
         .filter(col("batch").isin(delta: _*))
       val homed =
         if (!reassign) rows
         else {
-          val cents = broadcast(spark.read.parquet(stage.dir("centroids")))
+          val cents = broadcast(graft.FsOps.readParquet(spark, stage.dir("centroids")))
           val keyed = rows.withColumn("__v",
             if (rows.columns.contains("qvec"))
               transform(col("qvec"),
@@ -950,9 +950,9 @@ object IvfStore {
   def checkStore(spark: SparkSession, path: String): DataFrame = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
     val dirs = tableDirs(spark, path)
-    val lists = spark.read.parquet(dirs("lists"))
+    val lists = graft.FsOps.readParquet(spark, dirs("lists"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = broadcast(spark.read.parquet(dirs("centroids")))
+    val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
     val quantized = lists.columns.contains("qvec")
     import graft.operators.StoreCheck.{row, emptyRow => emptyRowIn}
     def emptyRow(name: String): DataFrame = emptyRowIn(spark, name)
@@ -1204,13 +1204,13 @@ object IvfStore {
     import graft.operators.StoreCheck.{row, emptyRow => emptyRowIn}
     def emptyRow(name: String): DataFrame = emptyRowIn(spark, name)
     val dirs = tableDirs(spark, path)
-    val lists = spark.read.parquet(dirs("lists"))
+    val lists = graft.FsOps.readParquet(spark, dirs("lists"))
     require(lists.columns.contains("batch"),
       s"checkStoreIncremental: store at $path has no batch= layout " +
         "(batch build) — run the full checkStore instead")
     val since = sinceBatch.orElse(lastAudited(spark, path)).getOrElse(-1L)
     val delta = lists.filter(col("batch") > since)
-    val cents = broadcast(spark.read.parquet(dirs("centroids")))
+    val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
     val quantized = lists.columns.contains("qvec")
 
     val unique = {
@@ -1378,7 +1378,7 @@ object IvfStore {
     graft.FsOps.recordMergeSources(spark, dest, sources)
 
     // cid offsets: shard i's cids shift past the cumulative max
-    val centFrames = srcs.map(sd => spark.read.parquet(sd("centroids")))
+    val centFrames = srcs.map(sd => graft.FsOps.readParquet(spark, sd("centroids")))
     val maxCids = centFrames.map(_.agg(max(col("cid"))).collect()(0).getInt(0))
     val offsets = maxCids.scanLeft(0)(_ + _).init
 
@@ -1520,7 +1520,7 @@ object IvfStore {
     graft.FsOps.requireNotHusk(spark, path)
     val dirs = tableDirs(spark, path)
     val snap = snapshotFrame(spark, dirs)
-    val listsRaw = pinToSnapshot(spark.read.parquet(dirs("lists")), snap)
+    val listsRaw = pinToSnapshot(graft.FsOps.readParquet(spark, dirs("lists")), snap)
     val quantized = listsRaw.columns.contains("qvec")
     val partCols = if (listsRaw.columns.contains("batch")) Seq("batch", "cid") else Seq("cid")
     val live = liveLists(spark, dirs("deletes"), listsRaw).withColumn("__v",
@@ -1541,7 +1541,7 @@ object IvfStore {
       .coalesce(1).write.mode("overwrite").parquet(stage.stageDir("centroids"))
     // assign against the JUST-PERSISTED staged centroids
     // (derive-from-persisted rule)
-    val cents = broadcast(spark.read.parquet(stage.dir("centroids")))
+    val cents = broadcast(graft.FsOps.readParquet(spark, stage.dir("centroids")))
     val reassigned = Similarity.assignToCentroids(
         live.select(col("vec_id"), col("__v")), cents, "vec_id", "__v", keep = 1)
       .select(col("vec_id"), col("cid"))
@@ -1581,7 +1581,7 @@ object IvfStore {
   def liveVectorIds(spark: SparkSession, path: String): DataFrame = {
     val dirs = tableDirs(spark, path)
     liveLists(spark, dirs("deletes"),
-      spark.read.parquet(dirs("lists")).select("vec_id")).distinct()
+      graft.FsOps.readParquet(spark, dirs("lists")).select("vec_id")).distinct()
   }
 
   /** `lists` minus the tombstones in `deletesDir` — the current frame's
@@ -1590,14 +1590,14 @@ object IvfStore {
   private def liveLists(spark: SparkSession, deletesDir: String,
                         lists: DataFrame): DataFrame =
     if (!dirExists(spark, deletesDir)) lists
-    else lists.join(spark.read.parquet(deletesDir), Seq("vec_id"), "left_anti")
+    else lists.join(graft.FsOps.readParquet(spark, deletesDir), Seq("vec_id"), "left_anti")
 
   def searchStore(spark: SparkSession, path: String, queries: DataFrame, k: Int,
                   nProbe: Int = 4,
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
     val dirs = tableDirs(spark, path)
-    val cents = broadcast(spark.read.parquet(dirs("centroids")))
+    val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
     val q = Similarity.assignToCentroids(
         queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
         cents, "query_id", "qv", keep = nProbe)
@@ -1605,7 +1605,7 @@ object IvfStore {
     // probed cids: bounded by nCentroids — a driver-side IN-list literal
     // is what turns into a static PartitionFilter on the lists scan
     val probed = q.select("cid").distinct().collect().map(_.getInt(0)).toSeq
-    val lists = spark.read.parquet(dirs("lists"))
+    val lists = graft.FsOps.readParquet(spark, dirs("lists"))
       .filter(col("cid").isin(probed: _*))
     // tombstone anti-join applies AFTER the pruned scan (deletes table
     // broadcastable; partition pruning unaffected)

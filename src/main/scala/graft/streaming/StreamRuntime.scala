@@ -54,12 +54,15 @@ object StreamRuntime {
     * streaming runtimes measured SLOWER at 32 cores than at 8
     * (PERF_r19 scaling 0.33–0.51). One partition per ~32 MB of source,
     * clamped to [1, session width]: tiny fixtures collapse to a few
-    * state partitions, large inputs keep the session's width. The conf
-    * is restored after the (single-owner, bounded AvailableNow) run.
-    * Results are unaffected — partition count never changes what a
-    * stateful aggregate computes, only how wide it shuffles. */
+    * state partitions, large inputs keep the session's width. A
+    * narrowed run gets its own `spark.newSession()` carrying the
+    * caller's SQL conf with only the width changed, and `body` builds
+    * the stream on that session: the caller's session conf is never
+    * written, so concurrent work on it keeps its width. Results are
+    * unaffected — partition count never changes what a stateful
+    * aggregate computes, only how wide it shuffles. */
   private def withVolumeShuffleWidth[T](spark: SparkSession, srcDir: String)
-                                       (body: => T): T = {
+                                       (body: SparkSession => T): T = {
     val p = new org.apache.hadoop.fs.Path(srcDir)
     val bytes =
       try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -68,11 +71,14 @@ object StreamRuntime {
     val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val target = math.min(session.toLong,
       math.max(1L, bytes / (32L << 20) + 1L)).toInt
-    if (target >= session) body
+    if (target >= session) body(spark)
     else {
-      spark.conf.set("spark.sql.shuffle.partitions", target)
-      try body
-      finally spark.conf.set("spark.sql.shuffle.partitions", session)
+      val narrowed = spark.newSession()
+      spark.conf.getAll.foreach { case (k, v) =>
+        if (spark.conf.isModifiable(k)) narrowed.conf.set(k, v)
+      }
+      narrowed.conf.set("spark.sql.shuffle.partitions", target)
+      body(narrowed)
     }
   }
 
@@ -85,9 +91,9 @@ object StreamRuntime {
     * a crash-replayed batch overwrites its own version directory. */
   def runCommits(spark: SparkSession, srcDir: String, storePath: String): Unit = {
     val scratch = graft.queries.QueryGroup.scratchDir("graft-cdc-run")
-    val schema = spark.read.parquet(srcDir).schema
-    withVolumeShuffleWidth(spark, srcDir) {
-      val q = spark.readStream.schema(schema)
+    val schema = graft.FsOps.readParquet(spark, srcDir).schema
+    withVolumeShuffleWidth(spark, srcDir) { streamSpark =>
+      val q = streamSpark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(srcDir)
         .writeStream
@@ -107,9 +113,9 @@ object StreamRuntime {
                       transform: DataFrame => DataFrame): DataFrame = {
     val scratch = graft.queries.QueryGroup.scratchDir("graft-stream-run")
     val out = s"$scratch/result"
-    val schema = spark.read.parquet(srcDir).schema
-    withVolumeShuffleWidth(spark, srcDir) {
-      val q = transform(spark.readStream.schema(schema).parquet(srcDir))
+    val schema = graft.FsOps.readParquet(spark, srcDir).schema
+    withVolumeShuffleWidth(spark, srcDir) { streamSpark =>
+      val q = transform(streamSpark.readStream.schema(schema).parquet(srcDir))
         .writeStream
         .outputMode("complete")
         .foreachBatch { (batch: Dataset[Row], _: Long) =>
@@ -120,7 +126,7 @@ object StreamRuntime {
         .start()
       q.awaitTermination()
     }
-    spark.read.parquet(out)
+    graft.FsOps.readParquet(spark, out)
   }
 
   /** Run `transform` in APPEND mode with one micro-batch per source file
@@ -133,9 +139,9 @@ object StreamRuntime {
                             transform: DataFrame => DataFrame): DataFrame = {
     val scratch = graft.queries.QueryGroup.scratchDir("graft-stream-append")
     val out = s"$scratch/result"
-    val schema = spark.read.parquet(srcDir).schema
-    withVolumeShuffleWidth(spark, srcDir) {
-      val q = transform(spark.readStream.schema(schema)
+    val schema = graft.FsOps.readParquet(spark, srcDir).schema
+    withVolumeShuffleWidth(spark, srcDir) { streamSpark =>
+      val q = transform(streamSpark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir))
         .writeStream
         .outputMode("append")
@@ -147,7 +153,7 @@ object StreamRuntime {
         .start()
       q.awaitTermination()
     }
-    spark.read.parquet(out)
+    graft.FsOps.readParquet(spark, out)
   }
 
   /** Drop each frame into `srcDir` as ONE single-file batch, with
@@ -204,7 +210,7 @@ object StreamRuntime {
   def runPrepIngest(spark: SparkSession, srcDir: String, storePath: String,
                     jaccardThreshold: Double, outDir: String): DataFrame = {
     val scratch = graft.queries.QueryGroup.scratchDir("graft-prepingest-run")
-    val schema = spark.read.parquet(srcDir).schema
+    val schema = graft.FsOps.readParquet(spark, srcDir).schema
     // NOT width-derived from srcDir: each batch dedups against the STORE
     // (band-bucket collision joins over stored signatures), so sizing
     // those shuffles from the batch volume would underprovision them —
@@ -223,7 +229,7 @@ object StreamRuntime {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.option("basePath", outDir).parquet(outDir).drop("batch")
+    graft.FsOps.readParquet(spark, Seq(outDir), basePath = Some(outDir)).drop("batch")
   }
 
   /** Checkpoint-scoped marker mapping stream batch ids to store ingest
@@ -260,14 +266,14 @@ object StreamRuntime {
       // alone is not proof — appendIndex writes it first, so a crash
       // between the two writes leaves doc_stats-only rows that would
       // fake an applied batch). Two probe joins, on this rare path only.
-      val docStats = spark.read.parquet(s"$storePath/doc_stats")
+      val docStats = graft.FsOps.readParquet(spark, s"$storePath/doc_stats")
       val absent = batch.select("doc_id").distinct()
         .join(docStats.select("doc_id"), Seq("doc_id"), "left_anti")
       val unposted = batch
         .filter(graft.analyzer.Analyzer.tokenCount(
           org.apache.spark.sql.functions.col("text")) > 0)
         .select("doc_id").distinct()
-        .join(spark.read.parquet(s"$storePath/postings").select("doc_id"),
+        .join(graft.FsOps.readParquet(spark, s"$storePath/postings").select("doc_id"),
           Seq("doc_id"), "left_anti")
       require(absent.isEmpty && unposted.isEmpty,
         s"index ingest stream at $storePath: store batch marker ($last) is " +
@@ -357,14 +363,17 @@ object StreamRuntime {
       graft.FsOps.writeLongMarker(spark, ckpt, StreamBaseMarker, b)
       b
     }
-    val schema = spark.read.parquet(srcDir).schema
-    withVolumeShuffleWidth(spark, srcDir) {
-      val q = spark.readStream.schema(schema)
+    val schema = graft.FsOps.readParquet(spark, srcDir).schema
+    withVolumeShuffleWidth(spark, srcDir) { streamSpark =>
+      val q = streamSpark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(srcDir)
         .writeStream
         .foreachBatch { (batch: Dataset[Row], id: Long) =>
-          indexIngestBatch(batch.sparkSession, storePath, batch.toDF(),
+          // the caller's session: the store-side work of the append (the
+          // vocab-sized mergeDerived) runs at the store's width, only the
+          // batch's own frames at the narrowed one
+          indexIngestBatch(spark, storePath, batch.toDF(),
             base + id, titleCol, nBuckets, docBuckets)
         }
         .option("checkpointLocation", ckpt)
@@ -402,7 +411,7 @@ object StreamRuntime {
         graft.FsOps.writeLongMarker(spark, ckpt, StreamBaseMarker, b)
         b
       }
-    val schema = spark.read.parquet(srcDir).schema
+    val schema = graft.FsOps.readParquet(spark, srcDir).schema
     // NOT width-derived from srcDir: a takedown batch is tiny but its
     // per-batch cascade works over the STORES (the dedup family rewrite
     // is store-sized) — sizing those shuffles from the id-batch volume

@@ -31,7 +31,7 @@ object UpsertSink {
       batch.write.mode("overwrite").parquet(path)
       return
     }
-    val merged = spark.read.parquet(path)
+    val merged = graft.FsOps.readParquet(spark, path)
       .join(batch.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(),
         keys, "left_anti")
       .unionByName(batch)
@@ -64,7 +64,7 @@ object UpsertSink {
       upserts.write.mode("overwrite").parquet(path)
       return
     }
-    val merged = spark.read.parquet(path)
+    val merged = graft.FsOps.readParquet(spark, path)
       .join(batch.select(keys.map(col): _*).distinct(), keys, "left_anti")
       .unionByName(upserts)
     val tmp = new Path(dir.getParent, s"_${dir.getName}.upsert_tmp")
@@ -110,7 +110,7 @@ object UpsertSink {
         // isin literal prunes the store scan to those partition dirs
         val touched = withPart.select("part_bucket").distinct()
           .collect().map(_.getInt(0)).toSeq
-        spark.read.parquet(path)
+        graft.FsOps.readParquet(spark, path)
           .filter(col("part_bucket").isin(touched: _*))
           .join(withPart.select(keys.map(col): _*).distinct(), keys, "left_anti")
           .unionByName(withPart)

@@ -106,11 +106,11 @@ object VersionedStore {
     // basePath keeps the v=<k> dirs as a partition column on the read
     val delta =
       if (deltaVs.isEmpty) None
-      else Some(spark.read.option("basePath", s"$path/log")
-        .parquet(deltaVs.map(v => s"$path/log/v=$v"): _*)
+      else Some(graft.FsOps.readParquet(spark, deltaVs.map(v => s"$path/log/v=$v"),
+          basePath = Some(s"$path/log"))
         .withColumn("__v", col("v").cast("long")).drop("v"))
     val baseDf = base.map { c =>
-      spark.read.parquet(s"$path/checkpoint/v=$c")
+      graft.FsOps.readParquet(spark, s"$path/checkpoint/v=$c")
         .withColumn(OpCol, lit("u")).withColumn("__v", lit(c))
     }
     val all = (baseDf.toSeq ++ delta.toSeq).reduce(_ unionByName _)
@@ -270,7 +270,7 @@ object VersionedStore {
       versions(spark, path).map(v => s"$path/log/v=$v") ++
       listVersions(spark, new Path(path, "checkpoint"))
         .map(v => s"$path/checkpoint/v=$v")
-    dirs.map(d => spark.read.parquet(d).select(keys.map(col): _*))
+    dirs.map(d => graft.FsOps.readParquet(spark, d).select(keys.map(col): _*))
       .reduceOption(_ unionByName _)
       .map(_.distinct())
       .getOrElse(spark.range(0).select(keys.map(k => col("id").as(k)): _*))
@@ -292,7 +292,7 @@ object VersionedStore {
       listVersions(spark, new Path(path, "checkpoint"))
         .map(v => ("checkpoint", v, s"$path/checkpoint/v=$v"))
     dirs.map { case (where, v, dir) =>
-        spark.read.parquet(dir).join(idsK, keys, "left_semi")
+        graft.FsOps.readParquet(spark, dir).join(idsK, keys, "left_semi")
           .agg(count(lit(1)).as("rows"))
           .select(lit(where).as("where"), lit(v).as("version"), col("rows"))
       }
@@ -328,7 +328,7 @@ object VersionedStore {
     val idsK = broadcast(ids.select(keys.map(col): _*).distinct())
     val f = fs(spark, new Path(path))
     def purgeDir(dir: String): Boolean = {
-      val df = spark.read.parquet(dir)
+      val df = graft.FsOps.readParquet(spark, dir)
       val touched = !df.join(idsK, keys, "left_semi").isEmpty
       if (touched) {
         // leading underscore: never parsed as a version by listVersions
@@ -472,8 +472,8 @@ object VersionedStore {
         Seq(graft.operators.StoreCheck.emptyRow(spark, "commit_key_unique"),
           graft.operators.StoreCheck.emptyRow(spark, "op_wellformed"))
       else {
-        val log = spark.read.option("basePath", s"$path/log")
-          .parquet(committed.map(v => s"$path/log/v=$v"): _*)
+        val log = graft.FsOps.readParquet(spark, committed.map(v => s"$path/log/v=$v"),
+          basePath = Some(s"$path/log"))
           .withColumn("__v", col("v").cast("long")).drop("v")
         Seq(
           row("commit_key_unique",
@@ -515,7 +515,7 @@ object VersionedStore {
       val base0 = earlier.lastOption.getOrElse(0L)
       if (!((base0 + 1) to c).forall(committed.contains)) None
       else {
-        val stored = spark.read.parquet(s"$path/checkpoint/v=$c")
+        val stored = graft.FsOps.readParquet(spark, s"$path/checkpoint/v=$c")
         val replay = snapshotUsing(spark, path, c, keys, earlier, committed)
         Some(stored.agg(count(lit(1)).as("checked")).crossJoin(
           diffFrames(stored, replay.select(stored.columns.map(col).toSeq: _*), keys)
@@ -643,8 +643,8 @@ object VersionedStore {
         Seq(emptyRow(spark, "delta_commit_key_unique"),
           emptyRow(spark, "delta_op_wellformed"))
       else {
-        val log = spark.read.option("basePath", s"$path/log")
-          .parquet(deltaVs.map(v => s"$path/log/v=$v"): _*)
+        val log = graft.FsOps.readParquet(spark, deltaVs.map(v => s"$path/log/v=$v"),
+          basePath = Some(s"$path/log"))
           .withColumn("__v", col("v").cast("long")).drop("v")
         Seq(
           row("delta_commit_key_unique",

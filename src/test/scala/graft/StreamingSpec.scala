@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStreams
@@ -412,5 +414,30 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, String)].collect()
     assert(out.length == 20, s"each key exactly once, got ${out.length}")
     assert(out.toSet === (1L to 20L).map(i => (i, s"v$i")).toSet)
+  }
+
+  test("a volume-narrowed stream runs on its own session: the caller's shuffle width never changes") {
+    import graft.streaming.StreamRuntime
+    val key = "spark.sql.shuffle.partitions"
+    val root = graft.queries.QueryGroup.scratchDir("graft-narrow-spec")
+    StreamRuntime.replayDrops(spark, (1L to 20L).map(i => (i, s"v$i")).toDF("k", "s"),
+      s"$root/src", 3)
+    val width = spark.conf.get(key)
+    assert(width.toInt > 1, "the spec needs a session wider than the narrowed run")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var running = true
+    val poller = new Thread(() => while (running) { seen.add(spark.conf.get(key)); Thread.sleep(1) })
+    poller.start()
+    @volatile var streamWidth = ""
+    val out = try StreamRuntime.runAvailableNowAppend(spark, s"$root/src", { df =>
+        streamWidth = df.sparkSession.conf.get(key)
+        df.dropDuplicates("k")
+      }).count()
+    finally { running = false; poller.join() }
+    assert(out == 20)
+    assert(streamWidth == "1", "the stream itself still runs narrowed")
+    assert(!seen.isEmpty)
+    assert(seen.asScala.forall(_ == width),
+      s"caller width changed during the run: ${seen.asScala.toSet}")
   }
 }
