@@ -34,11 +34,6 @@ object FsOps {
     }
   }
 
-  /** Install `tmp` at `live` via rename-aside: readers observe the old or
-    * the new directory, never half of either, and no failure mode deletes
-    * the only remaining copy — every rename's return value is checked,
-    * and the aside copy is only dropped after the install succeeded.
-    */
   /** Consumed-shard husk discipline (VERDICT r13 #4): a move-mode shard
     * merge DRAINS its sources' data files but leaves markers and small
     * tables behind. A later read of such a husk used to die on parquet
@@ -73,7 +68,7 @@ object FsOps {
 
   /** Write a small driver-side text marker at `<path>/<marker>` — the
     * shared bookkeeping primitive behind every store's `_lastbatch` /
-    * `_last_audit` / `_geometry` / `_fingerprint` discipline. Written
+    * audit-watermark / `_geometry` / `_fingerprint` discipline. Written
     * tmp-first and installed via [[atomicSwap]]: a crash mid-write can
     * never leave a TRUNCATED marker behind (a direct create() truncates
     * the old value before the new bytes land, and an empty `_lastbatch`
@@ -119,10 +114,9 @@ object FsOps {
                  marker: String): Option[String] = {
     val p = new Path(s"$path/$marker")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val aside = new Path(p.getParent, s"_${p.getName}.swap_old")
     val target =
       if (fs.exists(p)) Some(p)
-      else if (fs.exists(aside)) Some(aside)
+      else if (fs.exists(asideOf(p))) Some(asideOf(p))
       else None
     target.map { t =>
       val in = fs.open(t)
@@ -319,10 +313,31 @@ object FsOps {
       }
     }
 
+  /** Delete a marker: its `.swap_old` aside first, then the live file —
+    * [[readMarker]] recovers a missing marker from the aside, so a reset
+    * must drop both, and a crash between the two deletes leaves the live
+    * value readable rather than resurrecting the older aside. */
+  def deleteMarker(spark: org.apache.spark.sql.SparkSession, path: String,
+                   marker: String): Unit = {
+    val p = new Path(s"$path/$marker")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(asideOf(p), true)
+    fs.delete(p, true)
+  }
+
+  /** Where [[atomicSwap]] moves `live` aside. Leading underscore: ignored
+    * by Spark's file listing, so an aside copy inside a partitioned table
+    * root is never parsed as a partition. */
+  private def asideOf(live: Path): Path =
+    new Path(live.getParent, s"_${live.getName}.swap_old")
+
+  /** Install `tmp` at `live` via rename-aside: readers observe the old or
+    * the new directory, never half of either, and no failure mode deletes
+    * the only remaining copy — every rename's return value is checked,
+    * and the aside copy is only dropped after the install succeeded.
+    */
   def atomicSwap(fs: FileSystem, live: Path, tmp: Path): Unit = {
-    // leading underscore: ignored by Spark's file listing, so an aside
-    // copy inside a partitioned table root is never parsed as a partition
-    val old = new Path(live.getParent, s"_${live.getName}.swap_old")
+    val old = asideOf(live)
     fs.delete(old, true) // leftover from a previous crashed swap
     val hadLive = fs.exists(live)
     if (hadLive && !fs.rename(live, old))

@@ -108,11 +108,12 @@ object DedupStore {
     }
 
   // ---- ingest-batch bookkeeping (the dedup face of the index store's
-  // `_lastbatch`/`_last_audit` discipline): every sets/buckets row
-  // carries the ingest-batch ordinal that wrote it (constant per parquet
-  // file — an incremental audit's `batch > since` filter skips pre-audit
-  // files via min/max statistics), `_lastbatch` tracks the highest
-  // ordinal written, `_last_audit` the highest one an audit vouched for.
+  // `_lastbatch` discipline): every sets/buckets row carries the
+  // ingest-batch ordinal that wrote it (constant per parquet file — an
+  // incremental audit's `batch > since` filter skips pre-audit files via
+  // min/max statistics), `_lastbatch` tracks the highest ordinal
+  // written, the audit watermark (graft.operators.StoreCheck) the
+  // highest one an audit vouched for.
 
   /** Shingle size the store was built with. Unlike (numHashes, bands)
     * it is INVISIBLE in the table schemas — sets of 3-shingles and
@@ -125,7 +126,6 @@ object DedupStore {
   private val ShingleMarker = "_shingle_n"
 
   private val LastBatchMarker = "_lastbatch"
-  private val LastAuditMarker = "_last_audit"
 
   /** Highest ingest-batch ordinal recorded (None = pre-tracking store). */
   def lastBatch(spark: SparkSession, path: String): Option[Long] =
@@ -133,19 +133,15 @@ object DedupStore {
 
   /** Highest batch an audit has vouched for (None = never audited). */
   def lastAudited(spark: SparkSession, path: String): Option[Long] =
-    graft.FsOps.readLongMarker(spark, path, LastAuditMarker)
+    graft.operators.StoreCheck.lastAudited(spark, path)
 
   /** Record that every batch up to `upTo` (default: the current last)
-    * has been audited. Not advanced by the checkers themselves — an
-    * audit that mutates the store it audits would make a red report
-    * unrepeatable (same contract as the other stores'). */
+    * has been audited. */
   def markAudited(spark: SparkSession, path: String,
-                  upTo: Option[Long] = None): Unit = {
-    val v = upTo.orElse(lastBatch(spark, path)).getOrElse(
-      throw new IllegalStateException(s"markAudited: no batch marker at $path — " +
-        "a pre-batch-tracking store has nothing to scope an incremental audit to"))
-    graft.FsOps.writeLongMarker(spark, path, LastAuditMarker, v)
-  }
+                  upTo: Option[Long] = None): Unit =
+    graft.operators.StoreCheck.markAudited(spark, path, upTo, lastBatch(spark, path),
+      s"no batch marker at $path — a pre-batch-tracking store has nothing " +
+        "to scope an incremental audit to")
 
   /** Build the signature store for an initial corpus. Shingle sets are
     * persisted FIRST and the signatures/buckets derive from the persisted
@@ -524,27 +520,27 @@ object DedupStore {
     // surface AND bucket-recompute checks; buckets feeds three) — the
     // deep audit is priced per pass over the store, so each table
     // materializes once and the eager ≤ 4-row report releases the cache
-    val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sets = graft.FsOps.readParquet(spark, tablePath(spark, path, "sets")).persist(storage)
-    val buckets = graft.FsOps.readParquet(spark, tablePath(spark, path, "buckets"))
-      .persist(storage)
-
-    val unique = row("ids_unique",
-      sets.agg(count(lit(1)).as("checked"),
-          countDistinct(col("doc_id")).as("d"))
-        .select(col("checked"), (col("checked") - col("d")).as("violations")))
-
-    val surface = {
-      val a = sets.select("doc_id").distinct().withColumn("in_sets", lit(1))
-      val b = buckets.select("doc_id").distinct().withColumn("in_buckets", lit(1))
-      row("id_surface_match",
-        a.join(b, Seq("doc_id"), "full_outer").agg(
-          sum(when(col("in_sets").isNotNull, 1L).otherwise(0L)).as("checked"),
-          sum(when(col("in_sets").isNull || col("in_buckets").isNull, 1L)
-            .otherwise(0L)).as("violations")))
+    graft.operators.StoreCheck.audit(spark) { cache =>
+      val sets = cache(graft.FsOps.readParquet(spark, tablePath(spark, path, "sets")))
+      val buckets = cache(graft.FsOps.readParquet(spark, tablePath(spark, path, "buckets")))
+      val unique = row("ids_unique",
+        sets.agg(count(lit(1)).as("checked"),
+            countDistinct(col("doc_id")).as("d"))
+          .select(col("checked"), (col("checked") - col("d")).as("violations")))
+      sharedChecks("", sets, buckets, numHashes, bands) :+ unique
     }
+  }
 
-    val cardinality = row("bucket_cardinality",
+  /** The invariants both audits check, each defined once over the
+    * `sets`/`buckets` frames it audits; `prefix` is "" for the deep audit
+    * and "delta_" for the incremental one (the contract on
+    * [[graft.operators.StoreCheck]]). In report order:
+    * `bucket_cardinality`, `buckets_match_signatures`,
+    * `id_surface_match`. */
+  private def sharedChecks(prefix: String, sets: DataFrame, buckets: DataFrame,
+                           numHashes: Int, bands: Int): Seq[DataFrame] = {
+    import graft.operators.StoreCheck.row
+    val cardinality = row(s"${prefix}bucket_cardinality",
       buckets.groupBy("doc_id")
         .agg(count(lit(1)).as("rows"), countDistinct(col("band")).as("dbands"))
         .agg(count(lit(1)).as("checked"),
@@ -557,22 +553,23 @@ object DedupStore {
         .withColumn("rec", lit(1))
       val stored = buckets.select("doc_id", "band", "bucket")
         .withColumn("sto", lit(1))
-      row("buckets_match_signatures",
+      row(s"${prefix}buckets_match_signatures",
         stored.join(recomputed, Seq("doc_id", "band", "bucket"), "full_outer").agg(
           sum(when(col("rec").isNotNull, 1L).otherwise(0L)).as("checked"),
           sum(when(col("rec").isNull || col("sto").isNull, 1L).otherwise(0L))
             .as("violations")))
     }
 
-    // fill both shared caches CONCURRENTLY (guide §2.6) before the
-    // report's single collect consumes them — same pattern as
-    // Forget.checkPipeline's surface fill
-    graft.operators.Par.run(
-      () => { sets.count(); () }, () => { buckets.count(); () })
-    try graft.operators.StoreCheck.materialize(spark,
-      graft.operators.StoreCheck.report(
-        Seq(cardinality, content, surface, unique)))
-    finally { sets.unpersist(); buckets.unpersist() }
+    val surface = {
+      val a = sets.select("doc_id").distinct().withColumn("in_sets", lit(1))
+      val b = buckets.select("doc_id").distinct().withColumn("in_buckets", lit(1))
+      row(s"${prefix}id_surface_match",
+        a.join(b, Seq("doc_id"), "full_outer").agg(
+          sum(when(col("in_sets").isNotNull, 1L).otherwise(0L)).as("checked"),
+          sum(when(col("in_sets").isNull || col("in_buckets").isNull, 1L)
+            .otherwise(0L)).as("violations")))
+    }
+    Seq(cardinality, content, surface)
   }
 
   /** Re-derive `buckets` from the stored shingle `sets` and install it
@@ -611,12 +608,12 @@ object DedupStore {
     * table, the one ∝-store cost here). Requires a batch-tracked store
     * (writeSignatures since batch tracking).
     *
-    * Delta-scoped invariants (`delta_`-prefixed twins of the full
-    * checker's): per-doc band cardinality, buckets-vs-recompute content
-    * equality (minhash recomputed from DELTA sets only — ∝ delta), and
-    * sets⟷buckets id-surface match WITHIN the delta — which is exactly
-    * where [[ingest]]'s crash window lands (sets append committed,
-    * buckets append lost: the drifted docs are delta docs by
+    * Invariants: the shared ones are [[checkStore]]'s, scoped to the
+    * delta (`delta_`-prefixed, one definition for both audits — see
+    * [[graft.operators.StoreCheck]]); minhash is recomputed from DELTA
+    * sets only (∝ delta), and the id-surface match WITHIN the delta is
+    * exactly where [[ingest]]'s crash window lands (sets append
+    * committed, buckets append lost: the drifted docs are delta docs by
     * construction). `delta_ids_unique` checks delta ids against the
     * WHOLE id surface (one column-pruned doc_id scan — no shingle sets
     * move; a re-sent id would otherwise shadow its stored twin). */
@@ -644,38 +641,8 @@ object DedupStore {
             .as("violations"))))
     }
 
-    val surface = {
-      val a = dSets.select("doc_id").distinct().withColumn("in_sets", lit(1))
-      val b = dBuckets.select("doc_id").distinct().withColumn("in_buckets", lit(1))
-      row("delta_id_surface_match",
-        a.join(b, Seq("doc_id"), "full_outer").agg(
-          sum(when(col("in_sets").isNotNull, 1L).otherwise(0L)).as("checked"),
-          sum(when(col("in_sets").isNull || col("in_buckets").isNull, 1L)
-            .otherwise(0L)).as("violations")))
-    }
-
-    val cardinality = row("delta_bucket_cardinality",
-      dBuckets.groupBy("doc_id")
-        .agg(count(lit(1)).as("rows"), countDistinct(col("band")).as("dbands"))
-        .agg(count(lit(1)).as("checked"),
-          sum(when(col("rows") =!= bands.toLong || col("dbands") =!= bands.toLong, 1L)
-            .otherwise(0L)).as("violations")))
-
-    val content = {
-      val recomputed = deriveBuckets(dSets, numHashes, bands)
-        .select(col("doc_id"), col("band"), col("bucket"))
-        .withColumn("rec", lit(1))
-      val stored = dBuckets.select("doc_id", "band", "bucket")
-        .withColumn("sto", lit(1))
-      row("delta_buckets_match_signatures",
-        stored.join(recomputed, Seq("doc_id", "band", "bucket"), "full_outer").agg(
-          sum(when(col("rec").isNotNull, 1L).otherwise(0L)).as("checked"),
-          sum(when(col("rec").isNull || col("sto").isNull, 1L).otherwise(0L))
-            .as("violations")))
-    }
-
     graft.operators.StoreCheck.report(
-      Seq(cardinality, content, surface, unique))
+      sharedChecks("delta_", dSets, dBuckets, numHashes, bands) :+ unique)
   }
 
   /** Streaming dedup-on-ingest: every micro-batch of a document stream is

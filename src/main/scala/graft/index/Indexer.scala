@@ -181,14 +181,7 @@ object Indexer {
         // no longer honor
         spark.sql(s"DROP TABLE IF EXISTS " +
           s"`${catalogTableName(spark, path, "positional")}`")
-        // remove the live marker AND any swap aside: readMarker recovers
-        // a "missing" marker from the aside, so a reset must drop both
-        val pm = new org.apache.hadoop.fs.Path(
-          s"$path/$PositionalDocBucketsMarker")
-        val pfs = pm.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        pfs.delete(pm, false)
-        pfs.delete(new org.apache.hadoop.fs.Path(
-          s"$path/_$PositionalDocBucketsMarker.swap_old"), false)
+        graft.FsOps.deleteMarker(spark, path, PositionalDocBucketsMarker)
         tagged
           .withColumn("term_bucket", termBucket(col("term"), nBuckets))
           .repartition(nBuckets, col("term_bucket"))
@@ -850,21 +843,15 @@ object Indexer {
 
   private[index] def writeBucketsMarker(spark: org.apache.spark.sql.SparkSession,
                                         path: String, n: Int,
-                                        marker: String = BucketsMarker): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$marker")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+                                        marker: String = BucketsMarker): Unit =
+    graft.FsOps.writeLongMarker(spark, path, marker, n)
 
   // ---- ingest-batch bookkeeping: `_lastbatch` records the highest batch
-  // ordinal ever written (writeIndex → 0, each append → +1); `_last_audit`
-  // records the highest batch an audit has vouched for. Both are one-int
-  // driver-side text files, same discipline as the bucket markers.
+  // ordinal ever written (writeIndex → 0, each append → +1); the audit
+  // watermark (graft.operators.StoreCheck.lastAudited) records the
+  // highest batch an audit has vouched for.
 
   private[graft] val LastBatchMarker = "_lastbatch"
-  private[graft] val LastAuditMarker = "_last_audit"
 
   /** Highest ingest-batch ordinal the store has recorded (None on a
     * store written before batch tracking existed). */
@@ -873,34 +860,22 @@ object Indexer {
 
   /** Highest batch ordinal an audit has vouched for (None = never audited). */
   def lastAudited(spark: org.apache.spark.sql.SparkSession, path: String): Option[Long] =
-    graft.FsOps.readLongMarker(spark, path, LastAuditMarker)
+    graft.operators.StoreCheck.lastAudited(spark, path)
 
   /** Record that every batch up to `upTo` (default: the store's current
     * last batch) has been audited — call it after a clean [[checkStore]]
     * (full) or [[checkStoreIncremental]] report, so the next incremental
-    * audit starts after it. Deliberately NOT advanced by the checkers
-    * themselves: an audit that mutates the store it audits would make a
-    * red report unrepeatable. */
+    * audit starts after it. */
   def markAudited(spark: org.apache.spark.sql.SparkSession, path: String,
-                  upTo: Option[Long] = None): Unit = {
-    val v = upTo.orElse(lastBatch(spark, path)).getOrElse(
-      throw new IllegalStateException(s"markAudited: no batch marker at $path — " +
-        "a pre-batch-tracking store has nothing to scope an incremental audit to"))
-    graft.FsOps.writeLongMarker(spark, path, LastAuditMarker, v)
-  }
+                  upTo: Option[Long] = None): Unit =
+    graft.operators.StoreCheck.markAudited(spark, path, upTo, lastBatch(spark, path),
+      s"no batch marker at $path — a pre-batch-tracking store has nothing " +
+        "to scope an incremental audit to")
 
   /** The bucket count a store was written with, if recorded. */
   def storedBuckets(spark: org.apache.spark.sql.SparkSession,
-                    path: String, marker: String = BucketsMarker): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$marker")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt)
-      finally in.close()
-    }
-  }
+                    path: String, marker: String = BucketsMarker): Option[Int] =
+    graft.FsOps.readLongMarker(spark, path, marker).map(_.toInt)
 
   /** Layout record for a positional store ([[writePositional]]): its own
     * marker first, falling back to the shared root marker for stores
@@ -1347,128 +1322,137 @@ object Indexer {
     // one shared pass per audited table: serialized cache (spills to
     // disk past executor memory — at audit scale the win is scans
     // saved, not residency)
-    val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val postings = graft.FsOps.readParquet(spark, s"$path/postings")
-      .select("term", "doc_id", "tf", "term_bucket").persist(storage)
-    val docIds = graft.FsOps.readParquet(spark, s"$path/doc_stats")
-      .select("doc_id", "length").persist(storage)
-    val nb = storedBuckets(spark, path).getOrElse(nBuckets)
+    graft.operators.StoreCheck.audit(spark) { cache =>
+      val postings = cache(graft.FsOps.readParquet(spark, s"$path/postings")
+        .select("term", "doc_id", "tf", "term_bucket"))
+      val docIds = cache(graft.FsOps.readParquet(spark, s"$path/doc_stats")
+        .select("doc_id", "length"))
+      val nb = storedBuckets(spark, path).getOrElse(nBuckets)
 
-    val postingsLayout = row("postings_bucket_layout",
-      postings.agg(
+      val deletes =
+        if (!exists("deletes")) None
+        else Some(cache(graft.FsOps.readParquet(spark, s"$path/deletes").select("doc_id")))
+      // live-view filter over the CACHED tables (readIndexLive would
+      // re-scan the store a second time per consumer)
+      def minusDel(df: DataFrame): DataFrame =
+        deletes.map(d => df.join(d, Seq("doc_id"), "left_anti")).getOrElse(df)
+
+      val tombstones = deletes match {
+        case None => emptyRow("tombstones_valid")
+        case Some(del) =>
+          row("tombstones_valid",
+            del.agg(count(lit(1)).as("checked"),
+                countDistinct(col("doc_id")).as("distinct_ids"))
+              .crossJoin(del.join(docIds, Seq("doc_id"), "left_anti")
+                .agg(count(lit(1)).as("orphans")))
+              .select(col("checked"),
+                (col("orphans") + col("checked") - col("distinct_ids")).as("violations")))
+      }
+
+      val livePostings = minusDel(postings)
+
+      val vocabCheck = {
+        val stored = graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "vocab"))
+          .select(col("term"), col("df").cast("long").as("stored_df"))
+        val fresh = vocab(livePostings.select("term", "doc_id", "tf"))
+          .select(col("term"), col("df").cast("long").as("live_df"))
+        row("vocab_matches_live",
+          stored.join(fresh, Seq("term"), "full_outer").agg(
+            sum(when(col("live_df").isNotNull, 1L).otherwise(0L)).as("checked"),
+            sum(when(!(col("stored_df") <=> col("live_df")), 1L).otherwise(0L))
+              .as("violations")))
+      }
+
+      val metaCheck = {
+        val stored = graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "meta"))
+        val fresh = meta(minusDel(docIds))
+        val drift =
+          if (stored.columns.contains("length_sum"))
+            !(col("s.total_docs").cast("long") <=> col("f.total_docs").cast("long")) ||
+              !(col("s.length_sum").cast("long") <=> col("f.length_sum").cast("long")) ||
+              !(col("s.avg_dl") <=> col("f.avg_dl"))
+          else // legacy layout: no exact sums recorded
+            !(col("s.total_docs").cast("long") <=> col("f.total_docs").cast("long")) ||
+              !(col("s.avg_dl") <=> col("f.avg_dl"))
+        row("meta_matches_live",
+          stored.alias("s").crossJoin(fresh.alias("f"))
+            .select(lit(1L).as("checked"),
+              when(drift, 1L).otherwise(0L).as("violations")))
+      }
+
+      val posCached =
+        if (!exists("positional")) None
+        // the malformed flag is computed IN the caching pass so the
+        // heavy positions arrays never enter the cache — both positional
+        // invariants read this slim projection
+        else Some(cache(graft.FsOps.readParquet(spark, s"$path/positional")
+          .select(col("term"), col("doc_id"), col("tf"), col("term_bucket"),
+            malformedPositions.as("malformed"))))
+      val positionalLayout = posCached match {
+        case None => emptyRow("positional_bucket_layout")
+        case Some(pos) => bucketLayoutRow("positional_bucket_layout", pos,
+          storedPositionalBuckets(spark, path).getOrElse(nBuckets))
+      }
+
+      Seq(metaCheck, positionalLayout,
+        positionalSurfaceRow(spark, "", posCached.map(minusDel), livePostings),
+        postingsDocsRow("", postings, docIds),
+        bucketLayoutRow("postings_bucket_layout", postings, nb),
+        tombstones, vocabCheck)
+    }
+  }
+
+  // ---- the invariants both index audits check, each defined once over
+  // the frames it audits; `prefix` is "" for the deep audit and "delta_"
+  // for the incremental one (graft.operators.StoreCheck's contract)
+
+  /** `name`: every row's `term_bucket` partition value equals the
+    * recorded bucket function `nb` of its term. */
+  private def bucketLayoutRow(name: String, table: DataFrame, nb: Int): DataFrame =
+    graft.operators.StoreCheck.row(name,
+      table.agg(
         count(lit(1)).as("checked"),
         sum(when(col("term_bucket").cast("long") =!= termBucket(col("term"), nb), 1L)
           .otherwise(0L)).as("violations")))
 
-    val orphanDocs = {
-      val pd = postings.select("doc_id").distinct()
-      row("postings_docs_in_doc_stats",
-        pd.agg(count(lit(1)).as("checked")).crossJoin(
-          pd.join(docIds, Seq("doc_id"), "left_anti")
-            .agg(count(lit(1)).as("violations"))))
-    }
+  /** `<prefix>postings_docs_in_doc_stats`: every posting's doc_id has a
+    * doc_stats row in `docIds`. */
+  private def postingsDocsRow(prefix: String, postings: DataFrame,
+                              docIds: DataFrame): DataFrame = {
+    val pd = postings.select("doc_id").distinct()
+    graft.operators.StoreCheck.row(s"${prefix}postings_docs_in_doc_stats",
+      pd.agg(count(lit(1)).as("checked")).crossJoin(
+        pd.join(docIds, Seq("doc_id"), "left_anti")
+          .agg(count(lit(1)).as("violations"))))
+  }
 
-    val deletes =
-      if (!exists("deletes")) None
-      else Some(graft.FsOps.readParquet(spark, s"$path/deletes").select("doc_id")
-        .persist(storage))
-    // live-view filter over the CACHED tables (readIndexLive would
-    // re-scan the store a second time per consumer)
-    def minusDel(df: DataFrame): DataFrame =
-      deletes.map(d => df.join(d, Seq("doc_id"), "left_anti")).getOrElse(df)
+  /** 1 for a positions list that is not sorted, duplicate-free and
+    * tf-sized, else 0. */
+  private def malformedPositions: Column =
+    when(col("tf") =!= size(col("positions")) ||
+      col("positions") =!= array_sort(array_distinct(col("positions"))), 1L)
+      .otherwise(0L)
 
-    val tombstones = deletes match {
-      case None => emptyRow("tombstones_valid")
-      case Some(del) =>
-        row("tombstones_valid",
-          del.agg(count(lit(1)).as("checked"),
-              countDistinct(col("doc_id")).as("distinct_ids"))
-            .crossJoin(del.join(docIds, Seq("doc_id"), "left_anti")
-              .agg(count(lit(1)).as("orphans")))
-            .select(col("checked"),
-              (col("orphans") + col("checked") - col("distinct_ids")).as("violations")))
-    }
-
-    val livePostings = minusDel(postings)
-
-    val vocabCheck = {
-      val stored = graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "vocab"))
-        .select(col("term"), col("df").cast("long").as("stored_df"))
-      val fresh = vocab(livePostings.select("term", "doc_id", "tf"))
-        .select(col("term"), col("df").cast("long").as("live_df"))
-      row("vocab_matches_live",
-        stored.join(fresh, Seq("term"), "full_outer").agg(
-          sum(when(col("live_df").isNotNull, 1L).otherwise(0L)).as("checked"),
-          sum(when(!(col("stored_df") <=> col("live_df")), 1L).otherwise(0L))
-            .as("violations")))
-    }
-
-    val metaCheck = {
-      val stored = graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "meta"))
-      val fresh = meta(minusDel(docIds))
-      val drift =
-        if (stored.columns.contains("length_sum"))
-          !(col("s.total_docs").cast("long") <=> col("f.total_docs").cast("long")) ||
-            !(col("s.length_sum").cast("long") <=> col("f.length_sum").cast("long")) ||
-            !(col("s.avg_dl") <=> col("f.avg_dl"))
-        else // legacy layout: no exact sums recorded
-          !(col("s.total_docs").cast("long") <=> col("f.total_docs").cast("long")) ||
-            !(col("s.avg_dl") <=> col("f.avg_dl"))
-      row("meta_matches_live",
-        stored.alias("s").crossJoin(fresh.alias("f"))
-          .select(lit(1L).as("checked"),
-            when(drift, 1L).otherwise(0L).as("violations")))
-    }
-
-    val posCached =
-      if (!exists("positional")) None
-      else Some(graft.FsOps.readParquet(spark, s"$path/positional")
-        // the malformed flag is computed IN the caching pass so the
-        // heavy positions arrays never enter the cache — both positional
-        // invariants read this slim projection
-        .select(col("term"), col("doc_id"), col("tf"), col("term_bucket"),
-          when(col("tf") =!= size(col("positions")) ||
-            col("positions") =!= array_sort(array_distinct(col("positions"))), 1L)
-            .otherwise(0L).as("malformed"))
-        .persist(storage))
-    val positionalChecks = posCached match {
-      case None =>
-        Seq(emptyRow("positional_bucket_layout"),
-          emptyRow("positional_matches_postings"))
+  /** `<prefix>positional_matches_postings`: the live positional rows
+    * (`term, doc_id, tf, malformed`) describe the same `(term, doc_id,
+    * tf)` surface as the live frequency postings, and no positions list
+    * is malformed; checked = 0 without a positional table. */
+  private def positionalSurfaceRow(spark: org.apache.spark.sql.SparkSession,
+                                   prefix: String, livePos: Option[DataFrame],
+                                   livePostings: => DataFrame): DataFrame = {
+    val name = s"${prefix}positional_matches_postings"
+    livePos match {
+      case None => graft.operators.StoreCheck.emptyRow(spark, name)
       case Some(pos) =>
-        val pnb = storedPositionalBuckets(spark, path).getOrElse(nBuckets)
-        val layout = row("positional_bucket_layout",
-          pos.agg(
-            count(lit(1)).as("checked"),
-            sum(when(col("term_bucket").cast("long") =!= termBucket(col("term"), pnb), 1L)
-              .otherwise(0L)).as("violations")))
-        val livePos = minusDel(pos)
-          .select(col("term"), col("doc_id"),
-            col("tf").cast("long").as("pos_tf"), col("malformed"))
-        val liveFreq = livePostings
+        val p = pos.select(col("term"), col("doc_id"),
+          col("tf").cast("long").as("pos_tf"), col("malformed"))
+        val f = livePostings
           .select(col("term"), col("doc_id"), col("tf").cast("long").as("freq_tf"))
-        val surface = row("positional_matches_postings",
-          livePos.join(liveFreq, Seq("term", "doc_id"), "full_outer").agg(
+        graft.operators.StoreCheck.row(name,
+          p.join(f, Seq("term", "doc_id"), "full_outer").agg(
             sum(when(col("pos_tf").isNotNull, 1L).otherwise(0L)).as("checked"),
             (sum(when(!(col("pos_tf") <=> col("freq_tf")), 1L).otherwise(0L)) +
               sum(coalesce(col("malformed"), lit(0L)))).as("violations")))
-        Seq(layout, surface)
-    }
-
-    // fill the shared caches CONCURRENTLY (guide §2.6) before the
-    // report's single collect consumes them — same pattern as
-    // Forget.checkPipeline's surface fill
-    graft.operators.Par.run(
-      (Seq(postings, docIds) ++ deletes.toSeq ++ posCached.toSeq)
-        .map(df => () => { df.count(); () }): _*)
-    try graft.operators.StoreCheck.materialize(spark,
-      graft.operators.StoreCheck.report(Seq(metaCheck) ++ positionalChecks ++
-        Seq(orphanDocs, postingsLayout, tombstones, vocabCheck)))
-    finally {
-      postings.unpersist()
-      docIds.unpersist()
-      deletes.foreach(_.unpersist())
-      posCached.foreach(_.unpersist())
     }
   }
 
@@ -1486,19 +1470,16 @@ object Indexer {
     * input is doc_stats (the narrow ∝-documents table), read to check
     * the delta's ids against the full id surface.
     *
-    * Invariants (the delta-scoped structural subset of [[checkStore]];
-    * report order = name order):
+    * Invariants: the shared ones are [[checkStore]]'s, scoped to the
+    * delta (`delta_`-prefixed, one definition for both audits — the
+    * contract and the per-mode rows are listed on
+    * [[graft.operators.StoreCheck]]), plus
     *   - `delta_docs_unique` — each delta doc_id has exactly ONE
     *     doc_stats row store-wide (catches a double-applied append —
     *     the corruption appends actually produce).
-    *   - `delta_positional_matches_postings` — the co-located positional
-    *     table's delta describes the same live `(term, doc_id, tf)`
-    *     surface as the frequency delta, positions well-formed
-    *     (checked = 0 when no positional table / no batch column).
-    *   - `delta_postings_bucket_layout` — every delta posting sits in
-    *     the partition the store's recorded bucket function assigns.
-    *   - `delta_postings_docs_in_doc_stats` — every delta posting's doc
-    *     has a doc_stats row.
+    *   - `delta_full_audit_forced_doc_compaction` — checked = 1 when a
+    *     doc-bucketed compaction merged batches past the watermark, so
+    *     the delta filter paid a full scan.
     *
     * The GLOBAL derived-state invariants (vocab/meta vs live, tombstone
     * validity) are deliberately absent: they are whole-store statements
@@ -1529,42 +1510,15 @@ object Indexer {
             .as("violations"))))
     }
 
-    val layout = row("delta_postings_bucket_layout",
-      deltaPost.agg(
-        count(lit(1)).as("checked"),
-        sum(when(col("term_bucket").cast("long") =!= termBucket(col("term"), nb), 1L)
-          .otherwise(0L)).as("violations")))
-
-    val orphans = {
-      val pd = deltaPost.select("doc_id").distinct()
-      row("delta_postings_docs_in_doc_stats",
-        pd.agg(count(lit(1)).as("checked")).crossJoin(
-          pd.join(docStats.select("doc_id"), Seq("doc_id"), "left_anti")
-            .agg(count(lit(1)).as("violations"))))
-    }
-
-    val positionalCheck = {
+    val livePos = {
       val posPath = new org.apache.hadoop.fs.Path(s"$path/positional")
       val present = posPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .exists(posPath)
       lazy val pos = graft.FsOps.readParquet(spark, s"$path/positional")
-      if (!present || !pos.columns.contains("batch"))
-        emptyRow(spark, "delta_positional_matches_postings")
-      else {
-        val livePos = minusDeletes(spark, path, pos.filter(col("batch") > since))
-          .select(col("term"), col("doc_id"),
-            col("tf").cast("long").as("pos_tf"),
-            when(col("tf") =!= size(col("positions")) ||
-              col("positions") =!= array_sort(array_distinct(col("positions"))), 1L)
-              .otherwise(0L).as("malformed"))
-        val liveFreq = minusDeletes(spark, path, deltaPost)
-          .select(col("term"), col("doc_id"), col("tf").cast("long").as("freq_tf"))
-        row("delta_positional_matches_postings",
-          livePos.join(liveFreq, Seq("term", "doc_id"), "full_outer").agg(
-            sum(when(col("pos_tf").isNotNull, 1L).otherwise(0L)).as("checked"),
-            (sum(when(!(col("pos_tf") <=> col("freq_tf")), 1L).otherwise(0L)) +
-              sum(coalesce(col("malformed"), lit(0L)))).as("violations")))
-      }
+      if (!present || !pos.columns.contains("batch")) None
+      else Some(minusDeletes(spark, path, pos.filter(col("batch") > since))
+        .select(col("term"), col("doc_id"), col("tf"),
+          malformedPositions.as("malformed")))
     }
 
     // a doc-bucketed compaction merged ingest batches inside each bucket
@@ -1582,8 +1536,11 @@ object Indexer {
       else emptyRow(spark, "delta_full_audit_forced_doc_compaction")
     }
 
-    graft.operators.StoreCheck.report(
-      Seq(unique, positionalCheck, layout, orphans, forcedFull))
+    graft.operators.StoreCheck.report(Seq(unique,
+      positionalSurfaceRow(spark, "delta_", livePos, minusDeletes(spark, path, deltaPost)),
+      bucketLayoutRow("delta_postings_bucket_layout", deltaPost, nb),
+      postingsDocsRow("delta_", deltaPost, docStats.select("doc_id")),
+      forcedFull))
   }
 
   /** Load a persisted index store back as an [[InvertedIndex]]. A

@@ -35,8 +35,8 @@ import org.apache.spark.sql.functions._
   *   - batch-tracked sources only (`_lastbatch` present and mergeable
   *     meta layout) — the merged store keeps per-file batch min/max
   *     skipping and is born AUDITED (derived tables are consistent
-  *     with the merged data by construction, so `_last_audit` starts
-  *     at the merged `_lastbatch`; the next incremental audit sees
+  *     with the merged data by construction, so the audit watermark
+  *     starts at the merged `_lastbatch`; the next incremental audit sees
   *     only post-merge appends).
   *   - per-table schema parity across sources (a title-bearing and a
   *     title-less doc_stats must not silently mix).

@@ -16,13 +16,17 @@ package graft.operators
   *
   * FIFO scheduling (the default) gives earlier-submitted jobs resources
   * first and later ones the leftovers — exactly the back-fill behavior
-  * wanted. Concurrency is bounded (default 8, env
-  * `SPARK_GRAFT_DRIVER_PAR`; 8 measured ~6% faster than 4 on the
-  * governance band — the actions being overlapped are dominated by
-  * driver latency, not executor demand, so a deeper queue keeps paying
-  * until jobs actually contend): the bound is about overlapping driver
-  * latency with executor work, so it deliberately does NOT scale with
-  * core count. Excess jobs queue in the scheduler — no thrash.
+  * wanted. Concurrency is bounded PROCESS-WIDE: at most [[Width]] = 8
+  * actions run on Par's threads at once, however calls nest (Maintain's
+  * compact overlaps tables whose compactions overlap their own leaves).
+  * An item that finds every slot taken runs on its calling thread, so a
+  * nested call never waits for a slot its own caller holds — no
+  * deadlock. 8 measured ~6% faster than 4 on the governance band — the
+  * actions being overlapped are dominated by driver latency, not
+  * executor demand, so a deeper queue keeps paying until jobs actually
+  * contend: the bound is about overlapping driver latency with executor
+  * work, so it deliberately does NOT scale with core count. Excess jobs
+  * queue in the scheduler — no thrash.
   *
   * Only for actions with NO data or ordering dependence (different
   * store tables/paths, disjoint outputs). Failures propagate: the first
@@ -33,29 +37,35 @@ package graft.operators
   */
 object Par {
 
-  private lazy val width: Int =
-    sys.env.get("SPARK_GRAFT_DRIVER_PAR").flatMap(_.toIntOption)
-      .filter(_ >= 1).getOrElse(8)
+  private val Width = 8
 
-  /** Run the actions, overlapping up to [[width]] at a time (serial for
+  private val slots = new java.util.concurrent.Semaphore(Width)
+
+  /** Run the actions, overlapping up to [[Width]] at a time (serial for
     * 0 or 1 actions) — [[map]] with the same failure contract. */
   def run(actions: (() => Unit)*): Unit = map(actions)(_())
 
-  /** Map `items` through `f` concurrently (bounded by [[width]]),
-    * preserving input order in the result. Serial when given 0 or 1
-    * items (no pool spun up). Every item finishes before the first
-    * failure is rethrown. A caller interrupted while waiting cancels the
-    * pending items, interrupts the running ones and waits for them to
-    * exit before the InterruptedException is rethrown. */
+  /** Map `items` through `f` concurrently, preserving input order in the
+    * result: each item takes a free process-wide slot and runs on this
+    * call's pool (threads created by the caller, so they inherit its
+    * Spark local properties), or runs on the calling thread when no slot
+    * is free. Serial when given 0 or 1 items (no pool spun up). Every
+    * item finishes before the first failure is rethrown. A caller
+    * interrupted while waiting cancels the pending items, interrupts the
+    * running ones and waits for them to exit before the
+    * InterruptedException is rethrown. */
   def map[A, B](items: Seq[A])(f: A => B): Seq[B] = {
     if (items.size <= 1) return items.map(f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(items.size, width))
+    // a cached pool hands each task to a thread at once (nothing queues),
+    // so every slot is released by its wrapper, cancelled task or not
+    val pool = java.util.concurrent.Executors.newCachedThreadPool()
     try {
-      val futures = items.map(a =>
-        pool.submit(new java.util.concurrent.Callable[B] {
-          override def call(): B = f(a)
-        }))
+      val futures = items.map { a =>
+        val task = new java.util.concurrent.FutureTask[B](() => f(a))
+        if (slots.tryAcquire()) pool.execute(() => try task.run() finally slots.release())
+        else task.run()
+        task
+      }
       var firstFailure: Option[Throwable] = None
       val out = futures.map { fut =>
         try Some(fut.get())

@@ -287,7 +287,7 @@ object IvfStore {
     * merge with fresh ones. One layout rewrite installed as a new
     * frame (layout metadata only — no score, assignment or tombstone
     * changes: deletes carry as-is, expunge stays its own verb). Batch
-    * provenance is gone afterwards, so the `_last_audit` watermark
+    * provenance is gone afterwards, so the audit watermark
     * drops with it ([[checkStoreIncremental]] refuses cid-only stores;
     * the deep [[checkStore]] is the audit face) and [[appendBatch]]
     * refuses the flattened store like any fresh build — flattening is
@@ -323,18 +323,10 @@ object IvfStore {
         stripBatch = true)
       stage.commit()
     }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/$LastAuditMarker"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$path/_$LastAuditMarker.swap_old"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/$BatchFloorMarker"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$path/_$BatchFloorMarker.swap_old"), true)
     // batch provenance dies with the batch column (the advisory row
     // takes over on a flattened merged store)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$path/$MergedBatchBoundsMarker"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$path/_$MergedBatchBoundsMarker.swap_old"), true)
+    Seq(graft.operators.StoreCheck.LastAuditMarker, BatchFloorMarker,
+      MergedBatchBoundsMarker).foreach(graft.FsOps.deleteMarker(spark, path, _))
   }
 
   /** Soft-delete vectors from a persisted IVF store: ids append into a
@@ -940,9 +932,10 @@ object IvfStore {
     *
     * Scale: the audit is unpruned (scheduled maintenance, not
     * probe-path cost) but priced per PASS over lists — so lists is
-    * scanned ONCE into a cached projection all invariants share,
-    * centroids broadcast, and the ≤ 9-row report returns eagerly
-    * (releasing the cache before return). Physical rows are audited —
+    * scanned ONCE into a cached projection all invariants share
+    * (filled before the report's collect,
+    * [[graft.operators.StoreCheck.audit]]), centroids broadcast, and the
+    * ≤ 9-row report returns eagerly (releasing the cache before return). Physical rows are audited —
     * tombstoned vectors included, matching what [[expungeDeletes]] will
     * rewrite. Tombstones themselves carry no validity invariant here by
     * design: duplicates and foreign ids are both documented no-ops of
@@ -950,86 +943,104 @@ object IvfStore {
   def checkStore(spark: SparkSession, path: String): DataFrame = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
     val dirs = tableDirs(spark, path)
-    val lists = graft.FsOps.readParquet(spark, dirs("lists"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
-    val quantized = lists.columns.contains("qvec")
     import graft.operators.StoreCheck.{row, emptyRow => emptyRowIn}
     def emptyRow(name: String): DataFrame = emptyRowIn(spark, name)
+    graft.operators.StoreCheck.audit(spark) { cache =>
+      val lists = cache(graft.FsOps.readParquet(spark, dirs("lists")))
+      val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
 
+      val unique = row("ids_unique",
+        lists.agg(count(lit(1)).as("checked"),
+            countDistinct(col("vec_id")).as("d"))
+          .select(col("checked"), (col("checked") - col("d")).as("violations")))
+
+      val bounds = mergedBounds(spark, path)
+
+      // group-membership invariants of a merged store (contract note above):
+      // batch provenance where it survives (composed segments — exact per
+      // plain-shard layer, range across an inner merged source's span), an
+      // explicit advisory otherwise. A corrupt/misaligned segment marker
+      // must degrade to the advisory, never mis-audit.
+      val provenanceInfo = (bounds, mergedBatchSegments(spark, path),
+        graft.FsOps.readLongMarker(spark, path, BatchFloorMarker))
+      val provenanceActive = provenanceInfo match {
+        case (Some(cb), Some(segs), Some(_)) =>
+          segmentsValid(segs, cb.size) && lists.columns.contains("batch")
+        case _ => false
+      }
+      val (provenance, provenanceRange) =
+        if (!provenanceActive)
+          (emptyRow("merged_provenance"), emptyRow("merged_provenance_range"))
+        else {
+          val (cb, segs, f) = provenanceInfo match {
+            case (Some(c), Some(s), Some(fl)) => (c, s, fl)
+            case _ => throw new IllegalStateException("unreachable: provenanceActive")
+          }
+          val layer = lists.filter(col("batch") <= f)
+          val cidG = grpOf(cb.map(_.toLong))(col("cid"))
+          val (gLo, gHi) = (segCol(segs, col("batch"))(_.gLo),
+            segCol(segs, col("batch"))(_.gHi))
+          val viol = sum(when(cidG < gLo || cidG > gHi, 1L).otherwise(0L))
+            .as("violations")
+          // coverage split (VERDICT r16 #4): rows under a RANGE segment
+          // (gLo < gHi — an inner merged source's union-assigned span) are
+          // auditable only up to that range; a within-range cid rewrite is
+          // undetectable there, and repairLists can only re-home across
+          // the whole range. `merged_provenance` stays the full invariant
+          // (every provenance-scoped row); `merged_provenance_range`
+          // reports the range-only subset, so an operator reads
+          // checked_exact = total − range and schedules recluster on the
+          // evidence of how much of a nested-merged store has degraded to
+          // range-only provenance.
+          (row("merged_provenance",
+             layer.agg(count(lit(1)).as("checked"), viol)),
+           row("merged_provenance_range",
+             layer.filter(gLo =!= gHi)
+               .agg(count(lit(1)).as("checked"), viol)))
+        }
+      val advisory =
+        if (provenanceActive) emptyRow("merged_groups_advisory")
+        else if (bounds.isDefined)
+          // merged store with NO per-row provenance: these rows are audited
+          // under the grouped invariant only — a cid rewritten into a
+          // foreign group that happens to be locally-nearest there is
+          // undetectable by construction; recluster is the recovery verb
+          row("merged_groups_advisory",
+            lists.agg(count(lit(1)).as("checked"), lit(0L).as("violations")))
+        else emptyRow("merged_groups_advisory")
+
+      sharedChecks(spark, "", lists, cents, bounds) ++
+        Seq(unique, provenance, provenanceRange, advisory)
+    }
+  }
+
+  /** The invariants both audits check, each defined once over the
+    * `lists` rows it audits (the whole table or the `batch > since`
+    * delta) and the broadcast centroids; `prefix` is "" for the deep
+    * audit and "delta_" for the incremental one (the contract on
+    * [[graft.operators.StoreCheck]]): `centroid_cover`,
+    * `codes_wellformed`, `lists_assignment`, `norms_consistent` — plus
+    * the whole-store `centroids_wellformed`, unprefixed in both modes
+    * (the assignment recompute ranks against every centroid each run and
+    * its NaN guard suppresses a poisoned centroid's violations). */
+  private def sharedChecks(spark: SparkSession, prefix: String, lists: DataFrame,
+                           cents: DataFrame, bounds: Option[Seq[Int]])
+      : Seq[DataFrame] = {
+    import graft.operators.StoreCheck.{row, emptyRow}
+    val quantized = lists.columns.contains("qvec")
     val cover = {
       val cids = lists.select("cid").distinct()
-      row("centroid_cover",
+      row(s"${prefix}centroid_cover",
         cids.agg(count(lit(1)).as("checked")).crossJoin(
           cids.join(cents.select("cid"), Seq("cid"), "left_anti")
             .agg(count(lit(1)).as("violations"))))
     }
 
-    val unique = row("ids_unique",
-      lists.agg(count(lit(1)).as("checked"),
-          countDistinct(col("vec_id")).as("d"))
-        .select(col("checked"), (col("checked") - col("d")).as("violations")))
-
-    val bounds = mergedBounds(spark, path)
-
     val assignment =
       if (quantized)
-        assignmentRow(spark, "lists_assignment", reconstructed(lists), cents,
+        assignmentRow(spark, s"${prefix}lists_assignment", reconstructed(lists), cents,
           bounds, Some(quantAssignTol(col("v"), col("scale"), col("qvec"))))
-      else assignmentRow(spark, "lists_assignment", lists, cents, bounds)
-
-    // group-membership invariants of a merged store (contract note above):
-    // batch provenance where it survives (composed segments — exact per
-    // plain-shard layer, range across an inner merged source's span), an
-    // explicit advisory otherwise. A corrupt/misaligned segment marker
-    // must degrade to the advisory, never mis-audit.
-    val provenanceInfo = (bounds, mergedBatchSegments(spark, path),
-      graft.FsOps.readLongMarker(spark, path, BatchFloorMarker))
-    val provenanceActive = provenanceInfo match {
-      case (Some(cb), Some(segs), Some(_)) =>
-        segmentsValid(segs, cb.size) && lists.columns.contains("batch")
-      case _ => false
-    }
-    val (provenance, provenanceRange) =
-      if (!provenanceActive)
-        (emptyRow("merged_provenance"), emptyRow("merged_provenance_range"))
-      else {
-        val (cb, segs, f) = provenanceInfo match {
-          case (Some(c), Some(s), Some(fl)) => (c, s, fl)
-          case _ => throw new IllegalStateException("unreachable: provenanceActive")
-        }
-        val layer = lists.filter(col("batch") <= f)
-        val cidG = grpOf(cb.map(_.toLong))(col("cid"))
-        val (gLo, gHi) = (segCol(segs, col("batch"))(_.gLo),
-          segCol(segs, col("batch"))(_.gHi))
-        val viol = sum(when(cidG < gLo || cidG > gHi, 1L).otherwise(0L))
-          .as("violations")
-        // coverage split (VERDICT r16 #4): rows under a RANGE segment
-        // (gLo < gHi — an inner merged source's union-assigned span) are
-        // auditable only up to that range; a within-range cid rewrite is
-        // undetectable there, and repairLists can only re-home across
-        // the whole range. `merged_provenance` stays the full invariant
-        // (every provenance-scoped row); `merged_provenance_range`
-        // reports the range-only subset, so an operator reads
-        // checked_exact = total − range and schedules recluster on the
-        // evidence of how much of a nested-merged store has degraded to
-        // range-only provenance.
-        (row("merged_provenance",
-           layer.agg(count(lit(1)).as("checked"), viol)),
-         row("merged_provenance_range",
-           layer.filter(gLo =!= gHi)
-             .agg(count(lit(1)).as("checked"), viol)))
-      }
-    val advisory =
-      if (provenanceActive) emptyRow("merged_groups_advisory")
-      else if (bounds.isDefined)
-        // merged store with NO per-row provenance: these rows are audited
-        // under the grouped invariant only — a cid rewritten into a
-        // foreign group that happens to be locally-nearest there is
-        // undetectable by construction; recluster is the recovery verb
-        row("merged_groups_advisory",
-          lists.agg(count(lit(1)).as("checked"), lit(0L).as("violations")))
-      else emptyRow("merged_groups_advisory")
+      else assignmentRow(spark, s"${prefix}lists_assignment", lists, cents, bounds)
 
     val norms = {
       val withRef =
@@ -1037,7 +1048,7 @@ object IvfStore {
           lists.withColumn("ref_v", transform(col("qvec"),
             x => round(x.cast("double") * col("scale"), 6)))
         else lists.withColumn("ref_v", col("v"))
-      row("norms_consistent",
+      row(s"${prefix}norms_consistent",
         withRef.agg(count(lit(1)).as("checked"),
           sum(when(!(col("nv") <=>
               sqrt(Similarity.dot(col("ref_v"), col("ref_v")))), 1L)
@@ -1045,18 +1056,14 @@ object IvfStore {
     }
 
     val codes =
-      if (!quantized) emptyRow("codes_wellformed")
-      else row("codes_wellformed",
+      if (!quantized) emptyRow(spark, s"${prefix}codes_wellformed")
+      else row(s"${prefix}codes_wellformed",
         lists.agg(count(lit(1)).as("checked"),
           sum(when(col("scale") < 0 ||
               exists(col("qvec"), x => x < -127 || x > 127), 1L)
             .otherwise(0L)).as("violations")))
 
-    try graft.operators.StoreCheck.materialize(spark,
-      graft.operators.StoreCheck.report(
-        Seq(cover, centroidsWellformedRow(spark, cents), codes, unique,
-          assignment, norms, provenance, provenanceRange, advisory)))
-    finally lists.unpersist()
+    Seq(cover, centroidsWellformedRow(spark, cents), codes, assignment, norms)
   }
 
   /** Close the provenance→recluster loop (VERDICT r17 #2): the fsck
@@ -1144,9 +1151,8 @@ object IvfStore {
   // ([[graft.index.Indexer.checkStoreIncremental]]). A streaming-ingested
   // store's lists live under batch=<id>/cid=<c> partitions, so the
   // `batch > since` watermark prunes pre-audit DIRECTORIES before any
-  // IO; `_last_audit` records the highest batch an audit vouched for.
-
-  private val LastAuditMarker = "_last_audit"
+  // IO; the audit watermark (graft.operators.StoreCheck.lastAudited)
+  // records the highest batch an audit vouched for.
 
   /** Ordinal floor a layered merge records on its dest (the highest
     * remapped batch ordinal): [[appendBatch]] refuses ordinals at or
@@ -1156,7 +1162,7 @@ object IvfStore {
 
   /** Highest batch an audit has vouched for (None = never audited). */
   def lastAudited(spark: SparkSession, path: String): Option[Long] =
-    graft.FsOps.readLongMarker(spark, path, LastAuditMarker)
+    graft.operators.StoreCheck.lastAudited(spark, path)
 
   /** Batch partition ids physically present under lists — one driver-side
     * directory listing (bounded metadata), the IVF store's batch record
@@ -1171,28 +1177,23 @@ object IvfStore {
   }
 
   /** Record that every batch up to `upTo` (default: the newest present)
-    * has been audited. Deliberately not advanced by the checkers — an
-    * audit that mutates the store it audits would make a red report
-    * unrepeatable (same contract as the index store's markAudited). */
+    * has been audited. */
   def markAudited(spark: SparkSession, path: String,
-                  upTo: Option[Long] = None): Unit = {
-    val v = upTo.orElse(listBatches(spark, path).lastOption).getOrElse(
-      throw new IllegalStateException(s"markAudited: no batch= partitions at " +
-        s"$path/lists — only streaming-ingested stores carry batch layout"))
-    graft.FsOps.writeLongMarker(spark, path, LastAuditMarker, v)
-  }
+                  upTo: Option[Long] = None): Unit =
+    graft.operators.StoreCheck.markAudited(spark, path, upTo,
+      listBatches(spark, path).lastOption,
+      s"no batch= partitions at $path/lists — only streaming-ingested " +
+        "stores carry batch layout")
 
   /** Incremental integrity check: audit ONLY the list rows ingested
     * since the last vouched-for batch — the daily-cadence audit; the
     * full [[checkStore]] is the scheduled deep audit. Requires the
     * streaming-ingest `batch=` layout ([[appendBatch]]).
     *
-    * Delta-scoped invariants (same semantics as the full checker,
-    * `delta_`-prefixed): per-row assignment recompute against the
-    * broadcast centroids (exact on raw stores; tolerance-banded on the
-    * quantized reconstruction, same contract as the full checker),
-    * norm consistency, code well-formedness (quantized), centroid
-    * cover of the delta's cids — all ∝ delta via partition pruning.
+    * Invariants: the shared ones are [[checkStore]]'s, scoped to the
+    * delta (`delta_`-prefixed, one definition for both audits — see
+    * [[graft.operators.StoreCheck]]) — all ∝ delta via partition
+    * pruning, plus the whole-store `centroids_wellformed` row.
     * `delta_ids_unique` checks the delta's vec_ids against the WHOLE
     * id surface (a replayed batch that bypassed the partition
     * overwrite duplicates across batches — exactly the corruption the
@@ -1201,8 +1202,7 @@ object IvfStore {
   def checkStoreIncremental(spark: SparkSession, path: String,
                             sinceBatch: Option[Long] = None): DataFrame = {
     graft.FsOps.requireNotHusk(spark, path)
-    import graft.operators.StoreCheck.{row, emptyRow => emptyRowIn}
-    def emptyRow(name: String): DataFrame = emptyRowIn(spark, name)
+    import graft.operators.StoreCheck.row
     val dirs = tableDirs(spark, path)
     val lists = graft.FsOps.readParquet(spark, dirs("lists"))
     require(lists.columns.contains("batch"),
@@ -1211,7 +1211,6 @@ object IvfStore {
     val since = sinceBatch.orElse(lastAudited(spark, path)).getOrElse(-1L)
     val delta = lists.filter(col("batch") > since)
     val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
-    val quantized = lists.columns.contains("qvec")
 
     val unique = {
       val counts = lists.select("vec_id")
@@ -1223,51 +1222,8 @@ object IvfStore {
             .as("violations"))))
     }
 
-    val cover = {
-      val cids = delta.select("cid").distinct()
-      row("delta_centroid_cover",
-        cids.agg(count(lit(1)).as("checked")).crossJoin(
-          cids.join(cents.select("cid"), Seq("cid"), "left_anti")
-            .agg(count(lit(1)).as("violations"))))
-    }
-
-    val assignment =
-      if (quantized)
-        assignmentRow(spark, "delta_lists_assignment", reconstructed(delta),
-          cents, mergedBounds(spark, path),
-          Some(quantAssignTol(col("v"), col("scale"), col("qvec"))))
-      else assignmentRow(spark, "delta_lists_assignment", delta, cents,
-        mergedBounds(spark, path))
-
-    val norms = {
-      val withRef =
-        if (quantized)
-          delta.withColumn("ref_v", transform(col("qvec"),
-            x => round(x.cast("double") * col("scale"), 6)))
-        else delta.withColumn("ref_v", col("v"))
-      row("delta_norms_consistent",
-        withRef.agg(count(lit(1)).as("checked"),
-          sum(when(!(col("nv") <=>
-              sqrt(Similarity.dot(col("ref_v"), col("ref_v")))), 1L)
-            .otherwise(0L)).as("violations")))
-    }
-
-    val codes =
-      if (!quantized) emptyRow("delta_codes_wellformed")
-      else row("delta_codes_wellformed",
-        delta.agg(count(lit(1)).as("checked"),
-          sum(when(col("scale") < 0 ||
-              exists(col("qvec"), x => x < -127 || x > 127), 1L)
-            .otherwise(0L)).as("violations")))
-
-    // centroids are a whole-store (not delta-scoped) surface, but the
-    // delta assignment recompute ranks against them every run and its
-    // NaN guard suppresses a poisoned centroid's violations — so the
-    // incremental audit carries the same ≤ nCentroids wellformedness
-    // row as the deep checker (unprefixed: it is never delta-scoped)
     graft.operators.StoreCheck.report(
-      Seq(cover, centroidsWellformedRow(spark, cents), codes, unique,
-        assignment, norms))
+      sharedChecks(spark, "delta_", delta, cents, mergedBounds(spark, path)) :+ unique)
   }
 
   /** Merge N independently-built IVF stores into one by CENTROID UNION —
@@ -1559,18 +1515,10 @@ object IvfStore {
     // the flip: one rename installs lists + centroids + tombstone drop
     stage.commit()
     // the store is union-nearest again: drop the merged-assignment
-    // markers (and their swap asides — readMarker recovers from asides).
-    // A crash before these deletes leaves the grouped (weaker-but-green)
+    // markers. A crash before these deletes leaves the grouped (weaker-but-green)
     // audit in force until the next recluster; never a false red.
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/$MergedBoundsMarker"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$path/_$MergedBoundsMarker.swap_old"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$path/$MergedBatchBoundsMarker"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$path/_$MergedBatchBoundsMarker.swap_old"), true)
+    Seq(MergedBoundsMarker, MergedBatchBoundsMarker)
+      .foreach(graft.FsOps.deleteMarker(spark, path, _))
   }
 
   /** LIVE vec_id surface of a store — the ids a probe could still

@@ -92,20 +92,13 @@ object UpsertSink {
     // nParts would compute different buckets and silently duplicate keys
     // (old row left in the old bucket, new row written to the new one) —
     // persist nParts on create and fail fast on mismatch
-    val marker = new Path(dir, "_nparts")
+    val marker = "_nparts"
+    val stored = graft.FsOps.readLongMarker(spark, path, marker)
     val merged =
       if (!fs.exists(dir)) withPart
       else {
-        if (fs.exists(marker)) {
-          val stored = {
-            val in = fs.open(marker)
-            try new String(in.readAllBytes(),
-              java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-            finally in.close()
-          }
-          require(stored == nParts,
-            s"upsert: store at $path was created with nParts=$stored, got $nParts")
-        }
+        stored.foreach(n => require(n == nParts,
+          s"upsert: store at $path was created with nParts=$n, got $nParts"))
         // touched partition ids: driver-side metadata, ≤ nParts ints — an
         // isin literal prunes the store scan to those partition dirs
         val touched = withPart.select("part_bucket").distinct()
@@ -122,11 +115,7 @@ object UpsertSink {
     merged.localCheckpoint(true).repartition(col("part_bucket"))
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("part_bucket").parquet(path)
-    if (!fs.exists(marker)) {
-      val out = fs.create(marker, true)
-      try out.write(nParts.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+    if (stored.isEmpty) graft.FsOps.writeLongMarker(spark, path, marker, nParts)
   }
 
   /** Attach an upsert sink to a streaming aggregation: Update output mode

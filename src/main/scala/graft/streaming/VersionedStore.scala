@@ -454,43 +454,56 @@ object VersionedStore {
   def checkStore(spark: SparkSession, path: String,
                  keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "checkStore needs the store's key columns")
-    import graft.operators.StoreCheck.{report, row}
     val committed = versions(spark, path)
     val ckptVs = listVersions(spark, new Path(path, "checkpoint"))
+    graft.operators.StoreCheck.report(
+      sharedChecks(spark, path, keys, "", committed, ckptVs, ckptVs, committed))
+  }
 
-    val brokenReplays = committed.count { v =>
-      val base = ckptVs.filter(_ <= v).lastOption.getOrElse(0L)
+  /** The four invariants both audits check, each defined once over the
+    * log versions `vs` and the checkpoints `ckpts` it audits (`allCkpts`
+    * and `committed` supply the replay bases and ranges); `prefix` is ""
+    * for the deep audit (every version and checkpoint) and "delta_" for
+    * the incremental one (the contract on [[graft.operators.StoreCheck]]).
+    * Report order: `checkpoint_matches_log`, `commit_key_unique`,
+    * `op_wellformed`, `log_contiguous`. */
+  private def sharedChecks(spark: SparkSession, path: String, keys: Seq[String],
+                           prefix: String, vs: Seq[Long], ckpts: Seq[Long],
+                           allCkpts: Seq[Long], committed: Seq[Long]): Seq[DataFrame] = {
+    import graft.operators.StoreCheck.{row, emptyRow}
+    val brokenReplays = vs.count { v =>
+      val base = allCkpts.filter(_ <= v).lastOption.getOrElse(0L)
       !((base + 1) to v).forall(committed.contains)
     }
     val contiguous = spark.range(1).select(
-      lit("log_contiguous").as("invariant"),
-      lit(committed.size.toLong).as("checked"),
+      lit(s"${prefix}log_contiguous").as("invariant"),
+      lit(vs.size.toLong).as("checked"),
       lit(brokenReplays.toLong).as("violations"))
 
     val logChecks =
-      if (committed.isEmpty)
-        Seq(graft.operators.StoreCheck.emptyRow(spark, "commit_key_unique"),
-          graft.operators.StoreCheck.emptyRow(spark, "op_wellformed"))
+      if (vs.isEmpty)
+        Seq(emptyRow(spark, s"${prefix}commit_key_unique"),
+          emptyRow(spark, s"${prefix}op_wellformed"))
       else {
-        val log = graft.FsOps.readParquet(spark, committed.map(v => s"$path/log/v=$v"),
+        val log = graft.FsOps.readParquet(spark, vs.map(v => s"$path/log/v=$v"),
           basePath = Some(s"$path/log"))
           .withColumn("__v", col("v").cast("long")).drop("v")
         Seq(
-          row("commit_key_unique",
+          row(s"${prefix}commit_key_unique",
             log.groupBy(col("__v") +: keys.map(col): _*)
               .agg(count(lit(1)).as("c"))
               .agg(count(lit(1)).as("checked"),
                 sum(when(col("c") > 1, 1L).otherwise(0L)).as("violations"))),
-          row("op_wellformed",
+          row(s"${prefix}op_wellformed",
             log.agg(count(lit(1)).as("checked"),
               sum(when(!col(OpCol).isin("u", DeleteOp), 1L).otherwise(0L))
                 .as("violations"))))
       }
 
     val ckptCheck = checkpointsVsReplay(spark, path, keys,
-      "checkpoint_matches_log", ckptVs, ckptVs, committed)
+      s"${prefix}checkpoint_matches_log", ckpts, allCkpts, committed)
 
-    report(Seq(ckptCheck) ++ logChecks :+ contiguous)
+    Seq(ckptCheck) ++ logChecks :+ contiguous
   }
 
   /** One report row auditing EVERY checkpoint in `audit`, each against
@@ -529,15 +542,13 @@ object VersionedStore {
           sum(col("violations")).as("violations")))
   }
 
-  // ---- audit bookkeeping: `_last_audit` records the highest log version
-  // an audit has vouched for — the versioned-store face of the same
-  // daily/deep audit split the other three families carry. One-long
-  // driver-side text file, same discipline as the index store's markers
-  // (graft.index.Indexer.LastAuditMarker); no separate `_lastbatch` twin
-  // is needed here because the log's `v=` directories ARE the store's
-  // native batch ordinals.
+  // ---- audit bookkeeping: the audit watermark
+  // (graft.operators.StoreCheck.lastAudited) records the highest log
+  // version an audit has vouched for — the versioned-store face of the
+  // same daily/deep audit split the other three families carry; no
+  // separate `_lastbatch` twin is needed here because the log's `v=`
+  // directories ARE the store's native batch ordinals.
 
-  private val LastAuditMarker = "_last_audit"
   private val AuditedCkptsMarker = "_audited_ckpts"
 
   /** The checkpoint versions a past audit has vouched for. Recorded as
@@ -565,26 +576,21 @@ object VersionedStore {
 
   /** Highest log version an audit has vouched for (None = never audited). */
   def lastAudited(spark: SparkSession, path: String): Option[Long] =
-    graft.FsOps.readLongMarker(spark, path, LastAuditMarker)
+    graft.operators.StoreCheck.lastAudited(spark, path)
 
   /** Record that every commit up to version `upTo` (default: the newest
     * committed version) has been audited, so the next
-    * [[checkStoreIncremental]] scopes to commits after it. Deliberately
-    * NOT advanced by the checkers themselves: an audit that mutates the
-    * store it audits would make a red report unrepeatable (same contract
-    * as the other three families' markAudited). */
+    * [[checkStoreIncremental]] scopes to commits after it. */
   def markAudited(spark: SparkSession, path: String,
                   upTo: Option[Long] = None): Unit = {
     // default upTo falls back to the newest CHECKPOINT when the whole
     // log was vacuumed away — the same committed-state contract as
     // hasCommits/newestVersion, so `mark-audited` after
     // vacuum(retain=newest) works on a healthy checkpoint-only store
-    val v = upTo.orElse(versions(spark, path).lastOption)
-      .orElse(listVersions(spark, new Path(path, "checkpoint")).lastOption)
-      .getOrElse(
-        throw new IllegalStateException(s"markAudited: no commits at $path — " +
-          "an empty store has nothing to vouch for"))
-    graft.FsOps.writeLongMarker(spark, path, LastAuditMarker, v)
+    val v = graft.operators.StoreCheck.markAudited(spark, path, upTo,
+      versions(spark, path).lastOption
+        .orElse(listVersions(spark, new Path(path, "checkpoint")).lastOption),
+      s"no commits at $path — an empty store has nothing to vouch for")
     // also vouch for the CHECKPOINTS the audit covered: those at
     // versions ≤ v that exist right now. Recorded as a set so a
     // checkpoint later materialized at an old version still reads as
@@ -602,18 +608,14 @@ object VersionedStore {
     * (no marker, no `sinceVersion`) audits everything — incremental
     * against an empty vouched set IS the deep audit.
     *
-    *   - `delta_commit_key_unique` / `delta_op_wellformed` — the log-row
-    *     invariants over delta commits only.
-    *   - `delta_log_contiguous` — replay-range completeness for each
-    *     delta version (version lists are driver-side metadata, so the
-    *     full committed list is free to consult).
-    *   - `delta_checkpoint_matches_log` — EVERY checkpoint newer than
-    *     the vouched version is audited against its own
-    *     predecessor-basis replay (a checkpoint written since the last
-    *     audit is new derived state; one vouched by a prior audit is
-    *     not re-derived daily). `checked = 0` when there is no new
-    *     checkpoint, or when a vacuum dropped a replay basis (same
-    *     unauditable-state convention as [[checkStore]]).
+    * Every row is one of [[checkStore]]'s four, `delta_`-prefixed and
+    * defined once for both audits (the contract on
+    * [[graft.operators.StoreCheck]]), over the delta commits and over
+    * EVERY checkpoint the last audit did not vouch for (a checkpoint
+    * written since the last audit is new derived state; one vouched by
+    * a prior audit is not re-derived daily). Version lists are
+    * driver-side metadata, so replay ranges consult the full committed
+    * list.
     *
     * Scale: one pass over delta log partitions + one
     * checkpoint-vs-replay diff per SINCE-AUDIT checkpoint (normally 0
@@ -623,41 +625,9 @@ object VersionedStore {
                             keys: Seq[String],
                             sinceVersion: Option[Long] = None): DataFrame = {
     require(keys.nonEmpty, "checkStoreIncremental needs the store's key columns")
-    import graft.operators.StoreCheck.{report, row, emptyRow}
     val since = sinceVersion.orElse(lastAudited(spark, path)).getOrElse(0L)
     val committed = versions(spark, path)
     val ckptVs = listVersions(spark, new Path(path, "checkpoint"))
-    val deltaVs = committed.filter(_ > since)
-
-    val brokenReplays = deltaVs.count { v =>
-      val base = ckptVs.filter(_ <= v).lastOption.getOrElse(0L)
-      !((base + 1) to v).forall(committed.contains)
-    }
-    val contiguous = spark.range(1).select(
-      lit("delta_log_contiguous").as("invariant"),
-      lit(deltaVs.size.toLong).as("checked"),
-      lit(brokenReplays.toLong).as("violations"))
-
-    val logChecks =
-      if (deltaVs.isEmpty)
-        Seq(emptyRow(spark, "delta_commit_key_unique"),
-          emptyRow(spark, "delta_op_wellformed"))
-      else {
-        val log = graft.FsOps.readParquet(spark, deltaVs.map(v => s"$path/log/v=$v"),
-          basePath = Some(s"$path/log"))
-          .withColumn("__v", col("v").cast("long")).drop("v")
-        Seq(
-          row("delta_commit_key_unique",
-            log.groupBy(col("__v") +: keys.map(col): _*)
-              .agg(count(lit(1)).as("c"))
-              .agg(count(lit(1)).as("checked"),
-                sum(when(col("c") > 1, 1L).otherwise(0L)).as("violations"))),
-          row("delta_op_wellformed",
-            log.agg(count(lit(1)).as("checked"),
-              sum(when(!col(OpCol).isin("u", DeleteOp), 1L).otherwise(0L))
-                .as("violations"))))
-      }
-
     // EVERY checkpoint the last audit did not vouch for is new derived
     // state — audit each (not just the newest: an intermediate one could
     // otherwise hide behind a later checkpoint derived from it; and not
@@ -666,9 +636,7 @@ object VersionedStore {
     val vouched =
       if (sinceVersion.isDefined) ckptVs.filter(_ <= since).toSet
       else vouchedCkpts(spark, path, ckptVs, since)
-    val ckptCheck = checkpointsVsReplay(spark, path, keys,
-      "delta_checkpoint_matches_log", ckptVs.filterNot(vouched), ckptVs, committed)
-
-    report(Seq(ckptCheck) ++ logChecks :+ contiguous)
+    graft.operators.StoreCheck.report(sharedChecks(spark, path, keys, "delta_",
+      committed.filter(_ > since), ckptVs.filterNot(vouched), ckptVs, committed))
   }
 }

@@ -575,6 +575,25 @@ class IndexStoreSpec extends SparkSpec {
     faces(live2.unionByName(b3), "re-append")
   }
 
+  test("bucket markers go through FsOps: the swap aside is recovered, an empty marker fails by name") {
+    val docs = Tables.load(spark, sf0001, "documents")
+    val path = Files.createTempDirectory("ixnbmarker").toString
+    Indexer.writeIndex(Indexer.buildIndex(docs.limit(50)), path, nBuckets = 16)
+    assert(Indexer.storedBuckets(spark, path) === Some(16))
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the swap's crash window: the recorded count survives only as the
+    // aside — the store still reads as committed with its own layout
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$path/_nbuckets"),
+      new org.apache.hadoop.fs.Path(s"$path/__nbuckets.swap_old")))
+    assert(Indexer.storedBuckets(spark, path) === Some(16))
+    // an empty marker (what a truncating in-place write leaves behind on
+    // a crash) fails with FsOps' named error, not a bare parse exception
+    fs.create(new org.apache.hadoop.fs.Path(s"$path/_nbuckets"), true).close()
+    val e = intercept[IllegalStateException](Indexer.storedBuckets(spark, path))
+    assert(e.getMessage.contains(s"corrupt marker $path/_nbuckets"), e.getMessage)
+  }
+
   test("checkStore: healthy lifecycle store passes; corruption detected; repair restores") {
     val docs = Tables.load(spark, sf0001, "documents")
     val path = Files.createTempDirectory("ixfsck").toString

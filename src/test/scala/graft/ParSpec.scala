@@ -36,4 +36,23 @@ class ParSpec extends AnyFunSuite {
         "both actions must have exited when Par.map returns")
     } finally release.countDown()
   }
+
+  test("nested Par.map shares one process-wide budget: at most 8 leaves run at once, every leaf runs") {
+    val running = new AtomicInteger(0)
+    val peak = new AtomicInteger(0)
+    val ran = new AtomicInteger(0)
+    val out = Par.map(1 to 3) { i =>
+      Par.map(1 to 8) { j =>
+        peak.accumulateAndGet(running.incrementAndGet(), (a, b) => math.max(a, b))
+        try Thread.sleep(50) finally running.decrementAndGet()
+        ran.incrementAndGet()
+        (i, j)
+      }
+    }
+    assert(ran.get === 24, "every leaf runs")
+    assert(out.flatten === (for (i <- 1 to 3; j <- 1 to 8) yield (i, j)),
+      "results keep input order")
+    assert(peak.get <= 8, s"${peak.get} leaves ran at once")
+    assert(peak.get > 1, "the leaves still overlap")
+  }
 }

@@ -166,23 +166,68 @@ class StoreReadSpec extends SparkSpec {
     assert(outside.size === 0, s"of ${jobs.size} jobs, these ran outside a query")
   }
 
-  test("no raw parquet read in the main sources outside FsOps.readParquet") {
+  private def mainSources: Seq[(java.io.File, String)] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory)
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
       else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    files(root).map(f => f -> new String(Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
+  private def lineOf(src: String, at: Int): Int = src.take(at).count(_ == '\n') + 1
+
+  test("no raw parquet read in the main sources outside FsOps.readParquet") {
     val raw = """\bread\s*\.\s*(option\([^)]*\)\s*\.\s*)*parquet\(""".r
     // Bench keeps its own timing path; the mergeSchema read is the one
     // read that asks Spark to merge every footer
     val allowed = Set("FsOps.scala", "Bench.scala")
     val hits = for {
-      f <- files(root) if !allowed(f.getName)
-      src = new String(Files.readAllBytes(f.toPath), "UTF-8")
+      (f, src) <- mainSources if !allowed(f.getName)
       m <- raw.findAllMatchIn(src)
       if !(f.getName == "SearchQueries.scala" &&
         m.matched.startsWith("read.option(\"mergeSchema\", \"true\")"))
-    } yield s"${f.getPath}:${src.take(m.start).count(_ == '\n') + 1}"
+    } yield s"${f.getPath}:${lineOf(src, m.start)}"
     assert(hits.isEmpty, s"raw parquet reads:\n${hits.mkString("\n")}")
+  }
+
+  test("no FileSystem create/open in the main sources outside FsOps") {
+    // every marker is written tmp-first and swapped in, and read back with
+    // the swap-aside fallback, only by FsOps; a hand-rolled create()
+    // truncates the old value before the new bytes land
+    val call = """(\w*)\s*\.\s*(create|open)\s*\(""".r
+    val notFileSystem = Set("UnsafeProjection", "RowOrdering")
+    val hits = for {
+      (f, src) <- mainSources
+      // TSV data files, not markers
+      if !Set("FsOps.scala", "TsvTableProvider.scala")(f.getName)
+      m <- call.findAllMatchIn(src) if !notFileSystem(m.group(1))
+      line = src.linesIterator.drop(lineOf(src, m.start) - 1).next()
+      // Forget's empty `_done_*`/`_complete` presence files carry no value
+      if !(f.getName == "Forget.scala" &&
+        (line.contains("_done_") || line.contains("_complete")))
+    } yield s"${f.getPath}:${lineOf(src, m.start)}"
+    assert(hits.isEmpty, s"FileSystem create/open outside FsOps:\n${hits.mkString("\n")}")
+  }
+
+  test("no Path built from a .swap_old name in the main sources outside FsOps") {
+    // the aside of a marker swap is FsOps' business (read fallback,
+    // deleteMarker, healStaleAsides); Frames.gc sweeps its manifests'
+    // asides by listing. Error-message text naming an aside is no Path.
+    val pathCall = """\bPath\s*\(""".r
+    def argsOf(src: String, open: Int): String = {
+      var depth = 1
+      var i = open
+      while (i < src.length && depth > 0) {
+        if (src(i) == '(') depth += 1 else if (src(i) == ')') depth -= 1
+        i += 1
+      }
+      src.substring(open, i)
+    }
+    val hits = for {
+      (f, src) <- mainSources if !Set("FsOps.scala", "Frames.scala")(f.getName)
+      m <- pathCall.findAllMatchIn(src) if argsOf(src, m.end).contains("swap_old")
+    } yield s"${f.getPath}:${lineOf(src, m.start)}"
+    assert(hits.isEmpty, s"swap-aside paths outside FsOps:\n${hits.mkString("\n")}")
   }
 }
