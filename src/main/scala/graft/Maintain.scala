@@ -114,7 +114,8 @@ object Maintain {
       if (!posDocBucketed &&
           pos.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pos))
         Seq(() => { operators.Compaction.compactPartitionsRecursive(spark,
-          s"$path/positional", rangeBy = batchRange("positional")); () })
+          s"$path/positional", rangeBy = batchRange("positional"),
+          rowOrder = index.Indexer.RowOrder("positional")); () })
       else Seq.empty
     val flatSteps: Seq[() => Unit] =
       if (docBucketed) Seq.empty
@@ -122,9 +123,11 @@ object Maintain {
         // per-table: the term-bucketed tables leaf by leaf (layout
         // preserved), the flat tables in place
         () => { operators.Compaction.compactPartitionsRecursive(spark,
-          s"$path/postings", rangeBy = batchRange("postings")); () },
+          s"$path/postings", rangeBy = batchRange("postings"),
+          rowOrder = index.Indexer.RowOrder("postings")); () },
         () => { operators.Compaction.compact(spark, s"$path/doc_stats",
-          rangeBy = batchRange("doc_stats")); () })
+          rangeBy = batchRange("doc_stats"),
+          rowOrder = index.Indexer.RowOrder("doc_stats")); () })
     operators.Par.run(flatSteps ++ posStep: _*)
   }
 

@@ -41,7 +41,7 @@ object Corpus {
              idCol: String = "doc_id", titleCol: String = "title",
              textCol: String = "text"): DataFrame = {
     val prepared = prepare(df, limit, idCol, titleCol, textCol)
-    prepared.write.mode("overwrite").parquet(s"$outDir/corpus")
+    graft.FsOps.writeParquet(prepared, s"$outDir/corpus")
     if (writeTsv)
       TsvCorpus.write(prepared, s"$outDir/corpus_tsv",
         idCol = "doc_id", titleCol = "title", textCol = "clean_text")

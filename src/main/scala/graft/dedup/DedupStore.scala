@@ -158,12 +158,11 @@ object DedupStore {
       s"writeSignatures: $path carries a frame-installed store (_frame " +
         "pointer) — delete the store before rebuilding over it")
     val sets = Dedup.shingleSets(Dedup.shingles(corpus, idCol, textCol, shingleN))
-    sets.withColumn("batch", lit(0L))
-      .write.mode("overwrite").parquet(s"$path/sets")
+    graft.FsOps.writeParquet(sets.withColumn("batch", lit(0L)), s"$path/sets")
     val stored = graft.FsOps.readParquet(corpus.sparkSession, s"$path/sets")
-    deriveBuckets(stored, numHashes, bands)
-      .withColumn("batch", lit(0L))
-      .write.mode("overwrite").parquet(s"$path/buckets")
+    graft.FsOps.writeParquet(
+      deriveBuckets(stored, numHashes, bands).withColumn("batch", lit(0L)),
+      s"$path/buckets")
     writeGeometry(corpus.sparkSession, path, numHashes, bands)
     graft.FsOps.writeLongMarker(corpus.sparkSession, path, ShingleMarker, shingleN.toLong)
     graft.FsOps.writeLongMarker(corpus.sparkSession, path, LastBatchMarker, 0L)
@@ -207,9 +206,9 @@ object DedupStore {
         Dedup.shingles(newBatch, idCol, textCol, shingleN))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     graft.operators.Par.run(
-      () => setsDf.write.mode("overwrite").parquet(s"$staged/sets"),
-      () => deriveBuckets(setsDf, numHashes, bands)
-        .write.mode("overwrite").parquet(s"$staged/buckets"))
+      () => graft.FsOps.writeParquet(setsDf, s"$staged/sets"),
+      () => graft.FsOps.writeParquet(deriveBuckets(setsDf, numHashes, bands),
+        s"$staged/buckets"))
     setsDf.unpersist()
     val newSets = graft.FsOps.readParquet(spark, s"$staged/sets")
     val newBuckets = graft.FsOps.readParquet(spark, s"$staged/buckets")
@@ -236,7 +235,7 @@ object DedupStore {
       .filter(col("jaccard") >= minJaccard)
       .select(col("new_id"), col("dup_of"), col("jaccard"))
 
-    dups.write.mode("overwrite").parquet(s"$path/_last_ingest")
+    graft.FsOps.writeParquet(dups, s"$path/_last_ingest")
     val report = graft.FsOps.readParquet(spark, s"$path/_last_ingest")
 
     val dupIds = report.select(col("new_id").as("doc_id")).distinct()
@@ -252,10 +251,10 @@ object DedupStore {
     // lost" — the exact shape the streaming replay detects and
     // refreshBuckets repairs); reordering it would create a new,
     // unhandled crash shape for a ~2-job win
-    tag(newSets.join(dupIds, Seq("doc_id"), "left_anti"))
-      .write.mode("append").parquet(setsDir)
-    tag(newBuckets.join(dupIds, Seq("doc_id"), "left_anti"))
-      .write.mode("append").parquet(bucketsDir)
+    graft.FsOps.writeParquet(tag(newSets.join(dupIds, Seq("doc_id"), "left_anti")),
+      setsDir, "append")
+    graft.FsOps.writeParquet(tag(newBuckets.join(dupIds, Seq("doc_id"), "left_anti")),
+      bucketsDir, "append")
     batchId.foreach(b => graft.FsOps.writeLongMarker(spark, path, LastBatchMarker, b))
     new Path(staged).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(new Path(staged), true)
@@ -386,9 +385,8 @@ object DedupStore {
     // the two table rewrites stage at disjoint dirs — overlap them
     // (guide §2.6); the frame still flips only after both landed
     graft.operators.Par.run(Tables.map(t => () =>
-      graft.FsOps.readParquet(spark, tablePath(spark, path, t))
-        .join(rm, Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(stage.stageDir(t))): _*)
+      graft.FsOps.writeParquet(graft.FsOps.readParquet(spark, tablePath(spark, path, t))
+        .join(rm, Seq("doc_id"), "left_anti"), stage.stageDir(t))): _*)
     stage.commit() // the flip: both rewrites install together
   }
 
@@ -597,7 +595,7 @@ object DedupStore {
     // its current generation — no O(store) copy of the big table): only
     // the re-derived buckets stage, one pointer flip installs
     val stage = graft.operators.Frames.begin(spark, path, Tables)
-    withBatch.write.mode("overwrite").parquet(stage.stageDir("buckets"))
+    graft.FsOps.writeParquet(withBatch, stage.stageDir("buckets"))
     stage.commit()
   }
 
@@ -694,8 +692,8 @@ object DedupStore {
             ingest(spark, path, fresh, minJaccard, idCol, textCol,
               shingleN, numHashes, bands)
           }
-        report.withColumn("batch_id", lit(id))
-          .write.mode("overwrite").parquet(s"$path/reports/batch=$id")
+        graft.FsOps.writeParquet(report.withColumn("batch_id", lit(id)),
+          s"$path/reports/batch=$id")
       }
       .option("checkpointLocation", checkpoint)
       .start()

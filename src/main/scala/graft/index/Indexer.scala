@@ -182,12 +182,9 @@ object Indexer {
         spark.sql(s"DROP TABLE IF EXISTS " +
           s"`${catalogTableName(spark, path, "positional")}`")
         graft.FsOps.deleteMarker(spark, path, PositionalDocBucketsMarker)
-        tagged
+        writeTable(tagged
           .withColumn("term_bucket", termBucket(col("term"), nBuckets))
-          .repartition(nBuckets, col("term_bucket"))
-          .write.mode("overwrite")
-          .partitionBy("term_bucket")
-          .parquet(s"$path/positional")
+          .repartition(nBuckets, col("term_bucket")), "positional", s"$path/positional")
     }
     // start the batch sequence ONLY for a standalone positional store —
     // writing the marker beside a LEGACY (pre-batch-tracking) frequency
@@ -280,19 +277,16 @@ object Indexer {
         writeBucketsMarker(ix.postings.sparkSession, path, db, DocBucketsMarker)
       case None =>
         graft.operators.Par.run(
-          () => ix.docStats.withColumn("batch", lit(0L))
-            .write.mode("overwrite").parquet(s"$path/doc_stats"),
-          () => ix.postings
+          () => writeTable(ix.docStats.withColumn("batch", lit(0L)),
+            "doc_stats", s"$path/doc_stats"),
+          () => writeTable(ix.postings
             .withColumn("batch", lit(0L))
             .withColumn("term_bucket", termBucket(col("term"), nBuckets))
             // co-locate each bucket's rows in one task before the partitioned
             // write: without this every task writes a file into every bucket
             // dir (tasks × buckets small files — measured dominating the store
             // write); with it, one file per bucket
-            .repartition(nBuckets, col("term_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(s"$path/postings"))
+            .repartition(nBuckets, col("term_bucket")), "postings", s"$path/postings"))
     }
     // derive the small tables from the JUST-PERSISTED copies: vocab/meta
     // over the original lineages would re-run the whole tokenize/explode/
@@ -309,11 +303,10 @@ object Indexer {
     // vocab and meta read DIFFERENT just-persisted tables: independent,
     // overlap them (guide §2.6)
     graft.operators.Par.run(
-      () => vocab(graft.FsOps.readParquet(spark, s"$path/postings")
-        .select("term", "doc_id", "tf"))
-        .write.mode("overwrite").parquet(s"$path/vocab"),
-      () => meta(graft.FsOps.readParquet(spark, s"$path/doc_stats"))
-        .write.mode("overwrite").parquet(s"$path/meta"))
+      () => writeTable(vocab(graft.FsOps.readParquet(spark, s"$path/postings")
+        .select("term", "doc_id", "tf")), "vocab", s"$path/vocab"),
+      () => writeTable(meta(graft.FsOps.readParquet(spark, s"$path/doc_stats")),
+        "meta", s"$path/meta"))
     writeBucketsMarker(spark, path, nBuckets)
     graft.FsOps.writeLongMarker(spark, path, LastBatchMarker, 0L)
   }
@@ -380,25 +373,19 @@ object Indexer {
           partitioned = false)
         val poName = registerBucketedTable(spark, path, "postings", db,
           partitioned = true)
-        (() => tag(delta.docStats).repartition(db, col("doc_id"))
-            .write.format("parquet")
-            .bucketBy(db, "doc_id").sortBy("doc_id")
-            .mode("append").saveAsTable(dsName),
-          () => tag(delta.postings)
+        (() => graft.FsOps.saveBucketedTable(
+            tag(delta.docStats).repartition(db, col("doc_id")), dsName, db,
+            "doc_id", "append"),
+          () => graft.FsOps.saveBucketedTable(tag(delta.postings)
             .withColumn("term_bucket", termBucket(col("term"), nb))
-            .repartition(db, col("doc_id"))
-            .write.format("parquet")
-            .partitionBy("term_bucket")
-            .bucketBy(db, "doc_id").sortBy("doc_id")
-            .mode("append").saveAsTable(poName))
+            .repartition(db, col("doc_id")), poName, db, "doc_id", "append",
+            partitionBy = Seq("term_bucket")))
       case None =>
-        (() => tag(delta.docStats).write.mode("append").parquet(s"$path/doc_stats"),
-          () => tag(delta.postings)
+        (() => writeTable(tag(delta.docStats), "doc_stats", s"$path/doc_stats", "append"),
+          () => writeTable(tag(delta.postings)
             .withColumn("term_bucket", termBucket(col("term"), nb))
-            .repartition(nb, col("term_bucket"))
-            .write.mode("append")
-            .partitionBy("term_bucket")
-            .parquet(s"$path/postings"))
+            .repartition(nb, col("term_bucket")), "postings", s"$path/postings",
+            "append"))
     }
     // a CO-LOCATED positional table must grow with the same batch —
     // otherwise the phrase/proximity faces would silently miss the
@@ -488,20 +475,15 @@ object Indexer {
         // exchange-free rollup valid across appends)
         val name = registerBucketedTable(spark, path, "positional", db,
           partitioned = true)
-        tagged
+        graft.FsOps.saveBucketedTable(tagged
           .withColumn("term_bucket", termBucket(col("term"), nb))
-          .repartition(db, col("doc_id"))
-          .write.format("parquet")
-          .partitionBy("term_bucket")
-          .bucketBy(db, "doc_id").sortBy("doc_id")
-          .mode("append").saveAsTable(name)
+          .repartition(db, col("doc_id")), name, db, "doc_id", "append",
+          partitionBy = Seq("term_bucket"))
       case None =>
-        tagged
+        writeTable(tagged
           .withColumn("term_bucket", termBucket(col("term"), nb))
-          .repartition(nb, col("term_bucket"))
-          .write.mode("append")
-          .partitionBy("term_bucket")
-          .parquet(s"$path/positional")
+          .repartition(nb, col("term_bucket")), "positional", s"$path/positional",
+          "append")
     }
     if (standalone && !coTrackedBackfill)
       b.foreach(x => graft.FsOps.writeLongMarker(spark, path, LastBatchMarker, x))
@@ -555,13 +537,12 @@ object Indexer {
           graft.FsOps.readParquet(spark, s"$path/postings").filter(col("batch") <= marker),
           db, partitioned = true)
       case None =>
-        ds.filter(col("batch") <= marker)
-          .write.mode("overwrite").parquet(s"$path/doc_stats_tmp")
+        writeTable(ds.filter(col("batch") <= marker), "doc_stats",
+          s"$path/doc_stats_tmp")
         val nb = storedBuckets(spark, path).getOrElse(64)
-        graft.FsOps.readParquet(spark, s"$path/postings").filter(col("batch") <= marker)
-          .repartition(nb, col("term_bucket"))
-          .write.mode("overwrite").partitionBy("term_bucket")
-          .parquet(s"$path/postings_tmp")
+        writeTable(graft.FsOps.readParquet(spark, s"$path/postings")
+          .filter(col("batch") <= marker)
+          .repartition(nb, col("term_bucket")), "postings", s"$path/postings_tmp")
         swapTable(spark, path, "doc_stats")
         swapTable(spark, path, "postings")
     }
@@ -572,10 +553,9 @@ object Indexer {
             posDf.filter(col("batch") <= marker), db, partitioned = true)
         case None =>
           val pnb = storedPositionalBuckets(spark, path).getOrElse(64)
-          posDf.filter(col("batch") <= marker)
-            .repartition(pnb, col("term_bucket"))
-            .write.mode("overwrite").partitionBy("term_bucket")
-            .parquet(s"$path/positional_tmp")
+          writeTable(posDf.filter(col("batch") <= marker)
+            .repartition(pnb, col("term_bucket")), "positional",
+            s"$path/positional_tmp")
           swapTable(spark, path, "positional")
       }
     }
@@ -609,24 +589,23 @@ object Indexer {
     // the two staged tables derive from independent inputs — overlap
     // them (guide §2.6); the frame still commits only after both landed
     graft.operators.Par.run(
-      () => graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "vocab"))
+      () => writeTable(graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "vocab"))
         .select("term", "df")
         .unionByName(vocab(delta.postings))
-        .groupBy("term").agg(sum(col("df")).as("df"))
-        .write.mode("overwrite").parquet(stage.stageDir("vocab")),
+        .groupBy("term").agg(sum(col("df")).as("df")), "vocab", stage.stageDir("vocab")),
       () => {
         val deltaMeta = delta.docStats.agg(
           count(lit(1)).as("d_n"),
           coalesce(sum(col("length")).cast("long"), lit(0L)).as("d_sum"))
-        storedMeta.crossJoin(deltaMeta)
+        writeTable(storedMeta.crossJoin(deltaMeta)
           .select(
             (col("total_docs") + col("d_n")).as("total_docs"),
             // an empty merged store nulls avg_dl exactly like meta() over zero rows
             when(col("total_docs") + col("d_n") === 0, lit(null).cast("double"))
               .otherwise((col("length_sum") + col("d_sum")).cast("double") /
                 (col("total_docs") + col("d_n"))).as("avg_dl"),
-            (col("length_sum") + col("d_sum")).as("length_sum"))
-          .write.mode("overwrite").parquet(stage.stageDir("meta"))
+            (col("length_sum") + col("d_sum")).as("length_sum")),
+          "meta", stage.stageDir("meta"))
       })
     stage.commit()
   }
@@ -655,10 +634,9 @@ object Indexer {
     val live = readIndexLive(spark, path)
     val stage = graft.operators.Frames.begin(spark, path, DerivedTables)
     graft.operators.Par.run(
-      () => vocab(live.postings.select("term", "doc_id", "tf"))
-        .write.mode("overwrite").parquet(stage.stageDir("vocab")),
-      () => meta(live.docStats).write.mode("overwrite")
-        .parquet(stage.stageDir("meta")))
+      () => writeTable(vocab(live.postings.select("term", "doc_id", "tf")),
+        "vocab", stage.stageDir("vocab")),
+      () => writeTable(meta(live.docStats), "meta", stage.stageDir("meta")))
     stage.commit()
   }
 
@@ -717,6 +695,28 @@ object Indexer {
       s"'$table' is not a framed derived table: $DerivedTables")
     graft.operators.Frames.resolve(spark, path, table)
   }
+
+  /** Within-file row order of each index table, declared once: every
+    * plain-layout write of a table goes through [[writeTable]], which
+    * applies it — postings and positional rows in `(term, doc_id)` order
+    * inside each `term_bucket` file, vocab in `term` order, doc_stats in
+    * `doc_id` order. Sorted postings compress (one term repeats down the
+    * column, doc ids climb in small steps). The doc-bucketed layout keeps
+    * its own `sortBy(doc_id)`. */
+  private[graft] val RowOrder: Map[String, Seq[String]] = Map(
+    "postings" -> Seq("term", "doc_id"), "positional" -> Seq("term", "doc_id"),
+    "vocab" -> Seq("term"), "doc_stats" -> Seq("doc_id"))
+
+  /** Write one plain-layout index table `table` at `dir` (its root, a
+    * `_tmp` sibling or a staged frame generation) through the store's one
+    * write entry ([[graft.FsOps.writeParquet]]) in its declared
+    * [[RowOrder]]; postings and positional partition by `term_bucket`. */
+  private[graft] def writeTable(df: DataFrame, table: String, dir: String,
+                                mode: String = "overwrite"): Unit =
+    graft.FsOps.writeParquet(df, dir, mode,
+      partitionBy = if (table == "postings" || table == "positional")
+        Seq("term_bucket") else Nil,
+      rowOrder = RowOrder.getOrElse(table, Nil))
 
   /** Soft-delete documents from a persisted index store — Lucene-style
     * tombstones: the doc ids append into a `deletes` side table and the
@@ -780,7 +780,7 @@ object Indexer {
     val storedMeta = graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "meta"))
     if (!storedMeta.columns.contains("length_sum")) {
       // store predates the mergeable meta layout: tombstone + full recompute
-      newDead.write.mode("append").parquet(s"$path/deletes")
+      writeTable(newDead, "deletes", s"$path/deletes", "append")
       newDead.unpersist()
       refreshDerived(spark, path)
       return
@@ -796,31 +796,31 @@ object Indexer {
     // the staged vocab decrement (postings pass) and meta decrement
     // (doc_stats pass) read different tables — overlap them (guide §2.6)
     graft.operators.Par.run(
-      () => graft.FsOps.readParquet(spark, s"$path/postings").select("term", "doc_id")
+      () => writeTable(graft.FsOps.readParquet(spark, s"$path/postings").select("term", "doc_id")
         .join(newDead, Seq("doc_id"), "left_semi")
         .groupBy("term").agg(count(lit(1)).as("dead_df"))
         .join(graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "vocab"))
           .select("term", "df"), Seq("term"), "right_outer")
         .select(col("term"),
           (col("df") - coalesce(col("dead_df"), lit(0L))).as("df"))
-        .filter(col("df") > 0) // a term with no live doc left drops, like a fresh build
-        .write.mode("overwrite").parquet(stage.stageDir("vocab")),
+        .filter(col("df") > 0), // a term with no live doc left drops, like a fresh build
+        "vocab", stage.stageDir("vocab")),
       () => {
         val deadStats = graft.FsOps.readParquet(spark, s"$path/doc_stats")
           .join(newDead, Seq("doc_id"), "left_semi")
           .agg(count(lit(1)).as("d_n"),
             coalesce(sum(col("length")).cast("long"), lit(0L)).as("d_sum"))
-        storedMeta.crossJoin(deadStats)
+        writeTable(storedMeta.crossJoin(deadStats)
           .select(
             (col("total_docs") - col("d_n")).as("total_docs"),
             // an emptied store nulls avg_dl exactly like meta() over zero rows
             when(col("total_docs") === col("d_n"), lit(null).cast("double"))
               .otherwise((col("length_sum") - col("d_sum")).cast("double") /
                 (col("total_docs") - col("d_n"))).as("avg_dl"),
-            (col("length_sum") - col("d_sum")).as("length_sum"))
-          .write.mode("overwrite").parquet(stage.stageDir("meta"))
+            (col("length_sum") - col("d_sum")).as("length_sum")),
+          "meta", stage.stageDir("meta"))
       })
-    newDead.write.mode("append").parquet(s"$path/deletes")
+    writeTable(newDead, "deletes", s"$path/deletes", "append")
     newDead.unpersist()
     stage.commit() // ONE flip installs the decremented pair together
   }
@@ -980,13 +980,10 @@ object Indexer {
       case Some(nb) => df.withColumn("term_bucket", termBucket(col("term"), nb))
       case None => df
     }
-    val w = withPart.repartition(db, col("doc_id"))
-      .write.format("parquet")
-      .bucketBy(db, "doc_id").sortBy("doc_id")
-      .option("path", qualifiedUri(spark, s"$path/$table").toString)
-      .mode("overwrite")
-    (if (termBuckets.isDefined) w.partitionBy("term_bucket") else w)
-      .saveAsTable(name)
+    graft.FsOps.saveBucketedTable(withPart.repartition(db, col("doc_id")), name,
+      db, "doc_id", "overwrite",
+      partitionBy = if (termBuckets.isDefined) Seq("term_bucket") else Nil,
+      location = Some(qualifiedUri(spark, s"$path/$table").toString))
   }
 
   /** Idempotently (re-)register the catalog entry for a doc-bucketed
@@ -1115,12 +1112,10 @@ object Indexer {
     spark.sql(s"DROP TABLE IF EXISTS `$tmpName`")
     val tmpLoc = new org.apache.hadoop.fs.Path(s"$path/${table}_tmp")
     tmpLoc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tmpLoc, true)
-    val w = df.repartition(db, col("doc_id"))
-      .write.format("parquet")
-      .bucketBy(db, "doc_id").sortBy("doc_id")
-      .option("path", qualifiedUri(spark, s"$path/${table}_tmp").toString)
-      .mode("overwrite")
-    (if (partitioned) w.partitionBy("term_bucket") else w).saveAsTable(tmpName)
+    graft.FsOps.saveBucketedTable(df.repartition(db, col("doc_id")), tmpName, db,
+      "doc_id", "overwrite",
+      partitionBy = if (partitioned) Seq("term_bucket") else Nil,
+      location = Some(qualifiedUri(spark, s"$path/${table}_tmp").toString))
     spark.sql(s"DROP TABLE IF EXISTS `$tmpName`")
     spark.sql(s"DROP TABLE IF EXISTS `${catalogTableName(spark, path, table)}`")
     swapTable(spark, path, table)
@@ -1225,14 +1220,12 @@ object Indexer {
           live.docStats, db, partitioned = false))
       case None => Seq(
         () => {
-          live.postings
-            .repartition(nb, col("term_bucket"))
-            .write.mode("overwrite").partitionBy("term_bucket")
-            .parquet(s"$path/postings_tmp")
+          writeTable(live.postings.repartition(nb, col("term_bucket")),
+            "postings", s"$path/postings_tmp")
           swapTable(spark, path, "postings")
         },
         () => {
-          live.docStats.write.mode("overwrite").parquet(s"$path/doc_stats_tmp")
+          writeTable(live.docStats, "doc_stats", s"$path/doc_stats_tmp")
           swapTable(spark, path, "doc_stats")
         })
     }
@@ -1249,10 +1242,8 @@ object Indexer {
               partitioned = true)
           case None =>
             val pnb = storedPositionalBuckets(spark, path).getOrElse(nBuckets)
-            livePos
-              .repartition(pnb, col("term_bucket"))
-              .write.mode("overwrite").partitionBy("term_bucket")
-              .parquet(s"$path/positional_tmp")
+            writeTable(livePos.repartition(pnb, col("term_bucket")),
+              "positional", s"$path/positional_tmp")
             swapTable(spark, path, "positional")
         }
       })

@@ -153,11 +153,10 @@ object StoreMerge {
     // the two derived merges read different source tables and write
     // disjoint dest dirs — overlap them (guide §2.6)
     graft.operators.Par.run(
-      () => sources.map(s => graft.FsOps.readParquet(spark, 
+      () => Indexer.writeTable(sources.map(s => graft.FsOps.readParquet(spark,
           Indexer.derivedTablePath(spark, s, "vocab"))).reduce(_ unionByName _)
-        .groupBy("term").agg(sum(col("df")).as("df"))
-        .write.mode("overwrite").parquet(s"$dest/vocab"),
-      () => sources.map(s => graft.FsOps.readParquet(spark, 
+        .groupBy("term").agg(sum(col("df")).as("df")), "vocab", s"$dest/vocab"),
+      () => Indexer.writeTable(sources.map(s => graft.FsOps.readParquet(spark,
           Indexer.derivedTablePath(spark, s, "meta"))).reduce(_ unionByName _)
         .agg(coalesce(sum(col("total_docs")), lit(0L)).as("total_docs"),
           coalesce(sum(col("length_sum")), lit(0L)).as("length_sum"))
@@ -165,8 +164,7 @@ object StoreMerge {
           when(col("total_docs") === 0L, lit(null).cast("double"))
             .otherwise(col("length_sum").cast("double") / col("total_docs"))
             .as("avg_dl"),
-          col("length_sum"))
-        .write.mode("overwrite").parquet(s"$dest/meta"))
+          col("length_sum")), "meta", s"$dest/meta"))
 
     // record the source list on the dest BEFORE any file moves — the
     // source-specific resume evidence completeHuskStamps verifies

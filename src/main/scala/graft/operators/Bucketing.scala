@@ -36,12 +36,8 @@ object Bucketing {
     // each task holds exactly one bucket's rows and writes one file —
     // otherwise every task writes into every bucket (tasks × buckets
     // small files)
-    df.repartition(nBuckets, df.col(key))
-      .write
-      .format("parquet")
-      .bucketBy(nBuckets, key)
-      .sortBy(key)
-      .saveAsTable(table) // managed table under spark.sql.warehouse.dir
+    graft.FsOps.saveBucketedTable(df.repartition(nBuckets, df.col(key)), table,
+      nBuckets, key, "errorifexists") // managed table under spark.sql.warehouse.dir
   }
 
   /** Join two same-bucketed catalog tables on their bucket key —

@@ -40,10 +40,16 @@ object Compaction {
     * watermark), so pre-audit files still prune on footer statistics
     * alone. Costs one exchange where coalesce costs none — the right
     * trade for a scheduled maintenance job whose output must keep the
-    * daily audit cheap. */
+    * daily audit cheap.
+    *
+    * `rowOrder` (optional): the table's declared within-file row order
+    * (e.g. [[graft.index.Indexer.RowOrder]]), so a rewrite keeps the
+    * order its family's writes give the table. It leads the within-file
+    * sort; the files still hold contiguous `rangeBy` ranges. */
   def compact(spark: SparkSession, path: String,
               targetBytes: Long = 128L * 1024 * 1024,
-              rangeBy: Seq[String] = Seq.empty): CompactionStats = {
+              rangeBy: Seq[String] = Seq.empty,
+              rowOrder: Seq[String] = Seq.empty): CompactionStats = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -88,12 +94,8 @@ object Compaction {
 
     val df = graft.FsOps.readParquet(spark, path)
     val sized =
-      if (rangeBy.nonEmpty) {
-        val cols = rangeBy.map(org.apache.spark.sql.functions.col)
-        // sortWithinPartitions tightens per-ROW-GROUP statistics too:
-        // inside a straddling file, pre-watermark row groups still skip
-        df.repartitionByRange(target, cols: _*).sortWithinPartitions(cols: _*)
-      }
+      if (rangeBy.nonEmpty)
+        df.repartitionByRange(target, rangeBy.map(df.col): _*)
       else if (target < dataFiles.length) df.coalesce(target)
       // target >= count: widening, or count-parity-but-imbalanced (the
       // skip above declined) — either way only a real exchange
@@ -103,7 +105,11 @@ object Compaction {
     // underscore prefix: invisible to concurrent readers of a partitioned
     // parent (and never parsed as a partition dir)
     val tmp = new Path(dir.getParent, s"_${dir.getName}.compact_tmp")
-    sized.write.mode("overwrite").parquet(tmp.toString)
+    // after a declared row order, the range columns order each file's
+    // rows; for a table without one that tightens per-ROW-GROUP
+    // statistics too: inside a straddling file, pre-watermark row groups
+    // still skip
+    graft.FsOps.writeParquet(sized, tmp.toString, rowOrder = rowOrder ++ rangeBy)
     graft.FsOps.atomicSwap(fs, dir, tmp)
 
     val installed = fs.listStatus(dir).filter { s =>
@@ -159,7 +165,8 @@ object Compaction {
     */
   def compactPartitions(spark: SparkSession, root: String,
                         targetBytes: Long = 128L * 1024 * 1024,
-                        rangeBy: Seq[String] = Seq.empty): Map[String, CompactionStats] = {
+                        rangeBy: Seq[String] = Seq.empty,
+                        rowOrder: Seq[String] = Seq.empty): Map[String, CompactionStats] = {
     val dir = new Path(root)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // each partition dir compacts (and swaps) independently — overlap
@@ -167,7 +174,7 @@ object Compaction {
     // chain of per-bucket listing+rewrite+swap steps
     val parts = partitionDirs(fs, dir)
     parts.map(_.getName).zip(Par.map(parts)(p =>
-      compact(spark, p.toString, targetBytes, rangeBy))).toMap
+      compact(spark, p.toString, targetBytes, rangeBy, rowOrder))).toMap
   }
 
   /** Multi-level variant: walk nested `k=v` directories down to the LEAF
@@ -181,7 +188,8 @@ object Compaction {
     */
   def compactPartitionsRecursive(spark: SparkSession, root: String,
                                  targetBytes: Long = 128L * 1024 * 1024,
-                                 rangeBy: Seq[String] = Seq.empty): Map[String, CompactionStats] = {
+                                 rangeBy: Seq[String] = Seq.empty,
+                                 rowOrder: Seq[String] = Seq.empty): Map[String, CompactionStats] = {
     val dir = new Path(root)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def leaves(p: Path): Seq[Path] = {
@@ -193,7 +201,7 @@ object Compaction {
     val leafDirs = partitionDirs(fs, dir).flatMap(leaves)
     leafDirs.map(_.toUri.getPath.stripPrefix(rootPrefix))
       .zip(Par.map(leafDirs)(p =>
-        compact(spark, p.toString, targetBytes, rangeBy))).toMap
+        compact(spark, p.toString, targetBytes, rangeBy, rowOrder))).toMap
   }
 
   /** Fragmentation ADVISOR over a store's table directories (VERDICT

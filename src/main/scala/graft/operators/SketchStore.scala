@@ -38,11 +38,11 @@ object SketchStore {
   def write(df: DataFrame, path: String, bucketCol: String, groupCol: String,
             keyCol: String, k: Int): Unit = {
     val kmv = udaf(new KMinValues(k), Encoders.scalaLong)
-    df.select(col(bucketCol).as("bucket"), col(groupCol).as("grp"),
-        Dedup.portableTokenHash(col(keyCol).cast("string")).as("h"))
-      .groupBy("bucket", "grp")
-      .agg(kmv(col("h")).as("sketch"))
-      .write.mode("overwrite").parquet(path)
+    graft.FsOps.writeParquet(
+      df.select(col(bucketCol).as("bucket"), col(groupCol).as("grp"),
+          Dedup.portableTokenHash(col(keyCol).cast("string")).as("h"))
+        .groupBy("bucket", "grp")
+        .agg(kmv(col("h")).as("sketch")), path)
   }
 
   /** Distinct-count estimate per group over any bucket subset, computed

@@ -101,10 +101,9 @@ object ZOrder {
   def writeZOrdered(df: DataFrame, path: String, xCol: String, yCol: String,
                     nFiles: Int, bits: Int = 16): Unit = {
     require(nFiles >= 1, s"nFiles must be >= 1, got $nFiles")
-    zOrdered(df, xCol, yCol, bits)
+    graft.FsOps.writeParquet(zOrdered(df, xCol, yCol, bits)
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
+      .drop("__z"), path)
   }
 }

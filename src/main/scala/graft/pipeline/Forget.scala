@@ -227,8 +227,8 @@ object Forget {
         val fams = familiesAt(spark, root)
         require(fams.nonEmpty,
           s"no store families (${Families.mkString("/")}) found under $root")
-        ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-          .write.mode("overwrite").parquet(s"$dir/ids")
+        FsOps.writeParquet(ids.select(col(idCol).cast("long").as("doc_id")).distinct(),
+          s"$dir/ids")
         FsOps.writeMarker(spark, dir, "_intent", fams.mkString(","))
         completeManifest(spark, root, ordinal, fams)
     }
@@ -342,109 +342,95 @@ object Forget {
     // each present family's id surface is consumed up to four times
     // below (one per surface pair + the forgotten-absent probe) —
     // compute it ONCE: at 100 TB re-deriving a surface per consumer is
-    // 3-4 full store scans per family per audit. persist() is released
-    // after the eager materialization at the bottom.
-    val liveCache: Map[String, DataFrame] =
-      fams.map(f => f -> liveIds(spark, root, f).persist()).toMap
-    val servedCache: Map[String, DataFrame] = fams.map {
-      // the vstore's SERVED surface (all history) differs from its live
-      // one; the other families' serve from the same live view
-      case "vstore" => "vstore" -> servedIds(spark, root, "vstore").persist()
-      case f => f -> liveCache(f)
-    }.toMap
-    // fill the surface caches CONCURRENTLY (guide §2.6) before the
-    // report's one big collect consumes them — left lazy, the surfaces
-    // materialize one by one inside that job's stage schedule
-    graft.operators.Par.run(
-      (liveCache.values ++ servedCache.get("vstore")).toSeq
-        .map(df => () => { df.count(); () }): _*)
+    // 3-4 full store scans per family per audit. StoreCheck.audit fills
+    // every cached frame concurrently before the report's collect and
+    // releases them after it.
+    StoreCheck.audit(spark) { cache =>
+      val liveCache: Map[String, DataFrame] =
+        fams.map(f => f -> cache(liveIds(spark, root, f))).toMap
+      val servedCache: Map[String, DataFrame] = fams.map {
+        // the vstore's SERVED surface (all history) differs from its live
+        // one; the other families' serve from the same live view
+        case "vstore" => "vstore" -> cache(servedIds(spark, root, "vstore"))
+        case f => f -> liveCache(f)
+      }.toMap
 
-    val manifestRow = spark.range(1).select(
-      lit("forget_manifests_complete").as("invariant"),
-      lit(ms.size.toLong).as("checked"),
-      lit(pendingCount.toLong).as("violations"))
+      val manifestRow = spark.range(1).select(
+        lit("forget_manifests_complete").as("invariant"),
+        lit(ms.size.toLong).as("checked"),
+        lit(pendingCount.toLong).as("violations"))
 
-    // distinct forgotten ids per family, across complete manifests only
-    // (a pending manifest's ids are *expected* to still be serving in
-    // the families its cascade has not reached — flagged by the row
-    // above, not double-counted here)
-    def forgottenFor(family: String): Option[DataFrame] = {
-      val dirs = ms.collect { case (n, fs, true) if fs.contains(family) =>
-        s"${manifestRoot(root)}/m=$n/ids" }
-      if (dirs.isEmpty) None
-      else Some(graft.FsOps.readParquet(spark, dirs: _*).select("doc_id").distinct())
-    }
-    // the index family's forgotten frame is consumed twice (its own
-    // absent row + the positional row below): same compute-once
-    // discipline as the surfaces — persisted, released in the finally
-    val forgottenCache: Map[String, Option[DataFrame]] = Families.map(f =>
-      f -> (if (fams.contains(f)) forgottenFor(f).map(_.persist())
-            else None)).toMap
-    val absentRows = Families.map { f =>
-      forgottenCache(f) match {
-        case Some(forgotten) =>
-          // forgotten sets are delete-batch-sized: broadcast them as the
-          // semi-join build side so the live surface streams through one
-          // scan instead of shuffling (left_semi is the join shape whose
-          // RIGHT side Spark will broadcast)
-          StoreCheck.row(s"forgotten_absent_$f",
-            forgotten.agg(count(lit(1)).as("checked")).crossJoin(
-              servedCache(f).join(broadcast(forgotten), Seq("doc_id"), "left_semi")
-                .agg(count(lit(1)).as("violations"))))
-        case None => StoreCheck.emptyRow(spark, s"forgotten_absent_$f")
+      // distinct forgotten ids per family, across complete manifests only
+      // (a pending manifest's ids are *expected* to still be serving in
+      // the families its cascade has not reached — flagged by the row
+      // above, not double-counted here)
+      def forgottenFor(family: String): Option[DataFrame] = {
+        val dirs = ms.collect { case (n, fs, true) if fs.contains(family) =>
+          s"${manifestRoot(root)}/m=$n/ids" }
+        if (dirs.isEmpty) None
+        else Some(graft.FsOps.readParquet(spark, dirs: _*).select("doc_id").distinct())
       }
-    }
+      // the index family's forgotten frame is consumed twice (its own
+      // absent row + the positional row below): same compute-once
+      // discipline as the surfaces
+      val forgottenCache: Map[String, Option[DataFrame]] = Families.map(f =>
+        f -> (if (fams.contains(f)) forgottenFor(f).map(cache) else None)).toMap
+      val absentRows = Families.map { f =>
+        forgottenCache(f) match {
+          case Some(forgotten) =>
+            // forgotten sets are delete-batch-sized: broadcast them as the
+            // semi-join build side so the live surface streams through one
+            // scan instead of shuffling (left_semi is the join shape whose
+            // RIGHT side Spark will broadcast)
+            StoreCheck.row(s"forgotten_absent_$f",
+              forgotten.agg(count(lit(1)).as("checked")).crossJoin(
+                servedCache(f).join(broadcast(forgotten), Seq("doc_id"), "left_semi")
+                  .agg(count(lit(1)).as("violations"))))
+          case None => StoreCheck.emptyRow(spark, s"forgotten_absent_$f")
+        }
+      }
 
-    // the index family's positional table is a SECOND physical serve
-    // surface (phrase/proximity queries read it directly, with its own
-    // tombstone mask): a crashed positional expunge that lost its mask
-    // would serve a forgotten doc's positions while doc_stats reads
-    // clean, and the doc_stats-only audit above certifies it (VERDICT
-    // r13 #6). Audit the positional LIVE surface independently — one
-    // column-pruned doc_id pass, broadcast semi-join against the
-    // forgotten set. Stores without a positional table report checked=0.
-    val positionalRow = {
-      val name = "forgotten_absent_index_positional"
-      val idxPath = familyPath(root, "index")
-      val hasPos = fams.contains("index") &&
-        fsOf(spark, idxPath).exists(
-          new org.apache.hadoop.fs.Path(s"$idxPath/positional"))
-      (if (hasPos) forgottenCache("index") else None) match {
-        case Some(forgotten) =>
-          val livePos = graft.index.Indexer.minusDeletes(spark, idxPath,
-            graft.index.Indexer.readPositional(spark, idxPath)
-              .select("doc_id")).distinct()
+      // the index family's positional table is a SECOND physical serve
+      // surface (phrase/proximity queries read it directly, with its own
+      // tombstone mask): a crashed positional expunge that lost its mask
+      // would serve a forgotten doc's positions while doc_stats reads
+      // clean, and the doc_stats-only audit above certifies it (VERDICT
+      // r13 #6). Audit the positional LIVE surface independently — one
+      // column-pruned doc_id pass, broadcast semi-join against the
+      // forgotten set. Stores without a positional table report checked=0.
+      val positionalRow = {
+        val name = "forgotten_absent_index_positional"
+        val idxPath = familyPath(root, "index")
+        val hasPos = fams.contains("index") &&
+          fsOf(spark, idxPath).exists(
+            new org.apache.hadoop.fs.Path(s"$idxPath/positional"))
+        (if (hasPos) forgottenCache("index") else None) match {
+          case Some(forgotten) =>
+            val livePos = graft.index.Indexer.minusDeletes(spark, idxPath,
+              graft.index.Indexer.readPositional(spark, idxPath)
+                .select("doc_id")).distinct()
+            StoreCheck.row(name,
+              forgotten.agg(count(lit(1)).as("checked")).crossJoin(
+                livePos.join(broadcast(forgotten), Seq("doc_id"), "left_semi")
+                  .agg(count(lit(1)).as("violations"))))
+          case None => StoreCheck.emptyRow(spark, name)
+        }
+      }
+
+      val surfaceRows = Families.combinations(2).toSeq.map { case Seq(a, b) =>
+        val name = s"id_surface_${a}_$b"
+        if (fams.contains(a) && fams.contains(b))
           StoreCheck.row(name,
-            forgotten.agg(count(lit(1)).as("checked")).crossJoin(
-              livePos.join(broadcast(forgotten), Seq("doc_id"), "left_semi")
-                .agg(count(lit(1)).as("violations"))))
-        case None => StoreCheck.emptyRow(spark, name)
+            liveCache(a).withColumn("in_a", lit(1))
+              .join(liveCache(b).withColumn("in_b", lit(1)),
+                Seq("doc_id"), "full_outer")
+              .agg(count(lit(1)).as("checked"),
+                sum(when(col("in_a").isNull.or(col("in_b").isNull), 1L)
+                  .otherwise(0L)).as("violations")))
+        else StoreCheck.emptyRow(spark, name)
       }
-    }
 
-    val surfaceRows = Families.combinations(2).toSeq.map { case Seq(a, b) =>
-      val name = s"id_surface_${a}_$b"
-      if (fams.contains(a) && fams.contains(b))
-        StoreCheck.row(name,
-          liveCache(a).withColumn("in_a", lit(1))
-            .join(liveCache(b).withColumn("in_b", lit(1)),
-              Seq("doc_id"), "full_outer")
-            .agg(count(lit(1)).as("checked"),
-              sum(when(col("in_a").isNull.or(col("in_b").isNull), 1L)
-                .otherwise(0L)).as("violations")))
-      else StoreCheck.emptyRow(spark, name)
-    }
-
-    // materialize the ≤ 12-row report EAGERLY so the persisted surfaces
-    // can be released here (a lazily-returned report would re-scan the
-    // unpersisted surfaces at whatever later point the caller acts)
-    try StoreCheck.materialize(spark,
-      StoreCheck.report(
-        manifestRow +: (absentRows ++ (positionalRow +: surfaceRows))))
-    finally {
-      liveCache.values.foreach(_.unpersist())
-      servedCache.get("vstore").foreach(_.unpersist())
-      forgottenCache.values.flatten.foreach(_.unpersist())
+      manifestRow +: (absentRows ++ (positionalRow +: surfaceRows))
     }
   }
 }

@@ -182,7 +182,7 @@ object PrepPipeline {
     val reusable = resume &&
       fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")) && markerMatches
     if (!reusable) {
-      df.select("doc_id").write.mode("overwrite").parquet(p)
+      graft.FsOps.writeParquet(df.select("doc_id"), p)
       graft.FsOps.writeMarker(spark, p, "_fingerprint", fingerprint)
     }
     corpus.join(graft.FsOps.readParquet(spark, p), Seq("doc_id"))

@@ -124,15 +124,15 @@ object PipelineQueries extends QueryGroup {
       // this is the legacy root dir) so the fixture keeps forging the
       // same drift on any layout
       val setsDir = DedupStore.tablePath(s, path, "sets")
-      graft.FsOps.readParquet(s, setsDir).filter(col("doc_id") % 4 =!= 0)
-        .write.mode("overwrite").parquet(s"$path/sets_tmp")
+      graft.FsOps.writeParquet(
+        graft.FsOps.readParquet(s, setsDir).filter(col("doc_id") % 4 =!= 0),
+        s"$path/sets_tmp")
       graft.FsOps.atomicSwap(fs,
         new org.apache.hadoop.fs.Path(setsDir),
         new org.apache.hadoop.fs.Path(s"$path/sets_tmp"))
-      DedupStore.checkStore(s, path)
+      graft.FsOps.writeParquet(DedupStore.checkStore(s, path)
         .select(lit("0_detect").as("phase"), col("invariant"),
-          col("checked"), col("violations"))
-        .write.mode("overwrite").parquet(s"$path/detect_report")
+          col("checked"), col("violations")), s"$path/detect_report")
       DedupStore.refreshBuckets(s, path)
       graft.FsOps.readParquet(s, s"$path/detect_report").unionByName(
         DedupStore.checkStore(s, path)
@@ -785,14 +785,13 @@ object PipelineQueries extends QueryGroup {
       val path = QueryGroup.scratchDir("graft-ivfrepair")
       IvfStore.writeIndex(e, path, kmeansIters = 0)
       val lists = graft.FsOps.readParquet(s, s"$path/lists")
-      lists.filter(col("vec_id") % 10 === 0)
+      graft.FsOps.writeParquet(lists.filter(col("vec_id") % 10 === 0)
         .withColumn("cid", (col("cid") % 16) + 1)
-        .select(lists.columns.map(col).toSeq: _*)
-        .write.mode("append").partitionBy("cid").parquet(s"$path/lists")
-      IvfStore.checkStore(s, path)
+        .select(lists.columns.map(col).toSeq: _*), s"$path/lists", "append",
+        partitionBy = Seq("cid"))
+      graft.FsOps.writeParquet(IvfStore.checkStore(s, path)
         .select(lit("0_detect").as("phase"), col("invariant"),
-          col("checked"), col("violations"))
-        .write.mode("overwrite").parquet(s"$path/detect_report")
+          col("checked"), col("violations")), s"$path/detect_report")
       IvfStore.repairLists(s, path)
       graft.FsOps.readParquet(s, s"$path/detect_report").unionByName(
         IvfStore.checkStore(s, path)
@@ -964,9 +963,8 @@ object PipelineQueries extends QueryGroup {
     "q_incr_agg" -> ((s, dir) => {
       val d = docs(s, dir)
       val path = QueryGroup.scratchDir("graft-incragg")
-      graft.pipeline.IncrementalAgg.partial(
-          d.filter(col("doc_id") % 3 =!= 0), Seq("lang", "source"), "n_chars")
-        .write.mode("overwrite").parquet(path)
+      graft.FsOps.writeParquet(graft.pipeline.IncrementalAgg.partial(
+          d.filter(col("doc_id") % 3 =!= 0), Seq("lang", "source"), "n_chars"), path)
       val delta = graft.pipeline.IncrementalAgg.partial(
         d.filter(col("doc_id") % 3 === 0), Seq("lang", "source"), "n_chars")
       graft.pipeline.IncrementalAgg.merge(graft.FsOps.readParquet(s, path), delta,
@@ -980,7 +978,7 @@ object PipelineQueries extends QueryGroup {
     "q_cdc_apply" -> ((s, dir) => {
       val d = docs(s, dir).select("doc_id", "lang", "source", "n_chars")
       val path = QueryGroup.scratchDir("graft-cdcstore")
-      d.write.mode("overwrite").parquet(path)
+      graft.FsOps.writeParquet(d, path)
       val changelog = d
         .filter(col("doc_id") % 7 === 0 || col("doc_id") % 11 === 0)
         .select(col("doc_id"), col("lang"),
@@ -1435,13 +1433,13 @@ object PipelineQueries extends QueryGroup {
       val ck = new org.apache.hadoop.fs.Path(s"$path/checkpoint/v=3")
       val fs = ck.getFileSystem(s.sparkContext.hadoopConfiguration)
       val bad = new org.apache.hadoop.fs.Path(s"$path/checkpoint/_v=3.bad_tmp")
-      graft.FsOps.readParquet(s, ck.toString).filter(col("doc_id") % 9 =!= 4)
-        .write.mode("overwrite").parquet(bad.toString)
+      graft.FsOps.writeParquet(
+        graft.FsOps.readParquet(s, ck.toString).filter(col("doc_id") % 9 =!= 4),
+        bad.toString)
       graft.FsOps.atomicSwap(fs, ck, bad)
-      VersionedStore.checkStore(s, path, Seq("doc_id"))
+      graft.FsOps.writeParquet(VersionedStore.checkStore(s, path, Seq("doc_id"))
         .select(lit("0_detect").as("phase"), col("invariant"),
-          col("checked"), col("violations"))
-        .write.mode("overwrite").parquet(s"$path/detect_report")
+          col("checked"), col("violations")), s"$path/detect_report")
       VersionedStore.repairCheckpoint(s, path, Seq("doc_id"))
       graft.FsOps.readParquet(s, s"$path/detect_report").unionByName(
         VersionedStore.checkStore(s, path, Seq("doc_id"))
@@ -1668,7 +1666,7 @@ object PipelineQueries extends QueryGroup {
     fs.mkdirs(new org.apache.hadoop.fs.Path(srcDir))
     ttWaves(s, dir).zipWithIndex.foreach { case (w, i) =>
       val tmp = s"$srcDir/_tmp$i"
-      w.coalesce(1).write.parquet(tmp)
+      graft.FsOps.writeParquet(w.coalesce(1), tmp, "errorifexists")
       val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
         .map(_.getPath).find(_.getName.startsWith("part-"))
         .getOrElse(sys.error(s"no part file written under $tmp"))

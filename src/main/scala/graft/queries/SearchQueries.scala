@@ -152,8 +152,8 @@ object SearchQueries extends QueryGroup {
     // oracle proves compaction is content-preserving
     "q_compact" -> ((s, dir) => {
       val path = QueryGroup.scratchDir("graft-compact") + "/docs"
-      docs(s, dir).select("doc_id", "text", "lang", "source")
-        .repartition(64).write.parquet(path)
+      graft.FsOps.writeParquet(docs(s, dir).select("doc_id", "text", "lang", "source")
+        .repartition(64), path, "errorifexists")
       val stats = graft.operators.Compaction.compact(s, path)
       require(stats.filesAfter < stats.filesBefore,
         s"compaction did not reduce file count: $stats")
@@ -197,8 +197,9 @@ object SearchQueries extends QueryGroup {
     "q_schema_merge" -> ((s, dir) => {
       val path = QueryGroup.scratchDir("graft-mergeschema")
       val d = docs(s, dir)
-      d.select("doc_id", "text").write.parquet(s"$path/part1")
-      d.select("doc_id", "lang", "n_chars").write.parquet(s"$path/part2")
+      graft.FsOps.writeParquet(d.select("doc_id", "text"), s"$path/part1", "errorifexists")
+      graft.FsOps.writeParquet(d.select("doc_id", "lang", "n_chars"), s"$path/part2",
+        "errorifexists")
       s.read.option("mergeSchema", "true").parquet(s"$path/part1", s"$path/part2")
     }),
 
@@ -481,12 +482,11 @@ object SearchQueries extends QueryGroup {
       val d = docs(s, dir)
       val path = QueryGroup.scratchDir("graft-repair")
       Indexer.writeIndex(Indexer.buildIndex(d), path)
-      d.filter(col("doc_id") % 3 === 0).select("doc_id").distinct()
-        .write.mode("append").parquet(s"$path/deletes")
-      Indexer.checkStore(s, path)
+      graft.FsOps.writeParquet(d.filter(col("doc_id") % 3 === 0).select("doc_id").distinct(),
+        s"$path/deletes", "append")
+      graft.FsOps.writeParquet(Indexer.checkStore(s, path)
         .select(lit("0_detect").as("phase"), col("invariant"),
-          col("checked"), col("violations"))
-        .write.mode("overwrite").parquet(s"$path/detect_report")
+          col("checked"), col("violations")), s"$path/detect_report")
       Indexer.refreshDerived(s, path)
       graft.FsOps.readParquet(s, s"$path/detect_report").unionByName(
         Indexer.checkStore(s, path)

@@ -55,17 +55,17 @@ object IvfStore {
     // frame's tables in place (the pointer stays) — same non-atomic
     // rebuild contract as overwriting a legacy store's tables
     val dirs = tableDirs(spark, path)
-    Similarity.kmeansCentroids(corpus, nCentroids, kmeansIters, idCol, vecCol)
-      .write.mode("overwrite").parquet(dirs("centroids"))
+    graft.FsOps.writeParquet(
+      Similarity.kmeansCentroids(corpus, nCentroids, kmeansIters, idCol, vecCol),
+      dirs("centroids"))
     // assign against the JUST-PERSISTED centroids (derive-from-persisted
     // rule — and the exact same centroid values the query path will read)
     val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
-    Similarity.assignToCentroids(
+    graft.FsOps.writeParquet(Similarity.assignToCentroids(
         corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
         cents, "vec_id", "v", keep = 1)
       .withColumn("nv", Similarity.norm(col("v")))
-      .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(dirs("lists"))
+      .repartition(col("cid")), dirs("lists"), partitionBy = Seq("cid"))
   }
 
   /** IVF store with int8-QUANTIZED inverted lists — the memory-bound
@@ -87,8 +87,9 @@ object IvfStore {
                           idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = corpus.sparkSession
     val dirs = tableDirs(spark, path)
-    Similarity.kmeansCentroids(corpus, nCentroids, kmeansIters, idCol, vecCol)
-      .write.mode("overwrite").parquet(dirs("centroids"))
+    graft.FsOps.writeParquet(
+      Similarity.kmeansCentroids(corpus, nCentroids, kmeansIters, idCol, vecCol),
+      dirs("centroids"))
     val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
     val assigned = Similarity.assignToCentroids(
       corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
@@ -101,9 +102,8 @@ object IvfStore {
       .select(col("id").as("vec_id"), col("scale"),
         transform(col("qvec"), x => x.cast("byte")).as("qvec"),
         sqrt(Similarity.dot(col("rv"), col("rv"))).as("nv"))
-    assigned.select("vec_id", "cid").join(codes, "vec_id")
-      .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(dirs("lists"))
+    graft.FsOps.writeParquet(assigned.select("vec_id", "cid").join(codes, "vec_id")
+      .repartition(col("cid")), dirs("lists"), partitionBy = Seq("cid"))
   }
 
   /** Probe a quantized store: same pruning/probe shape as
@@ -153,9 +153,9 @@ object IvfStore {
   def writeCentroids(corpus: DataFrame, path: String,
                      nCentroids: Int = 16, kmeansIters: Int = 2,
                      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    Similarity.kmeansCentroids(corpus, nCentroids, kmeansIters, idCol, vecCol)
-      .write.mode("overwrite")
-      .parquet(graft.operators.Frames.resolve(corpus.sparkSession, path, "centroids"))
+    graft.FsOps.writeParquet(
+      Similarity.kmeansCentroids(corpus, nCentroids, kmeansIters, idCol, vecCol),
+      graft.operators.Frames.resolve(corpus.sparkSession, path, "centroids"))
 
   /** Assign one ingest batch against the persisted centroids and add its
     * vectors to the inverted lists. Replay-safe: every batch writes under
@@ -245,8 +245,8 @@ object IvfStore {
       .repartition(col("cid"))
     // per-write dynamic overwrite: session conf stays untouched (other
     // writes may be running concurrently under Par)
-    assigned.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch", "cid").parquet(dirs("lists"))
+    graft.FsOps.writeParquet(assigned, dirs("lists"),
+      partitionBy = Seq("batch", "cid"), dynamicOverwrite = true)
   }
 
   /** Attach a streaming vector source to the store: each micro-batch is
@@ -312,10 +312,8 @@ object IvfStore {
       // layout rewrite, so a crash never leaves the store without a
       // readable lists dir
       val stage = graft.operators.Frames.begin(spark, path, Tables)
-      lists.drop("batch")
-        .repartition(col("cid"))
-        .write.mode("overwrite").partitionBy("cid")
-        .parquet(stage.stageDir("lists"))
+      graft.FsOps.writeParquet(lists.drop("batch").repartition(col("cid")),
+        stage.stageDir("lists"), partitionBy = Seq("cid"))
       midMaintenanceHook(spark)
       // batches that landed while the rewrite staged fold into the
       // flattened layout too (same centroids — cids keep)
@@ -341,8 +339,8 @@ object IvfStore {
   def deleteVectors(spark: SparkSession, path: String, ids: DataFrame,
                     idCol: String = "vec_id"): Unit = {
     graft.FsOps.requireNotHusk(spark, path)
-    ids.select(col(idCol).as("vec_id")).distinct()
-      .write.mode("append").parquet(graft.operators.Frames.resolve(spark, path, "deletes"))
+    graft.FsOps.writeParquet(ids.select(col(idCol).as("vec_id")).distinct(),
+      graft.operators.Frames.resolve(spark, path, "deletes"), "append")
   }
 
   /** Physically apply accumulated tombstones ([[deleteVectors]]) — the
@@ -373,10 +371,9 @@ object IvfStore {
     val lists = pinToSnapshot(graft.FsOps.readParquet(spark, dirs("lists")), snap)
     val partCols = if (lists.columns.contains("batch")) Seq("batch", "cid") else Seq("cid")
     val stage = graft.operators.Frames.begin(spark, path, Tables)
-    liveLists(spark, dirs("deletes"), lists)
-      .repartition(partCols.map(col): _*)
-      .write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(stage.stageDir("lists"))
+    graft.FsOps.writeParquet(liveLists(spark, dirs("deletes"), lists)
+      .repartition(partCols.map(col): _*), stage.stageDir("lists"),
+      partitionBy = partCols)
     stage.drop("deletes")
     midMaintenanceHook(spark)
     // concurrent ingest landed while the rewrite staged: carry it (the
@@ -512,9 +509,8 @@ object IvfStore {
     // expunges); one pointer flip installs — a crash costs dead staged
     // bytes, never an unreadable store
     val stage = graft.operators.Frames.begin(spark, path, Tables)
-    repaired.repartition(partCols.map(col): _*)
-      .write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(stage.stageDir("lists"))
+    graft.FsOps.writeParquet(repaired.repartition(partCols.map(col): _*),
+      stage.stageDir("lists"), partitionBy = partCols)
     midMaintenanceHook(spark)
     // concurrent ingest carried as written (fresh appends, not the
     // corruption the rewrite repaired; same centroids — cids keep)
@@ -742,9 +738,8 @@ object IvfStore {
         }
       val shaped = if (stripBatch) homed.drop("batch") else homed
       val partCols = if (stripBatch) Seq("cid") else Seq("batch", "cid")
-      shaped.repartition(partCols.map(col): _*)
-        .write.mode("append").partitionBy(partCols: _*)
-        .parquet(stage.dir("lists"))
+      graft.FsOps.writeParquet(shaped.repartition(partCols.map(col): _*),
+        stage.dir("lists"), "append", partitionBy = partCols)
     }
   }
 
@@ -752,8 +747,8 @@ object IvfStore {
     * merged / reclustered since): cid c belongs to group
     * `count(b in bounds | b < c)`. */
   def mergedBounds(spark: SparkSession, path: String): Option[Seq[Int]] =
-    graft.FsOps.readMarker(spark, path, MergedBoundsMarker)
-      .map(_.trim.split(",").map(_.toInt).toSeq)
+    graft.FsOps.readParsedMarker(spark, path, MergedBoundsMarker)(
+      _.split(",").map(_.toInt).toSeq)
 
   /** Group index of a cid (or batch ordinal) under exclusive-lower
     * bounds: `count(b in bounds | b < x)`. */
@@ -1422,10 +1417,9 @@ object IvfStore {
         segs.map(sg => s"${sg.batchLo}:${sg.gLo}:${sg.gHi}").mkString(","))
     }
     // commit: the remapped centroid union, written last
-    centFrames.zip(offsets).map { case (c, off) =>
+    graft.FsOps.writeParquet(centFrames.zip(offsets).map { case (c, off) =>
         c.select((col("cid") + lit(off)).cast("int").as("cid"), col("cvec")) }
-      .reduce(_ unionByName _)
-      .coalesce(1).write.mode("overwrite").parquet(dst("centroids"))
+      .reduce(_ unionByName _).coalesce(1), dst("centroids"))
     // stamp drained sources only after the commit above (husk contract —
     // see FsOps.MergedIntoMarker)
     if (moveFiles)
@@ -1491,20 +1485,18 @@ object IvfStore {
       if (trainSampleMod == 1) live
       else live.filter(pmod(xxhash64(col("vec_id")), lit(trainSampleMod.toLong)) === 0)
     val stage = graft.operators.Frames.begin(spark, path, Tables)
-    Similarity.kmeansCentroids(
+    graft.FsOps.writeParquet(Similarity.kmeansCentroids(
         train.select(col("vec_id"), col("__v")), nCentroids, kmeansIters,
-        "vec_id", "__v")
-      .coalesce(1).write.mode("overwrite").parquet(stage.stageDir("centroids"))
+        "vec_id", "__v").coalesce(1), stage.stageDir("centroids"))
     // assign against the JUST-PERSISTED staged centroids
     // (derive-from-persisted rule)
     val cents = broadcast(graft.FsOps.readParquet(spark, stage.dir("centroids")))
     val reassigned = Similarity.assignToCentroids(
         live.select(col("vec_id"), col("__v")), cents, "vec_id", "__v", keep = 1)
       .select(col("vec_id"), col("cid"))
-    live.drop("cid", "__v").join(reassigned, "vec_id")
-      .repartition(partCols.map(col): _*)
-      .write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(stage.stageDir("lists"))
+    graft.FsOps.writeParquet(live.drop("cid", "__v").join(reassigned, "vec_id")
+      .repartition(partCols.map(col): _*), stage.stageDir("lists"),
+      partitionBy = partCols)
     stage.drop("deletes")
     midMaintenanceHook(spark)
     // concurrent ingest carried RE-ASSIGNED against the new centroids

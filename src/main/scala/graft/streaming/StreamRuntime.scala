@@ -28,7 +28,7 @@ object StreamRuntime {
   def eventsStreamSource(spark: SparkSession, sfDir: String): String =
     srcCache.getOrElseUpdate(sfDir, {
       val dir = graft.queries.QueryGroup.scratchDir("graft-evsrc")
-      graft.Tables.loadEvents(spark, sfDir).write.mode("overwrite").parquet(dir)
+      graft.FsOps.writeParquet(graft.Tables.loadEvents(spark, sfDir), dir)
       dir
     })
 
@@ -40,7 +40,7 @@ object StreamRuntime {
   def tableStreamSource(spark: SparkSession, sfDir: String, table: String): String =
     tblCache.getOrElseUpdate((sfDir, table), {
       val dir = graft.queries.QueryGroup.scratchDir(s"graft-$table-src")
-      graft.Tables.load(spark, sfDir, table).write.mode("overwrite").parquet(dir)
+      graft.FsOps.writeParquet(graft.Tables.load(spark, sfDir, table), dir)
       dir
     })
 
@@ -119,7 +119,7 @@ object StreamRuntime {
         .writeStream
         .outputMode("complete")
         .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
+          graft.FsOps.writeParquet(batch, out)
         }
         .option("checkpointLocation", s"$scratch/ckpt")
         .trigger(Trigger.AvailableNow())
@@ -146,7 +146,7 @@ object StreamRuntime {
         .writeStream
         .outputMode("append")
         .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          batch.write.mode("append").parquet(out)
+          graft.FsOps.writeParquet(batch, out, "append")
         }
         .option("checkpointLocation", s"$scratch/ckpt")
         .trigger(Trigger.AvailableNow())
@@ -170,7 +170,7 @@ object StreamRuntime {
     // the explicit per-index mod times still define the arrival order
     graft.operators.Par.run(frames.zipWithIndex.map { case (df, i) => () =>
       val tmp = s"$srcDir/_tmp$i"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      graft.FsOps.writeParquet(df.coalesce(1), tmp)
       val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
         .map(_.getPath).find(_.getName.startsWith("part-"))
         .getOrElse(sys.error(s"no part file written under $tmp"))
@@ -220,10 +220,9 @@ object StreamRuntime {
       .parquet(srcDir)
       .writeStream
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        graft.pipeline.PrepPipeline
+        graft.FsOps.writeParquet(graft.pipeline.PrepPipeline
           .dedupIngest(batch.sparkSession, storePath, batch, jaccardThreshold)
-          .select("doc_id")
-          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
+          .select("doc_id"), s"$outDir/batch=$id")
       }
       .option("checkpointLocation", s"$scratch/ckpt")
       .trigger(Trigger.AvailableNow())
@@ -442,7 +441,7 @@ object StreamRuntime {
     // (guide §2.6); mod times, not completion order, define arrival order
     graft.operators.Par.run(dfs.zipWithIndex.map { case (df, i) => () =>
       val tmp = s"$srcDir/_tmp$i"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      graft.FsOps.writeParquet(df.coalesce(1), tmp)
       val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
         .map(_.getPath).find(_.getName.startsWith("part-"))
         .getOrElse(sys.error(s"no part file written under $tmp"))
@@ -462,7 +461,7 @@ object StreamRuntime {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(srcDir))
     val tmp = s"$srcDir/_tmp"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    graft.FsOps.writeParquet(df.coalesce(1), tmp)
     val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
       .map(_.getPath).find(_.getName.startsWith("part-"))
       .getOrElse(sys.error(s"no part file written under $tmp"))

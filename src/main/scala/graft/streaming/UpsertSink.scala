@@ -28,7 +28,7 @@ object UpsertSink {
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) {
-      batch.write.mode("overwrite").parquet(path)
+      graft.FsOps.writeParquet(batch, path)
       return
     }
     val merged = graft.FsOps.readParquet(spark, path)
@@ -36,7 +36,7 @@ object UpsertSink {
         keys, "left_anti")
       .unionByName(batch)
     val tmp = new Path(dir.getParent, s"_${dir.getName}.upsert_tmp")
-    merged.write.mode("overwrite").parquet(tmp.toString)
+    graft.FsOps.writeParquet(merged, tmp.toString)
     graft.FsOps.atomicSwap(fs, dir, tmp)
   }
 
@@ -61,14 +61,14 @@ object UpsertSink {
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) {
-      upserts.write.mode("overwrite").parquet(path)
+      graft.FsOps.writeParquet(upserts, path)
       return
     }
     val merged = graft.FsOps.readParquet(spark, path)
       .join(batch.select(keys.map(col): _*).distinct(), keys, "left_anti")
       .unionByName(upserts)
     val tmp = new Path(dir.getParent, s"_${dir.getName}.upsert_tmp")
-    merged.write.mode("overwrite").parquet(tmp.toString)
+    graft.FsOps.writeParquet(merged, tmp.toString)
     graft.FsOps.atomicSwap(fs, dir, tmp)
   }
 
@@ -112,9 +112,8 @@ object UpsertSink {
     // the plan would otherwise still reference the files it is replacing.
     // Dynamic overwrite is a per-write option: session conf stays
     // untouched (other writes may be running concurrently under Par)
-    merged.localCheckpoint(true).repartition(col("part_bucket"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("part_bucket").parquet(path)
+    graft.FsOps.writeParquet(merged.localCheckpoint(true).repartition(col("part_bucket")),
+      path, partitionBy = Seq("part_bucket"), dynamicOverwrite = true)
     if (stored.isEmpty) graft.FsOps.writeLongMarker(spark, path, marker, nParts)
   }
 

@@ -58,7 +58,7 @@ object VersionedStore {
     require(changes.columns.contains(OpCol),
       s"changelog commit needs an '$OpCol' column ('u' upsert / '$DeleteOp' delete)")
     val next = versions(spark, path).lastOption.getOrElse(0L) + 1
-    changes.write.mode("errorifexists").parquet(s"$path/log/v=$next")
+    graft.FsOps.writeParquet(changes, s"$path/log/v=$next", "errorifexists")
     next
   }
 
@@ -75,7 +75,7 @@ object VersionedStore {
     require(changes.columns.contains(OpCol),
       s"changelog commit needs an '$OpCol' column ('u' upsert / '$DeleteOp' delete)")
     require(version >= 1, s"versions start at 1, got $version")
-    changes.write.mode("overwrite").parquet(s"$path/log/v=$version")
+    graft.FsOps.writeParquet(changes, s"$path/log/v=$version")
   }
 
   /** Reconstruct the table as of `version`: newest checkpoint ≤ version,
@@ -335,8 +335,7 @@ object VersionedStore {
         // nor picked up by any Spark directory listing
         val live = new Path(dir)
         val tmp = new Path(live.getParent, s"_${live.getName}.purge_tmp")
-        df.join(idsK, keys, "left_anti")
-          .write.mode("overwrite").parquet(tmp.toString)
+        graft.FsOps.writeParquet(df.join(idsK, keys, "left_anti"), tmp.toString)
         graft.FsOps.atomicSwap(f, live, tmp)
       }
       touched
@@ -365,7 +364,7 @@ object VersionedStore {
     val live = new Path(s"$path/checkpoint/v=$version")
     val f = fs(spark, live)
     val tmp = new Path(live.getParent, s"_v=$version.ckpt_tmp")
-    snapshotAt(spark, path, version, keys).write.mode("overwrite").parquet(tmp.toString)
+    graft.FsOps.writeParquet(snapshotAt(spark, path, version, keys), tmp.toString)
     if (!f.rename(tmp, live))
       throw new java.io.IOException(s"checkpoint: failed to install $tmp at $live")
   }
@@ -411,8 +410,8 @@ object VersionedStore {
         "is its only authority, there is nothing independent to re-derive from")
     val live = new Path(s"$path/checkpoint/v=$c")
     val tmp = new Path(live.getParent, s"_v=$c.ckpt_tmp")
-    snapshotUsing(spark, path, c, keys, earlier, committed)
-      .write.mode("overwrite").parquet(tmp.toString)
+    graft.FsOps.writeParquet(snapshotUsing(spark, path, c, keys, earlier, committed),
+      tmp.toString)
     graft.FsOps.atomicSwap(fs(spark, live), live, tmp)
   }
 

@@ -840,4 +840,24 @@ class IvfSpec extends SparkSpec {
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(rep("centroids_wellformed") === ((4L, 0L)), rep.toString)
   }
+
+  test("a corrupt _merged_bounds marker raises the named corrupt-marker error") {
+    import graft.similarity.IvfStore
+    val e = Tables.load(spark, sf0001, "embeddings")
+    val path = java.nio.file.Files.createTempDirectory("ivfbounds").toString
+    IvfStore.writeCentroids(e, path, kmeansIters = 0)
+    IvfStore.appendBatch(spark, path, e, 0L)
+    FsOps.writeMarker(spark, path, IvfStore.MergedBoundsMarker, "0,8,x")
+    val named = s"corrupt marker $path/${IvfStore.MergedBoundsMarker}: '0,8,x'"
+    val read = intercept[IllegalStateException](IvfStore.mergedBounds(spark, path))
+    assert(read.getMessage.contains(named), read.getMessage)
+    // the audits and the repair read the marker first: the same named error
+    for (verb <- Seq[() => Unit](
+        () => IvfStore.checkStore(spark, path).collect(),
+        () => IvfStore.checkStoreIncremental(spark, path).collect(),
+        () => IvfStore.repairLists(spark, path))) {
+      val err = intercept[IllegalStateException](verb())
+      assert(err.getMessage.contains(named), err.getMessage)
+    }
+  }
 }

@@ -191,6 +191,53 @@ class StoreReadSpec extends SparkSpec {
     assert(hits.isEmpty, s"raw parquet reads:\n${hits.mkString("\n")}")
   }
 
+  test("no parquet write in the main sources outside FsOps' write entry") {
+    // every table graft writes carries the store's one encoding (codec,
+    // declared row order) through FsOps.writeParquet / saveBucketedTable;
+    // Verify's gate outputs and Bench keep their raw writes
+    val allowed = Set("FsOps.scala", "Verify.scala", "Bench.scala")
+    val writer = """\.\s*(write|writeStream)\b(?!\s*\()""".r
+    val link = """\s*\.\s*(\w+)\s*""".r
+    // the `.name(args)` / `.name { block }` links chained after `from`
+    def chain(src: String, from: Int): Seq[(String, String)] = {
+      val links = Seq.newBuilder[(String, String)]
+      var i = from
+      var more = true
+      while (more) link.findPrefixMatchOf(src.substring(i)) match {
+        case Some(m) =>
+          val name = m.group(1)
+          var j = i + m.end
+          val args = if (j < src.length && (src(j) == '(' || src(j) == '{')) {
+            val open = j
+            var depth = 0
+            do {
+              if (src(j) == '(' || src(j) == '{') depth += 1
+              else if (src(j) == ')' || src(j) == '}') depth -= 1
+              j += 1
+            } while (depth > 0 && j < src.length)
+            src.substring(open, j)
+          } else ""
+          links += name -> args
+          i = j
+        case None => more = false
+      }
+      links.result()
+    }
+    val hits = for {
+      (f, src) <- mainSources if !allowed(f.getName)
+      m <- writer.findAllMatchIn(src)
+      if chain(src, m.end).exists { case (name, args) =>
+        name == "parquet" || name == "saveAsTable" ||
+          (name == "format" && args.contains("\"parquet\"")) }
+    } yield s"${f.getPath}:${lineOf(src, m.start)}"
+    val catalogSaves = for {
+      (f, src) <- mainSources if !allowed(f.getName)
+      m <- """\bsaveAsTable\s*\(""".r.findAllMatchIn(src)
+    } yield s"${f.getPath}:${lineOf(src, m.start)}"
+    val all = (hits ++ catalogSaves).distinct
+    assert(all.isEmpty, s"parquet writes outside FsOps:\n${all.mkString("\n")}")
+  }
+
   test("no FileSystem create/open in the main sources outside FsOps") {
     // every marker is written tmp-first and swapped in, and read back with
     // the swap-aside fallback, only by FsOps; a hand-rolled create()
