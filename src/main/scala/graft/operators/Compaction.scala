@@ -44,8 +44,16 @@ object Compaction {
     *
     * `rowOrder` (optional): the table's declared within-file row order
     * (e.g. [[graft.index.Indexer.RowOrder]]), so a rewrite keeps the
-    * order its family's writes give the table. It leads the within-file
-    * sort; the files still hold contiguous `rangeBy` ranges. */
+    * order its family's writes give the table. It follows `rangeBy` in
+    * the within-file sort: each file holds contiguous `rangeBy` runs,
+    * each run in the declared order. Leading with the range columns
+    * keeps per-row-group and per-page `batch` statistics tight, so
+    * inside the one file that straddles an audit watermark the
+    * pre-watermark row groups and pages still skip; ordering inside
+    * each run keeps the compression the declared order buys. Measured
+    * on an sf0.01 index in six batches: the declared order leading
+    * instead made the `batch > since` audit read 14% more bytes (49%
+    * with 16 KB row groups) and its files were 3% larger. */
   def compact(spark: SparkSession, path: String,
               targetBytes: Long = 128L * 1024 * 1024,
               rangeBy: Seq[String] = Seq.empty,
@@ -81,15 +89,15 @@ object Compaction {
     // the count), so the no-op test is a `_compact_range_state` marker
     // recording a fingerprint of the exact file listing + request the
     // last range-compaction produced — any append, expunge, or changed
-    // rangeBy/targetBytes perturbs the listing or the request and forces
-    // a genuine re-run. Listing fingerprints are driver-side metadata
-    // (≤ file count entries), never a data scan.
+    // rangeBy/rowOrder/targetBytes perturbs the listing or the request
+    // and forces a genuine re-run. Listing fingerprints are driver-side
+    // metadata (≤ file count entries), never a data scan.
     val balanced = dataFiles.forall(_.getLen <= (targetBytes * 3) / 2)
     if (rangeBy.isEmpty && target == dataFiles.length && balanced)
       return CompactionStats(dataFiles.length, dataFiles.length, totalBytes, target)
     if (rangeBy.nonEmpty &&
         graft.FsOps.readMarker(spark, path, RangeStateMarker)
-          .contains(listingFingerprint(dataFiles.toSeq, rangeBy, target)))
+          .contains(listingFingerprint(dataFiles.toSeq, rangeBy, rowOrder, target)))
       return CompactionStats(dataFiles.length, dataFiles.length, totalBytes, target)
 
     val df = graft.FsOps.readParquet(spark, path)
@@ -105,11 +113,10 @@ object Compaction {
     // underscore prefix: invisible to concurrent readers of a partitioned
     // parent (and never parsed as a partition dir)
     val tmp = new Path(dir.getParent, s"_${dir.getName}.compact_tmp")
-    // after a declared row order, the range columns order each file's
-    // rows; for a table without one that tightens per-ROW-GROUP
-    // statistics too: inside a straddling file, pre-watermark row groups
-    // still skip
-    graft.FsOps.writeParquet(sized, tmp.toString, rowOrder = rowOrder ++ rangeBy)
+    // the range columns lead the within-file sort: that tightens
+    // per-ROW-GROUP statistics too (inside a straddling file,
+    // pre-watermark row groups still skip); the declared order follows
+    graft.FsOps.writeParquet(sized, tmp.toString, rowOrder = rangeBy ++ rowOrder)
     graft.FsOps.atomicSwap(fs, dir, tmp)
 
     val installed = fs.listStatus(dir).filter { s =>
@@ -133,7 +140,7 @@ object Compaction {
       val nextTarget = math.max(1,
         math.ceil(installed.map(_.getLen).sum.toDouble / targetBytes).toInt)
       graft.FsOps.writeMarker(spark, path, RangeStateMarker,
-        listingFingerprint(installed.toSeq, rangeBy, nextTarget))
+        listingFingerprint(installed.toSeq, rangeBy, rowOrder, nextTarget))
     }
     CompactionStats(dataFiles.length, installed.length, totalBytes, target)
   }
@@ -144,13 +151,15 @@ object Compaction {
 
   /** Order-independent fingerprint of a data-file listing plus the
     * compaction request itself — equal iff the directory's visible data
-    * files (names AND sizes) and the (rangeBy, target) pair are all
-    * unchanged. */
+    * files (names AND sizes) and the (rangeBy, rowOrder, target) request
+    * are all unchanged. */
   private def listingFingerprint(files: Seq[org.apache.hadoop.fs.FileStatus],
-                                 rangeBy: Seq[String], target: Int): String = {
+                                 rangeBy: Seq[String], rowOrder: Seq[String],
+                                 target: Int): String = {
     val c = new java.util.zip.CRC32()
     val body = files.map(f => s"${f.getPath.getName}:${f.getLen}").sorted
-      .mkString("\n") + s"\nrangeBy=${rangeBy.mkString(",")};target=$target"
+      .mkString("\n") + s"\nrangeBy=${rangeBy.mkString(",")};target=$target" +
+      (if (rowOrder.isEmpty) "" else s";rowOrder=${rowOrder.mkString(",")}")
     c.update(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     java.lang.Long.toHexString(c.getValue)
   }
@@ -165,8 +174,7 @@ object Compaction {
     */
   def compactPartitions(spark: SparkSession, root: String,
                         targetBytes: Long = 128L * 1024 * 1024,
-                        rangeBy: Seq[String] = Seq.empty,
-                        rowOrder: Seq[String] = Seq.empty): Map[String, CompactionStats] = {
+                        rangeBy: Seq[String] = Seq.empty): Map[String, CompactionStats] = {
     val dir = new Path(root)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // each partition dir compacts (and swaps) independently — overlap
@@ -174,7 +182,7 @@ object Compaction {
     // chain of per-bucket listing+rewrite+swap steps
     val parts = partitionDirs(fs, dir)
     parts.map(_.getName).zip(Par.map(parts)(p =>
-      compact(spark, p.toString, targetBytes, rangeBy, rowOrder))).toMap
+      compact(spark, p.toString, targetBytes, rangeBy))).toMap
   }
 
   /** Multi-level variant: walk nested `k=v` directories down to the LEAF

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.DedupStore
 import graft.index.{Indexer, StoreMerge}
-import graft.operators.Frames
+import graft.operators.{Compaction, Frames}
 import graft.search.BM25
 import graft.similarity.IvfStore
 import graft.streaming.{UpsertSink, VersionedStore}
@@ -59,9 +59,9 @@ class StoreEncodingSpec extends SparkSpec {
     assert(wrong.isEmpty, s"not $codec under $d: ${wrong.map(w => s"${w._1} ${w._2.distinct}")}")
   }
 
-  /** The `(term, doc_id)` key of each row of one parquet file, in file
-    * order (a missing column reads as "" / 0). */
-  private def keysOf(file: Path, cols: Seq[String]): Seq[(String, Long)] = {
+  /** The `(batch, term, doc_id)` key of each row of one parquet file, in
+    * file order (a column outside `cols` reads as 0 / ""). */
+  private def keysOf(file: Path, cols: Seq[String]): Seq[(Long, String, Long)] = {
     val reader = ParquetReader.builder(new GroupReadSupport(), file).withConf(conf).build()
     def value(g: Group, c: String): Any =
       g.getType.getType(c).asPrimitiveType.getPrimitiveTypeName match {
@@ -70,33 +70,58 @@ class StoreEncodingSpec extends SparkSpec {
         case _ => g.getLong(c, 0)
       }
     try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
-      (if (cols.contains("term")) value(g, "term").asInstanceOf[String] else "",
+      (if (cols.contains("batch")) value(g, "batch").asInstanceOf[Long] else 0L,
+        if (cols.contains("term")) value(g, "term").asInstanceOf[String] else "",
         if (cols.contains("doc_id")) value(g, "doc_id").asInstanceOf[Long] else 0L)
     }.toSeq
     finally reader.close()
   }
 
-  /** Rows are non-decreasing in the table's declared order within every
-    * data file of `dir`. */
-  private def assertOrdered(dir: String, table: String): Unit = {
-    val order = Indexer.RowOrder(table)
+  /** The data files of `dir` whose rows are out of `order`. */
+  private def unorderedFiles(dir: String, order: Seq[String]): Seq[Path] = {
     val files = dataFiles(dir)
     assert(files.nonEmpty, s"no data files under $dir")
-    val unordered = files.filter { f =>
+    files.filter { f =>
       val keys = keysOf(f, order)
       keys.zip(keys.drop(1)).exists { case (a, b) =>
-        Ordering[(String, Long)].compare(a, b) > 0 }
+        Ordering[(Long, String, Long)].compare(a, b) > 0 }
     }
+  }
+
+  /** Rows are non-decreasing in the table's declared order within every
+    * data file of `dir`, after the `leading` columns (a range compaction
+    * leads with `batch`). */
+  private def assertOrdered(dir: String, table: String, leading: Seq[String] = Nil): Unit = {
+    val order = leading ++ Indexer.RowOrder(table)
+    val unordered = unorderedFiles(dir, order)
     assert(unordered.isEmpty, s"$table files out of ${order.mkString(",")} order: $unordered")
   }
 
-  /** Every index table of the store at `path` holds its declared order. */
-  private def assertIndexOrdered(path: String): Unit = {
-    assertOrdered(s"$path/postings", "postings")
-    assertOrdered(s"$path/doc_stats", "doc_stats")
+  /** Every index table of the store at `path` holds its declared order
+    * (the batch-tracked tables after `leading`). */
+  private def assertIndexOrdered(path: String, leading: Seq[String] = Nil): Unit = {
+    assertOrdered(s"$path/postings", "postings", leading)
+    assertOrdered(s"$path/doc_stats", "doc_stats", leading)
     assertOrdered(Indexer.derivedTablePath(spark, path, "vocab"), "vocab")
     if (new Path(s"$path/positional").getFileSystem(conf).exists(new Path(s"$path/positional")))
-      assertOrdered(s"$path/positional", "positional")
+      assertOrdered(s"$path/positional", "positional", leading)
+  }
+
+  /** A copy of the store at `fresh` with `tables` rewritten as the earlier
+    * writer left them: Spark's snappy default, rows in shuffled order. */
+  private def legacyCopy(fresh: String, tables: Seq[String]): String = {
+    val legacy = s"${tmp("enclegacy")}/store"
+    FileUtil.copy(new Path(fresh).getFileSystem(conf), new Path(fresh),
+      new Path(legacy).getFileSystem(conf), new Path(legacy), false, conf)
+    val fs = new Path(legacy).getFileSystem(conf)
+    for (t <- tables) {
+      fs.delete(new Path(s"$legacy/$t"), true)
+      val w = spark.read.parquet(s"$fresh/$t").orderBy(rand(7)).repartition(3)
+        .write.option("compression", "snappy")
+      (if (Set("postings", "positional")(t)) w.partitionBy("term_bucket") else w)
+        .parquet(s"$legacy/$t")
+    }
+    legacy
   }
 
   test("every data file of every store family is zstd on every column chunk") {
@@ -155,9 +180,10 @@ class StoreEncodingSpec extends SparkSpec {
     assertIndexOrdered(path)
     Indexer.appendIndex(spark, path, half2)
     assertIndexOrdered(path)
-    // compaction merges each bucket's batch files into one
+    // compaction merges each bucket's batch files into one, batch by
+    // batch: each batch run in the declared order
     Maintain.run(spark, "index", "compact", path)
-    assertIndexOrdered(path)
+    assertIndexOrdered(path, leading = Seq("batch"))
     Indexer.deleteDocs(spark, path, docs.filter($"doc_id" % 3 === 0).select("doc_id"))
     assertOrdered(Indexer.derivedTablePath(spark, path, "vocab"), "vocab")
     Indexer.expungeDeletes(spark, path)
@@ -173,26 +199,32 @@ class StoreEncodingSpec extends SparkSpec {
     assertIndexOrdered(dest)
   }
 
+  test("index compact re-sorts a store range-compacted without a row order") {
+    val fresh = tmp("encrecompact")
+    Indexer.writeIndex(Indexer.buildIndex(docs.filter($"doc_id" % 2 === 0)), fresh, nBuckets = 8)
+    Indexer.appendIndex(spark, fresh, docs.filter($"doc_id" % 2 === 1))
+    val store = legacyCopy(fresh, Seq("postings"))
+    val postings = s"$store/postings"
+    // the earlier compaction request: batch ranges, no declared row order;
+    // it leaves its `_compact_range_state` marker in every leaf
+    Compaction.compactPartitionsRecursive(spark, postings, rangeBy = Seq("batch"))
+    val order = "batch" +: Indexer.RowOrder("postings")
+    assert(unorderedFiles(postings, order).nonEmpty)
+    // the same listing under a request that now carries the row order is
+    // a new request: the leaves are rewritten, not skipped
+    Maintain.run(spark, "index", "compact", store)
+    assertOrdered(postings, "postings", leading = Seq("batch"))
+  }
+
   test("a store at the earlier encoding (snappy, unsorted) keeps serving and auditing") {
     val half1 = docs.filter($"doc_id" % 2 === 0)
     val half2 = docs.filter($"doc_id" % 2 === 1)
     val dead = docs.filter($"doc_id" % 3 === 0).select("doc_id")
-    // build a store, then rewrite every table as the earlier writer left
-    // it: Spark's snappy default, rows in shuffled order
+    // build a store, then rewrite every table as the earlier writer left it
     val fresh = tmp("encfresh")
     Indexer.writeIndex(Indexer.buildIndex(half1), fresh, nBuckets = 16)
     Indexer.writePositional(half1, fresh, nBuckets = 8)
-    val legacy = s"${tmp("enclegacy")}/store"
-    FileUtil.copy(new Path(fresh).getFileSystem(conf), new Path(fresh),
-      new Path(legacy).getFileSystem(conf), new Path(legacy), false, conf)
-    val fs = new Path(legacy).getFileSystem(conf)
-    for (t <- Seq("doc_stats", "postings", "positional", "vocab", "meta")) {
-      fs.delete(new Path(s"$legacy/$t"), true)
-      val w = spark.read.parquet(s"$fresh/$t").orderBy(rand(7)).repartition(3)
-        .write.option("compression", "snappy")
-      (if (Set("postings", "positional")(t)) w.partitionBy("term_bucket") else w)
-        .parquet(s"$legacy/$t")
-    }
+    val legacy = legacyCopy(fresh, Seq("doc_stats", "postings", "positional", "vocab", "meta"))
     assertCodec(CompressionCodecName.SNAPPY, s"$legacy/postings", s"$legacy/vocab")
 
     Indexer.appendIndex(spark, legacy, half2)
