@@ -257,6 +257,78 @@ class MaintainSpec extends SparkSpec {
     assert(e3.getMessage.contains(">= 2 shard-root"), e3.getMessage)
   }
 
+  test("every malformed or out-of-range CLI number fails with its op's usage text") {
+    // parse errors land before any store read: the path need not exist
+    val path = QueryGroup.scratchDir("graft-maint-args")
+    val dedupUsage = "dedup advise <path> [maxBucketDocs >= 1, default 32] " +
+      "[minJaccard (0,1], default 0.8] [apply]"
+    val cases = Seq(
+      ("index", "advise", Seq("0"), "0",
+        "index advise <path> [maxFilesPerLeaf >= 1, default 8] [apply]"),
+      ("ivf", "advise", Seq("x"), "x",
+        "ivf advise <path> [maxRangeFrac 0..1, default 0.25] [nCentroids] [apply]"),
+      ("dedup", "advise", Seq("0"), "0", dedupUsage),
+      ("dedup", "advise", Seq("4", "1.5"), "1.5", dedupUsage),
+      ("vstore", "advise", Seq("0"), "0",
+        "vstore advise <path> [maxReplay >= 1, default 8] [apply <keyCols...>]"),
+      ("ivf", "gc", Seq("-1"), "-1", "ivf gc <path> [retain >= 0, default 1]"),
+      ("ivf", "recluster", Seq("x"), "x",
+        "ivf recluster <path> [nCentroids] [iters] [sampleMod]"),
+      ("vstore", "repair-at", Seq("x", "k"), "x",
+        "vstore repair-at needs a numeric <version> then the store's key column(s)"),
+      ("vstore", "checkpoint", Seq("x", "k"), "x",
+        "vstore checkpoint needs a numeric <version> then the store's key column(s)"),
+      ("vstore", "vacuum", Seq("x"), "x",
+        "vstore vacuum needs a numeric <retainVersion>"))
+    for ((family, op, args, bad, usage) <- cases) {
+      val e = intercept[IllegalArgumentException](
+        Maintain.run(spark, family, op, path, args))
+      assert(e.getMessage === s"$usage (got '$bad')",
+        s"$family $op ${args.mkString(" ")}")
+    }
+  }
+
+  /** Every file under `root` (markers included) with its bytes. */
+  private def filesAt(root: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val base = java.nio.file.Paths.get(root)
+    val walk = java.nio.file.Files.walk(base)
+    try walk.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(f => base.relativize(f).toString ->
+        java.nio.file.Files.readAllBytes(f).toSeq).toMap
+    finally walk.close()
+  }
+
+  test("a not-due advise apply returns the advise row and leaves the store untouched") {
+    val corpus = Seq((1L, "alpha beta gamma delta"), (2L, "q r s t u v w x"))
+      .toDF("doc_id", "text")
+    val ix = QueryGroup.scratchDir("graft-maint-noop-ix")
+    index.Indexer.writeIndex(index.Indexer.buildIndex(corpus), ix, nBuckets = 2)
+    val dd = QueryGroup.scratchDir("graft-maint-noop-dd")
+    dedup.DedupStore.writeSignatures(corpus, dd)
+    val vs = QueryGroup.scratchDir("graft-maint-noop-vs")
+    streaming.VersionedStore.commit(spark, vs,
+      Seq((1L, "a", "u"), (2L, "b", "u")).toDF("k", "v", "_op"))
+    streaming.VersionedStore.checkpoint(spark, vs, 1L, Seq("k"))
+    val cases = Seq(
+      ("index", ix, Seq("apply")),
+      ("dedup", dd, Seq("apply")),
+      // nothing is due, so an apply without key columns must not fail
+      ("vstore", vs, Seq("apply")),
+      ("vstore", vs, Seq("8", "apply", "k")))
+    for ((family, path, args) <- cases) {
+      val nums = args.takeWhile(_ != "apply")
+      val advice = Maintain.run(spark, family, "advise", path, nums).get.collect()
+      assert(advice.map(_.getAs[Long]("violations")).sum === 0L,
+        s"$family store must be healthy: ${advice.mkString}")
+      val before = filesAt(path)
+      val applied = Maintain.run(spark, family, "advise", path, args).get.collect()
+      assert(applied.toSeq === advice.toSeq, s"$family advise ${args.mkString(" ")}")
+      assert(filesAt(path) === before,
+        s"$family advise ${args.mkString(" ")} must not touch the store")
+    }
+  }
+
   test("unknown routes fail loudly") {
     val e = intercept[IllegalArgumentException](
       Maintain.run(spark, "index", "defrag", "/tmp/nowhere"))
