@@ -72,12 +72,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * corrupt → detect → repair → re-check lifecycle the gate entries
   * verify end to end (q_store_repair, q_ivf_repair, q_dedup_repair,
   * q_vstore_repair).
+  *
+  * Every `advise` op runs one loop ([[adviseApply]]): the family's
+  * advisor returns one report row, and with `apply`, when that row
+  * counts violations, the family's heal runs and the re-advice is
+  * returned instead, so the exit code reflects the healed store. The
+  * heal is exactly the verb an operator would run by hand: index
+  * `compact`, ivf `recluster`, the dedup hot-bucket self-dedup, a vstore
+  * `checkpoint` at the newest version. A family supplies only its
+  * advisor, its heal and its argument spec; numbers parse through one
+  * typed reader ([[Nums]]) that fails with the op's usage text. This
+  * object only routes: each family's store module owns its verb bodies.
   */
 object Maintain {
 
-  /** Dispatch one maintenance op; returns the report frame for fsck ops
-    * (None for mutations). Separated from [[main]] so the smoke spec
-    * drives it in-process. */
   // the store records its own (numHashes, bands); the CLI reads it back
   // instead of forcing defaults — a non-default store would otherwise
   // hard-fail every dedup route on the geometry guard (pre-marker
@@ -93,44 +101,52 @@ object Maintain {
     "dedup" -> dedup.DedupStore.Tables,
     "ivf" -> similarity.IvfStore.Tables)
 
-  /** The index family's compact body — shared by the `compact` verb and
-    * `advise ... apply` (the advisor's repair half must be EXACTLY the
-    * verb an operator would run by hand). */
-  private def compactIndexStore(spark: SparkSession, path: String): Unit = {
-    def batchRange(table: String): Seq[String] =
-      if (FsOps.readParquet(spark, s"$path/$table").columns.contains("batch"))
-        Seq("batch") else Seq.empty
-    val docBucketed = index.Indexer.docBucketsOf(spark, path).isDefined
-    val posDocBucketed = index.Indexer.positionalDocBucketsOf(spark, path).isDefined
-    if (docBucketed || posDocBucketed)
-      // doc-bucketed table(s): the generic rewrite would strip the
-      // bucket-suffixed file names the zero-shuffle join depends on —
-      // compact through the layout-aware twin instead (it routes each
-      // table by its own marker, positional included)
-      index.Indexer.compactDocBucketed(spark, path)
-    // the three tables compact independently — overlap them (guide §2.6)
-    val pos = new org.apache.hadoop.fs.Path(s"$path/positional")
-    val posStep: Seq[() => Unit] =
-      if (!posDocBucketed &&
-          pos.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pos))
-        Seq(() => { operators.Compaction.compactPartitionsRecursive(spark,
-          s"$path/positional", rangeBy = batchRange("positional"),
-          rowOrder = index.Indexer.RowOrder("positional")); () })
-      else Seq.empty
-    val flatSteps: Seq[() => Unit] =
-      if (docBucketed) Seq.empty
-      else Seq(
-        // per-table: the term-bucketed tables leaf by leaf (layout
-        // preserved), the flat tables in place
-        () => { operators.Compaction.compactPartitionsRecursive(spark,
-          s"$path/postings", rangeBy = batchRange("postings"),
-          rowOrder = index.Indexer.RowOrder("postings")); () },
-        () => { operators.Compaction.compact(spark, s"$path/doc_stats",
-          rangeBy = batchRange("doc_stats"),
-          rowOrder = index.Indexer.RowOrder("doc_stats")); () })
-    operators.Par.run(flatSteps ++ posStep: _*)
+  /** The one CLI number reader over an op's positional args: each token
+    * parses as its declared type — Ints as Ints, so a token past the Int
+    * range fails instead of wrapping — and must pass the op's range check;
+    * a rejected token fails with the op's usage text, never a bare
+    * NumberFormatException. */
+  private final class Nums(usage: String, args: Seq[String]) {
+    private def read[T](i: Int, parse: String => Option[T], ok: T => Boolean): Option[T] =
+      args.lift(i).map(a => parse(a).filter(ok).getOrElse(
+        throw new IllegalArgumentException(s"$usage (got '$a')")))
+    def int(i: Int, ok: Int => Boolean = _ => true): Option[Int] =
+      read(i, _.toIntOption, ok)
+    def double(i: Int, ok: Double => Boolean = _ => true): Option[Double] =
+      read(i, _.toDoubleOption, ok)
+    def long(i: Int): Option[Long] = read(i, _.toLongOption, (_: Long) => true)
+    def ints: Seq[Int] = args.indices.flatMap(int(_))
   }
 
+  /** One family's face of the advise/apply loop: its advisor (one report
+    * row with a `violations` column) and its heal, which gets the tokens
+    * after `apply`. */
+  private final case class Advisor(advise: () => DataFrame,
+                                   heal: Seq[String] => Unit)
+
+  /** The advise/apply loop every family shares. `apply` is the last
+    * token, or with `healArgs` (vstore's key columns) the first `apply`
+    * token; the tokens before it are the family's numbers, read against
+    * `usage`. The advice is returned as is unless `apply` is given and
+    * the advice counts violations: then the heal runs and the re-advice
+    * is returned. */
+  private def adviseApply(usage: String, extra: Seq[String],
+                          healArgs: Boolean = false)(
+      family: Nums => Advisor): Option[DataFrame] = {
+    val at =
+      if (healArgs) extra.indexOf("apply")
+      else if (extra.lastOption.contains("apply")) extra.size - 1 else -1
+    val f = family(new Nums(usage, if (at >= 0) extra.take(at) else extra))
+    val advice = f.advise()
+    if (at >= 0 && advice.collect()(0).getAs[Long]("violations") > 0) {
+      f.heal(extra.drop(at + 1))
+      Some(f.advise())
+    } else Some(advice)
+  }
+
+  /** Dispatch one maintenance op; returns the report frame for fsck and
+    * advise ops (None for mutations). Separated from [[main]] so the
+    * smoke spec drives it in-process. */
   def run(spark: SparkSession, family: String, op: String, path: String,
           extra: Seq[String] = Seq.empty): Option[DataFrame] = {
     def keys: Seq[String] = {
@@ -138,16 +154,6 @@ object Maintain {
         s"$family $op needs the store's key column(s) as trailing args")
       extra
     }
-    // numeric args fail with the op's usage message, not a bare
-    // NumberFormatException (same contract as the adjacent require guards)
-    def longArg(s: String, usage: String): Long =
-      s.toLongOption.getOrElse(
-        throw new IllegalArgumentException(s"$usage (got '$s')"))
-    // batch-tracked tables compact range-partitioned by their ingest
-    // ordinal so the incremental audits keep file-level min/max skipping
-    def batchRange(table: String): Seq[String] =
-      if (FsOps.readParquet(spark, s"$path/$table").columns.contains("batch"))
-        Seq("batch") else Seq.empty
     (family, op) match {
       // family-agnostic: stale-aside cleanup is a property of the marker
       // discipline every store shares, not of any one family
@@ -168,66 +174,42 @@ object Maintain {
       // concurrent readers' grace window; `gc 0` reclaims it immediately
       // (no external reader mid-scan)
       case (fam, "gc") if FrameTables.contains(fam) =>
-        val usage = s"$fam gc <path> [retain >= 0, default 1]"
         operators.Frames.gc(spark, path, FrameTables(fam),
-          retain = extra.headOption
-            .map(a => a.toIntOption.filter(_ >= 0).getOrElse(
-              throw new IllegalArgumentException(s"$usage (got '$a')")))
-            .getOrElse(1))
+          retain = new Nums(s"$fam gc <path> [retain >= 0, default 1]", extra)
+            .int(0, _ >= 0).getOrElse(1))
         None
-      case ("index", "compact") => compactIndexStore(spark, path); None
+      case ("index", "compact") => index.Indexer.compactStore(spark, path); None
       // fragmentation advisor (VERDICT r18 #6): exits nonzero exactly
       // when some leaf holds more than [maxFilesPerLeaf] data files;
-      // with the trailing literal `apply`, runs the compact verb when
-      // due and reports the post-heal advice — detect → repair →
-      // re-check in one cron invocation (the ivf advise contract)
+      // `apply` runs the compact verb
       case ("index", "advise") =>
-        val usage = "index advise <path> [maxFilesPerLeaf >= 1, default 8] [apply]"
-        val applyIt = extra.lastOption.contains("apply")
-        val nums = if (applyIt) extra.init else extra
-        val maxFiles = nums.headOption
-          .map(a => a.toIntOption.filter(_ >= 1).getOrElse(
-            throw new IllegalArgumentException(s"$usage (got '$a')")))
-          .getOrElse(8)
-        val dirs = Seq("postings", "doc_stats", "positional").map(t => s"$path/$t")
-        val advice = operators.Compaction.adviseCompaction(spark, dirs, maxFiles)
-        if (applyIt &&
-            advice.collect()(0).getAs[Long]("violations") > 0) {
-          compactIndexStore(spark, path)
-          Some(operators.Compaction.adviseCompaction(spark, dirs, maxFiles))
-        } else Some(advice)
+        adviseApply("index advise <path> [maxFilesPerLeaf >= 1, default 8] [apply]",
+            extra) { n =>
+          val maxFiles = n.int(0, _ >= 1).getOrElse(8)
+          val dirs = Seq("postings", "doc_stats", "positional").map(t => s"$path/$t")
+          Advisor(() => operators.Compaction.adviseCompaction(spark, dirs, maxFiles),
+            _ => index.Indexer.compactStore(spark, path))
+        }
       case ("ivf", "fsck")         => Some(similarity.IvfStore.checkStore(spark, path))
-      // provenance→recluster advisor (one row; violations=1 iff the
-      // range-only provenance share exceeds [maxRangeFrac], so a cron
-      // `Maintain ivf advise` exits nonzero exactly when recluster is
-      // due). With the trailing literal `apply` the loop closes without
-      // a human: when due, run reclusterStore and report the POST-heal
-      // advice — the detect → repair → re-check lifecycle in one verb,
-      // exiting clean after a successful heal. The applied recluster
-      // re-trains to the store's OWN current centroid count (one
-      // ≤-nCentroids metadata read), never a hardcoded default: an
-      // unattended cron loop re-training an 8-centroid store to 16
-      // silently changes probe selectivity and recall (ADVICE r18);
-      // pass [nCentroids] to re-train to an explicit k instead.
+      // provenance→recluster advisor: violations=1 iff the range-only
+      // provenance share exceeds [maxRangeFrac], so a cron `Maintain ivf
+      // advise` exits nonzero exactly when recluster is due; `apply`
+      // runs reclusterStore. It re-trains to the store's OWN current
+      // centroid count (one ≤-nCentroids metadata read), never a
+      // hardcoded default: an unattended cron loop re-training an
+      // 8-centroid store to 16 silently changes probe selectivity and
+      // recall (ADVICE r18); pass [nCentroids] to re-train to an
+      // explicit k instead.
       case ("ivf", "advise") =>
-        val usage =
-          "ivf advise <path> [maxRangeFrac 0..1, default 0.25] [nCentroids] [apply]"
-        val applyIt = extra.lastOption.contains("apply")
-        val nums = if (applyIt) extra.init else extra
-        val frac = nums.headOption.map(a => a.toDoubleOption.getOrElse(
-          throw new IllegalArgumentException(s"$usage (got '$a')")))
-          .getOrElse(0.25)
-        val explicitK = nums.lift(1).map(a => a.toIntOption.getOrElse(
-          throw new IllegalArgumentException(s"$usage (got '$a')")))
-        val advice = similarity.IvfStore.adviseRecluster(spark, path, frac)
-        if (applyIt &&
-            advice.collect()(0).getAs[Long]("violations") > 0) {
-          val k = explicitK.getOrElse(
-            FsOps.readParquet(spark, operators.Frames.resolve(spark, path, "centroids"))
-              .count().toInt)
-          similarity.IvfStore.reclusterStore(spark, path, nCentroids = k)
-          Some(similarity.IvfStore.adviseRecluster(spark, path, frac))
-        } else Some(advice)
+        adviseApply("ivf advise <path> [maxRangeFrac 0..1, default 0.25] " +
+            "[nCentroids] [apply]", extra) { n =>
+          val frac = n.double(0).getOrElse(0.25)
+          val explicitK = n.int(1)
+          Advisor(() => similarity.IvfStore.adviseRecluster(spark, path, frac),
+            _ => similarity.IvfStore.reclusterStore(spark, path,
+              nCentroids = explicitK.getOrElse(FsOps.readParquet(spark,
+                operators.Frames.resolve(spark, path, "centroids")).count().toInt)))
+        }
       case ("ivf", "fsck-incr")    => Some(similarity.IvfStore.checkStoreIncremental(spark, path))
       case ("ivf", "mark-audited") => similarity.IvfStore.markAudited(spark, path); None
       case ("ivf", "repair")  => similarity.IvfStore.repairLists(spark, path); None
@@ -241,8 +223,8 @@ object Maintain {
         // so K merges probe K× the centroids — recluster re-trains to
         // [nCentroids] (default 16) with [iters] Lloyd rounds (default
         // 2) on a 1-in-[sampleMod] vector sample (default 1 = all)
-        val usage = "ivf recluster <path> [nCentroids] [iters] [sampleMod]"
-        val nums = extra.map(a => longArg(a, usage).toInt)
+        val nums = new Nums("ivf recluster <path> [nCentroids] [iters] [sampleMod]",
+          extra).ints
         similarity.IvfStore.reclusterStore(spark, path,
           nCentroids = nums.headOption.getOrElse(16),
           kmeansIters = nums.lift(1).getOrElse(2),
@@ -251,29 +233,17 @@ object Maintain {
       // bucket-skew advisor (VERDICT r18 #6): exits nonzero exactly when
       // hot (band,bucket) groups exceed [maxBucketDocs]; `apply` runs
       // the self-dedup repair (dedupHotBuckets at [minJaccard], default
-      // 0.8 — removal installs via the manifest frame) and reports the
-      // post-heal advice
+      // 0.8 — removal installs via the manifest frame)
       case ("dedup", "advise") =>
-        val usage =
-          "dedup advise <path> [maxBucketDocs >= 1, default 32] " +
-            "[minJaccard (0,1], default 0.8] [apply]"
-        val applyIt = extra.lastOption.contains("apply")
-        val nums = if (applyIt) extra.init else extra
-        val maxDocs = nums.headOption
-          .map(a => a.toIntOption.filter(_ >= 1).getOrElse(
-            throw new IllegalArgumentException(s"$usage (got '$a')")))
-          .getOrElse(32)
-        val minJ = nums.lift(1)
-          .map(a => a.toDoubleOption.filter(j => j > 0.0 && j <= 1.0).getOrElse(
-            throw new IllegalArgumentException(s"$usage (got '$a')")))
-          .getOrElse(0.8)
-        val advice = dedup.DedupStore.adviseBucketSkew(spark, path, maxDocs)
-        if (applyIt &&
-            advice.collect()(0).getAs[Long]("violations") > 0) {
-          val removed = dedup.DedupStore.dedupHotBuckets(spark, path, minJ, maxDocs)
-          println(s"[maintain] dedup advise apply: removed $removed duplicate doc(s)")
-          Some(dedup.DedupStore.adviseBucketSkew(spark, path, maxDocs))
-        } else Some(advice)
+        adviseApply("dedup advise <path> [maxBucketDocs >= 1, default 32] " +
+            "[minJaccard (0,1], default 0.8] [apply]", extra) { n =>
+          val maxDocs = n.int(0, _ >= 1).getOrElse(32)
+          val minJ = n.double(1, j => j > 0.0 && j <= 1.0).getOrElse(0.8)
+          Advisor(() => dedup.DedupStore.adviseBucketSkew(spark, path, maxDocs), _ => {
+            val removed = dedup.DedupStore.dedupHotBuckets(spark, path, minJ, maxDocs)
+            println(s"[maintain] dedup advise apply: removed $removed duplicate doc(s)")
+          })
+        }
       case ("dedup", "fsck") =>
         val (nh, b) = dedupGeometry(spark, path)
         Some(dedup.DedupStore.checkStore(spark, path, numHashes = nh, bands = b))
@@ -284,41 +254,22 @@ object Maintain {
       case ("dedup", "repair") =>
         val (nh, b) = dedupGeometry(spark, path)
         dedup.DedupStore.refreshBuckets(spark, path, numHashes = nh, bands = b); None
-      case ("dedup", "compact") =>
-        // frame-resolved dirs: a removeDocs/refreshBuckets-installed
-        // store's tables live under generation dirs, not the root
-        for (t <- Seq("sets", "buckets")) {
-          val dir = dedup.DedupStore.tablePath(spark, path, t)
-          operators.Compaction.compact(spark, dir,
-            rangeBy =
-              if (FsOps.readParquet(spark, dir).columns.contains("batch"))
-                Seq("batch") else Seq.empty)
-        }
-        None
-      // replay-depth advisor (the vstore face of the advise/apply
-      // loop): nonzero exit when reads at the newest version replay
-      // more than [maxReplay] log commits past their checkpoint base;
-      // with `apply <keyCols...>`, checkpoints at the newest version
-      // when due and reports the post-heal advice
+      case ("dedup", "compact") => dedup.DedupStore.compactStore(spark, path); None
+      // replay-depth advisor: nonzero exit when reads at the newest
+      // version replay more than [maxReplay] log commits past their
+      // checkpoint base; `apply <keyCols...>` checkpoints at the newest
+      // version (the keys are needed only when that heal runs)
       case ("vstore", "advise") =>
-        val usage =
-          "vstore advise <path> [maxReplay >= 1, default 8] [apply <keyCols...>]"
-        val applyAt = extra.indexOf("apply")
-        val nums = if (applyAt >= 0) extra.take(applyAt) else extra
-        val maxReplay = nums.headOption
-          .map(a => a.toIntOption.filter(_ >= 1).getOrElse(
-            throw new IllegalArgumentException(s"$usage (got '$a')")))
-          .getOrElse(8)
-        val advice = streaming.VersionedStore.adviseCheckpoint(spark, path, maxReplay)
-        if (applyAt >= 0 &&
-            advice.collect()(0).getAs[Long]("violations") > 0) {
-          val keyCols = extra.drop(applyAt + 1)
-          require(keyCols.nonEmpty,
-            s"$usage — apply needs the store's key column(s)")
-          streaming.VersionedStore.checkpoint(spark, path,
-            streaming.VersionedStore.newestVersion(spark, path), keyCols)
-          Some(streaming.VersionedStore.adviseCheckpoint(spark, path, maxReplay))
-        } else Some(advice)
+        val usage = "vstore advise <path> [maxReplay >= 1, default 8] [apply <keyCols...>]"
+        adviseApply(usage, extra, healArgs = true) { n =>
+          val maxReplay = n.int(0, _ >= 1).getOrElse(8)
+          Advisor(() => streaming.VersionedStore.adviseCheckpoint(spark, path, maxReplay),
+            keyCols => {
+              require(keyCols.nonEmpty, s"$usage — apply needs the store's key column(s)")
+              streaming.VersionedStore.checkpoint(spark, path,
+                streaming.VersionedStore.newestVersion(spark, path), keyCols)
+            })
+        }
       case ("vstore", "fsck")         => Some(streaming.VersionedStore.checkStore(spark, path, keys))
       case ("vstore", "fsck-incr")    => Some(streaming.VersionedStore.checkStoreIncremental(spark, path, keys))
       case ("vstore", "mark-audited") => streaming.VersionedStore.markAudited(spark, path); None
@@ -329,8 +280,8 @@ object Maintain {
         require(extra.length >= 2,
           "vstore repair-at needs <version> then the store's key column(s)")
         streaming.VersionedStore.repairCheckpoint(spark, path, extra.tail,
-          version = Some(longArg(extra.head,
-            "vstore repair-at needs a numeric <version> then the store's key column(s)")))
+          version = new Nums("vstore repair-at needs a numeric <version> then " +
+            "the store's key column(s)", extra).long(0))
         None
       case ("vstore", "checkpoint") =>
         // args: <version> <keyCols...> — materialize the snapshot so
@@ -338,8 +289,8 @@ object Maintain {
         require(extra.length >= 2,
           "vstore checkpoint needs <version> then the store's key column(s)")
         streaming.VersionedStore.checkpoint(spark, path,
-          longArg(extra.head,
-            "vstore checkpoint needs a numeric <version> then the store's key column(s)"),
+          new Nums("vstore checkpoint needs a numeric <version> then the store's " +
+            "key column(s)", extra).long(0).get,
           extra.tail)
         None
       case ("vstore", "purge") =>
@@ -357,7 +308,7 @@ object Maintain {
         // args: <retain> — drop history not needed at versions >= retain
         require(extra.nonEmpty, "vstore vacuum needs <retainVersion>")
         streaming.VersionedStore.vacuum(spark, path,
-          longArg(extra.head, "vstore vacuum needs a numeric <retainVersion>"))
+          new Nums("vstore vacuum needs a numeric <retainVersion>", extra).long(0).get)
         None
       // the cross-store governance face: `path` is the PIPELINE ROOT
       // (conventional child stores index/ dedup/ ivf/ — any subset)

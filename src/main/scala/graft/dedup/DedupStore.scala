@@ -47,11 +47,20 @@ object DedupStore {
 
   /** Resolved directory of a store table in the CURRENT frame — the
     * entry every reader and appender goes through ([[graft.pipeline
-    * .Forget]] and the Maintain compaction verb resolve through this
-    * too; a raw `<path>/sets` read would serve a SUPERSEDED population
+    * .Forget]] and [[compactStore]] resolve through this too; a raw `<path>/sets` read would serve a SUPERSEDED population
     * on any frame-installed store). */
   def tablePath(spark: SparkSession, path: String, table: String): String =
     graft.operators.Frames.resolve(spark, path, table)
+
+  /** Small-file compaction — the `compact` maintenance verb: each table
+    * of the current frame rewrites in place, range-partitioned by `batch`
+    * when batch-tracked. */
+  def compactStore(spark: SparkSession, path: String): Unit =
+    for (t <- Tables) {
+      val dir = tablePath(spark, path, t)
+      graft.operators.Compaction.compact(spark, dir,
+        rangeBy = graft.operators.Compaction.batchRange(spark, dir))
+    }
 
   /** True iff a committed signature store lives at `path` — the
     * family-detection probe (bootstrap/ingest routing): the current
@@ -83,17 +92,13 @@ object DedupStore {
     graft.FsOps.writeMarker(spark, path, GeometryMarker, s"$numHashes,$bands")
 
   /** The `(numHashes, bands)` geometry a store was built with, if
-    * recorded (stores written before the marker existed have none). */
+    * recorded (stores written before the marker existed have none). A
+    * value that is not two numbers raises FsOps' corrupt-marker error. */
   def storedGeometry(spark: SparkSession, path: String): Option[(Int, Int)] =
-    graft.FsOps.readMarker(spark, path, GeometryMarker).map { s =>
-      val parts = s.trim.split(",")
-      try (parts(0).toInt, parts(1).toInt)
-      catch { case _: RuntimeException =>
-        throw new IllegalStateException(
-          s"corrupt marker $path/$GeometryMarker: '${s.trim}' is not " +
-            "'<numHashes>,<bands>' — delete the file to reset it")
-      }
-    }
+    graft.FsOps.readParsedMarker(spark, path, GeometryMarker)(_.split(",") match {
+      case Array(nh, b) => (nh.toInt, b.toInt)
+      case _ => throw new NumberFormatException("not '<numHashes>,<bands>'")
+    })
 
   /** Fail fast when the caller's geometry contradicts the store's
     * recorded one (pre-marker stores validate vacuously). */

@@ -1052,6 +1052,36 @@ object Indexer {
         graft.FsOps.readParquet(spark, s"$path/$table")
     }
 
+  /** Small-file compaction of an index store — the `compact` maintenance
+    * verb, and the heal `Maintain index advise … apply` runs. Doc-bucketed
+    * tables compact through [[compactDocBucketed]], which keeps the
+    * bucket-suffixed file names the zero-shuffle join depends on. Every
+    * plain table compacts through [[graft.operators.Compaction]] in its
+    * declared [[RowOrder]], range-partitioned by `batch` when
+    * batch-tracked; the term-bucketed tables leaf by leaf, so the layout
+    * survives. The plain tables compact independently and overlap. */
+  def compactStore(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+    val docBucketed = docBucketsOf(spark, path).isDefined
+    val posDocBucketed = positionalDocBucketsOf(spark, path).isDefined
+    if (docBucketed || posDocBucketed) compactDocBucketed(spark, path)
+    val pos = new org.apache.hadoop.fs.Path(s"$path/positional")
+    val plain =
+      (if (docBucketed) Nil else Seq("postings", "doc_stats")) ++
+        (if (!posDocBucketed &&
+            pos.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pos))
+          Seq("positional") else Nil)
+    graft.operators.Par.map(plain) { table =>
+      val dir = s"$path/$table"
+      val range = graft.operators.Compaction.batchRange(spark, dir)
+      if (table == "doc_stats")
+        graft.operators.Compaction.compact(spark, dir, rangeBy = range,
+          rowOrder = RowOrder(table))
+      else
+        graft.operators.Compaction.compactPartitionsRecursive(spark, dir,
+          rangeBy = range, rowOrder = RowOrder(table))
+    }
+  }
+
   /** Small-file compaction for a DOC-BUCKETED store — the layout-aware
     * twin of [[graft.operators.Compaction]] (whose generic rewrite would
     * strip the bucket-suffixed file names the zero-shuffle join depends

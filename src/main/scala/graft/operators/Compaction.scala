@@ -26,6 +26,12 @@ object Compaction {
   final case class CompactionStats(filesBefore: Int, filesAfter: Int,
                                    bytes: Long, targetFiles: Int)
 
+  /** The `rangeBy` a store table at `dir` compacts by: `batch` when the
+    * table is batch-tracked (see [[compact]]), else none. */
+  private[graft] def batchRange(spark: SparkSession, dir: String): Seq[String] =
+    if (graft.FsOps.readParquet(spark, dir).columns.contains("batch")) Seq("batch")
+    else Seq.empty
+
   /** Rewrite the parquet directory at `path` into ~`targetBytes` files.
     * Returns the before/after accounting.
     *

@@ -33,6 +33,17 @@ import org.apache.spark.sql.SparkSession
   */
 object Promote {
 
+  /** Each mergeable family's commit probe: true once a committed store of
+    * that family lives at the path. [[mergeRoots]] skips a family whose
+    * dest already passes it (resume), [[scrapRoot]] certifies a husk's
+    * recorded dest by it. The IVF probe resolves the frame pointer: a
+    * reclustered store's centroids live under a generation dir. */
+  private val CommitProbes =
+    scala.collection.immutable.ListMap[String, (SparkSession, String) => Boolean](
+      "index" -> ((s, p) => graft.index.Indexer.storedBuckets(s, p).nonEmpty),
+      "dedup" -> ((s, p) => graft.dedup.DedupStore.storedGeometry(s, p).nonEmpty),
+      "ivf" -> ((s, p) => graft.similarity.IvfStore.isCommitted(s, p)))
+
   /** Merge every family store of `roots` into `dest`; returns the
     * families promoted (sorted). `moveFiles = true` renames data files
     * (the O(files) path that consumes the shard roots). */
@@ -61,22 +72,16 @@ object Promote {
     // first call, like every family merge's dest)
     // the family merges write disjoint dest children — overlap them
     // (guide §2.6); each keeps its own commit marker and resume story
-    val steps: Seq[(Boolean, () => Unit)] = Seq(
-      (fams.contains("index") &&
-        graft.index.Indexer.storedBuckets(spark, s"$dest/index").isEmpty,
-        () => graft.index.StoreMerge.mergeStores(spark,
-          roots.map(r => s"$r/index"), s"$dest/index", moveFiles)),
-      (fams.contains("dedup") &&
-        graft.dedup.DedupStore.storedGeometry(spark, s"$dest/dedup").isEmpty,
-        () => graft.dedup.DedupStore.mergeStores(spark,
-          roots.map(r => s"$r/dedup"), s"$dest/dedup", moveFiles)),
-      (fams.contains("ivf") &&
-        // commit probe resolves the frame pointer (a reclustered dest's
-        // centroids live under a generation dir, not at the store root)
-        !graft.similarity.IvfStore.isCommitted(spark, s"$dest/ivf"),
-        () => graft.similarity.IvfStore.mergeStores(spark,
-          roots.map(r => s"$r/ivf"), s"$dest/ivf", moveFiles)))
-    graft.operators.Par.run(steps.collect { case (true, step) => step }: _*)
+    val steps: Seq[(String, () => Unit)] = Seq(
+      "index" -> (() => graft.index.StoreMerge.mergeStores(spark,
+        roots.map(r => s"$r/index"), s"$dest/index", moveFiles)),
+      "dedup" -> (() => graft.dedup.DedupStore.mergeStores(spark,
+        roots.map(r => s"$r/dedup"), s"$dest/dedup", moveFiles)),
+      "ivf" -> (() => graft.similarity.IvfStore.mergeStores(spark,
+        roots.map(r => s"$r/ivf"), s"$dest/ivf", moveFiles)))
+    graft.operators.Par.run(steps.collect {
+      case (f, step) if fams.contains(f) && !CommitProbes(f)(spark, s"$dest/$f") => step
+    }: _*)
     fams.toSeq.sorted
   }
 
@@ -97,11 +102,7 @@ object Promote {
         throw new IllegalArgumentException(
           s"$husk carries no ${graft.FsOps.MergedIntoMarker} marker — not a " +
             "consumed husk; scrap refuses to delete live stores"))
-      val committed =
-        graft.index.Indexer.storedBuckets(spark, dest).nonEmpty ||
-        graft.dedup.DedupStore.storedGeometry(spark, dest).nonEmpty ||
-        graft.similarity.IvfStore.isCommitted(spark, dest)
-      require(committed,
+      require(CommitProbes.values.exists(_(spark, dest)),
         s"$husk records ${graft.FsOps.MergedIntoMarker}=$dest but no " +
           "committed store exists there — refusing to delete the remains; " +
           "finish or re-run the merge first")

@@ -114,10 +114,13 @@ object Similarity {
     * recompute elementwise means). The per-iteration shape is the
     * standard scalable one: centroids broadcast (≤ nCentroids rows), one
     * corpus pass for assignment, one (cid, dim)-keyed aggregation for the
-    * means — no driver-side math, no collect.
+    * means — no driver-side math, no collect. Zero centroids would give
+    * every vector no list home (an inner assignment join drops them all),
+    * so `nCentroids` must be positive.
     */
   def kmeansCentroids(corpus: DataFrame, nCentroids: Int, iters: Int,
                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    require(nCentroids >= 1, s"nCentroids must be >= 1 (got $nCentroids)")
     var cents = corpus.orderBy(col(idCol)).limit(nCentroids)
       .select(col(idCol).as("cent_src"), col(vecCol).as("cvec"))
       // global window numbering nCentroids (<= dozens) seed rows —

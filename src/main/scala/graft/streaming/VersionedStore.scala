@@ -559,18 +559,8 @@ object VersionedStore {
     * audited before this record existed) falls back to that heuristic. */
   private def vouchedCkpts(spark: SparkSession, path: String,
                            ckptVs: Seq[Long], since: Long): Set[Long] =
-    graft.FsOps.readMarker(spark, path, AuditedCkptsMarker)
-      .map(_.split(",").filter(_.nonEmpty).map { s =>
-        // same corrupt-marker contract as FsOps.readLongMarker: name the
-        // file and the reset procedure instead of a bare parse exception
-        s.trim.toLongOption.getOrElse(throw new IllegalStateException(
-          s"corrupt marker $path/$AuditedCkptsMarker: '${s.trim}' is not a " +
-            s"number — delete the file AND any " +
-            s"$path/_$AuditedCkptsMarker.swap_old aside to reset it " +
-            "(readers recover a missing marker from the aside; with " +
-            "neither present they fall back to the version-ordinal " +
-            "heuristic)"))
-      }.toSet)
+    graft.FsOps.readParsedMarker(spark, path, AuditedCkptsMarker)(
+        _.split(",").filter(_.nonEmpty).map(_.trim.toLong).toSet)
       .getOrElse(ckptVs.filter(_ <= since).toSet)
 
   /** Highest log version an audit has vouched for (None = never audited). */

@@ -541,4 +541,21 @@ class DedupSpec extends SparkSpec {
     assert(lsh.size >= (brute.size * 0.5).toInt,
       s"recall collapsed: ${lsh.size}/${brute.size}")
   }
+
+  test("a corrupt _geometry marker raises FsOps' named corrupt-marker error") {
+    import graft.dedup.DedupStore
+    val path = graft.queries.QueryGroup.scratchDir("graft-dd-geom")
+    DedupStore.writeSignatures(corpus, path)
+    // a wrong-arity value is as corrupt as a non-number
+    for (bad <- Seq("128", "x,32")) {
+      FsOps.writeMarker(spark, path, "_geometry", bad)
+      val e = intercept[IllegalStateException](DedupStore.storedGeometry(spark, path))
+      assert(e.getMessage.contains(
+        s"corrupt marker $path/_geometry: '$bad' holds a non-number"), e.getMessage)
+      // the ingest path reads it through the geometry guard: same error
+      val ing = intercept[IllegalStateException](DedupStore.ingest(spark, path,
+        Seq((9L, "a b c d e f g h")).toDF("doc_id", "text"), 0.5).collect())
+      assert(ing.getMessage === e.getMessage)
+    }
+  }
 }

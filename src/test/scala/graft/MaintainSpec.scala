@@ -329,6 +329,25 @@ class MaintainSpec extends SparkSpec {
     }
   }
 
+  test("ivf recluster refuses a zero or out-of-Int-range centroid count and keeps the store") {
+    val e = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)),
+      (3L, Array(0.7f, 0.7f))).toDF("vec_id", "embedding")
+    val path = QueryGroup.scratchDir("graft-maint-ivfk")
+    similarity.IvfStore.writeIndex(e, path, nCentroids = 2, kmeansIters = 0)
+    val frameBefore = operators.Frames.currentVersion(spark, path)
+    def liveIds = similarity.IvfStore.liveVectorIds(spark, path)
+      .as[Long].collect().toSet
+    assert(liveIds === Set(1L, 2L, 3L))
+    // 4294967296 is 2^32: a Long read narrowed to Int would wrap it to 0
+    for (k <- Seq("0", "4294967296")) {
+      intercept[IllegalArgumentException](
+        Maintain.run(spark, "ivf", "recluster", path, Seq(k)))
+      assert(operators.Frames.currentVersion(spark, path) === frameBefore,
+        s"recluster $k must not install a frame")
+      assert(liveIds === Set(1L, 2L, 3L), s"recluster $k must keep every vector")
+    }
+  }
+
   test("unknown routes fail loudly") {
     val e = intercept[IllegalArgumentException](
       Maintain.run(spark, "index", "defrag", "/tmp/nowhere"))

@@ -509,4 +509,16 @@ class VersionedStoreSpec extends SparkSpec {
     assert(VersionedStore.checkStoreIncremental(spark, path, Seq("k"))
       .agg(coalesce(sum($"violations"), lit(0L))).as[Long].collect().head === 0L)
   }
+
+  test("a corrupt _audited_ckpts marker raises FsOps' named corrupt-marker error") {
+    val path = QueryGroup.scratchDir("graft-vs-ckmarker")
+    VersionedStore.commit(spark, path, ch((1L, "a", "u"), (2L, "b", "u")))
+    VersionedStore.checkpoint(spark, path, 1L, Seq("k"))
+    VersionedStore.markAudited(spark, path)
+    FsOps.writeMarker(spark, path, "_audited_ckpts", "3,x")
+    val e = intercept[IllegalStateException](
+      VersionedStore.checkStoreIncremental(spark, path, Seq("k")).collect())
+    assert(e.getMessage.contains(
+      s"corrupt marker $path/_audited_ckpts: '3,x' holds a non-number"), e.getMessage)
+  }
 }
