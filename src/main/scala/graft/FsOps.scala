@@ -210,147 +210,70 @@ object FsOps {
       }
   }
 
-  /** Transfer the visible (non-`_`/`.`-prefixed) data files of one
-    * directory level into `toDir` as `<prefix><name>` — the shared
-    * primitive of the store-family shard merges (StoreMerge, IvfStore,
-    * DedupStore): per-file idempotent (a target that already landed
-    * skips, so a crashed merge re-runs to completion), `move` renames
-    * (the O(files) promotion path that consumes the shard), copy
-    * otherwise. Subdirectories are NOT descended — callers own partition
-    * levels (they may remap them, e.g. the IVF cid offset). */
+  /** Transfer the visible (non-`_`/`.`-prefixed) data files under
+    * `fromDir` into `toDir` as `<prefix><name>` — the file primitive of
+    * [[graft.operators.ShardMerge]]. It descends visible partition dirs,
+    * passing each dir name through `rename` (the IVF `batch=`/`cid=`
+    * remap), and moves files only: hidden files and markers stay. Per
+    * file idempotent: a landed target skips, so a crashed merge re-runs
+    * to completion. `move` renames (the O(files) path that consumes the
+    * shard), copy otherwise. */
   def transferDataFiles(spark: org.apache.spark.sql.SparkSession,
                         fromDir: String, toDir: String, prefix: String,
-                        move: Boolean): Unit = {
-    val from = new Path(fromDir)
-    val fs = from.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(from)) return
-    fs.mkdirs(new Path(toDir))
-    for (st <- fs.listStatus(from).toSeq
-         if !st.isDirectory && !st.getPath.getName.startsWith("_")
-           && !st.getPath.getName.startsWith(".")) {
-      val to = new Path(toDir, s"$prefix${st.getPath.getName}")
-      if (!fs.exists(to)) {
-        if (move) {
-          if (!fs.rename(st.getPath, to))
-            throw new java.io.IOException(s"rename ${st.getPath} -> $to failed")
-        } else {
-          // copy is NOT crash-atomic, so never copy straight to the final
-          // name: a death mid-copy would leave a truncated file that the
-          // skip-if-exists resume keeps — and then COMMITS. Stage under a
-          // dot-name (invisible to Spark listings), rename into place
-          // (atomic); overwrite=true reclaims a crashed copy's debris.
-          val tmp = new Path(toDir, s".$prefix${st.getPath.getName}.copying")
-          if (!org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs, tmp,
-              false, true, spark.sparkContext.hadoopConfiguration))
-            throw new java.io.IOException(s"copy ${st.getPath} -> $tmp failed")
-          if (!fs.rename(tmp, to))
-            throw new java.io.IOException(s"rename $tmp -> $to failed")
+                        move: Boolean): Unit =
+    transferDataFiles(spark, fromDir, toDir, prefix, move, identity)
+
+  private[graft] def transferDataFiles(spark: org.apache.spark.sql.SparkSession,
+                                       fromDir: String, toDir: String, prefix: String,
+                                       move: Boolean, rename: String => String): Unit = {
+    val fs = new Path(fromDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(from: Path, into: Path): Unit = {
+      fs.mkdirs(into)
+      for (st <- fs.listStatus(from).toSeq if visible(st.getPath.getName)) {
+        val name = st.getPath.getName
+        lazy val to = new Path(into, s"$prefix$name")
+        if (st.isDirectory) walk(st.getPath, new Path(into, rename(name)))
+        else if (!fs.exists(to)) {
+          if (move) {
+            if (!fs.rename(st.getPath, to))
+              throw new java.io.IOException(s"rename ${st.getPath} -> $to failed")
+          } else {
+            // copy is NOT crash-atomic, so never copy straight to the final
+            // name: a death mid-copy would leave a truncated file that the
+            // skip-if-exists resume keeps — and then COMMITS. Stage under a
+            // dot-name (invisible to Spark listings), rename into place
+            // (atomic); overwrite=true reclaims a crashed copy's debris.
+            val tmp = new Path(into, s".$prefix$name.copying")
+            if (!org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs, tmp,
+                false, true, spark.sparkContext.hadoopConfiguration))
+              throw new java.io.IOException(s"copy ${st.getPath} -> $tmp failed")
+            if (!fs.rename(tmp, to))
+              throw new java.io.IOException(s"rename $tmp -> $to failed")
+          }
         }
       }
     }
+    if (fs.exists(new Path(fromDir))) walk(new Path(fromDir), new Path(toDir))
   }
 
   /** Visible (non-`_`/`.`-prefixed) data file NAMES under `dir`,
     * recursing through visible subdirectories — the drained-ness probe
-    * of the husk-stamp resume below (bounded: directory metadata only,
-    * never file contents). Empty when the directory is absent. */
+    * of a shard merge's husk-stamp resume (bounded: directory metadata
+    * only, never file contents). Empty when the directory is absent. */
   def visibleDataFiles(spark: org.apache.spark.sql.SparkSession,
                        dir: String): Seq[String] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def walk(d: Path): Seq[String] =
-      fs.listStatus(d).toSeq
-        .filterNot(st => st.getPath.getName.startsWith("_")
-          || st.getPath.getName.startsWith("."))
+      fs.listStatus(d).toSeq.filter(st => visible(st.getPath.getName))
         .flatMap(st =>
           if (st.isDirectory) walk(st.getPath) else Seq(st.getPath.getName))
     if (fs.exists(p)) walk(p) else Seq.empty
   }
 
-  /** Dest-side record of a shard merge's source list, written BEFORE any
-    * file transfers (every merge family calls [[recordMergeSources]]
-    * right after its guards pass): the source-derived evidence
-    * [[completeHuskStamps]] verifies a resume against (ADVICE r15 — the
-    * `m<i>_` ordinal-prefix check alone proves only that SOME source
-    * landed files at ordinal i, so a re-run listing a wrong-but-drained
-    * store at a matching ordinal would be stamped with invented
-    * provenance). Newline-joined paths, order-significant (the order IS
-    * the ordinal assignment). */
-  val MergeSourcesMarker = "_merge_sources"
-
-  def recordMergeSources(spark: org.apache.spark.sql.SparkSession,
-                         dest: String, sources: Seq[String]): Unit = {
-    readMarker(spark, dest, MergeSourcesMarker).foreach { prev =>
-      require(prev.split("\n").toSeq == sources,
-        s"$dest already records a different merge source list " +
-          s"(${prev.split("\n").mkString(", ")}) — a crashed merge must " +
-          "resume with ITS OWN source list and order (the order is the " +
-          "ordinal assignment); merging a different shard set into this " +
-          "debris would interleave two merges' files")
-    }
-    writeMarker(spark, dest, MergeSourcesMarker, sources.mkString("\n"))
-  }
-
-  /** Complete the husk stamps of a move-mode merge that died BETWEEN its
-    * dest commit and the stamping loop (ADVICE r14): that window used to
-    * be unfixable — the re-run refused on the committed dest, and scrap
-    * refuses unstamped paths — reinstating exactly the cryptic
-    * drained-directory state the husk discipline exists to eliminate.
-    *
-    * Returns true (after writing any missing `_merged_into` stamps) iff
-    * every source is either already stamped into `dest`, or is a REAL
-    * drained husk: its table directories (`tableDirs(store)` — the
-    * store's data tables, resolved through its frame pointer where it
-    * has one, [[graft.operators.Frames]]) still exist (a typo'd or
-    * never-populated path must not read as "drained" — stamping it
-    * would invent provenance and writeMarker would even create the
-    * directory), none carries a visible data file, and the dest holds
-    * `m<i>_`-prefixed files for ordinal i — the deterministic evidence
-    * that THIS dest consumed source i. The dest's [[MergeSourcesMarker]]
-    * (when present — every merge writes it before transferring) makes
-    * the evidence source-SPECIFIC: a resume whose source list differs
-    * from the recorded one refuses outright, so a wrong-but-drained
-    * store at a matching ordinal can no longer be stamped with invented
-    * provenance (pre-marker dests fall back to the ordinal-prefix
-    * check under single-pipeline discipline). A source already stamped into a
-    * DIFFERENT dest is NEVER restamped — its provenance marker is the
-    * record of where its data went, and overwriting it on a mistaken
-    * re-run against the wrong committed dest would corrupt exactly what
-    * the husk discipline exists to preserve. False = not that crash
-    * shape; callers fall through to their committed-dest refusal.
-    * Callers must have verified the dest commit marker and
-    * moveFiles=true themselves. The `_merged_into` stamps and the
-    * recorded dest stay at the STORE paths — markers are store-level
-    * identity, the tables are frame-level data. */
-  def completeHuskStamps(spark: org.apache.spark.sql.SparkSession,
-                         sources: Seq[String], dest: String,
-                         tableDirs: String => Seq[String]): Boolean = {
-    // source-derived evidence first (ADVICE r15): the merge recorded its
-    // source list on the dest before any file moved; a resume whose list
-    // differs (paths OR order — order is the ordinal assignment) is a
-    // DIFFERENT merge and must fall through to the committed-dest
-    // refusal, never stamp. Absent marker = store merged by a pre-marker
-    // build; the per-source drained-husk evidence below still gates.
-    if (readMarker(spark, dest, MergeSourcesMarker)
-        .exists(_.split("\n").toSeq != sources)) return false
-    val fs = new Path(dest).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val destFiles = tableDirs(dest).flatMap(visibleDataFiles(spark, _))
-    val resumable = sources.zipWithIndex.forall { case (s, i) =>
-      mergedInto(spark, s) match {
-        case Some(d) => d == dest // stamped elsewhere: never overwrite
-        case None =>
-          val dirs = tableDirs(s)
-          dirs.exists(d => fs.exists(new Path(d))) &&
-            dirs.forall(visibleDataFiles(spark, _).isEmpty) &&
-            destFiles.exists(_.startsWith(s"m${i}_"))
-      }
-    }
-    if (resumable)
-      sources.foreach(s =>
-        if (!mergedInto(spark, s).contains(dest))
-          writeMarker(spark, s, MergedIntoMarker, dest))
-    resumable
-  }
+  /** Spark's listing convention: `_`/`.`-prefixed names are metadata. */
+  private def visible(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
 
   /** One-long marker face of [[writeMarker]]/[[readMarker]]. */
   def writeLongMarker(spark: org.apache.spark.sql.SparkSession, path: String,

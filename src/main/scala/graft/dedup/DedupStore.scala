@@ -268,36 +268,40 @@ object DedupStore {
 
   /** Merge N independently-built signature stores into one — the dedup
     * face of the shard-build-then-promote pattern
-    * ([[graft.index.StoreMerge]] / [[graft.similarity.IvfStore
-    * .mergeStores]] are the BM25/ANN faces). MinHash signatures and LSH
-    * band buckets are DETERMINISTIC functions of each doc alone, so two
-    * stores built with the same `(numHashes, bands)` geometry union by
-    * pure FILE TRANSFER — no shingle re-hashed, no row rewritten — and
-    * the merged store immediately dedups ingest batches against BOTH
-    * shards' content (the cross-shard near-dups neither shard could see
-    * are exactly what the promotion buys). Contracts: ≥ 2 sources,
-    * identical geometry markers, identical table schemas, batch-tracked
-    * sources, DISJOINT doc_id spaces on the raw sets. Commit point: the
-    * destination geometry marker, written last ([[ingest]] refuses a
-    * store without one); a crashed merge re-runs idempotently
-    * (deterministic `m<i>_` names, landed files skip). The merged store
-    * is born audited — both tables are exact unions, so the derived
-    * invariant set is untouched. `moveFiles = true` renames (the
-    * O(files) promotion that consumes the shards). */
+    * ([[graft.operators.ShardMerge]] runs the lifecycle). MinHash
+    * signatures and LSH band buckets are DETERMINISTIC functions of each
+    * doc alone, so two stores built with the same `(numHashes, bands)`
+    * geometry union by pure FILE TRANSFER — no shingle re-hashed, no row
+    * rewritten — and the merged store immediately dedups ingest batches
+    * against BOTH shards' content (the cross-shard near-dups neither
+    * shard could see are exactly what the promotion buys). Contracts:
+    * identical geometry and shingle markers, identical table schemas,
+    * batch-tracked sources, DISJOINT doc_id spaces on the raw sets.
+    * Commit point: the destination geometry marker, written last
+    * ([[ingest]] refuses a store without one). The merged store is born
+    * audited — both tables are exact unions, so the derived invariant
+    * set is untouched. */
   def mergeStores(spark: SparkSession, sources: Seq[String], dest: String,
-                  moveFiles: Boolean = false): Unit = {
-    graft.operators.MergeGuards.requireMergeable(sources, dest)
-    graft.FsOps.requireNotHusk(spark, dest)
-    if (storedGeometry(spark, dest).nonEmpty) {
-      // committed dest: either the move-mode crash window between the
-      // commit and the husk stamps (complete the stamps and return —
-      // FsOps.completeHuskStamps), or a genuine re-merge to refuse
-      if (moveFiles && graft.FsOps.completeHuskStamps(spark, sources, dest,
-          s => Tables.map(tablePath(spark, s, _)))) return
-      throw new IllegalArgumentException(
-        s"$dest already carries a committed signature store (geometry marker exists)")
-    }
-    sources.foreach(graft.FsOps.requireNotHusk(spark, _))
+                  moveFiles: Boolean = false): Unit =
+    Shards.merge(spark, sources, dest, moveFiles)
+
+  /** What the merge's layout guards fix for its commit step. */
+  private[graft] final case class MergePlan(geometry: (Int, Int), shingleN: Long,
+                                            lastBatch: Long)
+
+  private[graft] val Shards = new graft.operators.ShardMerge.Family[MergePlan](
+    isCommitted = storedGeometry(_, _).nonEmpty,
+    refusal = dest =>
+      s"$dest already carries a committed signature store (geometry marker exists)",
+    dataTables = Tables,
+    tableDir = tablePath,
+    layout = mergePlan,
+    parityTables = _ => Tables,
+    ids = ("sets", "doc_id"),
+    commit = mergeCommit)
+
+  private def mergePlan(spark: SparkSession, sources: Seq[String],
+                        moveFiles: Boolean): MergePlan = {
     val geoms = sources.map { s =>
       storedGeometry(spark, s).getOrElse(throw new IllegalArgumentException(
         s"$s has no geometry marker — not a persisted signature store"))
@@ -321,40 +325,22 @@ object DedupStore {
       s"sources disagree on shingleN: ${sources.zip(shingleNs).mkString(", ")}")
     // frame-installed sources (a shard that underwent removeDocs /
     // refreshBuckets maintenance) merge by COPY only: their retained
-    // previous frames may still be serving an external reader the drain
-    // would break. Fresh flat shards (the promotion path) move as before.
+    // previous frames may still be serving an external reader the
+    // drain would break. Fresh flat shards (the promotion path) move.
     require(!moveFiles || sources.forall(s =>
         graft.operators.Frames.currentVersion(spark, s).isEmpty),
       "mergeStores(moveFiles = true): a source is frame-installed " +
         "(_frame pointer) — promote it by copy (moveFiles = false), or " +
         "rebuild the shard flat before a move-mode drain")
-    // a dest already holding transferred sets is a crashed merge being
-    // RESUMED: the data-reading guards passed before the first file
-    // moved, and a move-drained source's tables no longer read — skip
-    val destSets = new Path(s"$dest/sets")
-    if (!destSets.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(destSets)) {
-      for (t <- Seq("sets", "buckets"))
-        graft.operators.MergeGuards.requireSchemaParityDirs(spark,
-          sources.map(s => tablePath(spark, s, t)), t)
-      graft.operators.MergeGuards.requireDisjointIds(spark,
-        sources.map(s => tablePath(spark, s, "sets")), "doc_id")
-    }
-    // record the source list on the dest BEFORE any file moves — the
-    // source-specific resume evidence completeHuskStamps verifies
-    graft.FsOps.recordMergeSources(spark, dest, sources)
-    for (t <- Seq("sets", "buckets"); (src, i) <- sources.zipWithIndex)
-      graft.FsOps.transferDataFiles(spark, tablePath(spark, src, t),
-        s"$dest/$t", s"m${i}_", moveFiles)
-    graft.FsOps.writeLongMarker(spark, dest, ShingleMarker, shingleNs.head)
-    graft.FsOps.writeLongMarker(spark, dest, LastBatchMarker, batches.max)
-    markAudited(spark, dest, Some(batches.max))
-    writeGeometry(spark, dest, geoms.head._1, geoms.head._2)
-    // stamp drained sources only after the geometry commit above (husk
-    // contract — see FsOps.MergedIntoMarker)
-    if (moveFiles)
-      sources.foreach(s =>
-        graft.FsOps.writeMarker(spark, s, graft.FsOps.MergedIntoMarker, dest))
+    MergePlan(geoms.head, shingleNs.head, batches.max)
+  }
+
+  private def mergeCommit(spark: SparkSession, sources: Seq[String], dest: String,
+                          p: MergePlan): Unit = {
+    graft.FsOps.writeLongMarker(spark, dest, ShingleMarker, p.shingleN)
+    graft.FsOps.writeLongMarker(spark, dest, LastBatchMarker, p.lastBatch)
+    markAudited(spark, dest, Some(p.lastBatch))
+    writeGeometry(spark, dest, p.geometry._1, p.geometry._2)
   }
 
   /** Remove documents from the signature store — the maintenance

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.operators.ShardMerge
+
 /** Merge N independently-built index stores into one — the
   * build-shards-in-parallel-then-promote pattern a 100 TB indexing run
   * actually uses (each ingest partition builds its own store with
@@ -52,46 +54,34 @@ import org.apache.spark.sql.functions._
   * bytes on the normal maintenance schedule.
   *
   * Crash model: the `_nbuckets` marker is the COMMIT point (written
-  * last). A merge that dies mid-transfer leaves dest marker-less;
-  * re-running the same merge RESUMES it — per-file transfer is
-  * idempotent (deterministic `m<i>_` target names, already-present
-  * targets skip, and in move mode the source file is then gone, which
-  * the skip tolerates). A dest with a marker refuses (already merged).
-  *
-  * `moveFiles = true` renames instead of copying — the O(files)
-  * promotion path that CONSUMES the source shards (their husks keep
-  * markers/vocab but lose data files; delete them after commit).
-  * Default copy leaves sources intact at the cost of re-writing bytes.
+  * last); resume, husk stamps and move mode are the shared lifecycle of
+  * [[graft.operators.ShardMerge]]. A move-mode source keeps its markers,
+  * vocab and meta (the commit step reads them) and loses its data files.
   */
 object StoreMerge {
 
-  /** Tables whose files transfer as-is (when present). */
-  private val DataTables = Seq("doc_stats", "postings", "positional", "deletes")
-
   def mergeStores(spark: SparkSession, sources: Seq[String], dest: String,
-                  moveFiles: Boolean = false): Unit = {
-    graft.operators.MergeGuards.requireMergeable(sources, dest)
-    graft.FsOps.requireNotHusk(spark, dest)
-    val destP = new Path(dest)
-    val fs = destP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (Indexer.storedBuckets(spark, dest).nonEmpty) {
-      // committed dest: either the move-mode crash window between the
-      // commit and the husk stamps (complete the stamps and return —
-      // FsOps.completeHuskStamps), or a genuine re-merge to refuse
-      if (moveFiles && graft.FsOps.completeHuskStamps(spark, sources, dest,
-          s => DataTables.map(t => s"$s/$t"))) return
-      throw new IllegalArgumentException(
-        s"$dest already carries a committed store (its _nbuckets marker " +
-          "exists) — merging INTO a live store is appendIndex's job")
-    }
-    sources.foreach(graft.FsOps.requireNotHusk(spark, _))
-    // a dest already holding transferred files is a crashed merge being
-    // RESUMED: the data-reading guards below passed before the first
-    // file ever moved, and re-reading a move-drained source would die
-    // on its emptied directories — skip them, transfer picks up
-    val resuming = fs.exists(new Path(s"$dest/doc_stats"))
+                  moveFiles: Boolean = false): Unit =
+    Shards.merge(spark, sources, dest, moveFiles)
 
-    // ---- layout guards
+  /** What the layout guards fix for the commit step. */
+  private[graft] final case class Plan(nBuckets: Int, positionalBuckets: Option[Int],
+                                       lastBatch: Long)
+
+  private[graft] val Shards = new ShardMerge.Family[Plan](
+    isCommitted = Indexer.storedBuckets(_, _).nonEmpty,
+    refusal = dest => s"$dest already carries a committed store (its _nbuckets " +
+      "marker exists) — merging INTO a live store is appendIndex's job",
+    dataTables = Seq("doc_stats", "postings", "positional", "deletes"),
+    tableDir = (_, store, table) => s"$store/$table",
+    layout = mergePlan,
+    parityTables = p => Seq("doc_stats", "postings") ++
+      p.positionalBuckets.map(_ => "positional"),
+    ids = ("doc_stats", "doc_id"),
+    commit = mergeCommit)
+
+  private def mergePlan(spark: SparkSession, sources: Seq[String],
+                        moveFiles: Boolean): Plan = {
     val nbs = sources.map { s =>
       Indexer.storedBuckets(spark, s).getOrElse(throw new IllegalArgumentException(
         s"$s has no _nbuckets marker — not a persisted index store"))
@@ -100,7 +90,6 @@ object StoreMerge {
       s"sources disagree on nBuckets: ${sources.zip(nbs).mkString(", ")} — " +
         "aligned term buckets are what makes the merge metadata-only; " +
         "rebuild the odd shard at the common bucket count first")
-    val nb = nbs.head
     sources.foreach { s =>
       require(Indexer.docBucketsOf(spark, s).isEmpty,
         s"$s is doc-bucketed — its bucket-spec file names cannot be " +
@@ -124,13 +113,13 @@ object StoreMerge {
           .columns.contains("length_sum"),
         s"$s predates the mergeable meta layout (no length_sum partial)")
     } // meta is never transferred, so this read survives a resume
+    val fs = new Path(sources.head).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val posPresent = sources.map(s => fs.exists(new Path(s"$s/positional")))
     require(posPresent.distinct.size == 1,
       "positional tables must exist in ALL sources or NONE: a merged " +
         "store that answers phrase queries from half its docs is drift, " +
         s"not a store (present: ${sources.zip(posPresent).mkString(", ")})")
-    val hasPos = posPresent.head
-    val pnb = if (!hasPos) None else {
+    val pnb = if (!posPresent.head) None else {
       val pns = sources.map(s => Indexer.storedPositionalBuckets(spark, s)
         .getOrElse(throw new IllegalArgumentException(
           s"$s has a positional table but no bucket marker")))
@@ -138,26 +127,22 @@ object StoreMerge {
         s"sources disagree on positional nBuckets: ${sources.zip(pns).mkString(", ")}")
       Some(pns.head)
     }
-    if (!resuming) {
-      for (t <- Seq("doc_stats", "postings") ++ (if (hasPos) Seq("positional") else Nil))
-        graft.operators.MergeGuards.requireSchemaParity(spark, sources, t)
-      // disjointness on the RAW id surface (bare longs, one union-agg;
-      // same ≤ 3-row driver sample as the append probe)
-      graft.operators.MergeGuards.requireDisjointIds(spark,
-        sources.map(s => s"$s/doc_stats"), "doc_id")
-    }
+    Plan(nbs.head, pnb, batches.max)
+  }
 
-    // ---- derived tables: merge the sources' partial-aggregate state
-    // (reads only the small tables, frame-resolved per source; written
-    // to the fresh dest's flat layout before any data file moves)
-    // the two derived merges read different source tables and write
-    // disjoint dest dirs — overlap them (guide §2.6)
+  /** The derived tables merge the sources' partial-aggregate state
+    * (frame-resolved, never transferred); then the markers, `_nbuckets`
+    * last. Born audited (see the scaladoc above). */
+  private def mergeCommit(spark: SparkSession, sources: Seq[String], dest: String,
+                          p: Plan): Unit = {
+    def union(table: String) = sources.map(s => graft.FsOps.readParquet(spark,
+      Indexer.derivedTablePath(spark, s, table))).reduce(_ unionByName _)
+    // the two derived merges write disjoint dest dirs — overlap them
+    // (guide §2.6)
     graft.operators.Par.run(
-      () => Indexer.writeTable(sources.map(s => graft.FsOps.readParquet(spark,
-          Indexer.derivedTablePath(spark, s, "vocab"))).reduce(_ unionByName _)
+      () => Indexer.writeTable(union("vocab")
         .groupBy("term").agg(sum(col("df")).as("df")), "vocab", s"$dest/vocab"),
-      () => Indexer.writeTable(sources.map(s => graft.FsOps.readParquet(spark,
-          Indexer.derivedTablePath(spark, s, "meta"))).reduce(_ unionByName _)
+      () => Indexer.writeTable(union("meta")
         .agg(coalesce(sum(col("total_docs")), lit(0L)).as("total_docs"),
           coalesce(sum(col("length_sum")), lit(0L)).as("length_sum"))
         .select(col("total_docs"),
@@ -165,41 +150,10 @@ object StoreMerge {
             .otherwise(col("length_sum").cast("double") / col("total_docs"))
             .as("avg_dl"),
           col("length_sum")), "meta", s"$dest/meta"))
-
-    // record the source list on the dest BEFORE any file moves — the
-    // source-specific resume evidence completeHuskStamps verifies
-    graft.FsOps.recordMergeSources(spark, dest, sources)
-
-    // ---- data files: per-file idempotent transfer (resume skips targets
-    // that already landed; hidden _/.files and markers never transfer)
-    // each (table, source) transfer targets distinct file names (the
-    // m<i>_ prefix) — overlap the driver-side rename/copy loops (§2.6)
-    graft.operators.Par.run(
-      (for (table <- DataTables; (src, i) <- sources.zipWithIndex) yield { () =>
-        val from = new Path(s"$src/$table")
-        if (fs.exists(from)) {
-          graft.FsOps.transferDataFiles(spark, from.toString, s"$dest/$table",
-            s"m${i}_", moveFiles)
-          for (st <- fs.listStatus(from).toSeq // one partition level: term_bucket=N
-               if st.isDirectory && !st.getPath.getName.startsWith("_")
-                 && !st.getPath.getName.startsWith("."))
-            graft.FsOps.transferDataFiles(spark, st.getPath.toString,
-              s"$dest/$table/${st.getPath.getName}", s"m${i}_", moveFiles)
-        }
-      }): _*)
-
-    // ---- commit: markers last; born-audited (see scaladoc)
-    graft.FsOps.writeLongMarker(spark, dest, Indexer.LastBatchMarker, batches.max)
-    Indexer.markAudited(spark, dest, Some(batches.max))
-    pnb.foreach(n => Indexer.writeBucketsMarker(spark, dest, n,
+    graft.FsOps.writeLongMarker(spark, dest, Indexer.LastBatchMarker, p.lastBatch)
+    Indexer.markAudited(spark, dest, Some(p.lastBatch))
+    p.positionalBuckets.foreach(n => Indexer.writeBucketsMarker(spark, dest, n,
       Indexer.PositionalBucketsMarker))
-    Indexer.writeBucketsMarker(spark, dest, nb)
-    // drained sources become stamped husks — ONLY after the dest commit
-    // marker above, so a crashed merge (dest uncommitted) leaves its
-    // sources unstamped and resumable; readers refuse the husk by name
-    // and `pipeline scrap` reclaims it (FsOps.MergedIntoMarker)
-    if (moveFiles)
-      sources.foreach(s =>
-        graft.FsOps.writeMarker(spark, s, graft.FsOps.MergedIntoMarker, dest))
+    Indexer.writeBucketsMarker(spark, dest, p.nBuckets)
   }
 }

@@ -8,11 +8,11 @@ import org.apache.spark.sql.SparkSession
   * convention [[Forget]] governs (`<root>/index`, `<root>/dedup`,
   * `<root>/ivf`): each ingest partition materializes its own complete
   * root in parallel (index + signature store + ANN store over its
-  * corpus slice), and promotion merges family-by-family —
-  * [[graft.index.StoreMerge.mergeStores]] (aligned term buckets, file
-  * transfer + vocab/meta partial merge),
-  * [[graft.dedup.DedupStore.mergeStores]] (deterministic signatures,
-  * pure file transfer), [[graft.similarity.IvfStore.mergeStores]]
+  * corpus slice), and promotion runs each family's declared shard
+  * merge ([[graft.operators.ShardMerge.Family]]) —
+  * [[graft.index.StoreMerge]] (aligned term buckets, file transfer +
+  * vocab/meta partial merge), [[graft.dedup.DedupStore]] (deterministic
+  * signatures, pure file transfer), [[graft.similarity.IvfStore]]
   * (centroid union, cid-remapped directory transfer). No corpus text,
   * posting, signature or vector is read or shuffled anywhere in the
   * promotion. [[Forget.checkPipeline]] is the post-promotion audit: all
@@ -26,23 +26,18 @@ import org.apache.spark.sql.SparkSession
   * not union — promote the metadata by committing the union into a
   * fresh store); roots with `_forget` manifests refuse (manifest
   * ordinals are per-root; run takedowns at the merged root instead).
-  * Crash model: each family merge has its own commit marker and
-  * idempotent resume, and [[mergeRoots]] SKIPS families whose dest
+  * Crash model: each family merge has its own commit point and the
+  * shared idempotent resume, and [[mergeRoots]] SKIPS families whose dest
   * store is already committed — so a promotion that died anywhere
   * (mid-transfer or between families) re-runs to completion.
   */
 object Promote {
 
-  /** Each mergeable family's commit probe: true once a committed store of
-    * that family lives at the path. [[mergeRoots]] skips a family whose
-    * dest already passes it (resume), [[scrapRoot]] certifies a husk's
-    * recorded dest by it. The IVF probe resolves the frame pointer: a
-    * reclustered store's centroids live under a generation dir. */
-  private val CommitProbes =
-    scala.collection.immutable.ListMap[String, (SparkSession, String) => Boolean](
-      "index" -> ((s, p) => graft.index.Indexer.storedBuckets(s, p).nonEmpty),
-      "dedup" -> ((s, p) => graft.dedup.DedupStore.storedGeometry(s, p).nonEmpty),
-      "ivf" -> ((s, p) => graft.similarity.IvfStore.isCommitted(s, p)))
+  /** Each mergeable family's shard merge, under its root child name. */
+  private val Families = Seq(
+    "index" -> graft.index.StoreMerge.Shards,
+    "dedup" -> graft.dedup.DedupStore.Shards,
+    "ivf" -> graft.similarity.IvfStore.Shards)
 
   /** Merge every family store of `roots` into `dest`; returns the
     * families promoted (sorted). `moveFiles = true` renames data files
@@ -65,22 +60,13 @@ object Promote {
         s"$r carries _forget manifests (per-root ordinals do not merge) — " +
           "promote fresh shards; run takedowns at the merged root")
     }
-    // a family whose dest store already carries its commit marker was
-    // completed by a PREVIOUS run of this same promotion — skip it, so a
-    // crash between families resumes instead of dying on the committed
-    // store's own already-merged guard (dest must be a fresh root at the
-    // first call, like every family merge's dest)
-    // the family merges write disjoint dest children — overlap them
-    // (guide §2.6); each keeps its own commit marker and resume story
-    val steps: Seq[(String, () => Unit)] = Seq(
-      "index" -> (() => graft.index.StoreMerge.mergeStores(spark,
-        roots.map(r => s"$r/index"), s"$dest/index", moveFiles)),
-      "dedup" -> (() => graft.dedup.DedupStore.mergeStores(spark,
-        roots.map(r => s"$r/dedup"), s"$dest/dedup", moveFiles)),
-      "ivf" -> (() => graft.similarity.IvfStore.mergeStores(spark,
-        roots.map(r => s"$r/ivf"), s"$dest/ivf", moveFiles)))
-    graft.operators.Par.run(steps.collect {
-      case (f, step) if fams.contains(f) && !CommitProbes(f)(spark, s"$dest/$f") => step
+    // a family whose dest already passes its commit probe was completed
+    // by a PREVIOUS run of this promotion — skip it rather than die on
+    // the committed store's own already-merged guard. The family merges
+    // write disjoint dest children — overlap them (guide §2.6)
+    graft.operators.Par.run(Families.collect {
+      case (f, fam) if fams.contains(f) && !fam.isCommitted(spark, s"$dest/$f") =>
+        () => fam.merge(spark, roots.map(r => s"$r/$f"), s"$dest/$f", moveFiles)
     }: _*)
     fams.toSeq.sorted
   }
@@ -102,7 +88,7 @@ object Promote {
         throw new IllegalArgumentException(
           s"$husk carries no ${graft.FsOps.MergedIntoMarker} marker — not a " +
             "consumed husk; scrap refuses to delete live stores"))
-      require(CommitProbes.values.exists(_(spark, dest)),
+      require(Families.exists(_._2.isCommitted(spark, dest)),
         s"$husk records ${graft.FsOps.MergedIntoMarker}=$dest but no " +
           "committed store exists there — refusing to delete the remains; " +
           "finish or re-run the merge first")

@@ -622,14 +622,6 @@ object IvfStore {
     segs.tail.foldLeft(lit(f(segs.head))) { (acc, sg) =>
       when(b > lit(sg.batchLo), lit(f(sg))).otherwise(acc) }
 
-  /** True iff a committed IVF store lives at `path`: the current
-    * frame's centroid table — the store's commit surface — exists. The
-    * family-detection probe ([[graft.pipeline.Promote]]) that a bare
-    * `exists(path/centroids)` check would get wrong on any
-    * frame-installed store. */
-  def isCommitted(spark: SparkSession, path: String): Boolean =
-    dirExists(spark, graft.operators.Frames.resolve(spark, path, "centroids"))
-
   // ---- concurrent-ingest delta carry (ADVICE r18) --------------------
   // A deleteVectors/appendBatch that lands WHILE a frame rewrite is
   // staging writes into the OLD frame's table dirs — and a flip that
@@ -1251,11 +1243,9 @@ object IvfStore {
     * its space — tombstones merge too).
     *
     * Crash model: the merged `centroids` table is the COMMIT point
-    * (written last — a store without it serves nothing); a merge that
-    * dies mid-transfer re-runs idempotently (deterministic `m<i>_`
-    * names, already-placed files skip). `moveFiles = true` renames
-    * instead of copying — the O(files) promotion path that consumes
-    * the shards.
+    * (written last — a store without it serves nothing); resume, husk
+    * stamps and move mode are the shared lifecycle of
+    * [[graft.operators.ShardMerge]].
     *
     * Assignment contract: the merged store carries SHARD-LOCAL
     * assignments — each vector's cid is the nearest centroid of its own
@@ -1267,102 +1257,80 @@ object IvfStore {
     * recall, never result validity) and [[reclusterStore]] is the
     * maintenance verb that removes it. */
   def mergeStores(spark: SparkSession, sources: Seq[String], dest: String,
-                  moveFiles: Boolean = false): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.operators.MergeGuards.requireMergeable(sources, dest)
-    graft.FsOps.requireNotHusk(spark, dest)
-    val fs = new Path(dest).getFileSystem(spark.sparkContext.hadoopConfiguration)
+                  moveFiles: Boolean = false): Unit =
+    Shards.merge(spark, sources, dest, moveFiles)
+
+  /** What the merge's layout guards fix: the uniform `batch=` layering
+    * and each source's batch-ordinal and cid offsets. */
+  private[graft] final case class MergePlan(layered: Boolean, batchOffsets: Seq[Long],
+                                            cidOffsets: Seq[Int])
+
+  private[graft] val Shards = new graft.operators.ShardMerge.Family[MergePlan](
+    // the current frame's centroid table, the commit surface (a bare
+    // `exists(path/centroids)` is wrong on a frame-installed store)
+    isCommitted = (spark, path) =>
+      dirExists(spark, graft.operators.Frames.resolve(spark, path, "centroids")),
+    refusal = dest => s"$dest already carries a committed IVF store (centroids exist)",
+    dataTables = Seq("lists", "deletes"),
     // data tables resolve through each store's frame pointer (a
     // reclustered/expunged shard's tables live under generation dirs);
-    // markers — husk stamps, merge sources, bounds — stay at the
-    // STORE paths throughout
-    val dst = tableDirs(spark, dest)
+    // markers — husk stamps, merge sources, bounds — stay at the STORE
+    // paths throughout
+    tableDir = graft.operators.Frames.resolve,
+    layout = mergePlan,
+    parityTables = _ => Seq("lists"),
+    ids = ("lists", "vec_id"),
+    // source i's `batch=`/`cid=` dirs land at its offset ordinals/cids
+    renameDir = (p, i, dir) =>
+      if (dir.startsWith("batch="))
+        s"batch=${dir.stripPrefix("batch=").toLong + p.batchOffsets(i)}"
+      else if (dir.startsWith("cid=")) s"cid=${dir.stripPrefix("cid=").toInt + p.cidOffsets(i)}"
+      else dir,
+    commit = mergeCommit)
+
+  private def mergePlan(spark: SparkSession, sources: Seq[String],
+                        moveFiles: Boolean): MergePlan = {
     val srcs = sources.map(tableDirs(spark, _))
-    if (fs.exists(new Path(dst("centroids")))) {
-      // committed dest: either the move-mode crash window between the
-      // commit and the husk stamps (complete the stamps and return —
-      // FsOps.completeHuskStamps), or a genuine re-merge to refuse
-      if (moveFiles && graft.FsOps.completeHuskStamps(spark, sources, dest,
-          s => Seq("lists", "deletes").map(tableDirs(spark, s))))
-        return
-      throw new IllegalArgumentException(
-        s"$dest already carries a committed IVF store (centroids exist)")
-    }
-    sources.foreach(graft.FsOps.requireNotHusk(spark, _))
     sources.zip(srcs).foreach { case (s, sd) =>
-      require(fs.exists(new Path(sd("centroids"))) && fs.exists(new Path(sd("lists"))),
+      require(dirExists(spark, sd("centroids")) && dirExists(spark, sd("lists")),
         s"$s is not a persisted IVF store (centroids/lists missing)")
     }
-    // the batch=/cid= layout is visible from the partition DIRS alone —
-    // survives a move-drained resume, unlike a data read. Fresh and
-    // batch-layered shards both merge (each batch layer transfers with
-    // the same cid remap, batch ordinals offset per source so replay
-    // overwrite and audit deltas stay collision-free) — but never MIXED:
-    // the merged lists would carry a half-present batch column
-    val layered = srcs.map(sd => fs.listStatus(new Path(sd("lists")))
-      .exists(_.getPath.getName.startsWith("batch=")))
+    val batches = sources.map(listBatches(spark, _))
+    val layered = batches.map(_.nonEmpty)
     require(layered.distinct.size == 1,
       s"sources mix fresh and batch-layered (streaming-ingested) lists " +
         s"layouts: ${sources.zip(layered).mkString(", ")} — a merged store " +
         "with a half-present batch column serves neither audit; flatten " +
         "the layered shard first (Maintain ivf flatten / flattenBatches)")
-    val isLayered = layered.head
     // per-source batch offsets: shard i's ordinals shift past the
     // cumulative (max+1) of its predecessors, so a post-merge streaming
     // replay of one shard's ordinal can never overwrite another's layer
-    val batchOffsets: Seq[Long] =
-      if (!isLayered) Seq.fill(sources.size)(0L)
-      else sources.map(s => listBatches(spark, s).lastOption.getOrElse(0L) + 1L)
-        .scanLeft(0L)(_ + _).init
-    // a dest already holding transferred lists is a crashed merge being
-    // RESUMED: the data-reading guards passed before the first file
-    // moved, and a move-drained source's lists no longer read — skip
-    if (!fs.exists(new Path(dst("lists")))) {
-      graft.operators.MergeGuards.requireSchemaParityDirs(spark,
-        srcs.map(_("lists")), "lists")
-      graft.operators.MergeGuards.requireDisjointIds(spark,
-        srcs.map(_("lists")), "vec_id")
-    }
+    val batchOffsets =
+      if (!layered.head) Seq.fill(sources.size)(0L)
+      else batches.map(_.last + 1L).scanLeft(0L)(_ + _).init
+    // cid offsets: shard i's cids shift past the cumulative max — every
+    // source's max in one job (centroids never transfer, so this read
+    // survives a move-drained resume)
+    val maxCids = srcs.zipWithIndex.map { case (sd, i) =>
+        graft.FsOps.readParquet(spark, sd("centroids"))
+          .select(lit(i).as("src"), col("cid")) }
+      .reduce(_ union _).groupBy("src").agg(max(col("cid"))).collect()
+      .map(r => r.getInt(0) -> r.getInt(1)).toMap
+    MergePlan(layered.head, batchOffsets,
+      sources.indices.map(maxCids).scanLeft(0)(_ + _).init)
+  }
 
-    // record the source list on the dest BEFORE any file moves — the
-    // source-specific resume evidence completeHuskStamps verifies
-    graft.FsOps.recordMergeSources(spark, dest, sources)
-
-    // cid offsets: shard i's cids shift past the cumulative max
-    val centFrames = srcs.map(sd => graft.FsOps.readParquet(spark, sd("centroids")))
-    val maxCids = centFrames.map(_.agg(max(col("cid"))).collect()(0).getInt(0))
-    val offsets = maxCids.scanLeft(0)(_ + _).init
-
-    for ((sd, i) <- srcs.zipWithIndex) {
-      if (isLayered)
-        for (bst <- fs.listStatus(new Path(sd("lists"))).toSeq
-             if bst.isDirectory && bst.getPath.getName.startsWith("batch=");
-             st <- fs.listStatus(bst.getPath).toSeq
-             if st.isDirectory && st.getPath.getName.startsWith("cid=")) {
-          val b = bst.getPath.getName.stripPrefix("batch=").toLong
-          val k = st.getPath.getName.stripPrefix("cid=").toInt
-          graft.FsOps.transferDataFiles(spark, st.getPath.toString,
-            s"${dst("lists")}/batch=${b + batchOffsets(i)}/cid=${k + offsets(i)}",
-            s"m${i}_", moveFiles)
-        }
-      else
-        for (st <- fs.listStatus(new Path(sd("lists"))).toSeq
-             if st.isDirectory && st.getPath.getName.startsWith("cid=")) {
-          val k = st.getPath.getName.stripPrefix("cid=").toInt
-          graft.FsOps.transferDataFiles(spark, st.getPath.toString,
-            s"${dst("lists")}/cid=${k + offsets(i)}", s"m${i}_", moveFiles)
-        }
-      graft.FsOps.transferDataFiles(spark, sd("deletes"),
-        dst("deletes"), s"m${i}_", moveFiles)
-    }
+  private def mergeCommit(spark: SparkSession, sources: Seq[String], dest: String,
+                          p: MergePlan): Unit = {
     // shard-local-assignment groups: each source's own bounds (Seq(0)
     // for a fresh shard) shifted by its cid offset — persisted BEFORE
     // the commit (a store without centroids serves nothing, so a
     // pre-commit marker is harmless; a POST-commit crash window would
     // leave a merged store auditing under the strict union invariant
     // and flag healthy shard-local assignments)
-    val bounds = sources.zip(offsets).flatMap { case (s, off) =>
-      mergedBounds(spark, s).getOrElse(Seq(0)).map(_ + off) }
+    val srcBounds = sources.map(mergedBounds(spark, _))
+    val bounds = srcBounds.zip(p.cidOffsets).flatMap { case (b, off) =>
+      b.getOrElse(Seq(0)).map(_ + off) }
     graft.FsOps.writeMarker(spark, dest, MergedBoundsMarker, bounds.mkString(","))
     // a layered merge is born-audited at its highest remapped ordinal
     // (merged data is consistent by construction, same contract as the
@@ -1377,7 +1345,7 @@ object IvfStore {
     // completeHuskStamps early-return and the merged store permanently
     // lacked its ordinal floor (an upstream shard checkpoint could then
     // silently clobber a committed remapped layer)
-    if (isLayered) {
+    if (p.layered) {
       listBatches(spark, dest).lastOption.foreach(
         graft.FsOps.writeLongMarker(spark, dest, BatchFloorMarker, _))
       markAudited(spark, dest)
@@ -1393,38 +1361,34 @@ object IvfStore {
       // degrades to one range segment across its span: weaker, never
       // wrong. All marker reads here are driver-side small files that
       // never transfer, so a move-drained resume recomputes identically.
-      val grpSizes = sources.map(s => mergedBounds(spark, s).map(_.size).getOrElse(1))
+      val grpSizes = srcBounds.map(_.map(_.size).getOrElse(1))
       val gOffs = grpSizes.scanLeft(0)(_ + _).init
       val segs = sources.zipWithIndex.flatMap { case (src, i) =>
-        val bOff = batchOffsets(i); val gOff = gOffs(i); val nG = grpSizes(i)
-        mergedBounds(spark, src) match {
-          case None => Seq(ProvenanceSegment(bOff - 1L, gOff + 1, gOff + 1))
-          case Some(_) =>
-            val maxB = listBatches(spark, src).lastOption.getOrElse(0L)
-            (mergedBatchSegments(spark, src),
-              graft.FsOps.readLongMarker(spark, src, BatchFloorMarker)) match {
-              case (Some(is), Some(f)) if segmentsValid(is, nG) =>
-                is.map(sg => ProvenanceSegment(
-                    sg.batchLo + bOff, sg.gLo + gOff, sg.gHi + gOff)) ++
-                  (if (maxB > f)
-                     Seq(ProvenanceSegment(f + bOff, gOff + 1, gOff + nG))
-                   else Nil)
-              case _ => Seq(ProvenanceSegment(bOff - 1L, gOff + 1, gOff + nG))
-            }
+        val bOff = p.batchOffsets(i); val gOff = gOffs(i); val nG = grpSizes(i)
+        if (srcBounds(i).isEmpty) Seq(ProvenanceSegment(bOff - 1L, gOff + 1, gOff + 1))
+        else {
+          val maxB = listBatches(spark, src).lastOption.getOrElse(0L)
+          (mergedBatchSegments(spark, src),
+            graft.FsOps.readLongMarker(spark, src, BatchFloorMarker)) match {
+            case (Some(is), Some(f)) if segmentsValid(is, nG) =>
+              is.map(sg => ProvenanceSegment(
+                  sg.batchLo + bOff, sg.gLo + gOff, sg.gHi + gOff)) ++
+                (if (maxB > f)
+                   Seq(ProvenanceSegment(f + bOff, gOff + 1, gOff + nG))
+                 else Nil)
+            case _ => Seq(ProvenanceSegment(bOff - 1L, gOff + 1, gOff + nG))
+          }
         }
       }
       graft.FsOps.writeMarker(spark, dest, MergedBatchBoundsMarker,
         segs.map(sg => s"${sg.batchLo}:${sg.gLo}:${sg.gHi}").mkString(","))
     }
     // commit: the remapped centroid union, written last
-    graft.FsOps.writeParquet(centFrames.zip(offsets).map { case (c, off) =>
-        c.select((col("cid") + lit(off)).cast("int").as("cid"), col("cvec")) }
-      .reduce(_ unionByName _).coalesce(1), dst("centroids"))
-    // stamp drained sources only after the commit above (husk contract —
-    // see FsOps.MergedIntoMarker)
-    if (moveFiles)
-      sources.foreach(s =>
-        graft.FsOps.writeMarker(spark, s, graft.FsOps.MergedIntoMarker, dest))
+    graft.FsOps.writeParquet(sources.zip(p.cidOffsets).map { case (s, off) =>
+        graft.FsOps.readParquet(spark, graft.operators.Frames.resolve(spark, s, "centroids"))
+          .select((col("cid") + lit(off)).cast("int").as("cid"), col("cvec")) }
+      .reduce(_ unionByName _).coalesce(1),
+      graft.operators.Frames.resolve(spark, dest, "centroids"))
   }
 
   /** Re-train the centroid set over the store's own LIVE vectors and

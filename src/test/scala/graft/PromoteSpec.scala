@@ -558,6 +558,51 @@ class PromoteSpec extends SparkSpec {
     assert(FsOps.mergedInto(spark, da) === Some(ddest))
   }
 
+  test("move resume after a partial transfer: one table drained, the other never reached the dest") {
+    // the transfers overlap, so source 0's second table can drain before
+    // its first reaches the dest; the recorded source list marks the
+    // resume, so no guard re-reads the drained table
+    val d = docsFx.toDF("doc_id", "text")
+    def violations(report: DataFrame): Long =
+      report.agg(sum($"violations")).as[Long].collect().head
+    case class Case(family: String, build: (String, String) => Unit,
+                    first: String, second: String, dir: (String, String) => String,
+                    merge: (Seq[String], String) => Unit, check: String => DataFrame)
+    val cases = Seq(
+      Case("dedup", (a, b) => {
+          DedupStore.writeSignatures(d.filter($"doc_id" % 2 === 0), a)
+          DedupStore.writeSignatures(d.filter($"doc_id" % 2 === 1), b)
+        }, "sets", "buckets", DedupStore.tablePath(spark, _, _),
+        DedupStore.mergeStores(spark, _, _, moveFiles = true),
+        DedupStore.checkStore(spark, _)),
+      Case("ivf", (a, b) => {
+          ivfShard(_ % 2 == 0, a)
+          IvfStore.deleteVectors(spark, a, Seq(2L).toDF("vec_id"))
+          ivfShard(_ % 2 == 1, b)
+        }, "lists", "deletes", Frames.resolve(spark, _, _),
+        IvfStore.mergeStores(spark, _, _, moveFiles = true),
+        IvfStore.checkStore(spark, _)))
+    for (c <- cases) {
+      val (a, b, dest) = (tmp(s"pt${c.family}A"), tmp(s"pt${c.family}B"),
+        tmp(s"pt${c.family}Dest") + "/store")
+      c.build(a, b)
+      graft.operators.ShardMerge.recordMergeSources(spark, dest, Seq(a, b))
+      val fs = fsAt(dest)
+      val into = new Path(s"$dest/${c.second}")
+      fs.mkdirs(into)
+      for (file <- fs.listStatus(new Path(c.dir(a, c.second))).toSeq
+           if file.isFile && !file.getPath.getName.startsWith("_")
+             && !file.getPath.getName.startsWith("."))
+        assert(fs.rename(file.getPath, new Path(into, s"m0_${file.getPath.getName}")))
+      assert(FsOps.visibleDataFiles(spark, c.dir(a, c.second)).isEmpty, c.family)
+      assert(!fs.exists(new Path(s"$dest/${c.first}")), c.family)
+      c.merge(Seq(a, b), dest)
+      assert(violations(c.check(dest)) === 0L, c.family)
+      assert(FsOps.mergedInto(spark, a) === Some(dest), c.family)
+      assert(FsOps.mergedInto(spark, b) === Some(dest), c.family)
+    }
+  }
+
   test("dedup signature-store merge: ingest report equals a single full-store build") {
     val d = docsFx.toDF("doc_id", "text")
     val (a, b, dest, full) = (tmp("ddA"), tmp("ddB"), tmp("ddDest") + "/store", tmp("ddFull"))

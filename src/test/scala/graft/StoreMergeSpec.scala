@@ -7,6 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.index.{Indexer, StoreMerge}
+import graft.operators.ShardMerge
 import graft.search.{BM25, PhraseSearch}
 
 /** Shard merge (graft.index.StoreMerge): metadata-level file transfer +
@@ -169,6 +170,38 @@ class StoreMergeSpec extends SparkSpec {
     StoreMerge.mergeStores(spark, Seq(a, b), dest, moveFiles = true)
     assert(fsckViolations(dest) === 0L)
     assert(searchRows(dest, "delta epsilon").nonEmpty)
+    assert(FsOps.mergedInto(spark, a) === Some(dest))
+    assert(FsOps.mergedInto(spark, b) === Some(dest))
+  }
+
+  test("move resume after a partial concurrent transfer: postings drained, no dest doc_stats") {
+    // the transfers of the (source, table) pairs overlap, so a crash can
+    // leave every postings file moved while doc_stats never reached the
+    // dest: the recorded source list, not a dest table, marks the resume
+    val (a, b, dest) = (tmp("ptA"), tmp("ptB"), tmp("ptDest") + "/store")
+    buildShard(_ % 2 == 0, a)
+    buildShard(_ % 2 == 1, b)
+    ShardMerge.recordMergeSources(spark, dest, Seq(a, b))
+    val fs = fsAt(dest)
+    for ((src, i) <- Seq(a, b).zipWithIndex;
+         bucket <- fs.listStatus(new Path(s"$src/postings")).toSeq
+           if bucket.isDirectory && bucket.getPath.getName.startsWith("term_bucket=");
+         file <- fs.listStatus(bucket.getPath).toSeq
+           if file.isFile && !file.getPath.getName.startsWith(".")) {
+      val into = new Path(s"$dest/postings/${bucket.getPath.getName}")
+      fs.mkdirs(into)
+      assert(fs.rename(file.getPath, new Path(into, s"m${i}_${file.getPath.getName}")))
+    }
+    assert(!fs.exists(new Path(s"$dest/doc_stats")))
+    assert(!fs.exists(new Path(s"$dest/_nbuckets")))
+    StoreMerge.mergeStores(spark, Seq(a, b), dest, moveFiles = true)
+    assert(fsckViolations(dest) === 0L)
+    val (c, d, copyDest) = (tmp("ptC"), tmp("ptD"), tmp("ptCopy") + "/store")
+    buildShard(_ % 2 == 0, c)
+    buildShard(_ % 2 == 1, d)
+    StoreMerge.mergeStores(spark, Seq(c, d), copyDest)
+    for (q <- Seq("delta epsilon", "alpha zeta"))
+      assert(searchRows(dest, q) === searchRows(copyDest, q), q)
     assert(FsOps.mergedInto(spark, a) === Some(dest))
     assert(FsOps.mergedInto(spark, b) === Some(dest))
   }

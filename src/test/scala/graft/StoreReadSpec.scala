@@ -238,6 +238,20 @@ class StoreReadSpec extends SparkSpec {
     assert(all.isEmpty, s"parquet writes outside FsOps:\n${all.mkString("\n")}")
   }
 
+  test("no shard-merge protocol step in the main sources outside ShardMerge") {
+    // the transfer, the source record, the husk-stamp resume and the
+    // _merged_into stamp are the one merge lifecycle's business; FsOps
+    // keeps only the definitions of its file primitive
+    val step = """\b(transferDataFiles|recordMergeSources|completeHuskStamps)\s*\(""".r
+    val stamp = """\bwriteMarker\s*\([^)]*\bMergedIntoMarker\b""".r
+    val hits = for {
+      (f, src) <- mainSources if f.getName != "ShardMerge.scala"
+      m <- step.findAllMatchIn(src).toSeq ++ stamp.findAllMatchIn(src)
+      if !(f.getName == "FsOps.scala" && m.matched.startsWith("transferDataFiles"))
+    } yield s"${f.getPath}:${lineOf(src, m.start)}"
+    assert(hits.isEmpty, s"merge protocol steps outside ShardMerge:\n${hits.mkString("\n")}")
+  }
+
   test("no FileSystem create/open in the main sources outside FsOps") {
     // every marker is written tmp-first and swapped in, and read back with
     // the swap-aside fallback, only by FsOps; a hand-rolled create()
