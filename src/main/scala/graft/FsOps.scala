@@ -272,7 +272,7 @@ object FsOps {
   }
 
   /** Spark's listing convention: `_`/`.`-prefixed names are metadata. */
-  private def visible(name: String): Boolean =
+  private[graft] def visible(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".")
 
   /** One-long marker face of [[writeMarker]]/[[readMarker]]. */

@@ -42,6 +42,13 @@ import graft.analyzer.Analyzer
   *   - [[writeIndex]] partitions postings by a hash bucket of `term` so a
   *     query for k terms prunes to k buckets — the Spark-native analog of
   *     Cassandra's `(term)` partition key (`load_index.py:34-41`).
+  *
+  * The physical layout of the three big tables — `doc_stats`, `postings`
+  * and `positional`: their term buckets, the optional doc-bucketed catalog
+  * layout, the markers recording both, and term-bucket pruning — is
+  * decided in one place, [[TableLayout]]. Each verb here says which
+  * tables it touches; the layout says how they are read, written,
+  * rewritten, compacted and pruned.
   */
 object Indexer {
 
@@ -169,23 +176,7 @@ object Indexer {
       // and breaking the positional audit join
       else if (dsExists) pos
       else pos.withColumn("batch", lit(batch)) // true standalone: own sequence
-    docBuckets.orElse(docBucketsOf(spark, path)) match {
-      case Some(db) =>
-        writeBucketedStoreTable(tagged, path, "positional", db,
-          termBuckets = Some(nBuckets))
-        writeBucketsMarker(spark, path, db, PositionalDocBucketsMarker)
-      case None =>
-        // a plain overwrite of a previously doc-bucketed positional table
-        // must retire the old layout record and catalog entry — a stale
-        // marker would route readers through a bucket spec the new files
-        // no longer honor
-        spark.sql(s"DROP TABLE IF EXISTS " +
-          s"`${catalogTableName(spark, path, "positional")}`")
-        graft.FsOps.deleteMarker(spark, path, PositionalDocBucketsMarker)
-        writeTable(tagged
-          .withColumn("term_bucket", termBucket(col("term"), nBuckets))
-          .repartition(nBuckets, col("term_bucket")), "positional", s"$path/positional")
-    }
+    TableLayout.overwrite(spark, path, nBuckets, docBuckets, "positional" -> tagged)
     // start the batch sequence ONLY for a standalone positional store —
     // writing the marker beside a LEGACY (pre-batch-tracking) frequency
     // store would make the next appendIndex tag its rows and mix
@@ -255,51 +246,26 @@ object Indexer {
     // incremental audit's `batch > since` filter skip pre-audit files
     // outright — see [[checkStoreIncremental]]); the initial build is
     // batch 0, each append bumps the `_lastbatch` marker
-    // doc_stats and postings land at disjoint paths from disjoint
-    // lineages — overlap the two writes (guide §2.6) so one write's
-    // planning/commit latency back-fills with the other's tasks
-    docBuckets match {
-      case Some(db) =>
-        // doc-bucketed layout: postings AND doc_stats co-bucketed (and
-        // sorted within buckets) by doc_id as external catalog tables —
-        // the scoring join postings ⋈ doc_stats then plans with NO
-        // exchange on either side (the shuffle is paid once here, at
-        // write time, and amortized over every query). term_bucket
-        // partitioning is kept on postings, so static term pruning and
-        // doc-co-location COMPOSE. See [[docBucketsOf]] for the layout
-        // record and [[registerBucketedTable]] for cross-session reads.
-        graft.operators.Par.run(
-          () => writeBucketedStoreTable(ix.docStats.withColumn("batch", lit(0L)),
-            path, "doc_stats", db, termBuckets = None),
-          () => writeBucketedStoreTable(
-            ix.postings.withColumn("batch", lit(0L)),
-            path, "postings", db, termBuckets = Some(nBuckets)))
-        writeBucketsMarker(ix.postings.sparkSession, path, db, DocBucketsMarker)
-      case None =>
-        graft.operators.Par.run(
-          () => writeTable(ix.docStats.withColumn("batch", lit(0L)),
-            "doc_stats", s"$path/doc_stats"),
-          () => writeTable(ix.postings
-            .withColumn("batch", lit(0L))
-            .withColumn("term_bucket", termBucket(col("term"), nBuckets))
-            // co-locate each bucket's rows in one task before the partitioned
-            // write: without this every task writes a file into every bucket
-            // dir (tasks × buckets small files — measured dominating the store
-            // write); with it, one file per bucket
-            .repartition(nBuckets, col("term_bucket")), "postings", s"$path/postings"))
-    }
+    val spark = ix.postings.sparkSession
+    // fresh builds write the flat layout; overwriting the ROOT derived
+    // dirs of a frame-installed store would leave the pointer serving
+    // the old generations — refuse loudly (rebuild = delete first), and
+    // before the first write: a refusal after the big tables landed would
+    // serve new postings against the old frame's vocab/meta and tombstones
+    require(graft.operators.Frames.currentVersion(spark, path).isEmpty,
+      s"writeIndex: $path carries a frame-installed derived pair (_frame " +
+        "pointer) — delete the store before rebuilding over it")
+    // doc-bucketed (`docBuckets`): postings AND doc_stats co-bucketed by
+    // doc_id, so the scoring join plans with NO exchange on either side —
+    // the shuffle is paid once here and amortized over every query
+    TableLayout.overwrite(spark, path, nBuckets, docBuckets,
+      "doc_stats" -> ix.docStats.withColumn("batch", lit(0L)),
+      "postings" -> ix.postings.withColumn("batch", lit(0L)))
     // derive the small tables from the JUST-PERSISTED copies: vocab/meta
     // over the original lineages would re-run the whole tokenize/explode/
     // aggregate chain a second (and third) time — reading the stored
     // postings/doc_stats back costs one cheap scan instead (measured ~2×
     // on the store-write lifecycle)
-    val spark = ix.postings.sparkSession
-    // fresh builds write the flat layout; overwriting the ROOT derived
-    // dirs of a frame-installed store would leave the pointer serving
-    // the old generations — refuse loudly (rebuild = delete first)
-    require(graft.operators.Frames.currentVersion(spark, path).isEmpty,
-      s"writeIndex: $path carries a frame-installed derived pair (_frame " +
-        "pointer) — delete the store before rebuilding over it")
     // vocab and meta read DIFFERENT just-persisted tables: independent,
     // overlap them (guide §2.6)
     graft.operators.Par.run(
@@ -334,9 +300,6 @@ object Indexer {
                   textCol: String = "text", titleCol: Option[String] = None,
                   nBuckets: Int = 64): Unit = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
-    // the store's own recorded layout wins over the parameter — a
-    // mismatched append would land rows in partitions pruning never probes
-    val nb = storedBuckets(spark, path).getOrElse(nBuckets)
     // duplicate-doc guard: one distributed semi join (no collect), checked
     // before the first byte is appended so a violation leaves the store
     // untouched
@@ -360,46 +323,20 @@ object Indexer {
     // Postings and the co-located positional table then land at disjoint
     // paths from independent lineages — overlap them (guide §2.6). The
     // batch marker advances only after ALL of them committed.
-    val (docStatsStep, postingsStep) = docBucketsOf(spark, path) match {
-      case Some(db) =>
-        // doc-bucketed store: the delta appends THROUGH the catalog with
-        // the store's own bucket spec (by-name column resolution; a
-        // mismatched spec fails loudly instead of silently degrading the
-        // layout). Each append adds one file per (bucket × touched
-        // term-partition) — bucket-suffixed names keep the zero-shuffle
-        // join valid, and the partition re-sync on the next read picks
-        // up any new term_bucket dirs.
-        val dsName = registerBucketedTable(spark, path, "doc_stats", db,
-          partitioned = false)
-        val poName = registerBucketedTable(spark, path, "postings", db,
-          partitioned = true)
-        (() => graft.FsOps.saveBucketedTable(
-            tag(delta.docStats).repartition(db, col("doc_id")), dsName, db,
-            "doc_id", "append"),
-          () => graft.FsOps.saveBucketedTable(tag(delta.postings)
-            .withColumn("term_bucket", termBucket(col("term"), nb))
-            .repartition(db, col("doc_id")), poName, db, "doc_id", "append",
-            partitionBy = Seq("term_bucket")))
-      case None =>
-        (() => writeTable(tag(delta.docStats), "doc_stats", s"$path/doc_stats", "append"),
-          () => writeTable(tag(delta.postings)
-            .withColumn("term_bucket", termBucket(col("term"), nb))
-            .repartition(nb, col("term_bucket")), "postings", s"$path/postings",
-            "append"))
-    }
+    val (docStatsLayout, postingsLayout) = TableLayout.frequency(spark, path, nBuckets)
     // a CO-LOCATED positional table must grow with the same batch —
     // otherwise the phrase/proximity faces would silently miss the
     // appended docs (the append-side twin of the delete-consistency
     // invariant). The doc_stats duplicate guard above already vouches
     // for the batch, so the positional probe is skipped.
-    val pos = new org.apache.hadoop.fs.Path(s"$path/positional")
     val positionalStep: Seq[() => Unit] =
-      if (pos.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pos))
+      if (TableLayout(spark, path, "positional").exists)
         Seq(() => appendPositional(spark, path, newCorpus, idCol, textCol,
           nBuckets, checkDuplicates = false, batchId = batchId))
       else Seq.empty
-    docStatsStep()
-    graft.operators.Par.run(postingsStep +: positionalStep: _*)
+    docStatsLayout.write(tag(delta.docStats), "append")
+    graft.operators.Par.run(
+      (() => postingsLayout.write(tag(delta.postings), "append")) +: positionalStep: _*)
     // the marker advances LAST: a crash mid-append leaves the marker at
     // the old value, so the next incremental audit still covers every
     // row the interrupted append managed to land (they carry the
@@ -437,7 +374,6 @@ object Indexer {
                        textCol: String = "text", nBuckets: Int = 64,
                        checkDuplicates: Boolean = true,
                        batchId: Option[Long] = None): Unit = {
-    val nb = storedPositionalBuckets(spark, path).getOrElse(nBuckets)
     if (checkDuplicates) {
       val overlapping = newCorpus.select(col(idCol).as("doc_id")).distinct()
         .join(graft.FsOps.readParquet(spark, s"$path/positional").select("doc_id"),
@@ -467,24 +403,7 @@ object Indexer {
       if (coTrackedBackfill)
         inheritDocBatch(spark, path, pos, newCorpus.select(col(idCol).as("doc_id")))
       else b.map(x => pos.withColumn("batch", lit(x))).getOrElse(pos) // legacy: untagged
-    positionalDocBucketsOf(spark, path) match {
-      case Some(db) =>
-        // doc-bucketed positional table: append THROUGH the catalog with
-        // the store's own bucket spec (same discipline as appendIndex's
-        // bucketed branch — bucket-suffixed file names keep the
-        // exchange-free rollup valid across appends)
-        val name = registerBucketedTable(spark, path, "positional", db,
-          partitioned = true)
-        graft.FsOps.saveBucketedTable(tagged
-          .withColumn("term_bucket", termBucket(col("term"), nb))
-          .repartition(db, col("doc_id")), name, db, "doc_id", "append",
-          partitionBy = Seq("term_bucket"))
-      case None =>
-        writeTable(tagged
-          .withColumn("term_bucket", termBucket(col("term"), nb))
-          .repartition(nb, col("term_bucket")), "positional", s"$path/positional",
-          "append")
-    }
+    TableLayout(spark, path, "positional", nBuckets).write(tagged, "append")
     if (standalone && !coTrackedBackfill)
       b.foreach(x => graft.FsOps.writeLongMarker(spark, path, LastBatchMarker, x))
   }
@@ -514,9 +433,9 @@ object Indexer {
     val ds = graft.FsOps.readParquet(spark, s"$path/doc_stats")
     require(ds.columns.contains("batch"),
       s"rollbackPartialAppend: store at $path carries no batch ordinals")
-    val posPath = new org.apache.hadoop.fs.Path(s"$path/positional")
-    val hasPos = posPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(posPath)
+    val (docStatsLayout, postingsLayout) = TableLayout.frequency(spark, path)
+    val positionalLayout = TableLayout(spark, path, "positional")
+    val hasPos = positionalLayout.exists
     lazy val posDf = graft.FsOps.readParquet(spark, s"$path/positional")
     // the no-op probe must cover EVERY table this rollback repairs: a
     // rollback that itself crashed between the doc_stats/postings swaps
@@ -529,36 +448,11 @@ object Indexer {
         graft.FsOps.readParquet(spark, s"$path/postings").filter(col("batch") > marker).isEmpty &&
         !posOrphaned)
       return // nothing orphaned — the append either completed or never started
-    docBucketsOf(spark, path) match {
-      case Some(db) =>
-        rewriteBucketedStoreTable(spark, path, "doc_stats",
-          ds.filter(col("batch") <= marker), db, partitioned = false)
-        rewriteBucketedStoreTable(spark, path, "postings",
-          graft.FsOps.readParquet(spark, s"$path/postings").filter(col("batch") <= marker),
-          db, partitioned = true)
-      case None =>
-        writeTable(ds.filter(col("batch") <= marker), "doc_stats",
-          s"$path/doc_stats_tmp")
-        val nb = storedBuckets(spark, path).getOrElse(64)
-        writeTable(graft.FsOps.readParquet(spark, s"$path/postings")
-          .filter(col("batch") <= marker)
-          .repartition(nb, col("term_bucket")), "postings", s"$path/postings_tmp")
-        swapTable(spark, path, "doc_stats")
-        swapTable(spark, path, "postings")
-    }
-    if (hasPos && posDf.columns.contains("batch")) {
-      positionalDocBucketsOf(spark, path) match {
-        case Some(db) =>
-          rewriteBucketedStoreTable(spark, path, "positional",
-            posDf.filter(col("batch") <= marker), db, partitioned = true)
-        case None =>
-          val pnb = storedPositionalBuckets(spark, path).getOrElse(64)
-          writeTable(posDf.filter(col("batch") <= marker)
-            .repartition(pnb, col("term_bucket")), "positional",
-            s"$path/positional_tmp")
-          swapTable(spark, path, "positional")
-      }
-    }
+    docStatsLayout.rewrite(ds.filter(col("batch") <= marker))
+    postingsLayout.rewrite(
+      graft.FsOps.readParquet(spark, s"$path/postings").filter(col("batch") <= marker))
+    if (hasPos && posDf.columns.contains("batch"))
+      positionalLayout.rewrite(posDf.filter(col("batch") <= marker))
   }
 
   /** Incremental derived-table maintenance behind [[appendIndex]]: the
@@ -661,16 +555,6 @@ object Indexer {
         org.apache.spark.sql.Encoders.scalaLong).head()
     if (stored != readIndexLive(spark, path).docStats.count())
       refreshDerived(spark, path)
-  }
-
-  /** Install `<name>_tmp` over the live `<name>` table (crash-safe
-    * rename-aside swap — see the appendIndex commentary). */
-  private def swapTable(spark: org.apache.spark.sql.SparkSession,
-                        path: String, name: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(s"$path/$name")
-    val tmp  = new org.apache.hadoop.fs.Path(s"$path/${name}_tmp")
-    graft.FsOps.atomicSwap(
-      live.getFileSystem(spark.sparkContext.hadoopConfiguration), live, tmp)
   }
 
   /** The derived pair commits as ONE manifest frame
@@ -885,34 +769,27 @@ object Indexer {
     * [[writePositional]] with a frequency index at one path CLOBBERED the
     * shared root marker with the positional layout. New writes can no
     * longer do that, but a pre-existing store may still carry the wrong
-    * root record — which is why the store readers run the marker through
-    * [[pruningBuckets]] (validate against the physical partition dirs;
-    * fall back to an unpruned read rather than mis-prune). One-time
-    * migration for such a store: write `_nbuckets` with the FREQUENCY
-    * layout's bucket count and `_nbuckets_positional` with the positional
-    * one (both are plain single-int text files). */
+    * root record — which is why the store readers validate the marker
+    * against the physical partition dirs before pruning ([[TableLayout]];
+    * an unpruned read rather than a mis-pruned one). One-time migration
+    * for such a store: write `_nbuckets` with the FREQUENCY layout's
+    * bucket count and `_nbuckets_positional` with the positional one (both
+    * are plain single-int text files). */
   def storedPositionalBuckets(spark: org.apache.spark.sql.SparkSession,
                               path: String): Option[Int] =
-    storedBuckets(spark, path, PositionalBucketsMarker)
-      .orElse(storedBuckets(spark, path))
+    TableLayout(spark, path, "positional").recordedTermBuckets
 
-  // ---- doc-bucketed layout: postings and doc_stats co-bucketed (and
-  // sorted within buckets) by doc_id, persisted as EXTERNAL catalog
-  // tables at the store path. Spark only exposes bucketed-scan metadata
-  // through the catalog, so the store records its layout in the
-  // `_docbuckets` marker and readers (re-)register the catalog entries
-  // idempotently — a fresh session reads the same files with the same
-  // zero-shuffle join, and a plain parquet read of the files
-  // (`FsOps.readParquet`) stays valid for every path-based maintenance
-  // read (fsck, audits).
+  // ---- doc-bucketed layout ([[TableLayout]]): the record of which big
+  // tables are co-bucketed by doc_id as external catalog tables.
 
-  /** Marker recording the doc-bucket count of a doc-bucketed store. */
+  /** Marker recording the doc-bucket count of a doc-bucketed store
+    * (doc_stats and postings). */
   val DocBucketsMarker = "_docbuckets"
 
   /** The doc-bucket count a store was written with, if doc-bucketed. */
   def docBucketsOf(spark: org.apache.spark.sql.SparkSession,
                    path: String): Option[Int] =
-    storedBuckets(spark, path, DocBucketsMarker)
+    TableLayout(spark, path, "postings").docBuckets
 
   /** Per-table doc-bucket marker for the POSITIONAL table (the
     * positional twin of [[DocBucketsMarker]], separate for the same
@@ -926,7 +803,7 @@ object Indexer {
     * doc-bucketed. */
   def positionalDocBucketsOf(spark: org.apache.spark.sql.SparkSession,
                              path: String): Option[Int] =
-    storedBuckets(spark, path, PositionalDocBucketsMarker)
+    TableLayout(spark, path, "positional").docBuckets
 
   /** Marker recording the batch watermark [[compactDocBucketed]] merged
     * through: its rewrite mixes ingest batches inside each bucket file,
@@ -954,140 +831,28 @@ object Indexer {
     s"graft_ix_${hex}_$table"
   }
 
-  private def qualifiedUri(spark: org.apache.spark.sql.SparkSession,
-                           path: String): java.net.URI = {
+  private[index] def qualifiedUri(spark: org.apache.spark.sql.SparkSession,
+                                  path: String): java.net.URI = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.makeQualified(p).toUri
   }
 
-  /** Write one store table in the doc-bucketed layout: repartitioned to
-    * its buckets (so each task holds whole buckets — without this every
-    * task writes a file into every bucket), bucketed + sorted by doc_id,
-    * `term_bucket`-partitioned when `termBuckets` is given, installed as
-    * an external table at `path/table` under the deterministic catalog
-    * name (replacing any stale registration AND any previous files —
-    * overwrite semantics, same as the plain writer). */
-  private def writeBucketedStoreTable(df: DataFrame, path: String,
-                                      table: String, db: Int,
-                                      termBuckets: Option[Int]): Unit = {
-    val spark = df.sparkSession
-    val name = catalogTableName(spark, path, table)
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    val loc = new org.apache.hadoop.fs.Path(s"$path/$table")
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
-    val withPart = termBuckets match {
-      case Some(nb) => df.withColumn("term_bucket", termBucket(col("term"), nb))
-      case None => df
-    }
-    graft.FsOps.saveBucketedTable(withPart.repartition(db, col("doc_id")), name,
-      db, "doc_id", "overwrite",
-      partitionBy = if (termBuckets.isDefined) Seq("term_bucket") else Nil,
-      location = Some(qualifiedUri(spark, s"$path/$table").toString))
-  }
-
-  /** Idempotently (re-)register the catalog entry for a doc-bucketed
-    * store table and return its name. An existing entry is kept only if
-    * its location AND bucket spec match the store's record (a moved
-    * store, a crc-colliding path, or a changed layout drops and
-    * re-creates); partitioned tables re-sync their partition list from
-    * the directories every time (bounded driver metadata, ≤ nBuckets
-    * dirs) so appends/rewrites from other sessions are always visible. */
-  private def registerBucketedTable(spark: org.apache.spark.sql.SparkSession,
-                                    path: String, table: String, db: Int,
-                                    partitioned: Boolean): String = {
-    val name = catalogTableName(spark, path, table)
-    val loc = qualifiedUri(spark, s"$path/$table")
-    val ident = org.apache.spark.sql.catalyst.TableIdentifier(name)
-    val cat = spark.sessionState.catalog
-    val ok = cat.tableExists(ident) && {
-      val md = cat.getTableMetadata(ident)
-      md.location == loc && md.bucketSpec.exists(b =>
-        b.numBuckets == db && b.bucketColumnNames == Seq("doc_id"))
-    }
-    if (!ok) {
-      spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      // data-column DDL inferred from the files themselves (title is
-      // optional; future columns survive re-registration unchanged)
-      val fileSchema = graft.FsOps.readParquet(spark, s"$path/$table").schema
-      val dataCols = fileSchema.filterNot(_.name == "term_bucket")
-        .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-      val cols = if (partitioned) s"$dataCols, `term_bucket` BIGINT" else dataCols
-      val partClause = if (partitioned) "PARTITIONED BY (term_bucket) " else ""
-      spark.sql(
-        s"CREATE TABLE `$name` ($cols) USING PARQUET $partClause" +
-          s"CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO $db BUCKETS " +
-          s"LOCATION '$loc'")
-    }
-    if (partitioned) {
-      // re-sync the partition list only when the on-disk `term_bucket=`
-      // dirs and the catalog's recorded partitions actually DIVERGE (an
-      // append/rewrite from another session): an unconditional MSCK per
-      // read taxed every warm query job (~0.2 s of driver metadata,
-      // measured at p50 in bench_serving.json's single-query face) for a
-      // sync that is almost always a no-op. Both sides of the comparison
-      // are bounded driver metadata (≤ nBuckets names each).
-      val onDisk = observedBuckets(spark, s"$path/$table")
-        .map(b => s"term_bucket=$b").toSet
-      val inCatalog = cat.listPartitionNames(ident).toSet
-      if (onDisk != inCatalog)
-        spark.sql(s"MSCK REPAIR TABLE `$name` SYNC PARTITIONS")
-    }
-    name
-  }
-
-  /** Read one table of a doc-bucketed store THROUGH the catalog (the
-    * bucketed scan is what makes the doc_id join exchange-free). Any
-    * registration failure degrades to the plain parquet read — correct,
-    * just shuffled — rather than failing the query. */
-  private def bucketedStoreTable(spark: org.apache.spark.sql.SparkSession,
-                                 path: String, table: String, db: Int,
-                                 partitioned: Boolean): DataFrame =
-    try spark.table(registerBucketedTable(spark, path, table, db, partitioned))
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft] $path/$table: doc-bucketed catalog " +
-          s"registration failed (${e.getMessage}) — reading unbucketed " +
-          "(correct, but the doc_id join pays its exchange again)")
-        graft.FsOps.readParquet(spark, s"$path/$table")
-    }
-
   /** Small-file compaction of an index store — the `compact` maintenance
-    * verb, and the heal `Maintain index advise … apply` runs. Doc-bucketed
-    * tables compact through [[compactDocBucketed]], which keeps the
-    * bucket-suffixed file names the zero-shuffle join depends on. Every
-    * plain table compacts through [[graft.operators.Compaction]] in its
-    * declared [[RowOrder]], range-partitioned by `batch` when
-    * batch-tracked; the term-bucketed tables leaf by leaf, so the layout
-    * survives. The plain tables compact independently and overlap. */
+    * verb, and the heal `Maintain index advise … apply` runs. Each big
+    * table compacts in its own layout ([[TableLayout.compact]]):
+    * doc-bucketed tables first, through [[compactDocBucketed]]; the plain
+    * ones independently and overlapped. */
   def compactStore(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val docBucketed = docBucketsOf(spark, path).isDefined
-    val posDocBucketed = positionalDocBucketsOf(spark, path).isDefined
-    if (docBucketed || posDocBucketed) compactDocBucketed(spark, path)
-    val pos = new org.apache.hadoop.fs.Path(s"$path/positional")
-    val plain =
-      (if (docBucketed) Nil else Seq("postings", "doc_stats")) ++
-        (if (!posDocBucketed &&
-            pos.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pos))
-          Seq("positional") else Nil)
-    graft.operators.Par.map(plain) { table =>
-      val dir = s"$path/$table"
-      val range = graft.operators.Compaction.batchRange(spark, dir)
-      if (table == "doc_stats")
-        graft.operators.Compaction.compact(spark, dir, rangeBy = range,
-          rowOrder = RowOrder(table))
-      else
-        graft.operators.Compaction.compactPartitionsRecursive(spark, dir,
-          rangeBy = range, rowOrder = RowOrder(table))
-    }
+    val (bucketed, plain) = TableLayout.all(spark, path).filter(_.exists)
+      .partition(_.docBuckets.isDefined)
+    if (bucketed.nonEmpty) compactDocBucketed(spark, path)
+    graft.operators.Par.map(plain)(_.compact())
   }
 
-  /** Small-file compaction for a DOC-BUCKETED store — the layout-aware
-    * twin of [[graft.operators.Compaction]] (whose generic rewrite would
-    * strip the bucket-suffixed file names the zero-shuffle join depends
-    * on): each big table rewrites through the bucketed writer, merging
-    * every append's per-bucket files back to one file per (bucket ×
-    * term partition), installed via the same crash-safe swap.
+  /** Small-file compaction of the DOC-BUCKETED tables of a store: each
+    * merges every append's per-bucket files back to one file per (bucket
+    * × term partition), installed via the crash-safe swap.
     *
     * Trade, documented for the maintenance loop: the merge mixes ingest
     * batches within each bucket file, so file-level `batch > since`
@@ -1098,93 +863,17 @@ object Indexer {
     * is preserved, which is the right priority for a serving store. */
   def compactDocBucketed(spark: org.apache.spark.sql.SparkSession,
                          path: String): Unit = {
-    val freqDb = docBucketsOf(spark, path)
-    val posDb = positionalDocBucketsOf(spark, path)
-    require(freqDb.isDefined || posDb.isDefined,
+    val bucketed = TableLayout.all(spark, path).filter(_.docBuckets.isDefined)
+    require(bucketed.nonEmpty,
       s"compactDocBucketed: no $DocBucketsMarker or " +
         s"$PositionalDocBucketsMarker marker at $path — use the generic " +
         "Compaction for a plain store")
-    freqDb.foreach { db =>
-      rewriteBucketedStoreTable(spark, path, "postings",
-        bucketedStoreTable(spark, path, "postings", db, partitioned = true),
-        db, partitioned = true)
-      rewriteBucketedStoreTable(spark, path, "doc_stats",
-        bucketedStoreTable(spark, path, "doc_stats", db, partitioned = false),
-        db, partitioned = false)
-    }
-    // a co-located (or standalone) doc-bucketed positional table compacts
-    // through the same layout-preserving rewrite
-    posDb.foreach { db =>
-      rewriteBucketedStoreTable(spark, path, "positional",
-        bucketedStoreTable(spark, path, "positional", db, partitioned = true),
-        db, partitioned = true)
-    }
+    bucketed.foreach(_.compact())
     // record the watermark the merge destroyed file-level batch skipping
     // up to, so the next incremental audit can report its forced-full
     // degradation instead of silently paying it (see CompactedThroughMarker)
     lastBatch(spark, path).foreach(b =>
       graft.FsOps.writeLongMarker(spark, path, CompactedThroughMarker, b))
-  }
-
-  /** Maintenance rewrite of one doc-bucketed store table, layout
-    * preserved: the replacement lands as a bucketed external table at
-    * `<table>_tmp` (bucket-suffixed file names survive the directory
-    * rename), both catalog entries drop (metadata only — external
-    * locations keep their files), and the same crash-safe rename-aside
-    * swap as the plain path installs it; the next read re-registers from
-    * the marker. Shared by [[expungeDeletes]] and
-    * [[rollbackPartialAppend]] on doc-bucketed stores. */
-  private def rewriteBucketedStoreTable(spark: org.apache.spark.sql.SparkSession,
-                                        path: String, table: String,
-                                        df: DataFrame, db: Int,
-                                        partitioned: Boolean): Unit = {
-    val tmpName = catalogTableName(spark, path, table) + "_tmp"
-    spark.sql(s"DROP TABLE IF EXISTS `$tmpName`")
-    val tmpLoc = new org.apache.hadoop.fs.Path(s"$path/${table}_tmp")
-    tmpLoc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tmpLoc, true)
-    graft.FsOps.saveBucketedTable(df.repartition(db, col("doc_id")), tmpName, db,
-      "doc_id", "overwrite",
-      partitionBy = if (partitioned) Seq("term_bucket") else Nil,
-      location = Some(qualifiedUri(spark, s"$path/${table}_tmp").toString))
-    spark.sql(s"DROP TABLE IF EXISTS `$tmpName`")
-    spark.sql(s"DROP TABLE IF EXISTS `${catalogTableName(spark, path, table)}`")
-    swapTable(spark, path, table)
-  }
-
-  /** `term_bucket=` partition values physically present under a bucketed
-    * table — one driver-side directory listing (bounded metadata: ≤
-    * nBuckets entries). */
-  private def observedBuckets(spark: org.apache.spark.sql.SparkSession,
-                              tablePath: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("term_bucket="))
-      .map(_.stripPrefix("term_bucket=").toLong)
-  }
-
-  /** The bucket count to PRUNE a store read with, or None for "read the
-    * whole table" — the recorded (or fallback) layout is only trusted
-    * after validation against the table's physical `term_bucket=`
-    * partition directories. A partition value ≥ the claimed count proves
-    * the record stale (e.g. a legacy co-located store whose root marker
-    * was clobbered — see [[storedPositionalBuckets]]); pruning with it
-    * would silently skip the partitions a query's terms live in, so the
-    * reader degrades to a full-table read (correct, slower) instead. */
-  def pruningBuckets(spark: org.apache.spark.sql.SparkSession, path: String,
-                     table: String, recorded: Option[Int],
-                     fallback: Int): Option[Int] = {
-    val nb = recorded.getOrElse(fallback)
-    val bad = observedBuckets(spark, s"$path/$table").filter(_ >= nb)
-    if (bad.isEmpty) Some(nb)
-    else {
-      System.err.println(s"[graft] $path/$table: recorded bucket count $nb is " +
-        s"inconsistent with on-disk partitions (saw term_bucket=${bad.max}) — " +
-        "reading UNPRUNED; rewrite the layout markers to restore pruning " +
-        "(see Indexer.storedPositionalBuckets)")
-      None
-    }
   }
 
   /** Anti-join a store's tombstone table (if any) onto a doc_id-keyed
@@ -1233,51 +922,21 @@ object Indexer {
     val del = new org.apache.hadoop.fs.Path(s"$path/deletes")
     val fs = del.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(del)) return
-    val nb = storedBuckets(spark, path).getOrElse(nBuckets)
     val live = readIndexLive(spark, path)
+    val (docStatsLayout, postingsLayout) = TableLayout.frequency(spark, path, nBuckets)
+    // the positional table keeps its OWN layout, which may differ from
+    // the frequency store's (per-table markers)
+    val positionalLayout = TableLayout(spark, path, "positional", nBuckets)
     // the three live-view rewrites are independent tables, and ANY
     // intermediate swap state still serves the correct live view (the
     // tombstone table is only dropped after all of them) — overlap them
     // (guide §2.6)
-    val freqSteps: Seq[() => Unit] = docBucketsOf(spark, path) match {
-      case Some(db) => Seq(
-        // doc-bucketed store: the rewrite preserves the bucketed layout
-        // (tmp written as a bucketed table, same crash-safe dir swap —
-        // see rewriteBucketedStoreTable)
-        () => rewriteBucketedStoreTable(spark, path, "postings",
-          live.postings, db, partitioned = true),
-        () => rewriteBucketedStoreTable(spark, path, "doc_stats",
-          live.docStats, db, partitioned = false))
-      case None => Seq(
-        () => {
-          writeTable(live.postings.repartition(nb, col("term_bucket")),
-            "postings", s"$path/postings_tmp")
-          swapTable(spark, path, "postings")
-        },
-        () => {
-          writeTable(live.docStats, "doc_stats", s"$path/doc_stats_tmp")
-          swapTable(spark, path, "doc_stats")
-        })
-    }
-    val pos = new org.apache.hadoop.fs.Path(s"$path/positional")
-    val posSteps: Seq[() => Unit] =
-      if (!fs.exists(pos)) Seq.empty
-      else Seq(() => {
-        // the positional table keeps its OWN bucket layout, which may
-        // differ from the frequency store's (per-table markers)
-        val livePos = minusDeletes(spark, path, readPositional(spark, path))
-        positionalDocBucketsOf(spark, path) match {
-          case Some(db) =>
-            rewriteBucketedStoreTable(spark, path, "positional", livePos, db,
-              partitioned = true)
-          case None =>
-            val pnb = storedPositionalBuckets(spark, path).getOrElse(nBuckets)
-            writeTable(livePos.repartition(pnb, col("term_bucket")),
-              "positional", s"$path/positional_tmp")
-            swapTable(spark, path, "positional")
-        }
-      })
-    graft.operators.Par.run(freqSteps ++ posSteps: _*)
+    graft.operators.Par.run(Seq(
+      () => postingsLayout.rewrite(live.postings),
+      () => docStatsLayout.rewrite(live.docStats)) ++
+      (if (!positionalLayout.exists) Nil
+       else Seq(() => positionalLayout.rewrite(
+         minusDeletes(spark, path, positionalLayout.read)))): _*)
     fs.delete(del, true)
   }
 
@@ -1412,7 +1071,7 @@ object Indexer {
       val positionalLayout = posCached match {
         case None => emptyRow("positional_bucket_layout")
         case Some(pos) => bucketLayoutRow("positional_bucket_layout", pos,
-          storedPositionalBuckets(spark, path).getOrElse(nBuckets))
+          TableLayout(spark, path, "positional", nBuckets).termBuckets)
       }
 
       Seq(metaCheck, positionalLayout,
@@ -1573,17 +1232,10 @@ object Indexer {
     * uses it does. */
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): InvertedIndex = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
-    val (ds, po) = docBucketsOf(spark, path) match {
-      case Some(db) =>
-        (bucketedStoreTable(spark, path, "doc_stats", db, partitioned = false),
-         bucketedStoreTable(spark, path, "postings", db, partitioned = true))
-      case None =>
-        (graft.FsOps.readParquet(spark, s"$path/doc_stats"),
-         graft.FsOps.readParquet(spark, s"$path/postings"))
-    }
+    val (ds, po) = TableLayout.frequency(spark, path)
     InvertedIndex(
-      docStats = ds,
-      postings = po,
+      docStats = ds.read,
+      postings = po.read,
       vocab = graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "vocab")),
       meta = graft.FsOps.readParquet(spark, derivedTablePath(spark, path, "meta")))
   }
@@ -1592,16 +1244,10 @@ object Indexer {
     * tables: a doc-bucketed positional table ([[writePositional]] with
     * `docBuckets`) reads THROUGH the catalog so the batch rollup's
     * `(query_id, doc_id)` grouping plans without an exchange; a plain
-    * table is a plain parquet read. Registration failure degrades to the
-    * plain read (correct, shuffled) — same contract as the frequency
-    * side. */
+    * table is a plain parquet read. */
   def readPositional(spark: org.apache.spark.sql.SparkSession,
                      path: String): DataFrame =
-    positionalDocBucketsOf(spark, path) match {
-      case Some(db) => bucketedStoreTable(spark, path, "positional", db,
-        partitioned = true)
-      case None => graft.FsOps.readParquet(spark, s"$path/positional")
-    }
+    TableLayout(spark, path, "positional").read
 
   /** LIVE view of a store: [[readIndex]] minus tombstoned documents
     * ([[deleteDocs]]). Without a `deletes` table this IS readIndex —

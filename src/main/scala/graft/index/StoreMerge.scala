@@ -1,6 +1,5 @@
 package graft.index
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -90,19 +89,15 @@ object StoreMerge {
       s"sources disagree on nBuckets: ${sources.zip(nbs).mkString(", ")} — " +
         "aligned term buckets are what makes the merge metadata-only; " +
         "rebuild the odd shard at the common bucket count first")
-    sources.foreach { s =>
-      require(Indexer.docBucketsOf(spark, s).isEmpty,
-        s"$s is doc-bucketed — its bucket-spec file names cannot be " +
-          "interleaved by rename; merge the plain shards, then " +
-          "writeIndex(readIndexLive(...), docBuckets=...) for a bucketed copy")
-      require(Indexer.positionalDocBucketsOf(spark, s).isEmpty,
-        s"$s has a doc-bucketed POSITIONAL table — same contract as the " +
-          "frequency guard: bucket-spec file names cannot be interleaved " +
-          "by rename (the dest would carry no positional doc-bucket " +
-          "marker and the transferred files would be stale layout " +
-          "debris); merge plain shards, then writePositional(..., " +
-          "docBuckets=...) for a bucketed copy")
-    }
+    // a bucketed catalog table's files carry bucket-spec names that cannot
+    // be interleaved by rename (the dest would carry no doc-bucket marker
+    // and the transferred files would be stale layout debris)
+    for (s <- sources; l <- TableLayout.all(spark, s))
+      require(l.docBuckets.isEmpty,
+        s"$s has a doc-bucketed ${l.table.toUpperCase} table — its bucket-spec " +
+          "file names cannot be interleaved by rename; merge the plain shards, " +
+          "then write a bucketed copy with writeIndex(readIndexLive(...), " +
+          "docBuckets=...) or writePositional(..., docBuckets=...)")
     val batches = sources.map { s =>
       Indexer.lastBatch(spark, s).getOrElse(throw new IllegalArgumentException(
         s"$s predates batch tracking (no _lastbatch marker) — the merged " +
@@ -113,16 +108,16 @@ object StoreMerge {
           .columns.contains("length_sum"),
         s"$s predates the mergeable meta layout (no length_sum partial)")
     } // meta is never transferred, so this read survives a resume
-    val fs = new Path(sources.head).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val posPresent = sources.map(s => fs.exists(new Path(s"$s/positional")))
+    val positional = sources.map(TableLayout(spark, _, "positional"))
+    val posPresent = positional.map(_.exists)
     require(posPresent.distinct.size == 1,
       "positional tables must exist in ALL sources or NONE: a merged " +
         "store that answers phrase queries from half its docs is drift, " +
         s"not a store (present: ${sources.zip(posPresent).mkString(", ")})")
     val pnb = if (!posPresent.head) None else {
-      val pns = sources.map(s => Indexer.storedPositionalBuckets(spark, s)
-        .getOrElse(throw new IllegalArgumentException(
-          s"$s has a positional table but no bucket marker")))
+      val pns = sources.zip(positional).map { case (s, l) =>
+        l.recordedTermBuckets.getOrElse(throw new IllegalArgumentException(
+          s"$s has a positional table but no bucket marker")) }
       require(pns.distinct.size == 1,
         s"sources disagree on positional nBuckets: ${sources.zip(pns).mkString(", ")}")
       Some(pns.head)

@@ -67,10 +67,7 @@ object Compaction {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = fs.listStatus(dir).filter { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
+    val entries = fs.listStatus(dir).filter(s => graft.FsOps.visible(s.getPath.getName))
     // a partitioned table root (subdirectories) must be compacted PER
     // PARTITION DIRECTORY — a flat rewrite would destroy the partition
     // layout that readers (partition pruning, dynamic overwrite) rely on
@@ -125,10 +122,8 @@ object Compaction {
     graft.FsOps.writeParquet(sized, tmp.toString, rowOrder = rangeBy ++ rowOrder)
     graft.FsOps.atomicSwap(fs, dir, tmp)
 
-    val installed = fs.listStatus(dir).filter { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+    val installed = fs.listStatus(dir).filter(s =>
+      s.isFile && graft.FsOps.visible(s.getPath.getName))
     // record what THIS range-compaction produced, so the next scheduled
     // run over an untouched directory is a metadata no-op (see above).
     // The fingerprint carries the target the NEXT run will compute from
@@ -240,8 +235,7 @@ object Compaction {
       }
       walk(root).map { leaf =>
         val n = fs.listStatus(leaf).count(s => !s.isDirectory &&
-          !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
+          graft.FsOps.visible(s.getPath.getName))
         leaf.toString -> n
       }
     }
@@ -275,6 +269,6 @@ object Compaction {
   private def partitionDirs(fs: org.apache.hadoop.fs.FileSystem, p: Path): Seq[Path] =
     fs.listStatus(p)
       .filter(s => s.isDirectory && s.getPath.getName.contains("=") &&
-        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+        graft.FsOps.visible(s.getPath.getName))
       .map(_.getPath).toSeq
 }

@@ -99,8 +99,8 @@ object Forget {
     Families.filter { f =>
       val p = familyPath(root, f)
       fs.exists(new Path(p)) && (f match {
-        case "index" => graft.index.Indexer.storedBuckets(spark, p).nonEmpty
-        case "dedup" => graft.dedup.DedupStore.storedGeometry(spark, p).nonEmpty
+        case "index" => graft.index.StoreMerge.Shards.isCommitted(spark, p)
+        case "dedup" => graft.dedup.DedupStore.Shards.isCommitted(spark, p)
         case "ivf"   =>
           // resolve the frame pointer: a reclustered/expunged store's
           // tables live under generation dirs, not at the store root

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.analyzer.Analyzer
 import graft.index.Indexer.InvertedIndex
+import graft.index.TableLayout
 
 /** BM25 ranking, expressed entirely in native Catalyst column arithmetic —
   * the reference's flagship derived expression (`app/query.py:60-92`),
@@ -77,17 +78,9 @@ object BM25 {
     val ix = graft.index.Indexer.readIndexLive(spark, path)
     val terms = Analyzer.analyzeQuery(queryText).distinct
     if (terms.isEmpty) return emptyResult(ix)
-    // the store's recorded bucket count wins over the parameter — but only
-    // after validation against the physical partition layout (a legacy
-    // co-located store may carry a clobbered root marker; mis-pruning
-    // would silently drop the query's postings, so degrade to unpruned)
-    val pruned = graft.index.Indexer.pruningBuckets(spark, path, "postings",
-        graft.index.Indexer.storedBuckets(spark, path), nBuckets) match {
-      case Some(nb) =>
-        val buckets = terms.map(graft.index.Indexer.termBucketOf(_, nb)).distinct
-        ix.postings.filter(col("term_bucket").isin(buckets: _*))
-      case None => ix.postings
-    }
+    // the store's recorded bucket count wins over the parameter, once
+    // validated against the physical partitions (TableLayout.prune)
+    val pruned = TableLayout(spark, path, "postings", nBuckets).prune(ix.postings, terms)
     searchTerms(ix.copy(postings = pruned), terms, params)
   }
 
@@ -136,37 +129,10 @@ object BM25 {
                       nBuckets: Int = 64): DataFrame = {
     val ix = graft.index.Indexer.readIndexLive(spark, path)
     val qt = queryTerms(queries, idCol, textCol)
-    val (pruned, qtUsed) = graft.index.Indexer.pruningBuckets(spark, path,
-        "postings", graft.index.Indexer.storedBuckets(spark, path),
-        nBuckets) match {
-      case Some(nb) =>
-        // the analyzed (query_id, term) frame feeds TWO consumers — the
-        // bucket-union collect and the scoring join — so it is
-        // materialized ONCE (eager localCheckpoint: analyzer runs a
-        // single time over the log, pairs land on executor block
-        // storage ∝ log size). Not just a CPU saving: a
-        // NONDETERMINISTIC query frame (sample, un-ordered limit,
-        // rand-derived ids) re-evaluated per consumer could yield a
-        // bucket union inconsistent with the join's terms, silently
-        // pruning away matching postings — one materialization makes
-        // both consumers see the same rows by construction.
-        // Costs, by design (same trade as Dedup.spanClean): the
-        // checkpointed (query_id, term) pairs pin executor block storage
-        // ∝ log size until the ContextCleaner reclaims the frame after
-        // the caller's reference drops — a long-running serving session
-        // issuing many logs accumulates blocks between GCs; and the
-        // frame is NON-RECOMPUTABLE (checkpointing truncates lineage),
-        // so an executor lost after this point fails the query instead
-        // of silently recomputing — which for a nondeterministic log
-        // could resurrect the very inconsistency this guards against.
-        // Loud failure over silent wrong answers.
-        val qtOnce = qt.localCheckpoint(true)
-        val buckets = qtOnce
-          .select(graft.index.Indexer.termBucket(col("term"), nb).as("b"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-        (ix.postings.filter(col("term_bucket").isin(buckets: _*)), qtOnce)
-      case None => (ix.postings, qt) // single consumer: no double-read
-    }
+    // the analyzed frame feeds the bucket collect AND the scoring join:
+    // TableLayout.pruneForLog materializes it once so both see the same rows
+    val (pruned, qtUsed) = TableLayout(spark, path, "postings", nBuckets)
+      .pruneForLog(ix.postings, qt)
     searchManyOn(ix.copy(postings = pruned), qtUsed, params)
   }
 

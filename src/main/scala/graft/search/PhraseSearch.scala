@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.analyzer.Analyzer
-import graft.index.Indexer
+import graft.index.{Indexer, TableLayout}
 
 /** Exact phrase search over the positional inverted index
   * ([[Indexer.positionalPostings]]).
@@ -209,34 +209,15 @@ object PhraseSearch {
       .select(col("query_id"), size(col("toks")).as("n"),
         posexplode(col("toks")).as(Seq("ord", "term")))
 
-  /** Store access path for a query LOG: bucket-union static pruning
-    * (≤ nBuckets distinct values collected from the exploded terms —
-    * bounded driver metadata at any log size) + the live-view
-    * tombstone anti-join. Returns the pruned positional table AND the
-    * term frame the caller must join with: on the pruned path the
-    * analyzed frame is materialized ONCE (eager localCheckpoint) so the
-    * bucket collect and the matching join see the SAME rows — a
-    * nondeterministic query frame (sample, rand-derived ids)
-    * re-evaluated per consumer could otherwise yield a bucket union
-    * inconsistent with the join's terms and silently drop matches
-    * (same discipline as [[BM25.searchManyStore]], costs included: the
-    * checkpointed pairs pin executor block storage ∝ log size until the
-    * ContextCleaner reclaims them, and the frame is non-recomputable —
-    * an executor lost after the checkpoint fails the query loudly
-    * rather than risking a silently-inconsistent recompute). */
+  /** Store access path for a query LOG: bucket-union static pruning of
+    * the positional layout ([[TableLayout.pruneForLog]], which also
+    * returns the term frame the caller must join with) + the live-view
+    * tombstone anti-join. */
   private def liveForLog(spark: org.apache.spark.sql.SparkSession,
                          path: String, qt: DataFrame,
                          nBuckets: Int): (DataFrame, DataFrame) = {
-    val raw = Indexer.readPositional(spark, path)
-    val (pruned, qtUsed) = Indexer.pruningBuckets(spark, path, "positional",
-        Indexer.storedPositionalBuckets(spark, path), nBuckets) match {
-      case Some(nb) =>
-        val qtOnce = qt.localCheckpoint(true)
-        val buckets = qtOnce.select(Indexer.termBucket(col("term"), nb).as("b"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-        (raw.filter(col("term_bucket").isin(buckets: _*)), qtOnce)
-      case None => (raw, qt) // single consumer: no double-read
-    }
+    val layout = TableLayout(spark, path, "positional", nBuckets)
+    val (pruned, qtUsed) = layout.pruneForLog(layout.read, qt)
     (Indexer.minusDeletes(spark, path, pruned), qtUsed)
   }
 
@@ -283,15 +264,8 @@ object PhraseSearch {
   private def livePositional(spark: org.apache.spark.sql.SparkSession,
                              path: String, terms: Seq[String],
                              nBuckets: Int): DataFrame = {
-    val raw = Indexer.readPositional(spark, path)
-    val pruned = Indexer.pruningBuckets(spark, path, "positional",
-        Indexer.storedPositionalBuckets(spark, path), nBuckets) match {
-      case Some(nb) =>
-        val buckets = terms.distinct.map(Indexer.termBucketOf(_, nb)).distinct
-        raw.filter(col("term_bucket").isin(buckets: _*))
-      case None => raw
-    }
-    Indexer.minusDeletes(spark, path, pruned)
+    val layout = TableLayout(spark, path, "positional", nBuckets)
+    Indexer.minusDeletes(spark, path, layout.prune(layout.read, terms))
   }
 
   private def proximityPostings(positional: DataFrame, query: String,

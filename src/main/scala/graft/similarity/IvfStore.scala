@@ -664,7 +664,7 @@ object IvfStore {
     if (!fs.exists(p)) Set.empty
     else fs.listStatus(p).iterator.filterNot(_.isDirectory)
       .map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+      .filter(graft.FsOps.visible).toSet
   }
 
   /** Ingest surface of the frame whose table dirs are `dirs`. */

@@ -233,8 +233,7 @@ class TsvScan(path: String, required: StructType,
     val it = fs.listFiles(p, true)
     while (it.hasNext) {
       val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && !name.startsWith("_") && !name.startsWith("."))
+      if (f.isFile && graft.FsOps.visible(f.getPath.getName))
         files += f.getPath.toString
     }
     files.sorted.map(TsvInputPartition(_): InputPartition).toArray

@@ -99,6 +99,18 @@ class DocBucketedIndexSpec extends SparkSpec {
     }
   }
 
+  test("a plain rebuild over a doc-bucketed store retires its layout record") {
+    // a stale `_docbuckets` would route reads through a bucket spec the
+    // rebuilt files no longer honor
+    val path = Files.createTempDirectory("ixdocbktrebuild").toString
+    val ix = Indexer.buildIndex(docs, titleCol = Some("source"))
+    Indexer.writeIndex(ix, path, nBuckets = 16, docBuckets = Some(4))
+    val bucketed = searchRows(path)
+    Indexer.writeIndex(ix, path, nBuckets = 16)
+    assert(Indexer.docBucketsOf(spark, path) === None)
+    assert(searchRows(path) === bucketed)
+  }
+
   test("append / delete / expunge / rollback / compact preserve layout and answers") {
     val half1 = docs.filter(col("doc_id") % 2 === 0)
     val half2 = docs.filter(col("doc_id") % 2 =!= 0)
@@ -246,6 +258,64 @@ class DocBucketedIndexSpec extends SparkSpec {
       docs.limit(0), nBuckets = 16, checkDuplicates = false) // schema-only append
     Indexer.compactDocBucketed(spark, path)
     assertPlan("after compaction")
+  }
+
+  test("co-located layouts, frequency x positional plain or doc-bucketed: the lifecycle answers like a fresh plain build") {
+    val b1 = docs.filter(col("doc_id") % 2 === 0)
+    val b2 = docs.filter(col("doc_id") % 2 =!= 0 && col("doc_id") % 3 =!= 0)
+    val b3 = docs.filter(col("doc_id") % 2 =!= 0 && col("doc_id") % 3 === 0)
+    val dead = docs.filter(col("doc_id") % 5 === 0).select("doc_id")
+    def answers(p: String) = (
+      BM25.searchStore(spark, p, Query, nBuckets = 16)
+        .select(col("rank"), col("doc_id"), round(col("score"), 6))
+        .as[(Int, Long, Double)].collect().toSeq,
+      phraseRows(p))
+    // one fresh plain build per live population, shared by every layout
+    val fresh = scala.collection.mutable.Map
+      .empty[String, (Seq[(Int, Long, Double)], Seq[(Long, Long, Long)])]
+    def freshAnswers(tag: String, live: => org.apache.spark.sql.DataFrame) =
+      fresh.getOrElseUpdate(tag, {
+        val p = Files.createTempDirectory(s"ixlayoutfresh_$tag").toString
+        Indexer.writeIndex(Indexer.buildIndex(live), p, nBuckets = 16)
+        Indexer.writePositional(live, p, nBuckets = 16)
+        answers(p)
+      })
+    val Markers = Seq("_nbuckets", "_nbuckets_positional", "_docbuckets",
+      "_docbuckets_positional")
+    for (freqDb <- Seq(None, Some(4)); posDb <- Seq(None, Some(3))) {
+      val layout = s"frequency ${freqDb.getOrElse("plain")}, positional ${posDb.getOrElse("plain")}"
+      val path = Files.createTempDirectory("ixlayouts").toString
+      // the positional table first: writePositional defaults to the
+      // frequency store's doc buckets, so a plain positional table beside
+      // a doc-bucketed frequency store is written before it
+      Indexer.writePositional(b1, path, nBuckets = 16, docBuckets = posDb)
+      Indexer.writeIndex(Indexer.buildIndex(b1), path, nBuckets = 16, docBuckets = freqDb)
+      assert(Indexer.docBucketsOf(spark, path) === freqDb, layout)
+      assert(Indexer.positionalDocBucketsOf(spark, path) === posDb, layout)
+      val markers = Markers.map(FsOps.readLongMarker(spark, path, _))
+      def step(name: String, liveTag: String, live: => org.apache.spark.sql.DataFrame): Unit = {
+        assert(answers(path) === freshAnswers(liveTag, live), s"[$layout] after $name")
+        assert(Markers.map(FsOps.readLongMarker(spark, path, _)) === markers,
+          s"[$layout] $name changed a layout marker")
+      }
+      val live1 = b1.unionByName(b2)
+      val live2 = live1.join(dead, Seq("doc_id"), "left_anti")
+      Indexer.appendIndex(spark, path, b2, nBuckets = 16)
+      step("appendIndex", "append", live1)
+      Indexer.deleteDocs(spark, path, dead)
+      step("deleteDocs", "delete", live2)
+      Indexer.expungeDeletes(spark, path, nBuckets = 16)
+      step("expungeDeletes", "delete", live2)
+      Indexer.compactStore(spark, path)
+      step("compactStore", "delete", live2)
+      // a partial append: its rows land, the batch marker never advances
+      val before = Indexer.lastBatch(spark, path).get
+      Indexer.appendIndex(spark, path, b3, nBuckets = 16)
+      FsOps.writeLongMarker(spark, path, "_lastbatch", before)
+      Indexer.rollbackPartialAppend(spark, path)
+      Indexer.refreshDerived(spark, path) // the append merged vocab/meta; restore
+      step("rollbackPartialAppend", "delete", live2)
+    }
   }
 
   test("streamed ingest into a doc-bucketed store keeps the zero-shuffle plan") {

@@ -852,6 +852,38 @@ class IndexStoreSpec extends SparkSpec {
     assert(derivedDf(path, "vocab").count() > 0)
   }
 
+  test("writeIndex over a frame-installed store refuses before its first write: every file byte-identical") {
+    // an append installs the derived pair as a manifest frame (`_frame`
+    // pointer); a rebuild over that store must refuse before it replaces
+    // doc_stats/postings, or the new postings serve against the old
+    // frame's vocab/meta, tombstones and `_lastbatch`
+    val docs = Tables.load(spark, sf0001, "documents")
+    val path = Files.createTempDirectory("ixframedrebuild").toString
+    Indexer.writeIndex(Indexer.buildIndex(docs.filter(col("doc_id") % 2 === 0)), path,
+      nBuckets = 16)
+    Indexer.appendIndex(spark, path, docs.filter(col("doc_id") % 2 === 1), nBuckets = 16)
+    assert(graft.operators.Frames.currentVersion(spark, path).nonEmpty,
+      "precondition: the append installed a frame")
+    def filesAt(): Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      val base = java.nio.file.Paths.get(path)
+      val walk = Files.walk(base)
+      try walk.iterator.asScala.filter(Files.isRegularFile(_))
+        .map(f => base.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+      finally walk.close()
+    }
+    val before = filesAt()
+    val e = intercept[IllegalArgumentException] {
+      Indexer.writeIndex(Indexer.buildIndex(docs.filter(col("doc_id") % 3 === 0)), path,
+        nBuckets = 16)
+    }
+    assert(e.getMessage.contains("frame-installed"), e.getMessage)
+    val after = filesAt()
+    val changed = (before.keySet ++ after.keySet).filter(f => before.get(f) != after.get(f))
+    assert(changed.size == 0, s"the refused rebuild changed store files, e.g. " +
+      changed.take(3).mkString(", "))
+  }
+
   test("appendIndex that dies in its doc_stats write leaves no postings: the retry neither double-counts nor refuses") {
     // the duplicate guard probes doc_stats only, so doc_stats must land
     // before postings/positional: an append whose postings committed

@@ -252,6 +252,23 @@ class StoreReadSpec extends SparkSpec {
     assert(hits.isEmpty, s"merge protocol steps outside ShardMerge:\n${hits.mkString("\n")}")
   }
 
+  test("no index-table layout decision in the main sources outside TableLayout") {
+    // the plain/doc-bucketed switch, its markers' readers, term-bucket
+    // pruning and the crash-safe table rewrite of doc_stats, postings and
+    // positional are TableLayout's business; elsewhere only the public
+    // names' definitions remain. FsOps defines the catalog write, and
+    // Bucketing's bucketed tables are not index tables.
+    val call = ("""\b(docBucketsOf|positionalDocBucketsOf|storedPositionalBuckets|""" +
+      """pruningBuckets|swapTable|\w*[Bb]ucketed\w*Table)\s*\(""").r
+    val hits = for {
+      (f, src) <- mainSources
+      if !Set("TableLayout.scala", "Bucketing.scala")(f.getName)
+      m <- call.findAllMatchIn(src)
+      if !src.substring(0, m.start).endsWith("def ")
+    } yield s"${f.getPath}:${lineOf(src, m.start)}"
+    assert(hits.isEmpty, s"layout decisions outside TableLayout:\n${hits.mkString("\n")}")
+  }
+
   test("no FileSystem create/open in the main sources outside FsOps") {
     // every marker is written tmp-first and swapped in, and read back with
     // the swap-aside fallback, only by FsOps; a hand-rolled create()
