@@ -745,6 +745,47 @@ class IvfSpec extends SparkSpec {
       .agg(sum($"violations")).as[Long].collect().head === 0L)
   }
 
+  test("every frame-installing verb carries a tombstone and a batch landed mid-staging") {
+    import graft.similarity.IvfStore
+    val e = Tables.load(spark, sf0001, "embeddings")
+    val verbs: Seq[(String, String => Unit)] = Seq(
+      "flattenBatches" -> (p => IvfStore.flattenBatches(spark, p)),
+      "expungeDeletes" -> (p => IvfStore.expungeDeletes(spark, p)),
+      "repairLists" -> (p => IvfStore.repairLists(spark, p)),
+      "reclusterStore" -> (p => IvfStore.reclusterStore(spark, p, nCentroids = 4,
+        kmeansIters = 0)))
+    for ((name, verb) <- verbs) {
+      val root = java.nio.file.Files.createTempDirectory(s"ivfcarry_$name").toString
+      IvfStore.writeCentroids(e, root, kmeansIters = 0)
+      IvfStore.appendBatch(spark, root, e.filter($"vec_id" < 100), 0L)
+      // a tombstone before the verb, so expunge has work to do
+      IvfStore.deleteVectors(spark, root, Seq(6L).toDF("vec_id"))
+      IvfStore.midMaintenanceHook = { s =>
+        IvfStore.deleteVectors(s, root, Seq(5L).toDF("vec_id"))
+        IvfStore.appendBatch(s, root,
+          e.filter($"vec_id" >= 100 && $"vec_id" < 110), 1L)
+      }
+      try verb(root)
+      finally IvfStore.midMaintenanceHook = _ => ()
+      val live = IvfStore.liveVectorIds(spark, root).as[Long].collect().toSet
+      assert(!live.contains(5L), s"$name: the mid-staging tombstone must hold")
+      assert(!live.contains(6L), s"$name: the earlier tombstone must hold")
+      assert((100L until 110L).forall(live.contains),
+        s"$name: the mid-staging batch must be live")
+      assert(live.size === 108, s"$name: 98 batch-0 survivors + 10 carried")
+      // flatten folds the carried batch into the cid-only layout; every
+      // other verb keeps it as its own layer
+      val lists = spark.read.parquet(Frames.resolve(spark, root, "lists"))
+      if (name == "flattenBatches") {
+        assert(!lists.columns.contains("batch"), s"$name: ${lists.columns.toSeq}")
+        assert(IvfStore.listBatches(spark, root).isEmpty)
+      } else assert(IvfStore.listBatches(spark, root) === Seq(0L, 1L), name)
+      val rep = IvfStore.checkStore(spark, root).collect()
+        .map(r => r.getString(0) -> r.getLong(2))
+      assert(rep.map(_._2).sum === 0L, s"$name: ${rep.toSeq}")
+    }
+  }
+
   test("quantized streaming ingest: streamed+flattened shard equals the one-shot build; mixed layers refuse") {
     import graft.similarity.IvfStore
     val e = Tables.load(spark, sf0001, "embeddings")
