@@ -1230,9 +1230,16 @@ object Indexer {
     * opened through [[graft.FsOps.readParquet]] (schema from one footer,
     * no Spark job), so loading a store starts no job; the query that
     * uses it does. */
-  def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): InvertedIndex = {
+  def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): InvertedIndex =
+    readIndex(spark, path, TableLayout.frequency(spark, path))
+
+  /** [[readIndex]] through the given `(doc_stats, postings)` layouts — a
+    * store reader that also prunes passes the layouts it prunes with, so
+    * one resolution (markers and partition listing) serves both. */
+  private[graft] def readIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+                               layouts: (TableLayout, TableLayout)): InvertedIndex = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
-    val (ds, po) = TableLayout.frequency(spark, path)
+    val (ds, po) = layouts
     InvertedIndex(
       docStats = ds.read,
       postings = po.read,
@@ -1255,8 +1262,13 @@ object Indexer {
     * against the tombstone set (vocab/meta were already recomputed live
     * at delete time). Term-bucket partition pruning on postings is
     * unaffected — the anti-join applies after the pruned scan. */
-  def readIndexLive(spark: org.apache.spark.sql.SparkSession, path: String): InvertedIndex = {
-    val ix = readIndex(spark, path)
+  def readIndexLive(spark: org.apache.spark.sql.SparkSession, path: String): InvertedIndex =
+    readIndexLive(spark, path, TableLayout.frequency(spark, path))
+
+  /** [[readIndexLive]] through the given layouts ([[readIndex]]'s). */
+  private[graft] def readIndexLive(spark: org.apache.spark.sql.SparkSession, path: String,
+                                   layouts: (TableLayout, TableLayout)): InvertedIndex = {
+    val ix = readIndex(spark, path, layouts)
     ix.copy(
       docStats = minusDeletes(spark, path, ix.docStats),
       postings = minusDeletes(spark, path, ix.postings))

@@ -186,8 +186,10 @@ private[graft] final class TableLayout private (spark: SparkSession, path: Strin
   }
 
   /** `term_bucket=` partition values physically present — one driver-side
-    * listing (≤ the bucket count entries). */
-  private def observedBuckets: Seq[Long] = {
+    * listing (≤ the bucket count entries), at most once per layout, so
+    * the catalog re-sync check ([[register]]) and the stale-record
+    * validation ([[pruningBuckets]]) of one query share it. */
+  private lazy val observedBuckets: Seq[Long] = {
     val p = new Path(dir)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.map(_.getPath.getName)

@@ -75,12 +75,13 @@ object BM25 {
                   nBuckets: Int = 64): DataFrame = {
     // live view: a store with soft-deletes must never return dead docs;
     // without tombstones this is a plain readIndex (no extra IO)
-    val ix = graft.index.Indexer.readIndexLive(spark, path)
+    val (docStats, postings) = TableLayout.frequency(spark, path, nBuckets)
+    val ix = graft.index.Indexer.readIndexLive(spark, path, (docStats, postings))
     val terms = Analyzer.analyzeQuery(queryText).distinct
     if (terms.isEmpty) return emptyResult(ix)
     // the store's recorded bucket count wins over the parameter, once
     // validated against the physical partitions (TableLayout.prune)
-    val pruned = TableLayout(spark, path, "postings", nBuckets).prune(ix.postings, terms)
+    val pruned = postings.prune(ix.postings, terms)
     searchTerms(ix.copy(postings = pruned), terms, params)
   }
 
@@ -127,12 +128,12 @@ object BM25 {
                       queries: DataFrame, params: Params = Params(),
                       idCol: String = "query_id", textCol: String = "query_text",
                       nBuckets: Int = 64): DataFrame = {
-    val ix = graft.index.Indexer.readIndexLive(spark, path)
+    val (docStats, postings) = TableLayout.frequency(spark, path, nBuckets)
+    val ix = graft.index.Indexer.readIndexLive(spark, path, (docStats, postings))
     val qt = queryTerms(queries, idCol, textCol)
     // the analyzed frame feeds the bucket collect AND the scoring join:
     // TableLayout.pruneForLog materializes it once so both see the same rows
-    val (pruned, qtUsed) = TableLayout(spark, path, "postings", nBuckets)
-      .pruneForLog(ix.postings, qt)
+    val (pruned, qtUsed) = postings.pruneForLog(ix.postings, qt)
     searchManyOn(ix.copy(postings = pruned), qtUsed, params)
   }
 

@@ -17,13 +17,25 @@ import org.apache.spark.sql.functions._
   *   - `deletes`   — soft-delete tombstones (anti-joined at probe time).
   *
   * The three tables are the store's declared [[graft.operators.Frames]]
-  * inventory ([[Tables]]): fresh builds live flat at the store root, and
-  * every maintenance rewrite (recluster, expunge, flatten, repair)
-  * stages the tables it rewrites as new generations, carries the rest by
-  * reference and installs them with one manifest-pointer flip — readers
-  * serve THROUGH maintenance and a crash anywhere costs only dead staged
-  * bytes. Every entry resolves the three directories with one pointer +
+  * inventory ([[Tables]]): fresh builds live flat at the store root.
+  * Every entry resolves the three directories with one pointer +
   * manifest read; markers stay at the store root.
+  *
+  * Each decision about the lists is made in one place:
+  *   - [[encodeLists]], the codec: raw `(vec_id, v, cid, nv)` or int8
+  *     `(vec_id, cid, scale, qvec, nv)` rows, for both builds and
+  *     [[appendBatch]]; [[Quantize.dequantized]] is the one int8
+  *     reconstruction every reader of the codes uses;
+  *   - [[probe]], the one probe behind [[searchStore]] and
+  *     [[searchStoreQuantized]], which reads the codec from the lists
+  *     schema, so either name serves either encoding;
+  *   - [[rewriteLists]], the frame install of the four maintenance
+  *     rewrites (flatten, expunge, repair, recluster): it stages the
+  *     tables a verb rewrites as new generations, carries the rest by
+  *     reference and the ingest that landed meanwhile, and installs them
+  *     with one manifest-pointer flip — readers serve THROUGH
+  *     maintenance and a crash anywhere costs only dead staged bytes;
+  *   - [[batchLayers]], the one listing of the `batch=` layers.
   *
   * Query-time pruning mirrors the BM25 store's term buckets: the probed
   * cids for a bounded query set are collected driver-side (≤ nCentroids
@@ -49,24 +61,8 @@ object IvfStore {
 
   def writeIndex(corpus: DataFrame, path: String,
                  nCentroids: Int = 16, kmeansIters: Int = 2,
-                 idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = corpus.sparkSession
-    // a rebuild over a frame-installed store overwrites the CURRENT
-    // frame's tables in place (the pointer stays) — same non-atomic
-    // rebuild contract as overwriting a legacy store's tables
-    val dirs = tableDirs(spark, path)
-    graft.FsOps.writeParquet(
-      Similarity.kmeansCentroids(corpus, nCentroids, kmeansIters, idCol, vecCol),
-      dirs("centroids"))
-    // assign against the JUST-PERSISTED centroids (derive-from-persisted
-    // rule — and the exact same centroid values the query path will read)
-    val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
-    graft.FsOps.writeParquet(Similarity.assignToCentroids(
-        corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
-        cents, "vec_id", "v", keep = 1)
-      .withColumn("nv", Similarity.norm(col("v")))
-      .repartition(col("cid")), dirs("lists"), partitionBy = Seq("cid"))
-  }
+                 idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    build(corpus, path, nCentroids, kmeansIters, idCol, vecCol, quantize = false)
 
   /** IVF store with int8-QUANTIZED inverted lists — the memory-bound
     * configuration: assignment happens on the raw vectors (exactly as
@@ -84,67 +80,53 @@ object IvfStore {
     */
   def writeIndexQuantized(corpus: DataFrame, path: String,
                           nCentroids: Int = 16, kmeansIters: Int = 2,
-                          idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = corpus.sparkSession
-    val dirs = tableDirs(spark, path)
+                          idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    build(corpus, path, nCentroids, kmeansIters, idCol, vecCol, quantize = true)
+
+  /** Both builds: the centroids first, then the lists encoded against the
+    * JUST-PERSISTED centroids (derive-from-persisted rule — the exact
+    * centroid values the query path will read). A rebuild over a
+    * frame-installed store overwrites the CURRENT frame's tables in place
+    * (the pointer stays) — the same non-atomic rebuild contract as
+    * overwriting a legacy store's tables. */
+  private def build(corpus: DataFrame, path: String, nCentroids: Int, kmeansIters: Int,
+                    idCol: String, vecCol: String, quantize: Boolean): Unit = {
+    writeCentroids(corpus, path, nCentroids, kmeansIters, idCol, vecCol)
+    val dirs = tableDirs(corpus.sparkSession, path)
     graft.FsOps.writeParquet(
-      Similarity.kmeansCentroids(corpus, nCentroids, kmeansIters, idCol, vecCol),
-      dirs("centroids"))
-    val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
-    val assigned = Similarity.assignToCentroids(
-      corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
-      cents, "vec_id", "v", keep = 1)
-    // reconstruction norm computed ONCE at write time and persisted —
-    // probes then pay only the dot product
-    val codes = Quantize.toInt8(corpus, idCol, vecCol)
-      .withColumn("rv", transform(col("qvec"),
-        x => round(x.cast("double") * col("scale"), 6)))
-      .select(col("id").as("vec_id"), col("scale"),
-        transform(col("qvec"), x => x.cast("byte")).as("qvec"),
-        sqrt(Similarity.dot(col("rv"), col("rv"))).as("nv"))
-    graft.FsOps.writeParquet(assigned.select("vec_id", "cid").join(codes, "vec_id")
-      .repartition(col("cid")), dirs("lists"), partitionBy = Seq("cid"))
+      encodeLists(corpus, idCol, vecCol, dirs("centroids"), quantize).repartition(col("cid")),
+      dirs("lists"), partitionBy = Seq("cid"))
   }
 
-  /** Probe a quantized store: same pruning/probe shape as
-    * [[searchStore]], vectors reconstructed as `round(code·scale, 6)`
-    * inside the probe projection (queries stay raw floats). */
+  /** The lists codec: `rows`' vectors assigned to their nearest centroid
+    * in `centroidsDir` (always on the raw vectors) and encoded as stored
+    * lists rows — raw `(vec_id, v, cid, nv)`, or int8
+    * `(vec_id, cid, scale, qvec, nv)` ([[Quantize.toInt8]] codes). `nv`
+    * is the norm every probe divides by, computed once here. */
+  private def encodeLists(rows: DataFrame, idCol: String, vecCol: String,
+                          centroidsDir: String, quantize: Boolean): DataFrame = {
+    val vecs = rows.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
+    val assigned = Similarity.assignToCentroids(vecs,
+      broadcast(graft.FsOps.readParquet(rows.sparkSession, centroidsDir)),
+      "vec_id", "v", keep = 1)
+    if (!quantize) assigned.withColumn("nv", Similarity.norm(col("v")))
+    else assigned.select("vec_id", "cid").join(withInt8Norm(
+        Quantize.toInt8(vecs, "vec_id", "v").select(col("id").as("vec_id"), col("scale"),
+          transform(col("qvec"), x => x.cast("byte")).as("qvec"))), "vec_id")
+  }
+
+  /** `nv` of int8 rows: the norm of their [[Quantize.dequantized]]
+    * reconstruction, by the declarative dot their probes score with. */
+  private def withInt8Norm(rows: DataFrame): DataFrame =
+    rows.withColumn("__rv", Quantize.dequantized)
+      .withColumn("nv", sqrt(Similarity.dot(col("__rv"), col("__rv")))).drop("__rv")
+
+  /** Probe a store: [[searchStore]] under its int8 name; either name
+    * serves either encoding ([[probe]]). */
   def searchStoreQuantized(spark: SparkSession, path: String, queries: DataFrame,
                            k: Int, nProbe: Int = 4,
-                           idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
-    val dirs = tableDirs(spark, path)
-    val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
-    val q = Similarity.assignToCentroids(
-        queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-        cents, "query_id", "qv", keep = nProbe)
-      .withColumn("nq", Similarity.norm(col("qv")))
-    val probed = q.select("cid").distinct().collect().map(_.getInt(0)).toSeq
-    // dequantize inside the probe projection; stored nv — the dot is the
-    // only per-pair arithmetic. Scoring uses the declarative fold (same
-    // left-to-right double accumulation as the codegen dotF, which is
-    // float-array-only).
-    val lists = graft.FsOps.readParquet(spark, dirs("lists"))
-      .filter(col("cid").isin(probed: _*))
-      .withColumn("v", transform(col("qvec"),
-        x => round(x.cast("double") * col("scale"), 6)))
-      .select("cid", "vec_id", "v", "nv")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)
-    liveLists(spark, dirs("deletes"), lists).join(broadcast(q), "cid")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos",
-        // zero-norm guard (same contract as Similarity.cosinePrenormed):
-        // ANSI mode would otherwise kill the probe job on one zero
-        // vector; −1 so a direction-less (corrupt) vector sinks to the
-        // bottom of the cosine range instead of outranking genuine
-        // negative-cosine neighbors
-        when(col("nv") * col("nq") === 0.0, lit(-1.0))
-          .otherwise(Similarity.dot(col("v"), col("qv")) / (col("nv") * col("nq"))))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "vec_id", "cos", "rank")
-  }
+                           idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    probe(spark, path, queries, k, nProbe, idCol, vecCol)
 
   /** Persist only the centroid table — the bootstrap step of a streaming
     * ingest: centroid training is a periodic batch job over a corpus
@@ -195,25 +177,21 @@ object IvfStore {
                   quantize: Boolean = false): Unit = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
     val dirs = tableDirs(spark, path)
-    val listsP = new org.apache.hadoop.fs.Path(dirs("lists"))
-    val lfs = listsP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (lfs.exists(listsP)) {
-      val kids = lfs.listStatus(listsP).filter(_.isDirectory).map(_.getPath.getName)
-      require(kids.isEmpty || kids.exists(_.startsWith("batch=")),
-        s"appendBatch: ${dirs("lists")} carries a fresh (cid-only) layout — " +
-          "appending a batch= layer would leave a half-present batch column " +
-          "that serves neither audit; streaming ingest targets stores " +
-          "bootstrapped by writeCentroids (rebuild, or merge shards instead)")
-      if (kids.nonEmpty) {
-        // one footer read (metadata): the store's layers must stay
-        // uniformly raw or uniformly quantized
-        val hasQ = graft.FsOps.readParquet(spark, dirs("lists")).columns.contains("qvec")
-        require(hasQ == quantize,
-          s"appendBatch: store at $path holds " +
-            s"${if (hasQ) "QUANTIZED" else "RAW"} lists but the batch would " +
-            s"append ${if (quantize) "quantized" else "raw"} rows — a " +
-            "half-present qvec column serves neither probe path")
-      }
+    val layers = batchLayers(spark, dirs("lists"))
+    require(layers.isDefined,
+      s"appendBatch: ${dirs("lists")} carries a fresh (cid-only) layout — " +
+        "appending a batch= layer would leave a half-present batch column " +
+        "that serves neither audit; streaming ingest targets stores " +
+        "bootstrapped by writeCentroids (rebuild, or merge shards instead)")
+    if (layers.exists(_.nonEmpty)) {
+      // one footer read (metadata): the store's layers must stay
+      // uniformly raw or uniformly quantized
+      val hasQ = graft.FsOps.readParquet(spark, dirs("lists")).columns.contains("qvec")
+      require(hasQ == quantize,
+        s"appendBatch: store at $path holds " +
+          s"${if (hasQ) "QUANTIZED" else "RAW"} lists but the batch would " +
+          s"append ${if (quantize) "quantized" else "raw"} rows — a " +
+          "half-present qvec column serves neither probe path")
     }
     graft.FsOps.readLongMarker(spark, path, BatchFloorMarker).foreach { f =>
       require(batchId > f,
@@ -224,29 +202,12 @@ object IvfStore {
           "never re-inspect; ingest with fresh ordinals from " +
           "listBatches(path).last + 1")
     }
-    val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
-    val assignedRaw = Similarity.assignToCentroids(
-      batch.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
-      cents, "vec_id", "v", keep = 1)
-    val assigned = (if (!quantize)
-        assignedRaw.withColumn("nv", Similarity.norm(col("v")))
-      else {
-        // the writeIndexQuantized row shape: raw assignment, int8 codes,
-        // reconstruction norm computed once at write time
-        val codes = Quantize.toInt8(batch, idCol, vecCol)
-          .withColumn("rv", transform(col("qvec"),
-            x => round(x.cast("double") * col("scale"), 6)))
-          .select(col("id").as("vec_id"), col("scale"),
-            transform(col("qvec"), x => x.cast("byte")).as("qvec"),
-            sqrt(Similarity.dot(col("rv"), col("rv"))).as("nv"))
-        assignedRaw.select("vec_id", "cid").join(codes, "vec_id")
-      })
-      .withColumn("batch", lit(batchId))
-      .repartition(col("cid"))
     // per-write dynamic overwrite: session conf stays untouched (other
     // writes may be running concurrently under Par)
-    graft.FsOps.writeParquet(assigned, dirs("lists"),
-      partitionBy = Seq("batch", "cid"), dynamicOverwrite = true)
+    graft.FsOps.writeParquet(
+      encodeLists(batch, idCol, vecCol, dirs("centroids"), quantize)
+        .withColumn("batch", lit(batchId)).repartition(col("cid")),
+      dirs("lists"), partitionBy = Seq("batch", "cid"), dynamicOverwrite = true)
   }
 
   /** Attach a streaming vector source to the store: each micro-batch is
@@ -298,29 +259,12 @@ object IvfStore {
   def flattenBatches(spark: SparkSession, path: String): Unit = {
     graft.FsOps.requireNotHusk(spark, path)
     val dirs = tableDirs(spark, path)
-    val listsP = new org.apache.hadoop.fs.Path(dirs("lists"))
-    val fs = listsP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a bootstrapped shard that never ingested has no lists yet — it is
     // trivially fresh; the no-op contract covers it (not a parquet error)
-    if (!fs.exists(listsP)) return
-    val snap = snapshotFrame(spark, dirs)
-    val lists = pinToSnapshot(graft.FsOps.readParquet(spark, dirs("lists")), snap)
-    if (lists.columns.contains("batch")) {
-      // frame install: the flattened lists stage as a new generation,
-      // centroids and tombstones carry by reference (flatten must never
-      // expunge — masking stays masking); one pointer flip installs the
-      // layout rewrite, so a crash never leaves the store without a
-      // readable lists dir
-      val stage = graft.operators.Frames.begin(spark, path, Tables)
-      graft.FsOps.writeParquet(lists.drop("batch").repartition(col("cid")),
-        stage.stageDir("lists"), partitionBy = Seq("cid"))
-      midMaintenanceHook(spark)
-      // batches that landed while the rewrite staged fold into the
-      // flattened layout too (same centroids — cids keep)
-      carryFrameDelta(spark, dirs, stage, snap, reassign = false,
-        stripBatch = true)
-      stage.commit()
-    }
+    if (!dirExists(spark, dirs("lists"))) return
+    // tombstones carry (flatten must never expunge — masking stays masking)
+    if (batchLayers(spark, dirs("lists")).exists(_.nonEmpty))
+      rewriteLists(spark, path, dirs)((lists, _) => lists.drop("batch"))
     // batch provenance dies with the batch column (the advisory row
     // takes over on a flattened merged store)
     Seq(graft.operators.StoreCheck.LastAuditMarker, BatchFloorMarker,
@@ -353,35 +297,16 @@ object IvfStore {
     * the tombstone anti-join overhead or dead-row storage outweighs one
     * lists rewrite — a scheduled maintenance job beside
     * [[compactLists]], never an ingest-path cost. No-op without
-    * tombstones.
-    *
-    * Install is a frame flip ([[graft.operators.Frames]]): the live rows
-    * stage as a new `lists` generation, the unchanged centroids carry by
-    * reference, the new frame DROPS the tombstone table, and one pointer
-    * flip installs the lists rewrite and the tombstone drop together —
-    * they can no longer tear apart. A crash before the flip costs
-    * nothing (the old frame serves, tombstones still applied by the
-    * anti-join; the re-run restages); after the flip only dead bytes
-    * remain for the retention sweep. */
+    * tombstones. The lists rewrite and the tombstone drop install with
+    * one pointer flip ([[rewriteLists]]), so they cannot tear apart. */
   def expungeDeletes(spark: SparkSession, path: String): Unit = {
     graft.FsOps.requireNotHusk(spark, path)
     val dirs = tableDirs(spark, path)
     if (!dirExists(spark, dirs("deletes"))) return
-    val snap = snapshotFrame(spark, dirs)
-    val lists = pinToSnapshot(graft.FsOps.readParquet(spark, dirs("lists")), snap)
-    val partCols = if (lists.columns.contains("batch")) Seq("batch", "cid") else Seq("cid")
-    val stage = graft.operators.Frames.begin(spark, path, Tables)
-    graft.FsOps.writeParquet(liveLists(spark, dirs("deletes"), lists)
-      .repartition(partCols.map(col): _*), stage.stageDir("lists"),
-      partitionBy = partCols)
-    stage.drop("deletes")
-    midMaintenanceHook(spark)
-    // concurrent ingest landed while the rewrite staged: carry it (the
-    // new frame keeps ONLY the delta tombstones — snapshot ones were
-    // materialized out of the rewrite)
-    carryFrameDelta(spark, dirs, stage, snap, reassign = false,
-      stripBatch = false)
-    stage.commit()
+    // the new frame keeps ONLY tombstones landing mid-rewrite — the
+    // snapshot's were materialized out
+    rewriteLists(spark, path, dirs, dropDeletes = true)((lists, _) =>
+      liveLists(spark, dirs("deletes"), lists))
   }
 
   /** Repair the inverted lists — the REPAIR step beside [[checkStore]]'s
@@ -406,8 +331,7 @@ object IvfStore {
     *     (raw) or its `round(code·scale, 6)` reconstruction (quantized),
     *     bit-identical to the write paths.
     *
-    * Installed as a new frame (the repaired `lists` generation; centroids
-    * and tombstones carry by reference), `batch=`/`cid=` layout
+    * Installed as a new frame ([[rewriteLists]]), `batch=`/`cid=` layout
     * preserved. Scale: one pass over lists + one vec_id exchange
     * (dedup window) + the broadcast assignment — a compaction-class
     * maintenance job beside [[compactLists]]/[[expungeDeletes]], never a
@@ -415,27 +339,20 @@ object IvfStore {
   def repairLists(spark: SparkSession, path: String): Unit = {
     graft.FsOps.requireNotHusk(spark, path)
     val dirs = tableDirs(spark, path)
-    val snap = snapshotFrame(spark, dirs)
-    val lists = pinToSnapshot(graft.FsOps.readParquet(spark, dirs("lists")), snap)
-    val quantized = lists.columns.contains("qvec")
-    val partCols = if (lists.columns.contains("batch")) Seq("batch", "cid") else Seq("cid")
-    // total order: cid, batch (if present), payload hash — same-cid
-    // duplicates (a replayed micro-batch under batch=/cid= layout) would
-    // otherwise tie and survive nondeterministically
-    val tiebreaks = (if (lists.columns.contains("batch"))
-        Seq(col("batch").asc) else Seq.empty) :+
-      xxhash64(lists.columns.filterNot(_ == "vec_id").sorted.toIndexedSeq.map(col): _*).asc
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("cid").asc +: tiebreaks: _*)
-    val deduped = lists.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    val repaired =
-      if (quantized)
-        deduped
-          .withColumn("__rv", transform(col("qvec"),
-            x => round(x.cast("double") * col("scale"), 6)))
-          .withColumn("nv", sqrt(Similarity.dot(col("__rv"), col("__rv"))))
-          .drop("__rv")
+    // tombstones carry (repair never expunges); concurrent ingest carries
+    // as written — fresh appends, not the corruption repaired here
+    rewriteLists(spark, path, dirs) { (lists, _) =>
+      // total order: cid, batch (if present), payload hash — same-cid
+      // duplicates (a replayed micro-batch under batch=/cid= layout) would
+      // otherwise tie and survive nondeterministically
+      val tiebreaks = (if (lists.columns.contains("batch"))
+          Seq(col("batch").asc) else Seq.empty) :+
+        xxhash64(lists.columns.filterNot(_ == "vec_id").sorted.toIndexedSeq.map(col): _*).asc
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("vec_id")).orderBy(col("cid").asc +: tiebreaks: _*)
+      val deduped = lists.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+      if (lists.columns.contains("qvec")) withInt8Norm(deduped)
       else {
         val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
         // merged stores reassign WITHIN each row's cid group (the merge
@@ -504,19 +421,7 @@ object IvfStore {
         deduped.drop("cid").join(reassigned, "vec_id")
           .withColumn("nv", Similarity.norm(col("v")))
       }
-    // frame install: the repaired lists stage as a new generation,
-    // centroids and tombstones carry by reference (repair never
-    // expunges); one pointer flip installs — a crash costs dead staged
-    // bytes, never an unreadable store
-    val stage = graft.operators.Frames.begin(spark, path, Tables)
-    graft.FsOps.writeParquet(repaired.repartition(partCols.map(col): _*),
-      stage.stageDir("lists"), partitionBy = partCols)
-    midMaintenanceHook(spark)
-    // concurrent ingest carried as written (fresh appends, not the
-    // corruption the rewrite repaired; same centroids — cids keep)
-    carryFrameDelta(spark, dirs, stage, snap, reassign = false,
-      stripBatch = false)
-    stage.commit()
+    }
   }
 
   // ---- merged-store assignment contract ------------------------------
@@ -627,9 +532,9 @@ object IvfStore {
   // staging writes into the OLD frame's table dirs — and a flip that
   // ignored it would silently discard the write (for a tombstone riding
   // Forget's takedown cascade, a silent RETENTION failure, not just
-  // stale data). Every frame-installing verb therefore snapshots the old
-  // frame's ingest surface (batch= dirs, tombstone file names) BEFORE
-  // staging, scopes its rewrite to the snapshot, and at flip time
+  // stale data). The frame install ([[rewriteLists]]) therefore snapshots
+  // the old frame's ingest surface (batch= dirs, tombstone file names)
+  // BEFORE staging, scopes the rewrite to the snapshot, and at flip time
   // carries the delta into the staged frame: appended batches re-shaped
   // into the staged lists layout (re-assigned against the new centroids
   // when the verb changed them), and — only when the staged frame drops
@@ -644,46 +549,63 @@ object IvfStore {
   private[graft] final case class FrameSnapshot(batches: Set[Long],
                                                 deleteFiles: Set[String])
 
-  /** Test seam: invoked by every frame-installing verb after its staging
-    * writes complete and before the delta carry — the spec injects
-    * concurrent ingest verbs here to prove the carry. */
+  /** Test seam: invoked by [[rewriteLists]] after the staging writes
+    * complete and before the delta carry — the spec injects concurrent
+    * ingest verbs here to prove the carry. */
   private[graft] var midMaintenanceHook: SparkSession => Unit = _ => ()
 
-  private def batchDirsOf(fs: org.apache.hadoop.fs.FileSystem,
-                          listsDir: String): Set[Long] = {
+  /** The `batch=` layers of a lists dir, ascending — the one driver-side
+    * listing behind [[listBatches]], the frame snapshot and
+    * [[appendBatch]]'s layout guard (the `batch=` layout IS the store's
+    * batch record; no side file needed). None: the dir holds
+    * subdirectories but no `batch=` layer (the fresh cid-only layout);
+    * an absent or empty dir has no layers. */
+  private def batchLayers(spark: SparkSession, listsDir: String): Option[Seq[Long]] = {
     val p = new org.apache.hadoop.fs.Path(listsDir)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator.filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-      .flatMap(_.stripPrefix("batch=").toLongOption).toSet
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val kids =
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+    val layers = kids.filter(_.startsWith("batch="))
+      .flatMap(_.stripPrefix("batch=").toLongOption).sorted
+    if (kids.nonEmpty && layers.isEmpty) None else Some(layers)
   }
 
-  private def deleteFilesOf(fs: org.apache.hadoop.fs.FileSystem,
-                            deletesDir: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(deletesDir)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator.filterNot(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(graft.FsOps.visible).toSet
+  /** The frame install of the four lists-rewriting verbs
+    * ([[flattenBatches]], [[expungeDeletes]], [[repairLists]],
+    * [[reclusterStore]]): snapshot the current frame's (`dirs`) ingest
+    * surface, hand `rewrite` the lists pinned to that snapshot, stage
+    * what it returns as the new `lists` generation (partitioned by
+    * `batch`/`cid` or `cid`, as its columns say), drop `deletes` when the
+    * rewrite materialized the tombstones out, carry the ingest that
+    * landed meanwhile ([[carryFrameDelta]]) and install the frame with
+    * one pointer flip. `rewrite` may stage `centroids` itself
+    * (recluster); every table it neither stages nor drops carries by
+    * reference. Readers serve the old frame until the flip, and a crash
+    * before it costs only dead staged bytes — the re-run restages. */
+  private def rewriteLists(spark: SparkSession, path: String,
+                           dirs: Map[String, String], dropDeletes: Boolean = false)
+                          (rewrite: (DataFrame, graft.operators.Frames.Stage) => DataFrame)
+      : Unit = {
+    // the ingest surface before staging; the rewrite consumes EXACTLY its
+    // batch layers (a batch landing mid-job would otherwise be read by
+    // some stages and carried again, duplicating its rows)
+    val snap = FrameSnapshot(batchLayers(spark, dirs("lists")).getOrElse(Nil).toSet,
+      graft.FsOps.visibleDataFiles(spark, dirs("deletes")).toSet)
+    val stored = graft.FsOps.readParquet(spark, dirs("lists"))
+    val lists =
+      if (!stored.columns.contains("batch")) stored
+      else stored.filter(col("batch").isin(snap.batches.toSeq: _*))
+    val stage = graft.operators.Frames.begin(spark, path, Tables)
+    val staged = rewrite(lists, stage)
+    val partCols = if (staged.columns.contains("batch")) Seq("batch", "cid") else Seq("cid")
+    graft.FsOps.writeParquet(staged.repartition(partCols.map(col): _*),
+      stage.stageDir("lists"), partitionBy = partCols)
+    if (dropDeletes) stage.drop("deletes")
+    midMaintenanceHook(spark)
+    carryFrameDelta(spark, dirs, stage, snap, partCols)
+    stage.commit()
   }
-
-  /** Ingest surface of the frame whose table dirs are `dirs`. */
-  private def snapshotFrame(spark: SparkSession,
-                            dirs: Map[String, String]): FrameSnapshot = {
-    val fs = new org.apache.hadoop.fs.Path(dirs("lists"))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    FrameSnapshot(batchDirsOf(fs, dirs("lists")), deleteFilesOf(fs, dirs("deletes")))
-  }
-
-  /** Pin a lists frame to the snapshot's batch layers — the staged
-    * rewrite must consume EXACTLY the snapshot (a batch landing mid-job
-    * would otherwise be read by some stages and carried again by the
-    * delta, duplicating its rows). Cid-only stores have no batch layers
-    * (appendBatch refuses them) — nothing to pin. */
-  private def pinToSnapshot(lists: DataFrame, snap: FrameSnapshot): DataFrame =
-    if (lists.columns.contains("batch"))
-      lists.filter(col("batch").isin(snap.batches.toSeq: _*))
-    else lists
 
   /** Carry post-snapshot ingest from the old frame's table dirs (`cur`)
     * into the staged frame, just before the flip. Tombstone files copy
@@ -691,49 +613,53 @@ object IvfStore {
     * consumed-set overshoot — the rewrite's lazy deletes read may have
     * seen MORE than the snapshot — only carries tombstones of
     * already-removed rows: the anti-join no-ops). Delta batch layers
-    * re-shape into the staged layout: `reassign` re-homes them against
-    * the STAGED centroids (recluster changed them); `stripBatch` folds
-    * them into a cid-only layout (flatten). */
+    * re-shape into the staged layout: re-homed against the staged
+    * centroids when the frame staged new ones (recluster), folded into
+    * a cid-only layout when the staged `partCols` have no `batch`
+    * (flatten). */
   private def carryFrameDelta(spark: SparkSession, cur: Map[String, String],
                               stage: graft.operators.Frames.Stage,
-                              snap: FrameSnapshot, reassign: Boolean,
-                              stripBatch: Boolean): Unit = {
+                              snap: FrameSnapshot, partCols: Seq[String]): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(cur("lists")).getFileSystem(conf)
     val (delFrom, delTo) = (cur("deletes"), stage.dir("deletes"))
     if (delTo != delFrom)
-      for (f <- deleteFilesOf(fs, delFrom) -- snap.deleteFiles) {
+      for (f <- graft.FsOps.visibleDataFiles(spark, delFrom).toSet -- snap.deleteFiles) {
         val to = new org.apache.hadoop.fs.Path(s"$delTo/$f")
         if (!fs.exists(to))
           org.apache.hadoop.fs.FileUtil.copy(fs,
             new org.apache.hadoop.fs.Path(s"$delFrom/$f"), fs, to, false, conf)
       }
-    val delta = (batchDirsOf(fs, cur("lists")) -- snap.batches).toSeq.sorted
+    val delta = batchLayers(spark, cur("lists")).getOrElse(Nil).filterNot(snap.batches)
     if (delta.nonEmpty) {
       val rows = graft.FsOps.readParquet(spark, cur("lists"))
         .filter(col("batch").isin(delta: _*))
       val homed =
-        if (!reassign) rows
-        else {
-          val cents = broadcast(graft.FsOps.readParquet(spark, stage.dir("centroids")))
-          val keyed = rows.withColumn("__v",
-            if (rows.columns.contains("qvec"))
-              transform(col("qvec"),
-                x => round(x.cast("double") * col("scale"), 6).cast("float"))
-            else col("v"))
-          keyed.drop("cid")
-            .join(Similarity.assignToCentroids(
-                keyed.select(col("vec_id"), col("__v")), cents,
-                "vec_id", "__v", keep = 1)
-              .select(col("vec_id"), col("cid")), "vec_id")
-            .drop("__v")
-        }
-      val shaped = if (stripBatch) homed.drop("batch") else homed
-      val partCols = if (stripBatch) Seq("cid") else Seq("batch", "cid")
-      graft.FsOps.writeParquet(shaped.repartition(partCols.map(col): _*),
+        if (stage.dir("centroids") == cur("centroids")) rows
+        else rehome(rows, stage.dir("centroids"))
+      graft.FsOps.writeParquet(
+        (if (partCols.contains("batch")) homed else homed.drop("batch"))
+          .repartition(partCols.map(col): _*),
         stage.dir("lists"), "append", partitionBy = partCols)
     }
   }
+
+  /** `rows` re-assigned to their nearest centroid in `centroidsDir` — the
+    * derive-from-persisted rule for a frame that staged new centroids. */
+  private def rehome(rows: DataFrame, centroidsDir: String): DataFrame = {
+    val keyed = rows.withColumn("__v", homingVec(rows))
+    keyed.drop("cid", "__v").join(Similarity.assignToCentroids(
+        keyed.select(col("vec_id"), col("__v")),
+        broadcast(graft.FsOps.readParquet(rows.sparkSession, centroidsDir)),
+        "vec_id", "__v", keep = 1).select(col("vec_id"), col("cid")), "vec_id")
+  }
+
+  /** The float vector a stored row is homed and audited by: `v`, or the
+    * [[Quantize.dequantized]] reconstruction float-cast for the codegen
+    * dot — list homing only; probes score int8 rows at full double. */
+  private def homingVec(rows: DataFrame): org.apache.spark.sql.Column =
+    if (rows.columns.contains("qvec")) Quantize.dequantized.cast("array<float>")
+    else col("v")
 
   /** Exclusive-lower cid group bounds of a merged store (None = never
     * merged / reclustered since): cid c belongs to group
@@ -844,13 +770,6 @@ object IvfStore {
       (lit(2.0) * scale + lit(1e-5)) *
         sqrt(size(qvec).cast("double")) / nv + lit(1e-9))
   }
-
-  /** Quantized lists with the float reconstruction as `v` — the audit
-    * face of the store's "probes rank on round(code·scale, 6)" contract
-    * (float-cast for the codegen dot, same as [[reclusterStore]]). */
-  private def reconstructed(lists: DataFrame): DataFrame =
-    lists.withColumn("v", transform(col("qvec"),
-      x => round(x.cast("double") * col("scale"), 6).cast("float")))
 
   /** Integrity check ("fsck") for a persisted IVF store — the vector
     * twin of [[graft.index.Indexer.checkStore]]: one report row per
@@ -1025,16 +944,14 @@ object IvfStore {
 
     val assignment =
       if (quantized)
-        assignmentRow(spark, s"${prefix}lists_assignment", reconstructed(lists), cents,
+        assignmentRow(spark, s"${prefix}lists_assignment",
+          lists.withColumn("v", homingVec(lists)), cents,
           bounds, Some(quantAssignTol(col("v"), col("scale"), col("qvec"))))
       else assignmentRow(spark, s"${prefix}lists_assignment", lists, cents, bounds)
 
     val norms = {
       val withRef =
-        if (quantized)
-          lists.withColumn("ref_v", transform(col("qvec"),
-            x => round(x.cast("double") * col("scale"), 6)))
-        else lists.withColumn("ref_v", col("v"))
+        lists.withColumn("ref_v", if (quantized) Quantize.dequantized else col("v"))
       row(s"${prefix}norms_consistent",
         withRef.agg(count(lit(1)).as("checked"),
           sum(when(!(col("nv") <=>
@@ -1151,17 +1068,9 @@ object IvfStore {
   def lastAudited(spark: SparkSession, path: String): Option[Long] =
     graft.operators.StoreCheck.lastAudited(spark, path)
 
-  /** Batch partition ids physically present under lists — one driver-side
-    * directory listing (bounded metadata), the IVF store's batch record
-    * (the `batch=` layout IS the marker; no side file needed). */
-  def listBatches(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(
-      graft.operators.Frames.resolve(spark, path, "lists"))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong).sorted
-  }
+  /** Batch partition ids physically present under lists ([[batchLayers]]). */
+  def listBatches(spark: SparkSession, path: String): Seq[Long] =
+    batchLayers(spark, graft.operators.Frames.resolve(spark, path, "lists")).getOrElse(Nil)
 
   /** Record that every batch up to `upTo` (default: the newest present)
     * has been audited. */
@@ -1415,15 +1324,9 @@ object IvfStore {
     * self-consistent with search. Tombstones are materialized OUT by
     * the rewrite (an expunge-class job) and the tombstone table drops.
     *
-    * Crash model — the frame install ([[graft.operators.Frames]]):
-    * BOTH new tables stage as new generations, and ONE
-    * pointer flip installs them together with the tombstone drop (the
-    * new frame drops `deletes` — its rewrite materialized the tombstones
-    * out). Readers always see a complete, self-consistent frame: the old
-    * one until the flip, the new one after — a crash anywhere costs
-    * NOTHING but dead staged bytes (the re-run restages; the post-flip
-    * sweep collects stale generations). The store serves THROUGH its
-    * heaviest maintenance verb. Scale: one training pass
+    * Both new tables and the tombstone drop install with one pointer
+    * flip ([[rewriteLists]]), so the store serves THROUGH its heaviest
+    * maintenance verb. Scale: one training pass
     * (∝ sample), one assignment+rewrite pass (∝ live store) — the
     * priced cost of changing every vector's list home, scheduled like
     * [[repairLists]], never a probe-path cost. */
@@ -1433,43 +1336,19 @@ object IvfStore {
     require(trainSampleMod >= 1, s"trainSampleMod must be >= 1 (got $trainSampleMod)")
     graft.FsOps.requireNotHusk(spark, path)
     val dirs = tableDirs(spark, path)
-    val snap = snapshotFrame(spark, dirs)
-    val listsRaw = pinToSnapshot(graft.FsOps.readParquet(spark, dirs("lists")), snap)
-    val quantized = listsRaw.columns.contains("qvec")
-    val partCols = if (listsRaw.columns.contains("batch")) Seq("batch", "cid") else Seq("cid")
-    val live = liveLists(spark, dirs("deletes"), listsRaw).withColumn("__v",
-      if (quantized)
-        // float-cast for the codegen FloatVectorDot assignment path —
-        // affects only which list a vector homes in; probe SCORING still
-        // reads the untouched (scale, qvec) codes at full double
-        transform(col("qvec"),
-          x => round(x.cast("double") * col("scale"), 6).cast("float"))
-      else col("v"))
-    val train =
-      if (trainSampleMod == 1) live
-      else live.filter(pmod(xxhash64(col("vec_id")), lit(trainSampleMod.toLong)) === 0)
-    val stage = graft.operators.Frames.begin(spark, path, Tables)
-    graft.FsOps.writeParquet(Similarity.kmeansCentroids(
-        train.select(col("vec_id"), col("__v")), nCentroids, kmeansIters,
-        "vec_id", "__v").coalesce(1), stage.stageDir("centroids"))
-    // assign against the JUST-PERSISTED staged centroids
-    // (derive-from-persisted rule)
-    val cents = broadcast(graft.FsOps.readParquet(spark, stage.dir("centroids")))
-    val reassigned = Similarity.assignToCentroids(
-        live.select(col("vec_id"), col("__v")), cents, "vec_id", "__v", keep = 1)
-      .select(col("vec_id"), col("cid"))
-    graft.FsOps.writeParquet(live.drop("cid", "__v").join(reassigned, "vec_id")
-      .repartition(partCols.map(col): _*), stage.stageDir("lists"),
-      partitionBy = partCols)
-    stage.drop("deletes")
-    midMaintenanceHook(spark)
-    // concurrent ingest carried RE-ASSIGNED against the new centroids
-    // (the verb that exists to change them); delta tombstones by file
-    // copy — a takedown riding Forget must survive the recluster
-    carryFrameDelta(spark, dirs, stage, snap, reassign = true,
-      stripBatch = false)
-    // the flip: one rename installs lists + centroids + tombstone drop
-    stage.commit()
+    // carried ingest re-homes against the new centroids (the verb exists
+    // to change them); delta tombstones copy — a takedown riding Forget
+    // must survive the recluster
+    rewriteLists(spark, path, dirs, dropDeletes = true) { (lists, stage) =>
+      val live = liveLists(spark, dirs("deletes"), lists)
+      val train =
+        if (trainSampleMod == 1) live
+        else live.filter(pmod(xxhash64(col("vec_id")), lit(trainSampleMod.toLong)) === 0)
+      graft.FsOps.writeParquet(Similarity.kmeansCentroids(
+          train.select(col("vec_id"), homingVec(train).as("__v")), nCentroids, kmeansIters,
+          "vec_id", "__v").coalesce(1), stage.stageDir("centroids"))
+      rehome(live, stage.dir("centroids"))
+    }
     // the store is union-nearest again: drop the merged-assignment
     // markers. A crash before these deletes leaves the grouped (weaker-but-green)
     // audit in force until the next recluster; never a false red.
@@ -1498,7 +1377,18 @@ object IvfStore {
 
   def searchStore(spark: SparkSession, path: String, queries: DataFrame, k: Int,
                   nProbe: Int = 4,
-                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    probe(spark, path, queries, k, nProbe, idCol, vecCol)
+
+  /** The probe behind both search names: assign the queries to their
+    * `nProbe` nearest centroids, scan only the probed lists, subtract the
+    * tombstones and rank ([[Similarity.probeRank]]). The codec comes from
+    * the lists schema (one footer read): raw rows score with the
+    * codegen'd `dotFast`, int8 rows on their [[Quantize.dequantized]]
+    * reconstruction with the declarative `dot` (`dotFast` is
+    * float-array-only; both accumulate left to right in double). */
+  private def probe(spark: SparkSession, path: String, queries: DataFrame, k: Int,
+                    nProbe: Int, idCol: String, vecCol: String): DataFrame = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
     val dirs = tableDirs(spark, path)
     val cents = broadcast(graft.FsOps.readParquet(spark, dirs("centroids")))
@@ -1509,10 +1399,13 @@ object IvfStore {
     // probed cids: bounded by nCentroids — a driver-side IN-list literal
     // is what turns into a static PartitionFilter on the lists scan
     val probed = q.select("cid").distinct().collect().map(_.getInt(0)).toSeq
-    val lists = graft.FsOps.readParquet(spark, dirs("lists"))
+    val stored = graft.FsOps.readParquet(spark, dirs("lists"))
       .filter(col("cid").isin(probed: _*))
+    val int8 = stored.columns.contains("qvec")
+    val lists = if (int8) stored.withColumn("v", Quantize.dequantized) else stored
     // tombstone anti-join applies AFTER the pruned scan (deletes table
     // broadcastable; partition pruning unaffected)
-    Similarity.probeRank(liveLists(spark, dirs("deletes"), lists), q, k)
+    Similarity.probeRank(liveLists(spark, dirs("deletes"), lists), q, k,
+      if (int8) Similarity.dot else Similarity.dotFast)
   }
 }

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Symmetric int8 vector quantization — the storage/bandwidth half of a
@@ -42,6 +42,12 @@ object Quantize {
   /** Inverse transform: `(id, vec)` with `vec_i = q_i · scale` (doubles,
     * rounded to 6 dp). */
   def fromInt8(q: DataFrame): DataFrame =
-    q.select(col("id"),
-      transform(col("qvec"), x => round(x.cast("double") * col("scale"), 6)).as("vec"))
+    q.select(col("id"), dequantized.as("vec"))
+
+  /** The reconstruction `round(q_i · scale, 6)` of a row's `qvec` and
+    * `scale` columns, as doubles — the one definition every reader of the
+    * codes uses (IVF probes, norms, audits and re-assignment); a caller
+    * that needs floats casts the result. */
+  private[graft] def dequantized: Column =
+    transform(col("qvec"), x => round(x.cast("double") * col("scale"), 6))
 }

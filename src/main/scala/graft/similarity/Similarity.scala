@@ -177,13 +177,16 @@ object Similarity {
   }
 
   /** The probe-join + rank tail shared by the in-memory and store paths:
-    * `lists` = (cid, vec_id, v, nv), `q` = (cid, query_id, qv, nq). */
-  private[similarity] def probeRank(lists: DataFrame, q: DataFrame, k: Int): DataFrame = {
+    * `lists` = (cid, vec_id, v, nv), `q` = (cid, query_id, qv, nq);
+    * `dotOf` scores the pairs ([[dotFast]] needs float arrays on both
+    * sides; [[dot]] takes any numeric arrays). */
+  private[similarity] def probeRank(lists: DataFrame, q: DataFrame, k: Int,
+                                    dotOf: (Column, Column) => Column = dotFast): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
     lists.join(broadcast(q), "cid")
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos", cosinePrenormed(col("v"), col("qv"), col("nv"), col("nq")))
+      .withColumn("cos", zeroSafeCos(dotOf(col("v"), col("qv")), col("nv") * col("nq")))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("query_id", "vec_id", "cos", "rank")

@@ -786,6 +786,39 @@ class IvfSpec extends SparkSpec {
     }
   }
 
+  test("either probe name serves either encoding, bit-identical to the matching name's answer") {
+    import graft.similarity.IvfStore
+    val e = Tables.load(spark, sf0001, "embeddings")
+    val q = e.filter($"vec_id" < 20L)
+    val root = java.nio.file.Files.createTempDirectory("ivfprobe").toString
+    IvfStore.writeIndex(e, s"$root/raw", kmeansIters = 0)
+    IvfStore.writeIndexQuantized(e, s"$root/int8", kmeansIters = 0)
+    // tombstone every query's raw nearest neighbor in both stores, so the
+    // anti-join changes the answers
+    val dead = IvfStore.searchStore(spark, s"$root/raw", q, 1).select("vec_id")
+      .as[Long].collect().toSeq.distinct
+    Seq("raw", "int8").foreach(s =>
+      IvfStore.deleteVectors(spark, s"$root/$s", dead.toDF("vec_id")))
+    def answer(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double, Long)] =
+      df.as[(Long, Long, Double, Long)].collect().toSeq.sortBy(r => (r._1, r._4))
+    // digest of the exact answer (cosines by bit pattern) of searchStore
+    // on the raw store and of searchStoreQuantized on the int8 store,
+    // which both names must return
+    def digest(rows: Seq[(Long, Long, Double, Long)]): String =
+      java.security.MessageDigest.getInstance("MD5").digest(rows.map { r =>
+          s"${r._1},${r._2},${java.lang.Double.doubleToLongBits(r._3)},${r._4}" }
+        .mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    for ((s, pinned) <- Seq("raw" -> "82bf245a3215d93eebca4bc49fd1cb48",
+        "int8" -> "8c84174585b184471b6c24631b51c019")) {
+      val viaRaw = answer(IvfStore.searchStore(spark, s"$root/$s", q, 10))
+      val viaInt8 = answer(IvfStore.searchStoreQuantized(spark, s"$root/$s", q, 10))
+      assert(viaRaw.size === 200, s)
+      assert(viaRaw.forall(r => !dead.contains(r._2)), s"$s: a tombstoned id served")
+      assert(viaRaw === viaInt8, s)
+      assert(digest(viaRaw) === pinned, s)
+    }
+  }
+
   test("quantized streaming ingest: streamed+flattened shard equals the one-shot build; mixed layers refuse") {
     import graft.similarity.IvfStore
     val e = Tables.load(spark, sf0001, "embeddings")

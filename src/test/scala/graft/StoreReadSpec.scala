@@ -269,6 +269,31 @@ class StoreReadSpec extends SparkSpec {
     assert(hits.isEmpty, s"layout decisions outside TableLayout:\n${hits.mkString("\n")}")
   }
 
+  test("no IVF frame install or int8 reconstruction in the main sources outside their one definition") {
+    // IvfStore.rewriteLists is the frame install of the four lists
+    // rewrites, and Quantize.dequantized the one int8 reconstruction
+    val install = """\bFrames\.begin\(|\bmidMaintenanceHook\(spark\)|\bcarryFrameDelta\(""".r
+    val ivf = mainSources.collect { case (f, src) if f.getName == "IvfStore.scala" => src }
+    assert(ivf.size === 1)
+    val src = ivf.head
+    val helper = src.indexOf("private def rewriteLists(")
+    assert(helper >= 0, "IvfStore.rewriteLists is gone")
+    val helperEnd = src.indexOf("\n  }\n", helper)
+    val installs = for {
+      m <- install.findAllMatchIn(src).toSeq
+      if !src.substring(0, m.start).endsWith("def ")
+      if m.start < helper || m.start > helperEnd
+    } yield s"IvfStore.scala:${lineOf(src, m.start)}"
+    val reconstruction = java.util.regex.Pattern.quote("col(\"scale\"), 6)").r
+    val rebuilt = for {
+      (f, s) <- mainSources if f.getName != "Quantize.scala"
+      m <- reconstruction.findAllMatchIn(s)
+    } yield s"${f.getPath}:${lineOf(s, m.start)}"
+    assert(installs.isEmpty && rebuilt.isEmpty,
+      s"IVF frame installs outside rewriteLists:\n${installs.mkString("\n")}\n" +
+        s"int8 reconstructions outside Quantize:\n${rebuilt.mkString("\n")}")
+  }
+
   test("no FileSystem create/open in the main sources outside FsOps") {
     // every marker is written tmp-first and swapped in, and read back with
     // the swap-aside fallback, only by FsOps; a hand-rolled create()
